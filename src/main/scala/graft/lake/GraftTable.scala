@@ -82,7 +82,7 @@ class GraftTable private (
       * are tens of ms each; cf. the reference's staged parallel scan
       * planning, scan_ops.c:60-120). */
     override def manifests(rels: Seq[String]): Seq[Manifest] =
-      inIoPool(rels)(manifest)
+      CommitIo.inIoPool(rels)(manifest)
   }
 
   @volatile private var cached: TableMetadata = loadMeta()
@@ -1345,28 +1345,11 @@ class GraftTable private (
     }.toIndexedSeq: _*)
   }
 
-  /** Runs `body` with parquet timestamps as INT64 micros: INT96 (Spark's
-    * legacy default) carries no footer statistics, which would disable
-    * min/max pruning on timestamp columns. Scoped set/restore — the rest of
-    * the session (incl. query-result dumps) keeps its configured format. */
-  private def withMicrosTimestamps[T](body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def writeDataFiles(df: DataFrame, seq: Long): Seq[DataFileMeta] = {
     val m = meta
-    // nonce in staging dir AND file names: concurrent writers never collide
-    // even when both target the same provisional sequence directory
+    // nonce in the file names: concurrent writers never collide even when
+    // both target the same provisional sequence directory
     val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(root, s"_tmp_$nonce")
-    fs.delete(tmp, true)
     // partition specs may be TRANSFORMS (days/bucket/truncate —
     // PartitionTransforms): derive the hidden dir column per non-identity
     // spec and partition by it; partitionBy strips only the derived
@@ -1429,52 +1412,38 @@ class GraftTable private (
         w1.option("maxRecordsPerFile", math.max(1L, (t / bpr).toLong).toString)
       case _ => w1
     }
-    withMicrosTimestamps { w.mode("overwrite").parquet(tmp.toString) }
-    var parts = listParquet(tmp).sortBy(_.toString)
-    // self-correction pass: if any output file overshoots the target by
-    // >25% (no usable ratio, or the data got much wider), measure the
-    // TRUE bytes/row from this very output and re-write with in-task
-    // rolling — one extra pass over the commit's own data, never the
-    // table (footer row counts read on the driver IO pool).
-    for (target <- targetOpt
-         if parts.exists(p => fs.getFileStatus(p).getLen > target + target / 4)) {
-      val measured = inIoPool(parts) { p =>
-        (fs.getFileStatus(p).getLen, ParquetStats.read(hconf, p)._1)
-      }
-      val bytes = measured.map(_._1).sum
-      val rows = measured.map(_._2).sum
-      if (rows > 0 && bytes > 0) {
-        val maxRec = math.max(1L, (target.toDouble * rows / bytes).toLong)
-        withMicrosTimestamps {
-          w1.option("maxRecordsPerFile", maxRec.toString)
-            .mode("overwrite").parquet(tmp.toString)
-        }
-        parts = listParquet(tmp).sortBy(_.toString)
-      }
-    }
     val destBase = new Path(root, "data")
-    // per-file finalize (rename + footer-stats read) runs on a DRIVER IO
-    // POOL: these are independent metadata RPCs, and running them
-    // sequentially made commit latency O(files) — a 707-partition index
-    // build spent 350 s here at sf1, and a 100 TB commit writes thousands
-    // of files (same posture as Iceberg's worker-pool manifest writes).
-    // Output order stays deterministic (futures joined in input order).
-    val out = inIoPool(parts.zipWithIndex) { case (src, i) =>
-      val rel = relDir(tmp, src) // partition sub-path ("" or "p=F[/q=x]")
-      val destDir = if (rel.isEmpty) destBase else new Path(destBase, rel)
-      fs.mkdirs(destDir)
+    val out = CommitIo.stage(spark, root) { tmp =>
+      w.mode("overwrite").parquet(tmp.toString)
+      // self-correction pass: if any output file overshoots the target by
+      // >25% (no usable ratio, or the data got much wider), measure the
+      // TRUE bytes/row from this very output and re-write with in-task
+      // rolling — one extra pass over the commit's own data, never the
+      // table (footer row counts read on the driver IO pool).
+      for (target <- targetOpt) {
+        val parts = ParquetStats.listParquet(fs, tmp).map(fs.getFileStatus)
+        if (parts.exists(_.getLen > target + target / 4)) {
+          val rows = CommitIo.inIoPool(parts)(p => ParquetStats.read(hconf, p.getPath)._1).sum
+          val bytes = parts.map(_.getLen).sum
+          if (rows > 0 && bytes > 0) {
+            val maxRec = math.max(1L, (target.toDouble * rows / bytes).toLong)
+            w1.option("maxRecordsPerFile", maxRec.toString)
+              .mode("overwrite").parquet(tmp.toString)
+          }
+        }
+      }
+    } { (rel, i) =>
       // seq in the file NAME (not a dir): every commit's files share the
       // partition-dir root, so multi-snapshot scans discover partitions
       // through one basePath — see the class doc layout note
-      val dest = new Path(destDir, f"s$seq-f$nonce-$i%05d.parquet")
-      if (!fs.rename(src, dest)) sys.error(s"rename $src -> $dest failed")
-      val (rows, stats) = ParquetStats.read(hconf, dest)
-      val size = fs.getFileStatus(dest).getLen
-      val pvals = parsePartitionValues(rel)
+      new Path(if (rel.isEmpty) destBase else new Path(destBase, rel),
+        f"s$seq-f$nonce-$i%05d.parquet")
+    }.map { case (dest, rel, footer) =>
+      val pvals = HivePartitionedRead.segments(rel).map { case (k, v) =>
+        k -> v.getOrElse(Meta.NullPartition) }.toMap
       val relPath = (if (rel.isEmpty) "data/" else s"data/$rel/") + dest.getName
-      DataFileMeta(relPath, seq, rows, size, pvals, stats)
+      DataFileMeta(relPath, seq, footer.rows, footer.size, pvals, footer.stats)
     }
-    fs.delete(tmp, true)
     buildBlooms(out, nonce)
   }
 
@@ -1605,14 +1574,6 @@ class GraftTable private (
       } catch { case _: Throwable => None }
     }
 
-  /** Runs `f` over `xs` on a bounded driver-side IO pool, preserving
-    * input order; the first failure propagates after the pool drains.
-    * Hadoop FileSystem clients are thread-safe for these metadata ops.
-    * (Shared implementation in [[CommitIo]] since r17 — the Hudi/Iceberg
-    * writers' finalize loops use the same pool.) */
-  private def inIoPool[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    CommitIo.inIoPool(xs)(f)
-
   /** Writes the equality-delete key set as SIZE-TARGETED parquet shards.
     * First pass writes with the frame's own parallelism — a DELETE matching
     * 10⁹ keys never funnels through one task (the r03 verdict flagged the
@@ -1626,94 +1587,44 @@ class GraftTable private (
     val target = meta.props.get("write.delete.target-file-size").map(_.toLong)
       .getOrElse(GraftTable.DefaultDeleteTargetBytes)
     val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(root, s"_tmp_d$nonce")
-    fs.delete(tmp, true)
-    // first pass REBALANCEs toward the shard target (AQE sizes the
-    // post-shuffle partitions by bytes — the guide's coalesce-on-write):
-    // the common small-delete case lands at the target in ONE write job
-    // instead of scatter + bin-pack; a 10⁹-key delete still writes
-    // parallel (AQE splits at the advisory). The advisory is scoped to
-    // this write; without AQE the hint is a no-op and the bin-pack pass
-    // below still enforces the target.
-    val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prevAdv = spark.conf.getOption(advisoryKey)
-    spark.conf.set(advisoryKey, target.toString)
-    try withMicrosTimestamps {
-      keys.hint("rebalance").write.mode("overwrite").parquet(tmp.toString)
-    } finally prevAdv match {
-      case Some(v) => spark.conf.set(advisoryKey, v)
-      case None => spark.conf.unset(advisoryKey)
-    }
-    var srcDir = tmp
-    var parts = listParquet(tmp).sortBy(_.toString)
-    val totalBytes = parts.map(p => fs.getFileStatus(p).getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
-    if (nOut != parts.length && parts.nonEmpty) {
-      // re-shard toward the target: coalesce folds a scattering of tiny
-      // shards (cheap — the data is small in that case); repartition splits
-      // oversized shards (an extra shuffle proportional to the delete set
-      // only, so the anti-join build side stays parallel at read time)
-      val tmp2 = new Path(root, s"_tmp_d2$nonce")
-      fs.delete(tmp2, true)
-      // explicit part paths: reading the dir would trip the hidden-path
-      // filter on the underscore-named staging dir
-      val reread = spark.read.parquet(parts.map(_.toString): _*)
-      val resized = if (nOut < parts.length) reread.coalesce(nOut)
-                    else reread.repartition(nOut)
-      withMicrosTimestamps { resized.write.mode("overwrite").parquet(tmp2.toString) }
-      srcDir = tmp2
-      parts = listParquet(tmp2).sortBy(_.toString)
-    }
     val destDir = new Path(root, "deletes")
-    fs.mkdirs(destDir)
-    val out = parts.zipWithIndex.map { case (src, i) =>
-      val dest = new Path(destDir, f"s$seq-f$nonce-$i%05d.parquet")
-      if (!fs.rename(src, dest)) sys.error(s"rename $src -> $dest failed")
-      val (rows, _) = ParquetStats.read(hconf, dest)
-      DeleteFileMeta(s"deletes/${dest.getName}", seq, rows, kind)
+    CommitIo.stage(spark, root) { tmp =>
+      // first pass REBALANCEs toward the shard target (AQE sizes the
+      // post-shuffle partitions by bytes — the guide's coalesce-on-write):
+      // the common small-delete case lands at the target in ONE write job
+      // instead of scatter + bin-pack; a 10⁹-key delete still writes
+      // parallel (AQE splits at the advisory). The advisory is scoped to
+      // this write; without AQE the hint is a no-op and the bin-pack pass
+      // below still enforces the target.
+      val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+      val prevAdv = spark.conf.getOption(advisoryKey)
+      spark.conf.set(advisoryKey, target.toString)
+      try keys.hint("rebalance").write.mode("overwrite").parquet(tmp.toString)
+      finally prevAdv match {
+        case Some(v) => spark.conf.set(advisoryKey, v)
+        case None => spark.conf.unset(advisoryKey)
+      }
+      val parts = ParquetStats.listParquet(fs, tmp)
+      val totalBytes = parts.map(p => fs.getFileStatus(p).getLen).sum
+      val nOut = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
+      if (nOut != parts.length && parts.nonEmpty) {
+        // re-shard toward the target: coalesce folds a scattering of tiny
+        // shards (cheap — the data is small in that case); repartition
+        // splits oversized shards (an extra shuffle proportional to the
+        // delete set only, so the anti-join build side stays parallel at
+        // read time). The resized shards APPEND next to the first pass,
+        // which is then dropped. Explicit part paths: reading the dir
+        // would trip the hidden-path filter on the staging dir.
+        val reread = spark.read.parquet(parts.map(_.toString): _*)
+        val resized = if (nOut < parts.length) reread.coalesce(nOut)
+                      else reread.repartition(nOut)
+        resized.write.mode("append").parquet(tmp.toString)
+        parts.foreach(fs.delete(_, false))
+      }
+    } { (_, i) => new Path(destDir, f"s$seq-f$nonce-$i%05d.parquet")
+    }.map { case (dest, _, footer) =>
+      DeleteFileMeta(s"deletes/${dest.getName}", seq, footer.rows, kind)
     }
-    fs.delete(tmp, true)
-    if (srcDir != tmp) fs.delete(srcDir, true)
-    out
-  }
-
-  private def listParquet(dir: Path): Seq[Path] = {
-    val out = ArrayBuffer[Path]()
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) out += f.getPath
-    }
-    out.toSeq
-  }
-
-  /** Directory path of `file` relative to `base` ("" if direct child). */
-  private def relDir(base: Path, file: Path): String = {
-    val b = base.toUri.getPath.stripSuffix("/")
-    val d = file.getParent.toUri.getPath
-    if (d == b) "" else d.stripPrefix(b + "/")
-  }
-
-  /** Parses hive-style `k=v/k2=v2` dirs written by partitionBy. */
-  private def parsePartitionValues(rel: String): Map[String, String] =
-    if (rel.isEmpty) Map.empty
-    else rel.split('/').filter(_.contains('=')).map { seg =>
-      val i = seg.indexOf('=')
-      seg.substring(0, i) -> unescapeHive(seg.substring(i + 1))
-    }.toMap
-
-  /** Inverse of Hive/Spark's escapePathName (%XX-encoding). */
-  private def unescapeHive(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   /** Writes the commit's manifest + manifest list and the new pointer-log
@@ -2121,13 +2032,6 @@ object GraftTable {
     * than the 128 MB data-file target so the anti-join build side splits
     * well). Table property `write.delete.target-file-size` overrides. */
   val DefaultDeleteTargetBytes: Long = 32L * 1024 * 1024
-
-  /** Driver-side IO pool width for per-file commit finalize (rename +
-    * footer-stats reads). These are metadata RPCs, not compute — the pool
-    * hides per-call latency, which dominates object-store commits with
-    * many files (Iceberg's worker-pool manifest writes use the same
-    * posture). Bounded so a huge commit can't spawn thousands of threads. */
-  val CommitIoThreads: Int = 16
 
   /** Bin-pack target for manifest merging (`manifest.target-size-bytes`
     * overrides). A manifest at/over this size is never rewritten, which

@@ -1,6 +1,8 @@
 package graft.lake
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 
 /** Verified hive-layout reads for the interop connectors (r15): when a
@@ -35,15 +37,52 @@ import org.apache.spark.sql.types._
   */
 object HivePartitionedRead {
 
-  val NullDir = "__HIVE_DEFAULT_PARTITION__"
-
   def enabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.interop.hivePartitionedRead.enabled")
       .forall(_ == "true")
 
-  /** Inverse of Hive/Spark's escapePathName (%XX-encoding); malformed
-    * escapes stay literal, matching Spark's unescapePathName. */
-  def unescape(s: String): String = unescapeStrict(s).getOrElse(s)
+  // ---- the Hive `k=v` path codec shared by the four table formats -------
+
+  /** The single ENCODER (Hudi's partition paths; Spark's partitionBy
+    * escapes graft/Delta/Iceberg dirs): Hive's escapePathName set plus
+    * '}', as %XX. Without it a value containing '/' or '=' corrupts the
+    * partition layout — readers split the path on those. */
+  def escape(s: String): String = {
+    val specials = "\"#%'*/:=?\\^[]{}"
+    val sb = new StringBuilder
+    s.foreach { c =>
+      if (c < ' ' || c.toInt == 0x7F || specials.indexOf(c.toInt) >= 0)
+        sb.append(f"%%${c.toInt}%02X")
+      else sb.append(c)
+    }
+    sb.toString
+  }
+
+  /** The single DECODER: Spark's own unescapePathName — what its
+    * partition discovery applies to the same dirs, so every format reads
+    * a dir value exactly as Spark does. Malformed escapes ("50%off",
+    * "%-1", "%+1", a trailing "%4") stay literal. */
+  def unescape(s: String): String = ExternalCatalogUtils.unescapePathName(s)
+
+  /** Hive `k=v` segments of a relative dir path ("" = none), in path
+    * order: dir name → decoded value, None for the default (NULL)
+    * partition. Segments without '=' are skipped. */
+  def segments(rel: String): Seq[(String, Option[String])] =
+    rel.split('/').toSeq.filter(_.contains('=')).map { seg =>
+      val eq = seg.indexOf('=')
+      val raw = seg.substring(eq + 1)
+      seg.substring(0, eq) ->
+        (if (raw == Meta.NullPartition) None else Some(unescape(raw)))
+    }
+
+  /** Dir of `file` relative to `base` ("" for a direct child). Compares
+    * URI paths only, so a qualified listing result and an unqualified
+    * base agree on any scheme (file:, s3a://bucket, graftfs:). */
+  def relDir(base: Path, file: Path): String = {
+    val b = base.toUri.getPath.stripSuffix("/")
+    val d = file.getParent.toUri.getPath
+    if (d == b) "" else d.stripPrefix(b + "/")
+  }
 
   /** Strict decoder: every '%' must begin a two-HEX-DIGIT escape, else
     * None. Engines' unescapePathName implementations differ on
@@ -114,8 +153,8 @@ object HivePartitionedRead {
     unescapeStrict(raw) match {
       case None => false // malformed escape: decoders may disagree — refuse
       case Some(u) => auth match {
-        case null => raw == NullDir
-        case s: String => s.nonEmpty && s != NullDir && u == s
+        case null => raw == Meta.NullPartition
+        case s: String => s.nonEmpty && s != Meta.NullPartition && u == s
         case i: java.lang.Integer => u == i.toString
         case l: java.lang.Long => u == l.toString
         case sh: java.lang.Short => u == sh.toString
@@ -147,9 +186,9 @@ object HivePartitionedRead {
     * by every decoder, escaped or not. Values with '%' fall back to
     * the plain read — missed optimization, never a wrong value. */
   def canonicalFor(raw: String, dt: DataType): Boolean = {
-    if (raw == NullDir) return true
+    if (raw == Meta.NullPartition) return true
     val u = unescapeStrict(raw).getOrElse(return false) // malformed: refuse
-    if (u.isEmpty || u == NullDir || u == "default") return false
+    if (u.isEmpty || u == Meta.NullPartition || u == "default") return false
     try dt match {
       case StringType => raw.indexOf('%') < 0
       case IntegerType => u == u.toInt.toString

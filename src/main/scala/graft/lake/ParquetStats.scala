@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.column.statistics._
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -86,18 +86,41 @@ object ParquetStats {
     }
   }
 
+  /** `_metadata.file_path` of a parquet scan as the plain Hadoop path
+    * string table metadata records. Spark serves the column URL-encoded
+    * (a `p=50%off` dir reads back as `p=50%25off`, a space as `%20`), so
+    * path keys built from the raw column miss every file whose path has
+    * such a character. '+' is protected first: URL decoding would turn it
+    * into a space. The decoder is invoked directly rather than through
+    * `url_decode`, a runtime-replaceable function that scan frames spliced
+    * into an already-optimized plan would carry unreplaced. */
+  def scanFilePath: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, UrlCodec}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.functions.{col, lit, replace}
+    import org.apache.spark.sql.graftshim.ColumnExpr
+    val encoded = replace(col("_metadata.file_path"), lit("+"), lit("%2B"))
+    ColumnExpr.column(StaticInvoke(UrlCodec.getClass,
+      org.apache.spark.sql.types.StringType, "decode",
+      Seq(ColumnExpr.expression(encoded), Literal(true))))
+  }
+
+  /** Every `.parquet` file under `dir` (recursive), sorted by path. */
+  def listParquet(fs: FileSystem, dir: Path): Seq[Path] = {
+    val out = scala.collection.mutable.ArrayBuffer[Path]()
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet")) out += f
+    }
+    out.sortBy(_.toString).toSeq
+  }
+
   /** Total record count of a parquet file (or every .parquet under a
     * directory) from footers only — no data pages, no Spark job. */
   def rowCount(conf: Configuration, path: Path): Long = {
     val fs = path.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer[Path]()
-    if (fs.getFileStatus(path).isDirectory) {
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) files += f
-      }
-    } else files += path
+    val files = if (fs.getFileStatus(path).isDirectory) listParquet(fs, path) else Seq(path)
     files.map { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       try r.getRecordCount finally r.close()
@@ -122,11 +145,7 @@ object ParquetStats {
       threshold: Int = 64): Map[String, FileFooter] = {
     val conf = spark.sessionState.newHadoopConf()
     if (paths.lengthCompare(threshold) <= 0)
-      paths.map { p =>
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        val (rows, stats) = read(conf, p)
-        p.toString -> FileFooter(rows, stats, st.getLen, st.getModificationTime)
-      }.toMap
+      paths.map(p => p.toString -> footer(conf, p)).toMap
     else {
       val bcConf = spark.sparkContext.broadcast(
         new org.apache.spark.util.SerializableConfiguration(conf))
@@ -135,19 +154,25 @@ object ParquetStats {
       spark.sparkContext.parallelize(paths.map(_.toString), slices)
         .mapPartitions { it =>
           val c = bcConf.value.value
-          it.map { s =>
-            val p = new Path(s)
-            val st = p.getFileSystem(c).getFileStatus(p)
-            val (rows, stats) = ParquetStats.read(c, p)
-            s -> FileFooter(rows, stats, st.getLen, st.getModificationTime)
-          }
+          it.map(s => s -> footer(c, new Path(s)))
         }.collect().toMap
     }
   }
 
+  /** One file's [[FileFooter]]: one status call serves both the
+    * size/mtime fields and the footer reader. */
+  def footer(conf: Configuration, file: Path): FileFooter = {
+    val st = file.getFileSystem(conf).getFileStatus(file)
+    val (rows, stats) = read(HadoopInputFile.fromStatus(st, conf))
+    FileFooter(rows, stats, st.getLen, st.getModificationTime)
+  }
+
   /** @return (rowCount, per-column stats) */
-  def read(conf: Configuration, file: Path): (Long, Map[String, ColStats]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+  def read(conf: Configuration, file: Path): (Long, Map[String, ColStats]) =
+    read(HadoopInputFile.fromPath(file, conf))
+
+  private def read(in: HadoopInputFile): (Long, Map[String, ColStats]) = {
+    val reader = ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rowCount = blocks.map(_.getRowCount).sum

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{ColStats, DataFileMeta, FilePruner, Meta}
+import graft.lake.{ColStats, DataFileMeta, FilePruner, Meta, ParquetStats}
 
 /** Read-only Delta Lake table reader — the SECOND real-format interop
   * surface (the reference lists Delta under future support,
@@ -378,7 +378,7 @@ final class DeltaTable private (
     val keepRow: Option[Column] = if (dvDescs.isEmpty) None else
       Some(DeltaTable.dvKeepColumn(spark, location,
         spark.sessionState.newHadoopConf(), dvDescs,
-        col("_metadata.file_path"), col("_metadata.row_index")))
+        ParquetStats.scanFilePath, col("_metadata.row_index")))
 
     // ONE scan node for every live file (plan width must not grow with
     // partition count — a 10k-partition table cannot plan 10k scan
@@ -433,7 +433,7 @@ final class DeltaTable private (
           col(meta.physicalName(c)).as(c)): _*)
       } else {
         df = df
-          .withColumn("__fp", DeltaTable.normPath(col("_metadata.file_path")))
+          .withColumn("__fp", DeltaTable.normPath(ParquetStats.scanFilePath))
           .select((col("__fp") +: logicalDataCols.toIndexedSeq.map(c =>
             col(meta.physicalName(c)).as(c))): _*)
         val pvSchema = StructType(
@@ -502,7 +502,7 @@ final class DeltaTable private (
     val keepRow: Option[Column] = if (dvDescs.isEmpty) None else
       Some(DeltaTable.dvKeepColumn(spark, location,
         spark.sessionState.newHadoopConf(), dvDescs,
-        col("_metadata.file_path"), col("_metadata.row_index")))
+        ParquetStats.scanFilePath, col("_metadata.row_index")))
 
     val logicalDataCols = meta.schema.fieldNames
       .filterNot(meta.partitionColumns.contains)
@@ -524,7 +524,7 @@ final class DeltaTable private (
     val bc = spark.sparkContext.broadcast(byPath)
     def const(pick: ((Long, Long)) => Long): Column =
       graft.expressions.FileConstant.column(
-        DeltaTable.normPath(col("_metadata.file_path")), LongType,
+        DeltaTable.normPath(ParquetStats.scanFilePath), LongType,
         raw => bc.value.get(DeltaTable.pathKey(raw)) match {
           case Some(v) => Long.box(pick(v))
           case None => throw new IllegalStateException(
@@ -545,7 +545,7 @@ final class DeltaTable private (
         // partition injection (scan()'s broadcast shape) with the
         // lineage columns computed BEFORE the projection drops _metadata
         df = df
-          .withColumn("__fp", DeltaTable.normPath(col("_metadata.file_path")))
+          .withColumn("__fp", DeltaTable.normPath(ParquetStats.scanFilePath))
           .withColumn("_row_id", rowIdC)
           .withColumn("_row_commit_version", rowVerC)
           .select((col("__fp") +: col("_row_id") +:
@@ -1002,14 +1002,14 @@ object DeltaTable {
       else physData
     var df = spark.read.schema(readSchema)
       .parquet(files.map(f => resolve(location, f._1).toString): _*)
-      .withColumn("__fp", normPath(col("_metadata.file_path")))
+      .withColumn("__fp", normPath(ParquetStats.scanFilePath))
     if (dvByFile.nonEmpty) {
       // subtract already-masked rows (same executor-side lazy bitmap
       // shape as scan()): a DV'd row was deleted in an EARLIER version,
       // so the remove-only commit must not re-emit it
       df = df.filter(dvKeepColumn(spark, location,
         spark.sessionState.newHadoopConf(), dvByFile,
-        col("_metadata.file_path"), col("_metadata.row_index")))
+        ParquetStats.scanFilePath, col("_metadata.row_index")))
     }
     val pvSchema = StructType(
       StructField("__fp", StringType) +:
@@ -1394,7 +1394,12 @@ object DeltaTable {
     } catch { case _: Exception => None }
 
   /** add.path is RFC 2396 URI-encoded per the protocol. */
-  private def decodePath(p: String): String =
+  private[delta] def encodePath(rel: String): String =
+    new java.net.URI(null, null, rel, null).getRawPath
+
+  /** Inverse of [[encodePath]]; a path that is not a valid URI (a foreign
+    * writer that skipped the encoding) is taken verbatim. */
+  private[delta] def decodePath(p: String): String =
     try new java.net.URI(p).getPath match {
       case null => p
       case d    => if (d.startsWith("/") && !p.startsWith("/")) d.stripPrefix("/") else d

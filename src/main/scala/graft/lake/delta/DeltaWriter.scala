@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.ParquetStats
+import graft.lake.{HivePartitionedRead, ParquetStats}
 
 /** Minimal Delta Lake WRITER conforming to the published transaction
   * protocol (delta-io/delta PROTOCOL.md): parquet data files under
@@ -113,9 +113,17 @@ final class DeltaWriter private (
   /** `operation` (when given) rides as a `commitInfo` action — the
     * freeform audit record OSS Delta writes on every commit; it is what
     * makes the `#history` metadata view informative. RESTORE builds its
-    * own tagged commitInfo (the one operation changes() keys on). */
+    * own tagged commitInfo (the one operation changes() keys on).
+    *
+    * The writer's state (version, row-id high-water mark, in-commit
+    * clock, live files, tombstones) advances only once the log entry is
+    * published: a failed create leaves the writer exactly as it was, so
+    * a retry publishes the NEXT version, never a hole. */
   private def commit(actions0: Seq[ObjectNode],
       operation: String = null): Long = {
+    val next = version + 1
+    var hwm = rowIdHwm
+    var ict = lastIct
     // ROW-TRACKING assignment — the single commit chokepoint: every add
     // that does not already carry a baseRowId (re-adds of DV'd files
     // deepCopy the original and keep theirs, per protocol) takes the
@@ -136,9 +144,9 @@ final class DeltaWriter private (
                   .path("numRecords").asLong(-1L)).getOrElse(-1L)
               require(rows >= 0L, "delta rowTracking: add action without " +
                 "numRecords stats — cannot size its baseRowId span")
-              a.put("baseRowId", rowIdHwm + 1L)
-              a.put("defaultRowCommitVersion", version + 1L)
-              rowIdHwm += rows
+              a.put("baseRowId", hwm + 1L)
+              a.put("defaultRowCommitVersion", next)
+              hwm += rows
               assigned = true
             }
           }
@@ -148,7 +156,7 @@ final class DeltaWriter private (
           val dm = mapper.createObjectNode()
           val d = dm.putObject("domainMetadata")
           d.put("domain", "delta.rowTracking")
-          d.put("configuration", s"""{"rowIdHighWaterMark":$rowIdHwm}""")
+          d.put("configuration", s"""{"rowIdHighWaterMark":$hwm}""")
           d.put("removed", false)
           actions0 :+ dm
         }
@@ -163,22 +171,32 @@ final class DeltaWriter private (
         if (enableIct) {
           // per the protocol: strictly monotone, first action of the
           // commit, authoritative over file mtime for time travel
-          lastIct = math.max(lastIct + 1, System.currentTimeMillis())
-          ci.put("inCommitTimestamp", lastIct)
+          ict = math.max(ict + 1, System.currentTimeMillis())
+          ci.put("inCommitTimestamp", ict)
         }
         info +: actions
       }
-    version += 1
-    val p = new Path(logDir, f"$version%020d.json")
+    val p = new Path(logDir, f"$next%020d.json")
     val out = fs.create(p, false) // commits never overwrite, per protocol
     try out.write(all.map(mapper.writeValueAsString).mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    // tombstone ledger: removes enter, a re-add of the same path (DV
-    // replacement) supersedes its pending tombstone
+    version = next
+    rowIdHwm = hwm
+    lastIct = ict
+    // live files and the tombstone ledger replay the published actions in
+    // order: a remove retires its path, a re-add of the same path (DV
+    // replacement) supersedes the pending tombstone
     actions.foreach { n =>
-      if (n.has("remove"))
-        tombstones(n.get("remove").get("path").asText()) = n.get("remove").deepCopy()
-      if (n.has("add")) tombstones.remove(n.get("add").get("path").asText())
+      if (n.has("remove")) {
+        val path = relOf(n.get("remove"))
+        live.remove(path)
+        tombstones(path) = n.get("remove").deepCopy()
+      }
+      if (n.has("add")) {
+        val path = relOf(n.get("add"))
+        live(path) = n
+        tombstones.remove(path)
+      }
     }
     version
   }
@@ -343,73 +361,54 @@ final class DeltaWriter private (
     * practice — partitionValues is authoritative) and returns their add
     * actions. */
   private def writeFiles(dfLogical: DataFrame): Seq[ObjectNode] = {
-    val df = toPhysical(dfLogical)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_tmp-$nonce")
-    // INT64 micros, not INT96: external Delta readers expect int64 and
-    // INT96 carries no footer stats (→ no min/max skipping)
-    ParquetStats.withMicrosTimestamps(spark) {
+    stagePartitioned(toPhysical(dfLogical)) { (rel, i) =>
+      new Path(if (rel.isEmpty) root else new Path(root, rel), f"part-$nonce-$i%05d.parquet")
+    }.map { case (dest, rel, footer) => addActionFor(dest, rel, footer) }
+  }
+
+  /** `df` written through [[graft.lake.CommitIo.stage]] in hive dirs of
+    * the physical partition columns — INT64 micros timestamps, not INT96:
+    * external Delta readers expect int64 and INT96 carries no footer
+    * stats (→ no min/max skipping). */
+  private def stagePartitioned(df: DataFrame)(dest: (String, Int) => Path)
+      : Seq[(Path, String, ParquetStats.FileFooter)] =
+    graft.lake.CommitIo.stage(spark, root) { tmp =>
       val writer = df.write.mode("overwrite")
       (if (partitionColumns.nonEmpty)
          writer.partitionBy(partitionColumns.map(phys): _*)
        else writer).parquet(tmp.toString)
-    }
-    val it = fs.listFiles(tmp, true)
-    val files = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) files += f
-    }
-    // renames on the shared commit IO pool (independent metadata RPCs,
-    // sequential before r17); indices pre-assigned from the sorted list
-    // so names stay deterministic
-    val placed = graft.lake.CommitIo.inIoPool(
-      files.sortBy(_.toString).zipWithIndex.toSeq) { case (src, idx) =>
-      val tmpQ = fs.makeQualified(tmp).toString
-      val dirQ = fs.makeQualified(src.getParent).toString
-      val rel = if (dirQ == tmpQ) "" else dirQ.stripPrefix(tmpQ + "/")
-      val destDir = if (rel.isEmpty) root else new Path(root, rel)
-      fs.mkdirs(destDir)
-      val dest = new Path(destDir, f"part-$nonce-$idx%05d.parquet")
-      require(fs.rename(src, dest), s"delta: rename $src -> $dest failed")
-      (dest, rel)
-    }
-    // footer stats for ALL fresh files in one (distributed) batch
-    val footers = ParquetStats.readFooters(spark, placed.map(_._1))
-    val out = placed.map { case (dest, rel) =>
-      addActionFor(dest, rel, footers(dest.toString)) }
-    fs.delete(tmp, true)
-    out
-  }
+    }(dest)
 
-  /** Hive `k=v` dir segments of a relative path → partitionValues. */
-  private def hiveVals(rel: String): Seq[(String, String)] =
-    rel.split("/").filter(_.contains("=")).toSeq.map { seg =>
-      val eq = seg.indexOf('=')
-      val k = seg.substring(0, eq)
-      val v = seg.substring(eq + 1)
-      k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else unescapeHive(v))
+  /** Table-relative path of an add/remove/cdc action body: `path` is
+    * RFC 2396 URI-encoded per the protocol (a `p=x%3Dy` dir is recorded
+    * as `p=x%253Dy`), so every lookup decodes it. */
+  private def relOf(a: com.fasterxml.jackson.databind.JsonNode): String =
+    DeltaTable.decodePath(a.get("path").asText())
+
+  /** Hive `k=v` dirs of a relative path → partitionValues (null = the
+    * default partition). */
+  private def putPartitionValues(pv: ObjectNode, rel: String): Unit =
+    HivePartitionedRead.segments(rel).foreach {
+      case (k, Some(v)) => pv.put(k, v)
+      case (k, None) => pv.putNull(k)
     }
 
   /** Add action for the data file at `dest` (= root/`rel`/name, hive
     * dirs carrying partitionValues), with per-file stats JSON from the
     * parquet FOOTER (numRecords + top-level min/max/nullCount — the
-    * columns FilePruner skips on). Shared by writeFiles (fresh files)
-    * and convert (existing files adopted in place); the footer payload
-    * arrives precomputed so both callers can batch the footer reads as
-    * one distributed job ([[ParquetStats.readFooters]]) instead of a
-    * sequential per-file driver walk. */
+    * columns FilePruner skips on). Shared by writeFiles (fresh files,
+    * footers from [[graft.lake.CommitIo.stage]]) and convert (existing
+    * files adopted in place, footers from one distributed
+    * [[ParquetStats.readFooters]] job). */
   private def addActionFor(dest: Path, rel: String,
       footer: ParquetStats.FileFooter): ObjectNode = {
     val relPath = (if (rel.isEmpty) "" else s"$rel/") + dest.getName
     val (rows, stats) = (footer.rows, footer.stats)
     val n = mapper.createObjectNode()
     val a = n.putObject("add")
-    a.put("path", relPath)
-    val pv = a.putObject("partitionValues")
-    hiveVals(rel).foreach { case (k, v) =>
-      if (v == null) pv.putNull(k) else pv.put(k, v)
-    }
+    a.put("path", DeltaTable.encodePath(relPath))
+    putPartitionValues(a.putObject("partitionValues"), rel)
     a.put("size", footer.size)
     a.put("modificationTime", footer.mtime)
     a.put("dataChange", true)
@@ -451,35 +450,26 @@ final class DeltaWriter private (
   /** Registers every parquet file already under the table root as an
     * add action of commit 0 — the data half of [[DeltaWriter.convert]]. */
   private def convertExisting(): Unit = {
-    val it = fs.listFiles(root, true)
-    val files = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) {
-      val f = it.next().getPath
-      val rel = fs.makeQualified(f.getParent).toString
-        .stripPrefix(fs.makeQualified(root).toString).stripPrefix("/")
-      if (f.getName.endsWith(".parquet") &&
-          !rel.split("/").headOption.exists(d =>
-            d == "_delta_log" || d.startsWith("_") || d.startsWith(".")))
-        files += f
+    val files = ParquetStats.listParquet(fs, root).filterNot { f =>
+      HivePartitionedRead.relDir(root, f).split("/").headOption.exists(d =>
+        d.startsWith("_") || d.startsWith("."))
     }
     require(files.nonEmpty, s"delta convert: no parquet files under $root")
     // the adoption hot path: one DISTRIBUTED footer job over the whole
     // estate (real CONVERT TO DELTA does the same) — a sequential
     // driver-side footer read per file is hours at 10⁵–10⁶ files
-    val footers = ParquetStats.readFooters(spark, files.toSeq)
-    val adds = files.sortBy(_.toString).map { f =>
-      val rel = fs.makeQualified(f.getParent).toString
-        .stripPrefix(fs.makeQualified(root).toString).stripPrefix("/")
+    val footers = ParquetStats.readFooters(spark, files)
+    val adds = files.map { f =>
+      val rel = HivePartitionedRead.relDir(root, f)
       // every declared partition column must come from a hive dir — a
       // stray file outside the layout would otherwise read NULL for the
       // column while pruning treats it as unconstrained (silent wrong
       // data; the iceberg adopt path rejects identically)
-      val dirs = hiveVals(rel).map(_._1).toSet
+      val dirs = HivePartitionedRead.segments(rel).map(_._1).toSet
       partitionColumns.foreach(c => require(dirs.contains(c),
         s"delta convert: $f lacks a hive dir for partition column $c"))
       addActionFor(f, rel, footers(f.toString))
-    }.toSeq
-    adds.foreach(n => live(n.get("add").get("path").asText()) = n)
+    }
     commit(Seq(protocolAction, metaAction) ++ adds, operation = "CONVERT")
   }
 
@@ -498,67 +488,23 @@ final class DeltaWriter private (
         col(c).as(phys(c), md)
       }
     }
-    val df = dfLogical.select(cols: _*)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_tmp-cdc-$nonce")
-    ParquetStats.withMicrosTimestamps(spark) {
-      val writer = df.write.mode("overwrite")
-      (if (partitionColumns.nonEmpty)
-         writer.partitionBy(partitionColumns.map(phys): _*)
-       else writer).parquet(tmp.toString)
-    }
-    val out = scala.collection.mutable.ArrayBuffer[ObjectNode]()
-    val it = fs.listFiles(tmp, true)
-    val files = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) files += f
-    }
-    var i = 0
-    files.sortBy(_.toString).foreach { src =>
-      val tmpQ = fs.makeQualified(tmp).toString
-      val dirQ = fs.makeQualified(src.getParent).toString
-      val rel = if (dirQ == tmpQ) "" else dirQ.stripPrefix(tmpQ + "/")
-      val pvals = hiveVals(rel)
-      val destDir = new Path(root,
-        if (rel.isEmpty) "_change_data" else s"_change_data/$rel")
-      fs.mkdirs(destDir)
-      val dest = new Path(destDir, f"cdc-$nonce-$i%05d.parquet")
-      require(fs.rename(src, dest), s"delta: rename $src -> $dest failed")
-      i += 1
-      val relPath = (if (rel.isEmpty) "_change_data" else s"_change_data/$rel") +
-        s"/${dest.getName}"
+    def cdcDir(rel: String): String = if (rel.isEmpty) "_change_data" else s"_change_data/$rel"
+    stagePartitioned(dfLogical.select(cols: _*)) { (rel, i) =>
+      new Path(root, f"${cdcDir(rel)}/cdc-$nonce-$i%05d.parquet")
+    }.map { case (dest, rel, footer) =>
       val n = mapper.createObjectNode()
       val a = n.putObject("cdc")
-      a.put("path", relPath)
-      val pv = a.putObject("partitionValues")
-      pvals.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      a.put("size", fs.getFileStatus(dest).getLen)
+      a.put("path", DeltaTable.encodePath(s"${cdcDir(rel)}/${dest.getName}"))
+      putPartitionValues(a.putObject("partitionValues"), rel)
+      a.put("size", footer.size)
       a.put("dataChange", false)
-      out += n
+      n
     }
-    fs.delete(tmp, true)
-    out.toSeq
-  }
-
-  private def unescapeHive(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '%' && i + 3 <= s.length) {
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(ch); i += 1 }
-      } else { sb.append(ch); i += 1 }
-    }
-    sb.toString
   }
 
   def append(df: DataFrame): Long = {
     val addsN = writeFiles(df.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-    addsN.foreach(n => live(n.get("add").get("path").asText()) = n)
     commit(addsN, operation = "WRITE")
   }
 
@@ -584,7 +530,6 @@ final class DeltaWriter private (
     require(batchId > last,
       s"delta: batchId $batchId < last committed $last for stream query '$queryId'")
     val addsN = writeFiles(df.select(schema.fieldNames.map(col).toIndexedSeq: _*))
-    addsN.foreach(n => live(n.get("add").get("path").asText()) = n)
     val ts = System.currentTimeMillis()
     val txn = mapper.createObjectNode()
     val t = txn.putObject("txn")
@@ -613,7 +558,7 @@ final class DeltaWriter private (
     * partition count), plus the normalized source file key `__fp`. */
   private def readForRewrite(adds: Seq[ObjectNode]): DataFrame = {
     val paths = adds.map(n =>
-      DeltaTable.resolve(location, n.get("add").get("path").asText()).toString)
+      DeltaTable.resolve(location, relOf(n.get("add"))).toString)
     val physData0 = StructType(dataSchema.fields.map(f => f.copy(name = phys(f.name))))
     // row-tracking rewrites must carry each row's CURRENT lineage into
     // the new files: read the materialized columns (absent in
@@ -629,12 +574,12 @@ final class DeltaWriter private (
     val dvs: Map[String, DeletionVectors.Descriptor] = adds.flatMap { n =>
       dvDescOf(n.get("add")).map { d =>
         DeltaTable.pathKey(DeltaTable.resolve(location,
-          n.get("add").get("path").asText()).toString) -> d
+          relOf(n.get("add"))).toString) -> d
       }
     }.toMap
     if (dvs.nonEmpty) {
       df = df.filter(DeltaTable.dvKeepColumn(spark, location, conf, dvs,
-        col("_metadata.file_path"), col("_metadata.row_index")))
+        ParquetStats.scanFilePath, col("_metadata.row_index")))
     }
     val lineageCols: Seq[Column] =
       if (!enableRowTracking) Nil
@@ -645,13 +590,13 @@ final class DeltaWriter private (
             s"delta rowTracking: live file ${a.get("path").asText()} " +
               "carries no baseRowId — written before tracking? refusing")
           DeltaTable.pathKey(DeltaTable.resolve(location,
-            a.get("path").asText()).toString) ->
+            relOf(a)).toString) ->
             ((a.get("baseRowId").asLong(), a.get("defaultRowCommitVersion").asLong()))
         }.toMap
         val bc = spark.sparkContext.broadcast(byPath)
         def const(pick: ((Long, Long)) => Long): Column =
           graft.expressions.FileConstant.column(
-            DeltaTable.normPath(col("_metadata.file_path")), LongType,
+            DeltaTable.normPath(ParquetStats.scanFilePath), LongType,
             raw => bc.value.get(DeltaTable.pathKey(raw)) match {
               case Some(v) => Long.box(pick(v))
               case None => throw new IllegalStateException(
@@ -664,7 +609,7 @@ final class DeltaWriter private (
             .as(DeltaWriter.MatRowVerCol))
       }
     var out = df
-      .withColumn("__fp", DeltaTable.normPath(col("_metadata.file_path")))
+      .withColumn("__fp", DeltaTable.normPath(ParquetStats.scanFilePath))
       .select((col("__fp") +:
         dataSchema.fieldNames.toIndexedSeq.map(c => col(phys(c)).as(c))) ++
         lineageCols: _*)
@@ -675,7 +620,7 @@ final class DeltaWriter private (
         val pv = n.get("add").get("partitionValues")
         org.apache.spark.sql.Row.fromSeq(
           DeltaTable.pathKey(DeltaTable.resolve(location,
-            n.get("add").get("path").asText()).toString) +:
+            relOf(n.get("add"))).toString) +:
             partitionColumns.map { c =>
               val v = pv.get(phys(c))
               if (v == null || v.isNull) null else v.asText()
@@ -709,7 +654,7 @@ final class DeltaWriter private (
       .collect().map(_.getString(0)).toSet
     adds.filter { n =>
       fps(DeltaTable.pathKey(DeltaTable.resolve(location,
-        n.get("add").get("path").asText()).toString))
+        relOf(n.get("add"))).toString))
     }
   }
 
@@ -753,7 +698,7 @@ final class DeltaWriter private (
     val hitKeys = perFile.filter(_._3 > 0).map(_._1).toSet
     val touched = affectedAdds.filter { n =>
       hitKeys(DeltaTable.pathKey(DeltaTable.resolve(location,
-        n.get("add").get("path").asText()).toString))
+        relOf(n.get("add"))).toString))
     }
     if (touched.isEmpty) return version
     val everyRowGone = perFile.filter(_._3 > 0).forall(t => t._3 == t._2)
@@ -762,7 +707,7 @@ final class DeltaWriter private (
         readForRewrite(touched).withColumn("__hit", coalesce(cond, lit(false)))
       else { // reuse the pinned frame — a re-read would re-roll the dice
         val touchedKeys = touched.map(n => DeltaTable.pathKey(DeltaTable
-          .resolve(location, n.get("add").get("path").asText()).toString))
+          .resolve(location, relOf(n.get("add"))).toString))
         probe.filter(col("__fp").isin(touchedKeys: _*))
       }
     val remaining = tdf.filter(!col("__hit"))
@@ -775,8 +720,6 @@ final class DeltaWriter private (
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
         .withColumn("_change_type", lit("delete")))
     val removes = touched.map(n => removeAction(n))
-    touched.foreach(n => live.remove(n.get("add").get("path").asText()))
-    newAdds.foreach(n => live(n.get("add").get("path").asText()) = n)
     commit(cdcActs ++ removes ++ newAdds, operation = "DELETE")
   }
 
@@ -851,8 +794,6 @@ final class DeltaWriter private (
       r.get("remove").asInstanceOf[ObjectNode].put("dataChange", false)
       r
     }
-    group.foreach(n => live.remove(n.get("add").get("path").asText()))
-    newAdds.foreach(n => live(n.get("add").get("path").asText()) = n)
     commit(removes ++ newAdds, operation = "OPTIMIZE")
   }
 
@@ -868,7 +809,7 @@ final class DeltaWriter private (
     val referenced: Set[String] = live.values.flatMap { n =>
       val a = n.get("add")
       val data = fs.makeQualified(
-        DeltaTable.resolve(location, a.get("path").asText())).toString
+        DeltaTable.resolve(location, relOf(a))).toString
       val dv =
         if (a.has("deletionVector") && !a.get("deletionVector").isNull)
           dvDescOf(a).flatMap(_.filePath(location))
@@ -936,7 +877,7 @@ final class DeltaWriter private (
           .distinct().collect().map(_.getString(0)).toSet
         val tch = affectedAdds.filter(n =>
           fps(DeltaTable.pathKey(DeltaTable.resolve(location,
-            n.get("add").get("path").asText()).toString)))
+            relOf(n.get("add"))).toString)))
         (tch, pinned.filter(col("__fp").isInCollection(fps)))
       }
     if (touched.isEmpty) return version
@@ -967,8 +908,6 @@ final class DeltaWriter private (
               .withColumn("_change_type", lit("update_postimage"))))
       }
     val removes = touched.map(n => removeAction(n))
-    touched.foreach(n => live.remove(n.get("add").get("path").asText()))
-    newAdds.foreach(n => live(n.get("add").get("path").asText()) = n)
     commit(cdcActs ++ removes ++ newAdds, operation = "UPDATE")
   }
 
@@ -994,9 +933,9 @@ final class DeltaWriter private (
         if (n.has("add")) {
           val node = mapper.createObjectNode()
           node.set[ObjectNode]("add", n.get("add").deepCopy())
-          out(n.get("add").get("path").asText()) = node
+          out(relOf(n.get("add"))) = node
         }
-        if (n.has("remove")) out.remove(n.get("remove").path("path").asText())
+        if (n.has("remove")) out.remove(relOf(n.get("remove")))
       }
     }
     require(schemaStr == null ||
@@ -1037,8 +976,6 @@ final class DeltaWriter private (
     }
     val actions = removes.map(p => removeAction(cur(p))) ++
       readds.map(_._2.deepCopy())
-    removes.foreach(live.remove)
-    readds.foreach { case (p, n) => live(p) = n.deepCopy() }
     // tag through commit() so an ICT table gets ONE commitInfo carrying
     // both the RESTORE operation and the in-commit timestamp
     commit(actions, operation = "RESTORE")
@@ -1128,7 +1065,7 @@ final class DeltaWriter private (
       // metadata columns captured on the raw file relation (they don't
       // survive arbitrary projection), then rename to logical
       var df = spark.read.schema(physData).parquet(paths: _*)
-        .withColumn("__fp", col("_metadata.file_path"))
+        .withColumn("__fp", ParquetStats.scanFilePath)
         .withColumn("__ri", col("_metadata.row_index"))
       df = df.select((col("__fp") +: col("__ri") +:
         dataSchema.fieldNames.toIndexedSeq.map(c => col(phys(c)).as(c))): _*)
@@ -1217,7 +1154,6 @@ final class DeltaWriter private (
           na.put("stats", mapper.writeValueAsString(st))
         }
         actions += newNode
-        live(rel) = newNode
       }
     }
     // on a CDF table the DV commit also carries its delete change rows
@@ -1274,7 +1210,6 @@ final class DeltaWriter private (
           df(c).cast("string") === k(s"__dk$i") }.reduce(_ && _), "left_semi"))
         .getOrElse((Nil, Nil))
     val addsN = writeFiles(writeSrc)
-    addsN.foreach(n => live(n.get("add").get("path").asText()) = n)
     // a pure-insert merge (no matched keys) is a blind append — CDF
     // synthesis covers it; a mixed commit needs authoritative cdc rows
     val cdcActs =
@@ -1440,20 +1375,9 @@ final class DeltaWriter private (
       dest: Path): Unit = {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), rowSchema)
-    val tmp = new Path(root, s"_cp-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = {
-      val it = fs.listFiles(tmp, true)
-      var found: Path = null
-      while (it.hasNext && found == null) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) found = f
-      }
-      found
-    }
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(part, dest), s"delta: checkpoint rename failed ($dest)")
-    fs.delete(tmp, true)
+    graft.lake.CommitIo.stage(spark, root) { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    } { (_, _) => dest }
   }
 
   private def writeLastCheckpoint(sizeActions: Long,
@@ -1675,10 +1599,10 @@ object DeltaWriter {
         if (n.has("add")) {
           val node = mapper.createObjectNode()
           node.set[ObjectNode]("add", n.get("add").deepCopy())
-          live(n.get("add").get("path").asText()) = node
+          live(DeltaTable.decodePath(n.get("add").get("path").asText())) = node
         }
         if (n.has("remove"))
-          live.remove(n.get("remove").path("path").asText())
+          live.remove(DeltaTable.decodePath(n.get("remove").path("path").asText()))
         if (n.has("txn")) {
           val t = n.get("txn")
           txnSeen(t.get("appId").asText()) =

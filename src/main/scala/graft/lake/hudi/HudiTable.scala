@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.lake.{DataFileMeta, FilePruner, Meta}
+import graft.lake.{DataFileMeta, FilePruner, HivePartitionedRead, Meta}
 
 /** Read-only Apache Hudi table reader — COPY_ON_WRITE and (since r09)
   * MERGE_ON_READ — the third real-format interop surface (with Delta,
@@ -90,12 +90,8 @@ final class HudiTable private (
   private[lake] def liveSlices: Seq[HudiTable.Slice] = slices
 
   private def toDataFileMeta(s: HudiTable.Slice): DataFileMeta = {
-    val pvals = s.partitionPath.split("/").filter(_.contains("=")).map { seg =>
-      val eq = seg.indexOf('=')
-      seg.substring(0, eq) ->
-        (if (seg.substring(eq + 1) == "__HIVE_DEFAULT_PARTITION__") Meta.NullPartition
-         else HudiTable.unescapeHive(seg.substring(eq + 1)))
-    }.toMap
+    val pvals = HivePartitionedRead.segments(s.partitionPath).map { case (k, v) =>
+      k -> v.getOrElse(Meta.NullPartition) }.toMap
     DataFileMeta(s.path, 0L, s.numWrites, 0L, pvals, Map.empty)
   }
 
@@ -418,23 +414,6 @@ final class HudiTable private (
 }
 
 object HudiTable {
-
-  /** Inverse of the writer's Hive %XX partition-value escaping
-    * (HudiWriter.escapeHive) — same codec as the Delta/Iceberg/Graft
-    * partition readers. */
-  private[hudi] def unescapeHive(s: String): String = {
-    if (s.indexOf('%') < 0) return s
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   private val mapper = new ObjectMapper()
 

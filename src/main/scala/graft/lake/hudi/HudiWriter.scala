@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.ParquetStats
+import graft.lake.{CommitIo, HivePartitionedRead, Meta}
 
 /** Minimal Apache Hudi writer (COPY_ON_WRITE and MERGE_ON_READ)
   * conforming to the published table layout: hive-style partition dirs
@@ -87,27 +87,12 @@ final class HudiWriter private (
   private def nextInstant(): String = { instantSeq += 1; f"$instantSeq%017d" }
   private def nextFileId(): String = { fileSeq += 1; f"g$fileSeq%08d" }
 
-  /** Hive's escapePathName set (%XX): without it a value containing '/'
-    * or '=' corrupts the partition layout — the reader splits the path
-    * on those — and pruning silently returns wrong rows. The reader
-    * unescapes (HudiTable.toDataFileMeta), matching the Delta/Iceberg/
-    * Graft partition codecs. */
-  private def escapeHive(s: String): String = {
-    val specials = "\"#%'*/:=?\\^[]{}"
-    val sb = new StringBuilder
-    s.foreach { c =>
-      if (c < ' ' || c.toInt == 0x7F || specials.indexOf(c.toInt) >= 0)
-        sb.append(f"%%${c.toInt}%02X")
-      else sb.append(c)
-    }
-    sb.toString
-  }
-
-  private def hivePartPath(r: org.apache.spark.sql.Row): String =
+  /** Hive partition path of one record's partition values, through the
+    * shared codec's encoder. */
+  private def hivePartPath(valueOf: String => Any): String =
     partitionFields.map { f =>
-      val v = r.getAs[Any](f)
-      s"$f=${if (v == null) "__HIVE_DEFAULT_PARTITION__"
-             else escapeHive(v.toString)}"
+      val v = valueOf(f)
+      s"$f=${if (v == null) Meta.NullPartition else HivePartitionedRead.escape(v.toString)}"
     }.mkString("/")
 
   /** Writes one file group's rows as a base file (one slice). Rows may
@@ -120,7 +105,6 @@ final class HudiWriter private (
     val fileName = s"${fileId}_0-0-0_$instant.parquet"
     val rel = if (partPath.isEmpty) fileName else s"$partPath/$fileName"
     val dest = new Path(root, rel)
-    fs.mkdirs(dest.getParent)
     val stamped =
       if (rows.columns.contains("_hoodie_commit_time"))
         rows.withColumn("_hoodie_commit_time",
@@ -133,24 +117,12 @@ final class HudiWriter private (
       .withColumn("_hoodie_partition_path", lit(partPath))
       .withColumn("_hoodie_file_name", lit(fileName))
       .select((HudiTable.MetaColumns ++ schema.fieldNames).map(col).toIndexedSeq: _*)
-    val tmp = new Path(root, s"_tmp-$fileId-$instant")
-    // INT64 micros, not INT96: real Hudi writers emit int64 timestamps
-    // and INT96 footers carry no stats
-    graft.lake.ParquetStats.withMicrosTimestamps(spark) {
+    // INT64 micros, not INT96 (CommitIo.stage): real Hudi writers emit
+    // int64 timestamps and INT96 footers carry no stats
+    val Seq((_, _, footer)) = CommitIo.stage(spark, root) { tmp =>
       withMeta.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    }
-    val part = {
-      val it = fs.listFiles(tmp, true)
-      var found: Path = null
-      while (it.hasNext && found == null) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) found = f
-      }
-      found
-    }
-    require(fs.rename(part, dest), s"hudi: rename $part -> $dest failed")
-    fs.delete(tmp, true)
-    (rel, ParquetStats.rowCount(conf, dest))
+    } { (_, _) => dest }
+    (rel, footer.rows)
   }
 
   /** Writes ONE new base slice per distinct `__fid` in `rows` — however
@@ -201,40 +173,21 @@ final class HudiWriter private (
         concat(col("__fid"), lit(s"_0-0-0_$instant.parquet")))
       .select((col("__fid") +:
         (HudiTable.MetaColumns ++ schema.fieldNames).map(col)).toIndexedSeq: _*)
-    val tmp = new Path(root, s"_tmp-slices-$instant")
-    // INT64 micros, not INT96: real Hudi writers emit int64 timestamps
-    // and INT96 footers carry no stats
-    graft.lake.ParquetStats.withMicrosTimestamps(spark) {
+    // one part file per fid dir (`__fid=<fid>`), moved to its slice name;
+    // INT64 micros, not INT96 (CommitIo.stage) — see writeSlice
+    def sliceRel(fid: String): String = {
+      val pp = partPathOf(fid)
+      (if (pp.isEmpty) "" else s"$pp/") + s"${fid}_0-0-0_$instant.parquet"
+    }
+    val stats = CommitIo.stage(spark, root) { tmp =>
       withMeta.repartition(col("__fid"))
         .write.partitionBy("__fid").mode("overwrite").parquet(tmp.toString)
-    }
-    // per-slice finalize (list + rename + footer row count) on the shared
-    // commit IO pool — these are independent metadata RPCs and ran
-    // sequentially before r17 (O(slices) driver latency per commit; same
-    // fix GraftTable's finalize got in r14). Deterministic order: dirs
-    // sorted by fid, futures joined in input order.
-    val hconf = conf // one Configuration for the pool, not one per task
-    val fidDirs = fs.listStatus(tmp).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("__fid="))
-      .sortBy(_.getPath.getName)
-    val stats = scala.collection.mutable.ArrayBuffer[(String, String, String, Long)]()
-    stats ++= graft.lake.CommitIo.inIoPool(fidDirs.toSeq) { st =>
-      val fid = st.getPath.getName.stripPrefix("__fid=")
-      val parts = fs.listStatus(st.getPath).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      require(parts.length == 1,
-        s"hudi: expected one part file for slice $fid, got ${parts.length}")
-      val pp = partPathOf(fid)
-      val fileName = s"${fid}_0-0-0_$instant.parquet"
-      val rel = if (pp.isEmpty) fileName else s"$pp/$fileName"
-      val dest = new Path(root, rel)
-      fs.mkdirs(dest.getParent)
-      require(fs.rename(parts.head, dest), s"hudi: rename ${parts.head} -> $dest failed")
-      (pp, fid, rel, ParquetStats.rowCount(hconf, dest))
-    }
-    val written = scala.collection.mutable.Set[String]()
-    written ++= stats.map(_._2)
-    fs.delete(tmp, true)
+    } { (rel, _) => new Path(root, sliceRel(rel.stripPrefix("__fid=")))
+    }.map { case (_, rel, footer) =>
+      val fid = rel.stripPrefix("__fid=")
+      (partPathOf(fid), fid, sliceRel(fid), footer.rows)
+    }.toBuffer
+    val written = stats.map(_._2).toSet
     // a fully-emptied group writes an empty slice (rare; per-fid fallback)
     (partPathOf.keySet -- written).toSeq.sorted.foreach { fid =>
       val empty = spark.createDataFrame(
@@ -290,7 +243,8 @@ final class HudiWriter private (
         pr -> Seq.fill(groupsFor(pr.getAs[Long]("count"), recSize))(nextFileId())
       }
       val partPathOf = fidsByPart.flatMap { case (pr, fids) =>
-        fids.map(_ -> hivePartPath(pr)) }.toMap
+        val pp = hivePartPath(pr.getAs[Any](_))
+        fids.map(_ -> pp) }.toMap
       val fidSchema = StructType(
         partitionFields.map(f => schema(schema.fieldIndex(f)).copy(name = s"__pf_$f")) :+
           StructField("__fids", ArrayType(StringType)))
@@ -552,11 +506,7 @@ final class HudiWriter private (
     require(partitionFields.nonEmpty, "hudi: deletePartition needs a partitioned table")
     require(partValues.keySet == partitionFields.toSet,
       s"hudi: deletePartition needs values for $partitionFields, got ${partValues.keySet}")
-    val pp = partitionFields.map { f =>
-      val v = partValues(f)
-      s"$f=${if (v == null) "__HIVE_DEFAULT_PARTITION__"
-             else escapeHive(v.toString)}" // same codec as the written layout
-    }.mkString("/")
+    val pp = hivePartPath(partValues) // same codec as the written layout
     val t = HudiTable.load(spark, location)
     val doomed = t.liveSlices.filter(_.partitionPath == pp)
     require(doomed.nonEmpty, s"hudi: no live file groups under partition $pp")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{ColStats, DataFileMeta, FilePruner}
+import graft.lake.{ColStats, DataFileMeta, FilePruner, ParquetStats}
 
 /** Read-only Apache Iceberg v1/v2 table reader — REAL-format interop, the
   * reference's headline capability ("Native Apache Iceberg support",
@@ -974,7 +974,7 @@ final class IcebergTable private (
           // it the same way the delete/DV side is before joining
           df.withColumn(PosFileCol, normPath(col(PosFileCol)))
         else df
-          .withColumn(PosFileCol, normPath(col("_metadata.file_path")))
+          .withColumn(PosFileCol, normPath(ParquetStats.scanFilePath))
           .withColumn(PosIdxCol, col("_metadata.row_index"))
       // hive-layout read: discovered partition columns carry the
       // writer's dir names — rename to the source columns (an alias
@@ -1002,7 +1002,7 @@ final class IcebergTable private (
         val bcVals = spark.sparkContext.broadcast(internal)
         val pathC =
           if (needMeta) col(PosFileCol)
-          else normPath(col("_metadata.file_path"))
+          else normPath(ParquetStats.scanFilePath)
         idFields.zipWithIndex.foreach { case ((_, sf), i) =>
           df = df.withColumn(sf.name,
             graft.expressions.FileConstant.column(pathC, sf.dataType, raw =>
@@ -1075,7 +1075,7 @@ final class IcebergTable private (
           val bc = spark.sparkContext.broadcast(byPath)
           val pathC =
             if (needMeta) col(PosFileCol)
-            else normPath(col("_metadata.file_path"))
+            else normPath(ParquetStats.scanFilePath)
           val seqC = graft.expressions.FileConstant.column(pathC, LongType,
             raw => bc.value.get(IcebergTable.pathKey(raw)) match {
               case Some(s) => Long.box(s)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.ParquetStats
+import graft.lake.{HivePartitionedRead, ParquetStats}
 
 /** Minimal Apache Iceberg v2 WRITER conforming to the published table
   * spec: parquet data files (with parquet field ids), Avro manifests and
@@ -158,7 +158,7 @@ final class IcebergWriter private (
     import spark.implicits._
     val partials: Array[(String, Array[Byte])] =
       spark.read.parquet(affected: _*)
-        .withColumn("__fp", col("_metadata.file_path"))
+        .withColumn("__fp", ParquetStats.scanFilePath)
         .withColumn("__ri", col("_metadata.row_index"))
         .filter(coalesce(cond, lit(false)))
         .select(col("__fp"), col("__ri")).as[(String, Long)]
@@ -526,7 +526,7 @@ final class IcebergWriter private (
     require(fs.exists(src), s"iceberg add_files: no such directory $srcDir")
     val referenced = IcebergTable.load(spark, location).planFiles()
       .map(IcebergTable.pathKey).toSet
-    val dup = listParquet(src).map(p =>
+    val dup = ParquetStats.listParquet(fs, src).map(p =>
       IcebergTable.pathKey(fs.makeQualified(p).toString)).filter(referenced)
     require(dup.isEmpty,
       s"iceberg add_files: ${dup.size} file(s) already referenced by the " +
@@ -542,52 +542,24 @@ final class IcebergWriter private (
   private def adoptDataFiles(srcRoot: Path = root): Long = {
     val sch = curSchema
     val spec = curSpec
-    val files = listParquet(srcRoot).filterNot(p =>
-      relDir(srcRoot, p).split("/").headOption.contains("metadata"))
+    val files = ParquetStats.listParquet(fs, srcRoot).filterNot(p =>
+      HivePartitionedRead.relDir(srcRoot, p).split("/").headOption.contains("metadata"))
     require(files.nonEmpty, s"iceberg adopt: no parquet files under $srcRoot")
     // one DISTRIBUTED footer job over the estate (Iceberg's own
     // add_files runs the stat collection as a Spark job too) — never a
     // sequential per-file driver walk
     val footers = ParquetStats.readFooters(spark, files)
-    val entries = files.sortBy(_.toString).map { p =>
-      val rel = relDir(srcRoot, p)
-      val dirs: Map[String, String] =
-        rel.split("/").filter(_.contains("=")).map { seg =>
-          val eq = seg.indexOf('=')
-          seg.substring(0, eq) -> seg.substring(eq + 1)
-        }.toMap
+    val entries = files.map { p =>
+      val dirs = HivePartitionedRead.segments(HivePartitionedRead.relDir(srcRoot, p)).toMap
       val partVals: Map[String, Any] = spec.fields.map { pf =>
-        val src = sch.byId(pf.sourceId)
-        val raw = dirs.getOrElse(pf.name, throw new IllegalArgumentException(
+        val v = dirs.getOrElse(pf.name, throw new IllegalArgumentException(
           s"iceberg adopt: $p lacks a hive dir for partition column ${pf.name}"))
-        val v: Any =
-          if (raw == "__HIVE_DEFAULT_PARTITION__") null
-          else src.dataType match {
-            case IntegerType => raw.toInt
-            case LongType => raw.toLong
-            case StringType => unescapeHive(raw)
-            case BooleanType => raw.toBoolean
-            case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
-            case other => throw new IllegalArgumentException(
-              s"iceberg adopt: unsupported partition column type $other for ${pf.name}")
-          }
-        pf.name -> v
+        pf.name -> partValue(v, sch.byId(pf.sourceId).dataType, epochDays = false)
       }.toMap
       val footer = footers(p.toString)
-      val lower = scala.collection.mutable.Map[Int, Array[Byte]]()
-      val upper = scala.collection.mutable.Map[Int, Array[Byte]]()
-      val nulls = scala.collection.mutable.Map[Int, Long]()
-      sch.fields.foreach { f =>
-        footer.stats.get(f.name).foreach { st =>
-          nulls(f.id) = st.nulls
-          for {
-            lo <- IcebergMeta.encodeBound(f.typeStr, st.min)
-            hi <- IcebergMeta.encodeBound(f.typeStr, st.max)
-          } { lower(f.id) = lo; upper(f.id) = hi }
-        }
-      }
+      val (lower, upper, nulls) = bounds(sch, footer)
       fileEntry(p, content = 0, footer.rows, footer.size,
-        partVals, lower.toMap, upper.toMap, Nil, nulls.toMap)
+        partVals, lower, upper, Nil, nulls)
     }
     commitManifests("append", Seq("data" -> entries))
   }
@@ -699,7 +671,6 @@ final class IcebergWriter private (
     val sch = curSchema
     val spec = curSpec
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_tmp-$nonce")
     // parquet field ids make the files resolvable by id for OTHER readers
     // (materialized lineage columns use the v3 spec's RESERVED ids)
     val lineageCols =
@@ -717,110 +688,73 @@ final class IcebergWriter private (
     val staged = derived.foldLeft(withIds) { case (d, (n, pf)) =>
       d.withColumn(n, transformColumn(pf))
     }
-    // INT64 micros, not INT96: the Iceberg spec REQUIRES int64 micros
-    // for timestamp columns (and INT96 carries no footer stats)
-    ParquetStats.withMicrosTimestamps(spark) {
+    // INT64 micros, not INT96 (CommitIo.stage): the Iceberg spec REQUIRES
+    // int64 micros for timestamp columns (and INT96 carries no footer stats)
+    graft.lake.CommitIo.stage(spark, root) { tmp =>
       val writer = staged.write.mode("overwrite")
       (if (derived.nonEmpty) writer.partitionBy(derived.map(_._1): _*) else writer)
         .parquet(tmp.toString)
+    } { (rel, i) =>
+      new Path(root, if (rel.isEmpty) f"data/$nonce-$i%05d.parquet"
+        else f"data/$rel/$nonce-$i%05d.parquet")
+    }.map { case (dest, rel, footer) =>
+      // hive dirs of the derived columns → typed partition values
+      val dirs = HivePartitionedRead.segments(rel).toMap
+      val partVals: Map[String, Any] = derived.map { case (n, pf) =>
+        pf.name -> partValue(dirs.getOrElse(n, None), IcebergTransforms.resultType(
+          pf.transform, sch.byId(pf.sourceId).dataType), epochDays = true)
+      }.toMap
+      val (lower, upper, nulls) = bounds(sch, footer)
+      fileEntry(dest, content = 0, footer.rows, footer.size,
+        partVals, lower, upper, Nil, nulls)
     }
-
-    // per-file finalize (rename + footer stats) on the shared commit IO
-    // pool — independent metadata RPCs that ran sequentially before r17
-    // (O(files) driver latency per commit; the fix GraftTable's finalize
-    // got in r14). Names stay deterministic: indices assigned from the
-    // sorted staged list BEFORE the pool, futures joined in input order.
-    val hconf = conf // one Configuration for the pool, not one per file
-    val out = graft.lake.CommitIo.inIoPool(listParquet(tmp).zipWithIndex.toSeq) {
-      case (p, i) =>
-        val rel = relDir(tmp, p) // hive dirs of the derived columns
-        val partVals: Map[String, Any] = derived.zip(parseHiveDirs(rel, derived)).map {
-          case ((_, pf), v) => pf.name -> v
-        }.toMap
-        val destDir = if (rel.isEmpty) new Path(root, "data") else new Path(root, s"data/$rel")
-        fs.mkdirs(destDir)
-        val dest = new Path(destDir, f"$nonce-$i%05d.parquet")
-        require(fs.rename(p, dest), s"iceberg: rename $p -> $dest failed")
-        val (rows, stats) = ParquetStats.read(hconf, dest)
-        val bytes = fs.getFileStatus(dest).getLen
-        val lower = scala.collection.mutable.Map[Int, Array[Byte]]()
-        val upper = scala.collection.mutable.Map[Int, Array[Byte]]()
-        val nulls = scala.collection.mutable.Map[Int, Long]()
-        sch.fields.foreach { f =>
-          stats.get(f.name).foreach { st =>
-            nulls(f.id) = st.nulls
-            for {
-              lo <- IcebergMeta.encodeBound(f.typeStr, st.min)
-              hi <- IcebergMeta.encodeBound(f.typeStr, st.max)
-            } { lower(f.id) = lo; upper(f.id) = hi }
-          }
-        }
-        fileEntry(dest, content = 0, rows, bytes,
-          partVals, lower.toMap, upper.toMap, Nil, nulls.toMap)
-    }
-    fs.delete(tmp, true)
-    out
   }
 
-  /** Parse the hive dir fragment of a staged file back into typed
-    * partition values, in `derived` order. */
-  private def parseHiveDirs(rel: String,
-      derived: Seq[(String, IcePartField)]): Seq[Any] = {
-    val dirs = rel.split("/").filter(_.contains("=")).map { seg =>
-      val eq = seg.indexOf('=')
-      seg.substring(0, eq) -> seg.substring(eq + 1)
-    }.toMap
-    derived.map { case (n, pf) =>
-      dirs.get(n) match {
-        case None | Some("__HIVE_DEFAULT_PARTITION__") => null
-        case Some(raw) =>
-          val src = curSchema.byId(pf.sourceId)
-          IcebergTransforms.resultType(pf.transform, src.dataType) match {
-            case IntegerType => raw.toInt
-            case LongType => raw.toLong
-            case StringType => unescapeHive(raw)
-            case BooleanType => raw.toBoolean
-            case DateType =>
-              // day-transform dirs hold the epoch-day int; identity date
-              // dirs hold yyyy-MM-dd
-              raw.toIntOption.getOrElse(java.time.LocalDate.parse(raw).toEpochDay.toInt)
-            case other => throw new IllegalArgumentException(
-              s"iceberg writer: cannot parse partition dir for $other")
-          }
+  /** Typed partition value of a decoded hive dir value (None = null).
+    * Day-transform dirs hold the epoch-day int (`epochDays`); identity
+    * date dirs hold yyyy-MM-dd. */
+  private def partValue(v: Option[String], dt: DataType, epochDays: Boolean): Any =
+    v match {
+      case None => null
+      case Some(raw) => dt match {
+        case IntegerType => raw.toInt
+        case LongType => raw.toLong
+        case StringType => raw
+        case BooleanType => raw.toBoolean
+        case DateType =>
+          (if (epochDays) raw.toIntOption else None)
+            .getOrElse(java.time.LocalDate.parse(raw).toEpochDay.toInt)
+        case other => throw new IllegalArgumentException(
+          s"iceberg: unsupported partition value type $other")
       }
     }
-  }
 
-  private def unescapeHive(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '%' && i + 2 < s.length + 1 && i + 3 <= s.length) {
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(ch); i += 1 }
-      } else { sb.append(ch); i += 1 }
+  /** Per-field-id lower/upper bounds and null counts from a footer. */
+  private def bounds(sch: IceSchema, footer: ParquetStats.FileFooter)
+      : (Map[Int, Array[Byte]], Map[Int, Array[Byte]], Map[Int, Long]) = {
+    val lower = scala.collection.mutable.Map[Int, Array[Byte]]()
+    val upper = scala.collection.mutable.Map[Int, Array[Byte]]()
+    val nulls = scala.collection.mutable.Map[Int, Long]()
+    sch.fields.foreach { f =>
+      footer.stats.get(f.name).foreach { st =>
+        nulls(f.id) = st.nulls
+        for {
+          lo <- IcebergMeta.encodeBound(f.typeStr, st.min)
+          hi <- IcebergMeta.encodeBound(f.typeStr, st.max)
+        } { lower(f.id) = lo; upper(f.id) = hi }
+      }
     }
-    sb.toString
+    (lower.toMap, upper.toMap, nulls.toMap)
   }
 
   /** Plain parquet write of an auxiliary (delete) file set. Returns
     * (path, rows, bytes) per produced file. */
   private def writeParquet(df: DataFrame, kind: String): Seq[(Path, Long, Long)] = {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_tmp-$kind-$nonce")
-    ParquetStats.withMicrosTimestamps(spark) {
+    graft.lake.CommitIo.stage(spark, root) { tmp =>
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    }
-    val out = listParquet(tmp).zipWithIndex.map { case (p, i) =>
-      val destDir = new Path(root, "data")
-      fs.mkdirs(destDir)
-      val dest = new Path(destDir, f"$kind-$nonce-$i%05d.parquet")
-      require(fs.rename(p, dest), s"iceberg: rename $p -> $dest failed")
-      (dest, ParquetStats.rowCount(conf, dest), fs.getFileStatus(dest).getLen)
-    }
-    fs.delete(tmp, true)
-    out
+    } { (_, i) => new Path(root, f"data/$kind-$nonce-$i%05d.parquet")
+    }.map { case (dest, _, footer) => (dest, footer.rows, footer.size) }
   }
 
   private def fileEntry(p: Path, content: Int, rows: Long, bytes: Long,
@@ -1044,22 +978,6 @@ final class IcebergWriter private (
       out.add(r)
     }
     out
-  }
-
-  private def listParquet(dir: Path): Seq[Path] = {
-    val out = scala.collection.mutable.ArrayBuffer[Path]()
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) out += f
-    }
-    out.sortBy(_.toString).toSeq
-  }
-
-  private def relDir(base: Path, file: Path): String = {
-    val b = fs.makeQualified(base).toString
-    val d = fs.makeQualified(file.getParent).toString
-    if (d == b) "" else d.stripPrefix(b + "/")
   }
 
   private def writeMetadata(): Unit = {

@@ -83,3 +83,66 @@ class S3LikeFileSystem extends GraftFsFileSystem {
     super.rename(src, dst)
   }
 }
+
+/** Fault-injecting variant: fails the k-th `create` or `rename` whose path
+  * matches a predicate (for a rename, the DESTINATION path) with an
+  * IOException, once; every other call passes through. The armed fault
+  * lives in the companion object because Hadoop instantiates (and
+  * caches) the FileSystem itself. Tables under `faultfs:///<local path>`
+  * take every IO through it. */
+class FaultFs extends GraftFsFileSystem {
+  override def getScheme: String = FaultFs.Scheme
+
+  override def create(
+      f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FaultFs.check("create", f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    FaultFs.check("rename", dst)
+    super.rename(src, dst)
+  }
+}
+
+object FaultFs {
+  val Scheme = "faultfs"
+
+  private final class Fault(val op: String, val matches: Path => Boolean, var left: Int)
+  private var armed: Option[Fault] = None
+
+  /** Registers the scheme on `conf` (the session's Hadoop configuration). */
+  def register(conf: Configuration): Unit =
+    conf.set(s"fs.$Scheme.impl", classOf[FaultFs].getName)
+
+  /** `faultfs:` URI of a local absolute path. */
+  def uri(localPath: String): String = s"$Scheme://$localPath"
+
+  /** Arms a failure of the `k`-th (1-based) `create` matching `p`. */
+  def failCreate(k: Int)(p: Path => Boolean): Unit = arm("create", k, p)
+
+  /** Arms a failure of the `k`-th (1-based) `rename` whose destination
+    * matches `p`. */
+  def failRename(k: Int)(p: Path => Boolean): Unit = arm("rename", k, p)
+
+  /** Disarms a fault that has not fired. */
+  def clear(): Unit = synchronized { armed = None }
+
+  private def arm(op: String, k: Int, p: Path => Boolean): Unit = synchronized {
+    require(k >= 1, s"k must be >= 1, got $k")
+    armed = Some(new Fault(op, p, k))
+  }
+
+  private[graft] def check(op: String, path: Path): Unit = synchronized {
+    armed.foreach { f =>
+      if (f.op == op && f.matches(path)) {
+        f.left -= 1
+        if (f.left == 0) {
+          armed = None
+          throw new java.io.IOException(s"injected $op failure at $path")
+        }
+      }
+    }
+  }
+}

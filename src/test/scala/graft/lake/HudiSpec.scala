@@ -41,6 +41,32 @@ class HudiSpec extends AnyFunSuite {
     // deletePartition addresses the partition by its RAW value too
     w.deletePartition(Map("p" -> "a/b=c"))
     assert(HudiTable.load(spark, dir("escape")).scan().count() == 1)
+
+    // a FOREIGN table written with Hudi's default urlencode=false keeps raw
+    // values in its dirs: malformed escapes ('50%off', 'a%-1') must load
+    // and read back literally, exactly as Spark's decoder keeps them
+    val raw = Seq("50%off", "a%-1")
+    val d = freshDir("escape-raw")
+    HudiWriter.create(spark, d, df.schema, partitionFields = Seq("p"), keyField = "id")
+      .insert(raw.zipWithIndex.map { case (v, i) => (i.toLong, v, i.toDouble) }.toDF("id", "p", "v"))
+    val fs = new Path(d).getFileSystem(spark.sessionState.newHadoopConf())
+    raw.foreach { v =>
+      val escaped = s"p=${v.replace("%", "%25")}"
+      assert(fs.rename(new Path(d, escaped), new Path(d, s"p=$v")))
+      fs.listStatus(new Path(d, ".hoodie")).map(_.getPath)
+        .filter(_.getName.endsWith(".commit")).foreach { c =>
+          val in = fs.open(c)
+          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+          val out = fs.create(c, true)
+          try out.write(text.replace(escaped, s"p=$v").getBytes("UTF-8")) finally out.close()
+        }
+    }
+    val foreign = HudiTable.load(spark, d)
+    raw.zipWithIndex.foreach { case (v, i) =>
+      assert(foreign.planFiles(Some(col("p") === v)).size == 1, v)
+      val got = foreign.scan(Some(col("p") === v)).select("id", "p").collect()
+      assert(got.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((i.toLong, v)), v)
+    }
   }
 
   test("reopen after deletePartition never re-mints the retired file id") {

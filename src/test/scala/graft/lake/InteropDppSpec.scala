@@ -292,8 +292,14 @@ class InteropDppSpec extends AnyFunSuite {
     assert(H.canonicalFor("__HIVE_DEFAULT_PARTITION__", IntegerType))
     assert(!H.canonicalFor("2020-1-5", DateType))
     assert(H.canonicalFor("2020-01-05", DateType))
-    // escaped values round-trip: '=' and '/' are %-escaped in dirs
+    // escaped values round-trip through the shared codec: '=' and '/'
+    // are %-escaped in dirs; malformed escapes stay literal, as Spark's
+    // partition discovery keeps them
     assert(H.unescape("a%3Db%2Fc") == "a=b/c")
+    assert(H.unescape(H.escape("a/b=c}%")) == "a/b=c}%")
+    Seq("50%off", "a%-1", "a%+1b", "a%4").foreach(v => assert(H.unescape(v) == v, v))
+    assert(H.segments("k=a%3Db/__x/j=__HIVE_DEFAULT_PARTITION__") ==
+      Seq("k" -> Some("a=b"), "j" -> None))
     assert(H.matchesAuthoritative("a%3Db%2Fc", "a=b/c"))
     // MALFORMED escapes refuse outright: decoders disagree on them
     // (parseInt-based ones accept '%+1'; digit-checked ones keep it

@@ -253,4 +253,43 @@ class MigrateSpec extends AnyFunSuite {
     assert(t.scan().count() == orders.count())
     info(f"converted $nFiles-file estate in $convertSecs%.1f s (footers executor-side)")
   }
+
+  /** A foreign hive layout whose dir values were written RAW (e.g. Hudi's
+    * default urlencode=false): `p=50%off` and `p=a%-1` hold malformed
+    * escapes, which Spark's decoder keeps literal. */
+  private val rawValues = Seq("50%off", "a%-1")
+
+  private def writeRawLayout(loc: String): Unit = {
+    import spark.implicits._
+    rawValues.zipWithIndex.foreach { case (v, i) =>
+      Seq((i * 10L, i.toDouble), (i * 10L + 1L, i + 0.5)).toDF("id", "v")
+        .coalesce(1).write.parquet(s"$loc/p=$v")
+    }
+  }
+
+  private def assertRawValuesReadBack(plan: Option[org.apache.spark.sql.Column] => Int,
+      scan: Option[org.apache.spark.sql.Column] => org.apache.spark.sql.DataFrame): Unit = {
+    rawValues.zipWithIndex.foreach { case (v, i) =>
+      val got = scan(Some(col("p") === v)).select("id", "p").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+      assert(got == Seq((i * 10L, v), (i * 10L + 1L, v)), s"partition value $v")
+      assert(plan(Some(col("p") === v)) == 1, s"pruned plan for $v")
+    }
+    assert(scan(None).select("p").distinct().collect().map(_.getString(0)).toSet ==
+      rawValues.toSet)
+  }
+
+  test("convert and adopt read malformed-escape dir values literally, as Spark does") {
+    val d = freshDir("delta-raw-escapes")
+    writeRawLayout(d)
+    DeltaWriter.convert(spark, d, Seq("p"))
+    val dt = DeltaTable.load(spark, d)
+    assertRawValuesReadBack(f => dt.planFiles(f).size, dt.scan(_))
+
+    val i = freshDir("ice-raw-escapes")
+    writeRawLayout(i)
+    IcebergWriter.adopt(spark, i, Seq("p"))
+    val ice = IcebergTable.load(spark, i)
+    assertRawValuesReadBack(f => ice.planFiles(f).size, ice.scan(_))
+  }
 }
