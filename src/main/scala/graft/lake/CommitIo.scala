@@ -1,23 +1,79 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The staged-file writer of all four table formats (graft, Delta,
-  * Iceberg, Hudi): every data, delete, change-data, slice and checkpoint
-  * parquet file a writer commits is produced by [[stage]], so the
-  * write → list → rename → footer → clean-up sequence exists once. The
-  * formats keep only their protocol parts: file naming (`dest`), how the
-  * returned partition dirs and footers become actions / manifest entries
-  * / slices, and the publish step.
+/** The IO every commit of the four table formats (graft, Delta,
+  * Iceberg, Hudi) goes through; the formats keep only their protocol
+  * parts (file naming, how footers become actions / manifest entries /
+  * slices, the bytes of the commit point).
   *
-  * The per-file finalize (mkdirs + rename + footer read) runs on a
-  * bounded driver-side IO pool: independent metadata RPCs that, run
-  * sequentially, made commit latency O(files) — a 707-partition index
-  * build spent 350 s there at sf1 (same posture as Iceberg's worker-pool
-  * manifest writes). */
+  *  - [[stage]] produces every data, delete, change-data, slice and
+  *    checkpoint parquet file a writer commits. Its per-file finalize
+  *    (mkdirs + rename + footer read) runs on a bounded driver-side IO
+  *    pool: run sequentially, those RPCs made commit latency O(files) — a
+  *    707-partition index build spent 350 s there at sf1.
+  *  - [[publish]] writes every commit point (graft `vN.json`, Delta
+  *    `_delta_log/N.json`, Iceberg `vN.metadata.json`, Hudi instants) and
+  *    table-creation marker. Contract: the file appears whole or not at
+  *    all, and of two committers racing to one commit point exactly one
+  *    wins; the loser leaves nothing behind and gets a
+  *    `ConcurrentModificationException`. Writers advance their in-memory
+  *    state only after it returns. */
 object CommitIo {
   val Threads: Int = 16
+
+  /** An arbitrated commit point: the catalog compare-and-swap of
+    * `arbiter`'s version pointer from `version - 1` to `version`, naming
+    * the table-relative blob `rel`. */
+  final case class Cas(arbiter: CommitArbiter, version: Long, rel: String)
+
+  /** Publishes `bytes` as the commit point `dst`.
+    *
+    *  - Path-addressed (no `cas`): write a hidden tmp file next to `dst`
+    *    (`.<name>.<nonce>.tmp`, which no reader lists), then rename it to
+    *    `dst` iff `dst` does not exist, under an in-JVM lock per
+    *    destination directory (POSIX rename overwrites, so the check
+    *    alone is TOCTOU). Across processes this relies on
+    *    rename-fails-if-dst-exists, as on HDFS-class stores — the posture
+    *    of Delta's local LogStore and Iceberg's HadoopTableOperations.
+    *  - Arbitrated (`cas`): `dst` is a nonce-named blob, written
+    *    create-only; the catalog CAS is the commit point, so no rename
+    *    semantics are assumed (S3-class stores, where rename is
+    *    copy+delete and never fails on an existing destination).
+    *
+    * Any other IO failure propagates as is, with the tmp file removed
+    * (an arbiter that throws may have recorded the blob, so it stays). */
+  def publish(fs: FileSystem, dst: Path, bytes: Array[Byte],
+      cas: Option[Cas] = None): Unit = {
+    val written = cas match {
+      case Some(_) => dst
+      case None => new Path(dst.getParent,
+        s".${dst.getName}.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
+    }
+    def discard(): Unit = try fs.delete(written, false) catch { case _: Exception => () }
+    try {
+      val out = fs.create(written, false)
+      try out.write(bytes) finally out.close()
+    } catch { case e: Exception => discard(); throw e }
+    val won = cas match {
+      case Some(c) => c.arbiter.commitVersion(c.version - 1, c.version, c.rel)
+      case None =>
+        val dir = fs.makeQualified(dst.getParent).toString
+        try commitLocks.computeIfAbsent(dir, _ => new Object).synchronized {
+          !fs.exists(dst) && fs.rename(written, dst)
+        } catch { case e: Exception => discard(); throw e }
+    }
+    if (!won) {
+      discard()
+      throw new java.util.ConcurrentModificationException(
+        s"concurrent commit: $dst was published by another writer; " +
+          "reload the table and retry")
+    }
+  }
+
+  private val commitLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Runs `write(stage)` under [[ParquetStats.withMicrosTimestamps]]
     * into one fresh `_`-prefixed staging dir under `root`, then moves

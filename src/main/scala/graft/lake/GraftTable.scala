@@ -1113,8 +1113,7 @@ class GraftTable private (
         writeMeta(m.copy(version = m.version + 1, currentSnapshotId = head))
         return head
       } catch {
-        case e: RuntimeException if attempts < 5 && e.getMessage != null &&
-            e.getMessage.contains("concurrent commit") => attempts += 1
+        case _: java.util.ConcurrentModificationException if attempts < 5 => attempts += 1
       }
     }
     -1L // unreachable
@@ -1835,8 +1834,7 @@ class GraftTable private (
       }
       try return commitSnapshot(m, op, data, dels, replaceLists, propUpdates, reuseFrom)
       catch {
-        case e: RuntimeException if attempts < 5 &&
-            e.getMessage != null && e.getMessage.contains("concurrent commit") =>
+        case _: java.util.ConcurrentModificationException if attempts < 5 =>
           attempts += 1
           m = refresh()
       }
@@ -1860,24 +1858,14 @@ class GraftTable private (
     out.toSeq
   }
 
-  /** Atomic commit — two postures, picked by whether the table is
-    * catalog-arbitrated:
-    *
-    *  - `arbiter` present (catalog-managed, e.g. [[RestCatalog]]): write
-    *    the version blob to a NONCE-named path (create-only, collision
-    *    free) and make the catalog's compare-and-swap of the version
-    *    pointer the commit point. No rename semantics are assumed of the
-    *    store at all — this is the protocol that stays correct on
-    *    S3-class object stores, where rename is copy+delete and does NOT
-    *    fail on an existing destination (the reference's deployment
-    *    target, README.md:7-8, src/io/s3_io.c; its PG incarnation
-    *    arbitrates through PG transactions, commit_ops.c:41-86 — same
-    *    role, different arbiter).
-    *  - no arbiter (path-addressed table): write tmp, rename to the
-    *    versioned name; a concurrent committer racing to the same version
-    *    loses the rename. Correct for HDFS-class stores and local paths —
-    *    same posture as Iceberg's HadoopTableOperations.
-    */
+  /** Atomic commit through [[CommitIo.publish]]. A catalog-arbitrated
+    * table (e.g. [[RestCatalog]]) writes the version blob under a NONCE
+    * name and makes the catalog's compare-and-swap of the version pointer
+    * the commit point — correct on S3-class object stores (the
+    * reference's deployment target, README.md:7-8, src/io/s3_io.c; its PG
+    * incarnation arbitrates through PG transactions, commit_ops.c:41-86 —
+    * same role, different arbiter). A path-addressed table publishes the
+    * versioned name by tmp + rename-if-absent. */
   private[lake] def writeMeta(m: TableMetadata): Unit = {
     // Transaction staging: record the would-be-published metadata instead
     // of publishing it. The handle's own view advances (so a later op in
@@ -1893,44 +1881,17 @@ class GraftTable private (
     }
     val dir = new Path(root, "metadata")
     fs.mkdirs(dir)
-    arbiter match {
-      case Some(arb) =>
-        val nonce = java.util.UUID.randomUUID.toString.take(8)
-        val rel = f"v${m.version}%05d-$nonce.json"
-        val blob = new Path(dir, rel)
-        val out = fs.create(blob, false) // nonce name → create never collides
-        try out.write(Meta.toJson(m.toDoc).getBytes("UTF-8")) finally out.close()
-        if (!arb.commitVersion(m.version - 1, m.version, s"metadata/$rel")) {
-          fs.delete(blob, false) // lost the CAS: blob is garbage, retry fresh
-          sys.error(s"concurrent commit detected at version ${m.version}")
-        }
-      case None =>
-        // nonce'd tmp: two racing committers must never collide on the
-        // staging file (a shared name let the loser truncate the winner's
-        // half-written metadata — found by the racing-appends spec)
-        val nonce = java.util.UUID.randomUUID.toString.take(8)
-        val tmp = new Path(dir, f"_tmp_${nonce}_v${m.version}%05d.json")
-        val dst = new Path(dir, f"v${m.version}%05d.json")
-        val out = fs.create(tmp, true)
-        try out.write(Meta.toJson(m.toDoc).getBytes("UTF-8")) finally out.close()
-        // In-JVM committers serialize on a per-location lock, which makes
-        // the exists+rename check-then-act race-free for local[*] (POSIX
-        // rename overwrites silently, so the check alone is TOCTOU).
-        // Cross-process safety rides on rename-fails-if-dst-exists, which
-        // HDFS-class stores guarantee.
-        val committed = GraftTable.commitLock(location).synchronized {
-          !fs.exists(dst) && fs.rename(tmp, dst)
-        }
-        if (!committed) {
-          fs.delete(tmp, false)
-          sys.error(s"concurrent commit detected at version ${m.version}")
-        }
+    val rel = arbiter match {
+      case Some(_) => f"v${m.version}%05d-${java.util.UUID.randomUUID.toString.take(8)}.json"
+      case None => f"v${m.version}%05d.json"
     }
+    CommitIo.publish(fs, new Path(dir, rel), Meta.toJson(m.toDoc).getBytes("UTF-8"),
+      arbiter.map(CommitIo.Cas(_, m.version, s"metadata/$rel")))
     cached = m
   }
 
-  /** Writes the staged metadata as a nonce-named blob (create-only —
-    * never observable until the catalog pointer moves) and returns
+  /** Publishes the staged metadata as a nonce-named blob (whole or not
+    * at all; never current until the catalog pointer moves) and returns
     * (expectedVersion, newVersion, blobPath) for the multi-table CAS.
     * None when the transaction staged no commit on this table. */
   private[lake] def writeStagedBlob(): Option[(Long, Long, String)] =
@@ -1939,7 +1900,7 @@ class GraftTable private (
         val nonce = java.util.UUID.randomUUID.toString.take(8)
         val rel = f"metadata/v${m.version}%05d-$nonce.json"
         fs.mkdirs(new Path(root, "metadata"))
-        writeSmallFile(rel, Meta.toJson(m.toDoc))
+        CommitIo.publish(fs, new Path(root, rel), Meta.toJson(m.toDoc).getBytes("UTF-8"))
         buf.blob = Some(rel)
         (buf.expected, m.version, rel)
       }
@@ -2083,13 +2044,6 @@ object GraftTable {
   private[lake] val manifestCache = new BlobCache[Manifest]
   private[lake] val mlistCache = new BlobCache[ManifestList]
 
-  /** Per-table-location commit lock: serializes in-JVM committers so the
-    * local-FS exists+rename sequence is race-free under local[*]. */
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[lake] def commitLock(location: String): Object =
-    commitLocks.computeIfAbsent(location, _ => new Object)
-
   /** Conflict policy when a commit loses the optimistic race. */
   sealed trait ConflictMode
   /** additive commit (append/upsert): remerge onto whatever won. */
@@ -2123,11 +2077,10 @@ object GraftTable {
       properties)
     val dir = new Path(root, "metadata")
     fs.mkdirs(dir)
-    // create-only (never overwrite): two racing creators of the same
-    // location — catalog registration already arbitrates the NAME — fail
-    // here rather than clobber each other
-    val out = fs.create(new Path(dir, "v00001.json"), false)
-    try out.write(Meta.toJson(m0).getBytes("UTF-8")) finally out.close()
+    // publish-if-absent: two racing creators of the same location —
+    // catalog registration already arbitrates the NAME — fail here
+    // rather than clobber each other
+    CommitIo.publish(fs, new Path(dir, "v00001.json"), Meta.toJson(m0).getBytes("UTF-8"))
     new GraftTable(spark, location, arbiter)
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{HivePartitionedRead, ParquetStats}
+import graft.lake.{CommitIo, HivePartitionedRead, ParquetStats}
 
 /** Minimal Delta Lake WRITER conforming to the published transaction
   * protocol (delta-io/delta PROTOCOL.md): parquet data files under
@@ -116,9 +116,10 @@ final class DeltaWriter private (
     * own tagged commitInfo (the one operation changes() keys on).
     *
     * The writer's state (version, row-id high-water mark, in-commit
-    * clock, live files, tombstones) advances only once the log entry is
-    * published: a failed create leaves the writer exactly as it was, so
-    * a retry publishes the NEXT version, never a hole. */
+    * clock, live files, tombstones, protocol feature flags) advances only
+    * once the log entry is published: a failed publish leaves the writer
+    * exactly as it was, so a retry publishes the NEXT version, never a
+    * hole, and re-declares any feature the lost commit would have. */
   private def commit(actions0: Seq[ObjectNode],
       operation: String = null): Long = {
     val next = version + 1
@@ -176,17 +177,23 @@ final class DeltaWriter private (
         }
         info +: actions
       }
-    val p = new Path(logDir, f"$next%020d.json")
-    val out = fs.create(p, false) // commits never overwrite, per protocol
-    try out.write(all.map(mapper.writeValueAsString).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    // commits never overwrite, per protocol
+    CommitIo.publish(fs, new Path(logDir, f"$next%020d.json"),
+      all.map(mapper.writeValueAsString).mkString("\n").getBytes("UTF-8"))
     version = next
     rowIdHwm = hwm
     lastIct = ict
-    // live files and the tombstone ledger replay the published actions in
-    // order: a remove retires its path, a re-add of the same path (DV
-    // replacement) supersedes the pending tombstone
+    // live files, the tombstone ledger and the feature flags replay the
+    // published actions in order: a remove retires its path, a re-add of
+    // the same path (DV replacement) supersedes the pending tombstone
     actions.foreach { n =>
+      if (n.has("protocol")) {
+        val feats = n.get("protocol").path("readerFeatures")
+        def has(f: String) = (0 until feats.size).exists(i => feats.get(i).asText() == f)
+        dvEnabled = has("deletionVectors")
+        v2CpEnabled = has("v2Checkpoint")
+        twEnabled = has("typeWidening")
+      }
       if (n.has("remove")) {
         val path = relOf(n.get("remove"))
         live.remove(path)
@@ -201,20 +208,23 @@ final class DeltaWriter private (
     version
   }
 
-  /** Protocol action for the current feature set. Legacy versions when
+  /** Protocol action for the current feature set plus the prospective
+    * `dv` / `v2Cp` / `tw` flags of the commit that carries it (the flags
+    * themselves flip when that commit publishes). Legacy versions when
     * they suffice (1,2 base; 2,5 name-mode column mapping), the
     * table-features form (3,7 + explicit lists) once DVs or id mode
     * need it. */
-  private def protocolAction: ObjectNode = {
+  private def protocolAction(dv: Boolean = dvEnabled, v2Cp: Boolean = v2CpEnabled,
+      tw: Boolean = twEnabled): ObjectNode = {
     val n = mapper.createObjectNode()
     val pr = n.putObject("protocol")
     // changeDataFeed is a WRITER-ONLY feature per the protocol (any
     // reader can scan the table; cdc actions are not file actions)
     val readerFeats =
       (if (columnMapping.isDefined) Seq("columnMapping") else Nil) ++
-        (if (dvEnabled) Seq("deletionVectors") else Nil) ++
-        (if (v2CpEnabled) Seq("v2Checkpoint") else Nil) ++
-        (if (twEnabled) Seq("typeWidening") else Nil) ++
+        (if (dv) Seq("deletionVectors") else Nil) ++
+        (if (v2Cp) Seq("v2Checkpoint") else Nil) ++
+        (if (tw) Seq("typeWidening") else Nil) ++
         (if (hasVariant) Seq("variantType") else Nil)
     val writerFeats = readerFeats ++
       (if (enableCdf) Seq("changeDataFeed") else Nil) ++
@@ -222,7 +232,7 @@ final class DeltaWriter private (
       // rowTracking is WRITER-ONLY (readers scan without ids; the
       // lineage columns are opt-in metadata) and requires domainMetadata
       (if (enableRowTracking) Seq("rowTracking", "domainMetadata") else Nil)
-    if (dvEnabled || v2CpEnabled || twEnabled || hasVariant ||
+    if (dv || v2Cp || tw || hasVariant ||
         columnMapping.contains("id")) {
       pr.put("minReaderVersion", 3); pr.put("minWriterVersion", 7)
       val rf = pr.putArray("readerFeatures"); readerFeats.foreach(rf.add)
@@ -334,7 +344,6 @@ final class DeltaWriter private (
       case FloatType => "float"; case DoubleType => "double"
       case other => throw new IllegalStateException(s"unreachable: $other")
     }
-    twEnabled = true
     // the protocol's per-field provenance record (delta.typeChanges in
     // the field metadata of schemaString): ONE ENTRY PER CHANGE,
     // accumulated — readers consult the oldest fromType to know the
@@ -351,7 +360,7 @@ final class DeltaWriter private (
         .putLong("tableVersion", version + 1).build()).build()
     val widened = StructType(schema.fields.map(x =>
       if (x.name == name) x.copy(dataType = to, metadata = md) else x))
-    commit(Seq(protocolAction, metaActionFor(widened)),
+    commit(Seq(protocolAction(tw = true), metaActionFor(widened)),
       operation = "CHANGE COLUMN")
     DeltaWriter.open(spark, location)
   }
@@ -470,7 +479,7 @@ final class DeltaWriter private (
         s"delta convert: $f lacks a hive dir for partition column $c"))
       addActionFor(f, rel, footers(f.toString))
     }
-    commit(Seq(protocolAction, metaAction) ++ adds, operation = "CONVERT")
+    commit(Seq(protocolAction(), metaAction) ++ adds, operation = "CONVERT")
   }
 
   /** Writes CHANGE-DATA files under `_change_data/` and returns their
@@ -1118,10 +1127,8 @@ final class DeltaWriter private (
     // no table-features protocol flip (mirrors the zero-match guard in
     // deleteWhere/updateWhere)
     if (deletedByFile.isEmpty) return None
-    val firstDv = !dvEnabled
-    dvEnabled = true
     val actions = scala.collection.mutable.ArrayBuffer[ObjectNode]()
-    if (firstDv) actions += protocolAction
+    if (!dvEnabled) actions += protocolAction(dv = true)
 
     deletedByFile.toSeq.map { case (k, bm) => keyToRel(k) -> bm }
       .sortBy(_._1).foreach { case (rel, bitmap) =>
@@ -1284,7 +1291,7 @@ final class DeltaWriter private (
   /** (protocol struct, metaData struct, one add struct per live file) —
     * shared between the classic and v2 checkpoint writers. */
   private def checkpointStructs: (Row, Row, Seq[Row]) = {
-    val protoNode = protocolAction.get("protocol")
+    val protoNode = protocolAction().get("protocol")
     def featureList(key: String): Seq[String] =
       if (protoNode.has(key)) {
         val it = protoNode.get(key).elements()
@@ -1450,7 +1457,7 @@ final class DeltaWriter private (
     * protocol), so a pre-upgrade reader rejects rather than misreads. */
   def checkpointV2(): Unit = {
     require(version >= 0, "delta: nothing to checkpoint")
-    if (!v2CpEnabled) { v2CpEnabled = true; commit(Seq(protocolAction)) }
+    if (!v2CpEnabled) commit(Seq(protocolAction(v2Cp = true)))
     val (proto, meta, adds) = checkpointStructs
     // sidecar: file actions only (adds + unexpired remove tombstones)
     val sidecarSchema = StructType(Seq(
@@ -1680,7 +1687,7 @@ object DeltaWriter {
     fs.mkdirs(new Path(p, "_delta_log"))
     val w = new DeltaWriter(spark, location, schema, partitionColumns,
       columnMapping, enableCdf, enableIct, enableRowTracking)
-    w.commit(Seq(w.protocolAction, w.metaAction))
+    w.commit(Seq(w.protocolAction(), w.metaAction))
     w
   }
 

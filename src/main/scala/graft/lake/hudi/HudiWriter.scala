@@ -46,6 +46,9 @@ final class HudiWriter private (
   private val root = new Path(location)
   private val fs = root.getFileSystem(conf)
   private val metaDir = new Path(root, ".hoodie")
+  /** One written file's commit stats: (partition path, fileId, relative
+    * path, rows, bytes). */
+  private type WriteStat = (String, String, String, Long, Long)
 
   /** Base-file target size (`hoodie.parquet.max.file.size` default):
     * insert / insertOverwrite / cluster mint ceil(bytes/target) file
@@ -101,7 +104,7 @@ final class HudiWriter private (
     * instant (Hudi's own semantics; incremental pulls depend on it) —
     * nulls and missing columns stamp the writing instant. */
   private def writeSlice(rows: DataFrame, fileId: String, instant: String,
-      partPath: String): (String, Long) = {
+      partPath: String): (String, Long, Long) = {
     val fileName = s"${fileId}_0-0-0_$instant.parquet"
     val rel = if (partPath.isEmpty) fileName else s"$partPath/$fileName"
     val dest = new Path(root, rel)
@@ -122,7 +125,7 @@ final class HudiWriter private (
     val Seq((_, _, footer)) = CommitIo.stage(spark, root) { tmp =>
       withMeta.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     } { (_, _) => dest }
-    (rel, footer.rows)
+    (rel, footer.rows, footer.size)
   }
 
   /** Writes ONE new base slice per distinct `__fid` in `rows` — however
@@ -139,7 +142,7 @@ final class HudiWriter private (
     * path ("" unpartitioned); fids ending up with zero rows still get an
     * (empty) slice, preserving writeSlice's fully-emptied-group shape. */
   private def writeSlices(rows: DataFrame, instant: String,
-      partPathOf: Map[String, String]): Seq[(String, String, String, Long)] = {
+      partPathOf: Map[String, String]): Seq[WriteStat] = {
     if (partPathOf.isEmpty) return Nil
     val stamped =
       if (rows.columns.contains("_hoodie_commit_time"))
@@ -185,7 +188,7 @@ final class HudiWriter private (
     } { (rel, _) => new Path(root, sliceRel(rel.stripPrefix("__fid=")))
     }.map { case (_, rel, footer) =>
       val fid = rel.stripPrefix("__fid=")
-      (partPathOf(fid), fid, sliceRel(fid), footer.rows)
+      (partPathOf(fid), fid, sliceRel(fid), footer.rows, footer.size)
     }.toBuffer
     val written = stats.map(_._2).toSet
     // a fully-emptied group writes an empty slice (rare; per-fid fallback)
@@ -193,8 +196,8 @@ final class HudiWriter private (
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(StructField("_hoodie_commit_time", StringType) +: schema.fields))
-      val (rel, n) = writeSlice(empty, fid, instant, partPathOf(fid))
-      stats += ((partPathOf(fid), fid, rel, n))
+      val (rel, n, bytes) = writeSlice(empty, fid, instant, partPathOf(fid))
+      stats += ((partPathOf(fid), fid, rel, n, bytes))
     }
     stats.toSeq
   }
@@ -223,7 +226,7 @@ final class HudiWriter private (
     * + wrote per partition; before r11 a 1 TB partition became ONE
     * task-sized file). */
   private def writeFreshGroups(rows: DataFrame,
-      instant: String): Seq[(String, String, String, Long)] = {
+      instant: String): Seq[WriteStat] = {
     val recSize = avgRecordSize(
       if (fs.exists(metaDir)) try HudiTable.load(spark, location).liveSlices
         catch { case _: Throwable => Nil }
@@ -264,7 +267,7 @@ final class HudiWriter private (
   }
 
   private def commit(instant: String,
-      stats: Seq[(String, String, String, Long)], // (part, fileId, path, rows)
+      stats: Seq[WriteStat],
       kind: String,
       replacedFileIds: Map[String, Seq[String]] = Map.empty,
       operation: String = "upsert",
@@ -279,19 +282,14 @@ final class HudiWriter private (
     val pw = n.putObject("partitionToWriteStats")
     stats.groupBy(_._1).foreach { case (part, group) =>
       val arr = pw.putArray(part)
-      group.foreach { case (_, fileId, path, rows) =>
+      group.foreach { case (_, fileId, path, rows, bytes) =>
         val st = arr.addObject()
         st.put("fileId", fileId)
         st.put("path", path)
         st.put("numWrites", rows)
         // HoodieWriteStat.fileSizeInBytes — feeds the reader's scanStats
-        // (DSv2 broadcast estimation). The slice is already renamed into
-        // place, so this is one getFileStatus per written file: the same
-        // O(slices) metadata order the rename pass just paid.
-        if (path.nonEmpty) {
-          val fp = new Path(root, path)
-          if (fs.exists(fp)) st.put("fileSizeInBytes", fs.getFileStatus(fp).getLen)
-        }
+        // (DSv2 broadcast estimation)
+        st.put("fileSizeInBytes", bytes)
       }
     }
     if (replacedFileIds.nonEmpty) {
@@ -304,10 +302,9 @@ final class HudiWriter private (
       }
     }
     n.put("operation", operation)
-    val p = new Path(metaDir, s"$instant.$kind")
-    val out = fs.create(p, false) // timeline instants never overwrite
-    try out.write(mapper.writeValueAsString(n).getBytes("UTF-8"))
-    finally out.close()
+    // timeline instants never overwrite
+    CommitIo.publish(fs, new Path(metaDir, s"$instant.$kind"),
+      mapper.writeValueAsBytes(n))
   }
 
   /** On MOR every ingest is a delta commit; compaction and all COW
@@ -389,7 +386,7 @@ final class HudiWriter private (
     val updates = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val slices = t.liveSlices
-    val stats = scala.collection.mutable.ArrayBuffer[(String, String, String, Long)]()
+    val stats = scala.collection.mutable.ArrayBuffer[WriteStat]()
     var fresh = updates
     var routedPin: Option[DataFrame] = None
     if (slices.nonEmpty) {
@@ -623,7 +620,7 @@ final class HudiWriter private (
     val updates0 = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val updates = if (alreadyPinned) updates0
       else updates0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = scala.collection.mutable.ArrayBuffer[(String, String, String, Long)]()
+    val stats = scala.collection.mutable.ArrayBuffer[WriteStat]()
     val (written, matched) = routeToGroups(t, updates, instant, deleted = false)
     stats ++= written
     // unmatched keys: new base file group(s), same deltacommit
@@ -809,9 +806,7 @@ final class HudiWriter private (
       val arr = pm.putObject(part).putArray("successDeleteFiles")
       hs.flatMap(h => h.path +: h.logs.toSeq).sorted.foreach(arr.add)
     }
-    val out = fs.create(new Path(metaDir, s"$instant.clean"), false)
-    try out.write(mapper.writeValueAsString(n).getBytes("UTF-8"))
-    finally out.close()
+    CommitIo.publish(fs, new Path(metaDir, s"$instant.clean"), mapper.writeValueAsBytes(n))
     deleted.size
   }
 
@@ -830,7 +825,7 @@ final class HudiWriter private (
     * (HoodieLogFormat's multi-block files / `hoodie.logfile.data.block
     * .max.size`), and blocks stream straight to the filesystem — task
     * memory is bounded by ONE block, however large the ingest.
-    * Only commit-stats metadata (partition, fileId, relPath, rowCount)
+    * Only commit-stats metadata (partition, fileId, relPath, rowCount, bytes)
     * returns to the driver; data rows never do. The per-group slice
     * metadata (base instant, partition path, next log version) is
     * O(#file groups) and ships as a broadcast. Log-file names are
@@ -838,7 +833,7 @@ final class HudiWriter private (
     * overwrite=false, so a retried task fails loudly rather than
     * double-appending. Returns (commit stats, matched-key frame|null). */
   private def routeToGroups(t: HudiTable, rows: DataFrame, instant: String,
-      deleted: Boolean): (Seq[(String, String, String, Long)], DataFrame) = {
+      deleted: Boolean): (Seq[WriteStat], DataFrame) = {
     val slices = t.liveSlices
     if (slices.isEmpty) return (Nil, null)
     import spark.implicits._
@@ -857,7 +852,7 @@ final class HudiWriter private (
     val keyIdx = baseKeyIndex(slices)
     val keyed = rows.withColumn("__k", keyCol)
     val routed = keyed.join(keyIdx, Seq("__k"), "inner")
-    val stats: Array[(String, String, String, Long)] =
+    val stats: Array[WriteStat] =
       routed.select((col("__fid") +: col("__k") +: dataFields.map(col)): _*)
         .repartition(col("__fid"))
         .sortWithinPartitions(col("__fid"))
@@ -865,9 +860,9 @@ final class HudiWriter private (
           val avroSchema = new org.apache.avro.Schema.Parser().parse(schemaJson)
           val buf = it.buffered
           // one log file per fid, consumed streaming off the sorted run
-          new Iterator[(String, String, String, Long)] {
+          new Iterator[WriteStat] {
             override def hasNext: Boolean = buf.hasNext
-            override def next(): (String, String, String, Long) = {
+            override def next(): WriteStat = {
               val fid = buf.head.getString(0)
               val (baseInstant, partPath, version) = bcInfo.value(fid)
               val name = s".${fid}_$baseInstant.log.${version}_0-0-0"
@@ -900,13 +895,13 @@ final class HudiWriter private (
                     HudiLog.avroDataBlockContent(recs.toSeq))
                 }
               }
-              HudiLog.writeLogFileStreaming(bcConf.value.value,
+              val bytes = HudiLog.writeLogFileStreaming(bcConf.value.value,
                 new Path(new Path(rootStr), rel), blocks)
-              (partPath, fid, rel, rowCount)
+              (partPath, fid, rel, rowCount, bytes)
             }
           }
         }.collect()
-    stats.foreach { case (_, fid, _, _) => logVersions(fid) = infoMap(fid)._3 }
+    stats.foreach { case (_, fid, _, _, _) => logVersions(fid) = infoMap(fid)._3 }
     // the "matched" frame the caller anti-joins is the base-key index
     // itself (any update key in it was routed) — NOT the routed plan,
     // which would re-run the routing join+shuffle on evaluation
@@ -992,9 +987,9 @@ object HudiWriter {
       else if (partitionFields.length == 1 && !keyField.contains(","))
         "org.apache.hudi.keygen.SimpleKeyGenerator"
       else "org.apache.hudi.keygen.ComplexKeyGenerator")
-    val out = fs.create(new Path(p, ".hoodie/hoodie.properties"), false)
-    try props.store(out, "graft hudi writer")
-    finally out.close()
+    val bytes = new java.io.ByteArrayOutputStream()
+    props.store(bytes, "graft hudi writer")
+    CommitIo.publish(fs, new Path(p, ".hoodie/hoodie.properties"), bytes.toByteArray)
     new HudiWriter(spark, location, schema, partitionFields, keyField, tableType)
   }
 }

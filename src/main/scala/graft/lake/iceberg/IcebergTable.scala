@@ -1341,30 +1341,41 @@ object IcebergTable {
     new IcebergTable(spark, tableLoc, meta)
   }
 
-  private def findMetadata(conf: Configuration, metaDir: Path): Path = {
+  /** The current metadata file under `metaDir`: the version
+    * `version-hint.text` names, else the highest-versioned
+    * `vN[-nonce].metadata.json`. An empty or unparseable hint — a crash
+    * during its in-place overwrite leaves one behind — falls back to the
+    * listing, as Iceberg's HadoopTableOperations does. */
+  private[iceberg] def findMetadata(conf: Configuration, metaDir: Path): Path = {
     val fs = metaDir.getFileSystem(conf)
     val hint = new Path(metaDir, "version-hint.text")
-    if (fs.exists(hint)) {
-      val in = fs.open(hint)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      val cand = Seq(s"v$v.metadata.json", s"$v.metadata.json")
-        .map(new Path(metaDir, _)).find(fs.exists)
-        // arbitrated writers stage unique vN-<nonce> names; glob the prefix
-        .orElse(fs.listStatus(metaDir).toSeq.map(_.getPath)
-          .find(_.getName.matches(s"v?$v-[^.]*\\.metadata\\.json")))
-      cand.getOrElse(throw new IllegalArgumentException(
-        s"iceberg: version-hint says $v but no v$v*.metadata.json under $metaDir"))
-    } else {
+    val hinted =
+      if (!fs.exists(hint)) None
+      else {
+        val in = fs.open(hint)
+        val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+          finally in.close()
+        if (!v.matches("\\d+")) None
+        else Some(Seq(s"v$v.metadata.json", s"$v.metadata.json")
+          .map(new Path(metaDir, _)).find(fs.exists)
+          // arbitrated writers stage unique vN-<nonce> names; glob the prefix
+          .orElse(fs.listStatus(metaDir).toSeq.map(_.getPath)
+            .find(_.getName.matches(s"v?$v-[^.]*\\.metadata\\.json")))
+          .getOrElse(throw new IllegalArgumentException(
+            s"iceberg: version-hint says $v but no v$v*.metadata.json under $metaDir")))
+      }
+    hinted.getOrElse {
       // highest-versioned vN[-uuid].metadata.json wins
-      val VRe = """v?(\d+)(?:-[^.]*)?\.metadata\.json""".r
       val files = fs.listStatus(metaDir).toSeq.map(_.getPath)
         .flatMap(p => p.getName match {
-          case VRe(n) => Some((n.toLong, p))
+          case VersionedMetadata(n) => Some((n.toLong, p))
           case _ => None
         })
       require(files.nonEmpty, s"iceberg: no *.metadata.json under $metaDir")
       files.maxBy(_._1)._2
     }
   }
+
+  /** `vN[-nonce].metadata.json` (the `v` optional); group 1 = N. */
+  private[iceberg] val VersionedMetadata = """v?(\d+)(?:-[^.]*)?\.metadata\.json""".r
 }

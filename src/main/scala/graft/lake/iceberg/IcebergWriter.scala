@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{HivePartitionedRead, ParquetStats}
+import graft.lake.{CommitIo, HivePartitionedRead, ParquetStats}
 
 /** Minimal Apache Iceberg v2 WRITER conforming to the published table
   * spec: parquet data files (with parquet field ids), Avro manifests and
@@ -53,8 +53,12 @@ final class IcebergWriter private (
   /** last catalog-committed state — the diff base of the next commit. */
   private var restBase: IceMeta = meta0
 
+  // carried manifest-list state: every live manifest entry, in order
+  // (seeded from the current snapshot's manifest list on open())
+  private var listState: Seq[(IcebergAvro.ManifestFileEntry, (Long, Long, Long))] = listState0
+
   if (writeInitial)
-    writeMetadata() // v1: table exists before the first snapshot, per spec
+    writeMetadata(meta0) // v1: table exists before the first snapshot, per spec
 
   def meta: IceMeta = currentMeta
   def currentSnapshotId: Long = currentMeta.currentSnapshotId.getOrElse(-1L)
@@ -144,7 +148,8 @@ final class IcebergWriter private (
     * the shared back end of [[deleteWhereDv]] and [[updateWhere]] (which
     * lands the same entries PLUS the rewritten rows in one snapshot).
     * Returns Nil when nothing matches and requireMatch=false (SQL
-    * no-op semantics); bumps the table to format-version 3 on use. */
+    * no-op semantics); the commit that lands them bumps the table to
+    * format-version 3. */
   private def dvDeleteEntries(cond: Column,
       requireMatch: Boolean): Seq[IcebergAvro.ManifestEntry] = {
     import graft.lake.delta.RoaringBitmapArray
@@ -214,8 +219,6 @@ final class IcebergWriter private (
     // the manifest references data files by their manifest file_path
     val keyToManifestPath = affected.map(p => IcebergTable.pathKey(p) -> p).toMap
 
-    if (currentMeta.formatVersion < 3)
-      currentMeta = currentMeta.copy(formatVersion = 3)
     val seq = currentMeta.lastSequenceNumber + 1
     val snapId = seq * 31L + 1000L // matches commit()'s derivation
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -257,10 +260,8 @@ final class IcebergWriter private (
     require(currentMeta.currentSnapshotId.isEmpty,
       "iceberg: row lineage must be enabled BEFORE the first commit — " +
         "earlier snapshots' files have no row ids to inherit")
-    if (currentMeta.formatVersion < 3)
-      currentMeta = currentMeta.copy(formatVersion = 3)
-    currentMeta = currentMeta.copy(nextRowId = Some(0L))
-    writeMetadata()
+    writeMetadata(currentMeta.copy(
+      formatVersion = math.max(3, currentMeta.formatVersion), nextRowId = Some(0L)))
     currentMeta.nextRowId.get
   }
 
@@ -388,9 +389,8 @@ final class IcebergWriter private (
     require(!sch.fields.exists(_.name == to), s"iceberg: column $to already exists")
     val next = IceSchema(currentMeta.schemas.map(_.schemaId).max + 1,
       sch.fields.map(f => if (f.name == from) f.copy(name = to) else f))
-    currentMeta = currentMeta.copy(
-      schemas = currentMeta.schemas :+ next, currentSchemaId = next.schemaId)
-    writeMetadata()
+    writeMetadata(currentMeta.copy(
+      schemas = currentMeta.schemas :+ next, currentSchemaId = next.schemaId))
   }
 
   /** ROLLBACK (Iceberg's `rollback_to_snapshot`): points the table back
@@ -415,16 +415,15 @@ final class IcebergWriter private (
       s"iceberg: snapshot $snapshotId is not an ancestor of " +
         s"$currentSnapshotId — rollback cannot fork onto a side branch")
     val ts = { val now = System.currentTimeMillis(); lastTs = math.max(now, lastTs + 1); lastTs }
-    currentMeta = currentMeta.copy(
-      currentSnapshotId = Some(snapshotId),
-      snapshotLog = currentMeta.snapshotLog :+ ((ts, snapshotId)),
-      refs = currentMeta.refs + ("main" -> IceRef(snapshotId, "branch")))
     // the writer's accumulated manifest-list state rewinds too — the
     // next commit must build on the TARGET's manifests, not the undone
     // snapshot's
-    listState = IcebergAvro.readManifestListWithRows(conf,
-      new Path(currentMeta.snapshot(snapshotId).manifestList))
-    writeMetadata()
+    writeMetadata(currentMeta.copy(
+      currentSnapshotId = Some(snapshotId),
+      snapshotLog = currentMeta.snapshotLog :+ ((ts, snapshotId)),
+      refs = currentMeta.refs + ("main" -> IceRef(snapshotId, "branch"))),
+      IcebergAvro.readManifestListWithRows(conf,
+        new Path(currentMeta.snapshot(snapshotId).manifestList)))
   }
 
   /** COMPACTION as a `replace` snapshot (Iceberg's rewrite_data_files
@@ -437,6 +436,7 @@ final class IcebergWriter private (
   def compact(): Long = {
     if (currentMeta.currentSnapshotId.isEmpty) return -1L // nothing to rewrite
     val t = IcebergTable.load(spark, location)
+    // the replace snapshot references only the rewrite (empty base list)
     if (currentMeta.nextRowId.isDefined) {
       // ROW-LINEAGE compaction (r16, verdict #4 — supersedes the loud
       // reject): the v3 rewrite contract says a rewriter must carry
@@ -447,13 +447,11 @@ final class IcebergWriter private (
       // rows are minted by a rewrite).
       val entries = writeDataFiles(t.scanWithLineage(),
         materializedLineage = true)
-      listState = Nil
       commitManifests("replace", Seq("data" -> entries),
-        materializedGroups = Set(0))
+        materializedGroups = Set(0), baseList = Nil)
     } else {
       val entries = writeDataFiles(t.scan())
-      listState = Nil // the replace snapshot references only the rewrite
-      commitManifests("replace", Seq("data" -> entries))
+      commitManifests("replace", Seq("data" -> entries), baseList = Nil)
     }
   }
 
@@ -504,11 +502,11 @@ final class IcebergWriter private (
         }
     }
     val (del, data) = carried.partition(_._2)
-    listState = keepL.map { case (le, rows, _) => (le, rows) }
     val groups =
       data.map(_._1).grouped(math.max(1, targetEntries)).map("data" -> _).toSeq ++
         del.map(_._1).grouped(math.max(1, targetEntries)).map("deletes" -> _).toSeq
-    commitManifests("replace", groups)
+    commitManifests("replace", groups,
+      baseList = keepL.map { case (le, rows, _) => (le, rows) })
   }
 
   /** ADD FILES (Iceberg's add_files procedure): registers the plain
@@ -610,20 +608,18 @@ final class IcebergWriter private (
     // successful commit the dropped files are unreferenced by ANY
     // retained metadata, so a crash mid-delete only strands orphans
     // (cleaned by the next expire/vacuum), never breaks a reader.
-    currentMeta = currentMeta.copy(
+    writeMetadata(currentMeta.copy(
       snapshots = all.filter(s => keepIds(s.id)),
       snapshotLog = currentMeta.snapshotLog.filter {
-        case (_, id) => keepIds(id) })
-    writeMetadata()
+        case (_, id) => keepIds(id) }))
     doomed.foreach(p => fs.delete(new Path(p), false))
     (dropped.size, doomed.size)
   }
 
   def tag(name: String, snapshotId: Long): Unit = {
     currentMeta.snapshot(snapshotId) // must exist
-    currentMeta = currentMeta.copy(
-      refs = currentMeta.refs + (name -> IceRef(snapshotId, "tag")))
-    writeMetadata()
+    writeMetadata(currentMeta.copy(
+      refs = currentMeta.refs + (name -> IceRef(snapshotId, "tag"))))
   }
 
   // ---- data-file writing ---------------------------------------------------
@@ -774,10 +770,6 @@ final class IcebergWriter private (
       lowerBounds = lower, upperBounds = upper,
       equalityIds = equalityIds)
 
-  // carried manifest-list state: every live manifest entry, in order
-  // (seeded from the current snapshot's manifest list on open())
-  private var listState: Seq[(IcebergAvro.ManifestFileEntry, (Long, Long, Long))] = listState0
-
   private def commit(operation: String, manifestContent: String,
       entries: Seq[IcebergAvro.ManifestEntry],
       summaryExtras: Map[String, String] = Map.empty): Long =
@@ -790,11 +782,19 @@ final class IcebergWriter private (
     * manifests and data manifests share the commit's sequence number;
     * v2 rules make same-sequence data files invisible to the equality
     * deletes, so the commit is self-consistent). Empty groups write no
-    * manifest. */
+    * manifest. `baseList` is the manifest list the new one extends
+    * (empty for a `replace`). Deletion-vector (puffin) entries bump the
+    * table to format-version 3. */
   private def commitManifests(operation: String,
       groups: Seq[(String, Seq[IcebergAvro.ManifestEntry])],
       summaryExtras: Map[String, String] = Map.empty,
-      materializedGroups: Set[Int] = Set.empty): Long = {
+      materializedGroups: Set[Int] = Set.empty,
+      baseList: Seq[(IcebergAvro.ManifestFileEntry, (Long, Long, Long))] = listState): Long = {
+    val formatVersion =
+      if (groups.exists(_._2.exists(_.fileFormat == "PUFFIN")))
+        math.max(3, currentMeta.formatVersion)
+      else currentMeta.formatVersion
+    var list = baseList
     val seq = currentMeta.lastSequenceNumber + 1
     val snapId = seq * 31L + 1000L // deliberately != seq: catches id/seq mix-ups
     // per-ATTEMPT nonce in manifest/list names: two racing writers opened
@@ -891,7 +891,7 @@ final class IcebergWriter private (
       "schema-id" -> sch.schemaId.toString,
       "partition-spec" -> IcebergMeta.renderSpecFieldsJson(spec),
       "partition-spec-id" -> spec.specId.toString,
-      "format-version" -> currentMeta.formatVersion.toString,
+      "format-version" -> formatVersion.toString,
       "content" -> manifestContent), records)
 
     // field summaries over this manifest's entries (identity fields only)
@@ -934,15 +934,16 @@ final class IcebergWriter private (
         .flatMap(_.firstRowId).minOption)
     val rows = (s: Int) =>
       entries.filter(_.status == s).map(_.recordCount).sum
-    listState = listState :+ (newEntry, (rows(1), rows(0), 0L))
+    list = list :+ (newEntry, (rows(1), rows(0), 0L))
     } // per-group manifest loop
 
     val listPath = new Path(root, s"metadata/snap-$snapId-$nonce.avro")
     IcebergAvro.writeAvro(conf, listPath, IcebergAvro.ManifestListSchema,
-      Map("format-version" -> currentMeta.formatVersion.toString),
-      listState.map { case (e, rc) => IcebergAvro.manifestListRecord(e, rc) })
+      Map("format-version" -> formatVersion.toString),
+      list.map { case (e, rc) => IcebergAvro.manifestListRecord(e, rc) })
 
-    currentMeta = currentMeta.copy(
+    writeMetadata(currentMeta.copy(
+      formatVersion = formatVersion,
       lastSequenceNumber = seq,
       currentSnapshotId = Some(snapId),
       snapshots = currentMeta.snapshots :+ IceSnapshot(
@@ -952,8 +953,7 @@ final class IcebergWriter private (
         firstRowId = lineageBase),
       snapshotLog = currentMeta.snapshotLog :+ (ts, snapId),
       refs = currentMeta.refs + ("main" -> IceRef(snapId, "branch")),
-      nextRowId = lineageBase.map(_ => rowIdCursor))
-    writeMetadata()
+      nextRowId = lineageBase.map(_ => rowIdCursor)), list)
     snapId
   }
 
@@ -980,64 +980,44 @@ final class IcebergWriter private (
     out
   }
 
-  private def writeMetadata(): Unit = {
-    restCommit.foreach { fn =>
-      // catalog-side commit: POST requirements(base) + updates(base→cur);
-      // 409 surfaces as ConcurrentModificationException from the client.
-      // Adopt the CATALOG's committed metadata as the new truth (it may
-      // normalize e.g. refs.main / snapshot-log) and rebase on it.
-      currentMeta = fn(restBase, currentMeta)
-      restBase = currentMeta
-      return
+  /** Publishes `next` (with manifest-list state `nextList`) as the next
+    * metadata version and only then makes both this writer's state: a
+    * lost race or failed write leaves the writer at what is on disk, so
+    * a retry on a stale writer loses again instead of stacking on its
+    * own unpublished snapshot. */
+  private def writeMetadata(next: IceMeta,
+      nextList: Seq[(IcebergAvro.ManifestFileEntry, (Long, Long, Long))] = listState): Unit = {
+    restCommit match {
+      case Some(fn) =>
+        // catalog-side commit: POST requirements(base) + updates(base→next);
+        // 409 surfaces as ConcurrentModificationException from the client.
+        // Adopt the CATALOG's committed metadata as the new truth (it may
+        // normalize e.g. refs.main / snapshot-log) and rebase on it.
+        currentMeta = fn(restBase, next)
+        restBase = currentMeta
+      case None =>
+        val v = metaVersion + 1
+        // arbitrated commits stage to a UNIQUE vN-<nonce> name (accepted
+        // by every reader's version regex) and the catalog's version
+        // pointer decides the commit (reference: catalog_type='rest',
+        // catalog_bridge.h) — an overwrite-rename store cannot arbitrate
+        // via the hint file
+        val rel =
+          if (arbiter.isDefined)
+            s"metadata/v$v-${java.util.UUID.randomUUID().toString.take(8)}.metadata.json"
+          else s"metadata/v$v.metadata.json"
+        CommitIo.publish(fs, new Path(root, rel), IcebergMeta.render(next).getBytes("UTF-8"),
+          arbiter.map(CommitIo.Cas(_, v, rel)))
+        metaVersion = v
+        currentMeta = next
+        // the hint file stays as a CACHE for catalog-less readers; under
+        // an arbiter the pointer is authoritative (IcebergTable.load with
+        // the arbiter resolves through it, ignoring a stale hint)
+        val hint = fs.create(new Path(root, "metadata/version-hint.text"), true)
+        try hint.write(v.toString.getBytes("UTF-8"))
+        finally hint.close()
     }
-    metaVersion += 1
-    // arbitrated commits stage to a UNIQUE vN-<nonce> name (accepted by
-    // every reader's version regex): two racing committers must never
-    // stage to the same deterministic path, or the CAS loser's cleanup
-    // would delete the WINNER's committed file — the pointer, not the
-    // name, decides the commit (catalog-based Iceberg does the same).
-    val rel =
-      if (arbiter.isDefined)
-        s"metadata/v$metaVersion-${java.util.UUID.randomUUID().toString.take(8)}.metadata.json"
-      else s"metadata/v$metaVersion.metadata.json"
-    val p = new Path(root, rel)
-    // EXCLUSIVE create: two writers that opened the same path-addressed
-    // table both compute the same next vN — with overwrite the last
-    // writer's bytes silently clobber the first writer's committed
-    // snapshot. Exclusive create makes the loser fail loudly instead
-    // (reopen and retry); arbitrated tables never reach this collision
-    // (unique vN-nonce names + the pointer CAS decide).
-    val out =
-      try fs.create(p, false)
-      catch {
-        case e: java.io.IOException => throw new java.util.ConcurrentModificationException(
-          s"iceberg: metadata $rel already exists — another writer " +
-            "committed this version first; reopen the table and retry", e)
-      }
-    try out.write(IcebergMeta.render(currentMeta).getBytes("UTF-8"))
-    finally out.close()
-    // catalog-ARBITRATED commit point (object-store safe — an
-    // overwrite-rename store cannot arbitrate via the hint file): the
-    // version-pointer CAS decides the commit, exactly like GraftTable's
-    // arbitrated commits (reference: catalog_type='rest',
-    // catalog_bridge.h). On CAS loss the staged metadata is removed and
-    // the commit fails loudly; the handle is stale — reopen and retry.
-    arbiter.foreach { a =>
-      if (!a.commitVersion(metaVersion - 1L, metaVersion.toLong, rel)) {
-        fs.delete(p, false)
-        val lost = metaVersion
-        metaVersion -= 1
-        throw new java.util.ConcurrentModificationException(
-          s"iceberg: version $lost was committed by another writer — " +
-            "reopen the table and retry")
-      }
-    }
-    // the hint file stays as a CACHE for catalog-less readers; under an
-    // arbiter the pointer above is authoritative (IcebergTable.load with
-    // the arbiter resolves through it, ignoring a stale hint)
-    val hint = fs.create(new Path(root, "metadata/version-hint.text"), true)
-    try hint.write(metaVersion.toString.getBytes("UTF-8"))
-    finally hint.close()
+    listState = nextList
   }
 }
 
@@ -1219,38 +1199,19 @@ object IcebergWriter {
     val conf = spark.sessionState.newHadoopConf()
     val metaDir = new Path(location, "metadata")
     val fs = metaDir.getFileSystem(conf)
-    val hint = new Path(metaDir, "version-hint.text")
-    val VRe = """v?(\d+)(?:-[^.]*)?\.metadata\.json""".r
     val metaPath =
       // under an arbiter the catalog's version pointer is authoritative
       // (the hint file is only a cache and may be stale)
-      if (arbiter.flatMap(_.currentVersion()).isDefined) {
-        val (_, rel) = arbiter.get.currentVersion().get
-        new Path(location, rel)
-      } else if (fs.exists(hint)) {
-        val in = fs.open(hint)
-        val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        Seq(s"v$v.metadata.json", s"$v.metadata.json")
-          .map(new Path(metaDir, _)).find(fs.exists)
-          // arbitrated tables stage unique vN-<nonce> names; a
-          // hint-following reader globs the version prefix
-          .orElse(fs.listStatus(metaDir).toSeq.map(_.getPath)
-            .find(_.getName.matches(s"v?$v-[^.]*\\.metadata\\.json")))
-          .getOrElse(throw new IllegalArgumentException(
-            s"iceberg: version-hint says $v but no v$v*.metadata.json under $metaDir"))
-      } else {
-        val cands = fs.listStatus(metaDir).toSeq.map(_.getPath).flatMap(p =>
-          p.getName match { case VRe(n) => Some((n.toLong, p)); case _ => None })
-        require(cands.nonEmpty, s"iceberg: no *.metadata.json under $metaDir")
-        cands.maxBy(_._1)._2
+      arbiter.flatMap(_.currentVersion()) match {
+        case Some((_, rel)) => new Path(location, rel)
+        case None => IcebergTable.findMetadata(conf, metaDir)
       }
     val in = fs.open(metaPath)
     val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     val meta = IcebergMeta.parse(json)
     val version = metaPath.getName match {
-      case VRe(n) => n.toInt
+      case IcebergTable.VersionedMetadata(n) => n.toInt
       case _ => throw new IllegalStateException(s"unversioned $metaPath")
     }
     val listState = meta.currentSnapshotId.map { sid =>

@@ -126,8 +126,7 @@ final class IcebergRestServer(warehouse: String, conf: Configuration,
     val rel = f"metadata/$version%05d-${java.util.UUID.randomUUID()}.metadata.json"
     val p = new Path(m.location, rel)
     val fs = p.getFileSystem(conf)
-    val out = fs.create(p, false)
-    try out.write(IcebergMeta.render(m).getBytes("UTF-8")) finally out.close()
+    graft.lake.CommitIo.publish(fs, p, IcebergMeta.render(m).getBytes("UTF-8"))
     // courtesy hint (what Iceberg's HadoopTableOperations maintains): a
     // registered table may carry a stale version-hint.text from its
     // location-writer past, and hint-first readers would resolve it over
@@ -694,9 +693,7 @@ final class IcebergRestServer(warehouse: String, conf: Configuration,
     val rel = f"metadata/$version%05d-${java.util.UUID.randomUUID()}.metadata.json"
     val p = new Path(location, rel)
     val fs = p.getFileSystem(conf)
-    val out = fs.create(p, false)
-    try out.write(mapper.writeValueAsString(m).getBytes("UTF-8"))
-    finally out.close()
+    graft.lake.CommitIo.publish(fs, p, mapper.writeValueAsBytes(m))
     fs.makeQualified(p).toString
   }
 

@@ -414,12 +414,12 @@ class GraftIcebergSource extends InteropReadProvider {
         f => t.scanWithLineage(f, snap), f => t.scanStats(f, snap))
     }
     // the standard optimistic-commit loop (what Iceberg's own clients
-    // run): a catalog-CAS loss means another committer moved the table
-    // first — the failed attempt committed NOTHING and referenced
-    // nothing, so the statement re-stages from a freshly-opened base
-    // and retries; bounded so a hot table still fails loudly rather
-    // than spinning. Location-based (non-catalog) writers never throw
-    // the conflict, so the wrapper is a no-op there.
+    // run): a lost publish — a catalog-CAS loss, or on a path-addressed
+    // table the next metadata version already existing — means another
+    // committer moved the table first. The failed attempt committed
+    // NOTHING and referenced nothing, so the statement re-stages from a
+    // freshly-opened base and retries; bounded so a hot table still
+    // fails loudly rather than spinning.
     def retried[T](op: graft.lake.iceberg.IcebergWriter => T): T = {
       var attempt = 0
       while (true) {

@@ -86,7 +86,9 @@ class S3LikeFileSystem extends GraftFsFileSystem {
 
 /** Fault-injecting variant: fails the k-th `create` or `rename` whose path
   * matches a predicate (for a rename, the DESTINATION path) with an
-  * IOException, once; every other call passes through. The armed fault
+  * IOException, or tears the k-th matching `create` (its stream keeps a
+  * prefix of the bytes, then throws), once; every other call passes
+  * through. The armed fault
   * lives in the companion object because Hadoop instantiates (and
   * caches) the FileSystem itself. Tables under `faultfs:///<local path>`
   * take every IO through it. */
@@ -97,7 +99,11 @@ class FaultFs extends GraftFsFileSystem {
       f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
     FaultFs.check("create", f)
-    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    val out = super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    FaultFs.fire("tear", f) match {
+      case Some(keepBytes) => new FSDataOutputStream(new FaultFs.TornStream(out, keepBytes, f), null)
+      case None => out
+    }
   }
 
   override def rename(src: Path, dst: Path): Boolean = {
@@ -109,7 +115,8 @@ class FaultFs extends GraftFsFileSystem {
 object FaultFs {
   val Scheme = "faultfs"
 
-  private final class Fault(val op: String, val matches: Path => Boolean, var left: Int)
+  private final class Fault(val op: String, val matches: Path => Boolean, var left: Int,
+      val keepBytes: Long)
   private var armed: Option[Fault] = None
 
   /** Registers the scheme on `conf` (the session's Hadoop configuration). */
@@ -126,23 +133,51 @@ object FaultFs {
     * matches `p`. */
   def failRename(k: Int)(p: Path => Boolean): Unit = arm("rename", k, p)
 
+  /** Arms a torn write of the `k`-th (1-based) `create` matching `p`: its
+    * stream writes the first `keepBytes` bytes, then throws — what a
+    * crash in the middle of the write leaves on disk. */
+  def tearCreate(k: Int, keepBytes: Long)(p: Path => Boolean): Unit =
+    arm("tear", k, p, keepBytes)
+
   /** Disarms a fault that has not fired. */
   def clear(): Unit = synchronized { armed = None }
 
-  private def arm(op: String, k: Int, p: Path => Boolean): Unit = synchronized {
-    require(k >= 1, s"k must be >= 1, got $k")
-    armed = Some(new Fault(op, p, k))
+  private def arm(op: String, k: Int, p: Path => Boolean, keepBytes: Long = 0L): Unit =
+    synchronized {
+      require(k >= 1, s"k must be >= 1, got $k")
+      armed = Some(new Fault(op, p, k, keepBytes))
+    }
+
+  private[graft] def check(op: String, path: Path): Unit =
+    if (fire(op, path).isDefined)
+      throw new java.io.IOException(s"injected $op failure at $path")
+
+  /** Counts a matching `op` call; Some(the fault's keepBytes) when it is
+    * the armed k-th (the fault then disarms). */
+  private[graft] def fire(op: String, path: Path): Option[Long] = synchronized {
+    armed.filter(f => f.op == op && f.matches(path)).flatMap { f =>
+      f.left -= 1
+      if (f.left > 0) None
+      else { armed = None; Some(f.keepBytes) }
+    }
   }
 
-  private[graft] def check(op: String, path: Path): Unit = synchronized {
-    armed.foreach { f =>
-      if (f.op == op && f.matches(path)) {
-        f.left -= 1
-        if (f.left == 0) {
-          armed = None
-          throw new java.io.IOException(s"injected $op failure at $path")
-        }
+  /** Passes the first `keepBytes` bytes through to `out`, then throws on
+    * the write that would exceed them (and on every later one). */
+  private[graft] final class TornStream(out: java.io.OutputStream, keepBytes: Long, path: Path)
+      extends java.io.OutputStream {
+    private var written = 0L
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      val keep = math.max(0L, math.min(len.toLong, keepBytes - written)).toInt
+      out.write(b, off, keep)
+      written += keep
+      if (keep < len) {
+        out.flush()
+        throw new java.io.IOException(s"injected torn write at $path after $written bytes")
       }
     }
+    override def flush(): Unit = out.flush()
+    override def close(): Unit = out.close()
   }
 }

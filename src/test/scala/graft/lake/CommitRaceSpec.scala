@@ -70,4 +70,25 @@ class CommitRaceSpec extends AnyFunSuite {
       Nil, Nil, GraftTable.MergeAny) // metadata-only append merges trivially
     assert(pending == 2L)
   }
+
+  test("iceberg: a stale path-addressed writer loses every retry, never drops the winner") {
+    import graft.lake.iceberg.{IcebergTable, IcebergWriter}
+    val n = Tables.nation(spark, sf)
+    val loc = fresh("race-iceberg-stale")
+    IcebergWriter.create(spark, loc, n.schema).append(n.filter(col("n_nationkey") < 5))
+    val a = IcebergWriter.open(spark, loc)
+    val b = IcebergWriter.open(spark, loc)
+    b.append(n.filter(col("n_nationkey").between(5, 9)))
+    intercept[java.util.ConcurrentModificationException] {
+      a.append(n.filter(col("n_nationkey") >= 20))
+    }
+    // the retry on the same object must not stack on its own unpublished
+    // snapshot (that would publish the next version without B's commit)
+    intercept[java.util.ConcurrentModificationException] {
+      a.append(n.filter(col("n_nationkey") >= 20))
+    }
+    val keys = IcebergTable.load(spark, loc).scan().select("n_nationkey")
+      .collect().map(_.getAs[Number](0).longValue).toSeq.sorted
+    assert(keys == (0L until 10L), "the head holds B's rows and none of A's")
+  }
 }

@@ -235,6 +235,23 @@ class HudiSpec extends AnyFunSuite {
     val t = HudiTable.load(spark, loc)
     assert(t.scan().orderBy("n_nationkey").collect().toSeq ==
       n.orderBy("n_nationkey").collect().toSeq)
+    // every write stat's fileSizeInBytes is the written file's length on
+    // disk, for base files and log files alike
+    val fs = new Path(loc).getFileSystem(spark.sessionState.newHadoopConf())
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val sized = fs.listStatus(new Path(loc, ".hoodie")).toSeq.map(_.getPath)
+      .filter(_.getName.matches("\\d+\\.deltacommit")).flatMap { p =>
+        val in = fs.open(p)
+        val json = try mapper.readTree(in) finally in.close()
+        val stats = json.path("partitionToWriteStats").elements()
+        Iterator.continually(stats).takeWhile(_.hasNext).map(_.next())
+          .flatMap(arr => (0 until arr.size).map(arr.get)).toSeq
+      }.map(st => st.path("path").asText() -> st.path("fileSizeInBytes").asLong(-1L))
+    assert(sized.exists(_._1.contains(".log.")) && sized.exists(_._1.endsWith(".parquet")),
+      s"expected base and log write stats, got $sized")
+    sized.foreach { case (rel, size) =>
+      assert(size == fs.getFileStatus(new Path(loc, rel)).getLen, s"fileSizeInBytes of $rel")
+    }
   }
 
   test("MOR: as-of-instant excludes later deltas") {

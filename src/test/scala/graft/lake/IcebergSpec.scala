@@ -71,6 +71,20 @@ class IcebergSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("an empty version-hint (torn in-place overwrite) falls back to listing") {
+    val n = Tables.nation(spark, sf)
+    val w = IcebergWriter.create(spark, freshDir("empty-hint"), n.schema)
+    w.append(n.filter(col("n_nationkey") < 13))
+    w.append(n.filter(col("n_nationkey") >= 13))
+    val hint = new Path(w.location, "metadata/version-hint.text")
+    val fs = hint.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.create(hint, true).close()
+    assert(IcebergTable.load(spark, w.location).scan().count() == n.count())
+    // the writer resolves the head the same way and commits above it
+    IcebergWriter.open(spark, w.location).append(n.filter(col("n_nationkey") === 0))
+    assert(IcebergTable.load(spark, w.location).scan().count() == n.count() + 1)
+  }
+
   test("identity partition pruning: filtered plan keeps only matching files") {
     val n = Tables.nation(spark, sf)
     val w = IcebergWriter.create(spark, freshDir("prune"), n.schema,
