@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark. One JSON line: total + per-query seconds.
   *
@@ -19,21 +18,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Scratch.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // hold every warmed generated class: the default 100-entry codegen
-      // cache LRU-evicts the warm pass's classes before the timed pass
-      // reaches them (137 queries × several codegen units each). Static
-      // conf, driver-memory-bounded (compiled classes, not data).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // optional args = query-name filter, for targeted perf iteration
+    // (none → full suite)
+    val selected = SparkEntry.select(args.toSeq)
     // warm up JVM / codegen / parquet reader so the first timed query
     // doesn't absorb cold-start (~4s of the r01 numbers was warmup)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -47,46 +35,25 @@ object Bench {
     // sub-second entries (q15_string_funcs measured 1.31 s cold vs 0.10 s
     // warm with identical plans). Timed numbers below remain one
     // cold-cache-free run per query at $SPARK_GRAFT_SF_DIR, same sinks,
-    // same isolation. Disable with GRAFT_BENCH_WARM=off to reproduce the
-    // pre-r16 cold-start methodology (old numbers kept in bench_archive).
-    if (!sys.env.get("GRAFT_BENCH_WARM").contains("off")) {
+    // same isolation. Only the queries this invocation times warm.
+    locally {
       val warmDir = "/root/testdata/sf0.001"
-      // warm only the queries this invocation will time (args restrict
-      // both, so targeted A/B runs don't pay a full-suite warm pass; the
-      // driver passes no args → every query warms, as before)
-      val warmSet =
-        if (args.isEmpty) SparkEntry.queries
-        else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
       if (new java.io.File(warmDir).isDirectory)
-        warmSet.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+        selected.foreach { case (_, fn) =>
           try {
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-            spark.sharedState.cacheManager.clearCache()
+            GraftSession.isolate(spark)
             fn(spark, warmDir).write.format("noop").mode("overwrite").save()
           } catch { case _: Throwable => () }
         }
     }
 
-    def isolate(): Unit = {
-      // drop leaked persist() pins + SQL cache from the previous query,
-      // then GC: each query is measured against an empty storage memory
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-    }
-
-    // optional args = query-name filter, for targeted perf iteration
-    // (the driver passes none → full suite)
-    val selected =
-      (if (args.isEmpty) SparkEntry.queries
-       else SparkEntry.queries.filter { case (n, _) => args.contains(n) })
-        .toSeq.sortBy(_._1)
     // a crashed query must be an explicit error entry, NOT a ~0.1 s "win":
     // r07's 10 ts-broken queries were silently recorded at exec 0.0 and
     // poisoned the headline geomean (VERDICT r07 What's-wrong #2). Errored
     // queries are excluded from every total and listed under "errors".
     val results = selected.map { case (name, fn) =>
-      isolate()
+      GraftSession.isolate(spark)
+      System.gc()
       def msg(e: Throwable) =
         s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
       val t0 = System.nanoTime()
@@ -110,11 +77,7 @@ object Bench {
     def jmap(f: ((String, Double, Double, Option[String])) => Double): String =
       ok.map { case r @ (k, _, _, _) => s"\"" + k + "\":" + round3(f(r)) }
         .mkString("{", ",", "}")
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val errJson = errored.map { case (k, e) => s"${jstr(k)}:${jstr(e)}" }
+    val errJson = errored.map { case (k, e) => s"${Verify.quote(k)}:${Verify.quote(e)}" }
       .mkString("{", ",", "}")
     val total = ok.map(r => r._2 + r._3).sum
     val setupTotal = ok.map(_._2).sum

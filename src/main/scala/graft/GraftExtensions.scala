@@ -9,8 +9,8 @@ import graft.expressions._
 /** SQL surface for graft's native expressions: registers every
   * `graft_*` function so `spark.sql("SELECT graft_dot(a, b) ...")` works —
   * the standard extension-library integration point
-  * (`spark.sql.extensions=graft.GraftExtensions`, or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`).
+  * (`spark.sql.extensions=graft.GraftExtensions`, or a session
+  * builder's `withExtensions(new GraftExtensions)`).
   *
   * `GraftExtensions.register(spark)` installs the same functions into an
   * already-built session (useful in notebooks and tests).

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
-/** Dev utility: writes each named query's `.explain("formatted")` output to
+/** Writes each named query's `.explain("formatted")` output to
   * `<outDir>/<query><suffix>.txt` — the optimization rounds' plan-evidence
-  * deliverable (plans/rNN/<query>_before.txt / _after.txt). Unlike
-  * PlanAudit (stdout, relational-only by convention) this runs EVERY
-  * requested entry's fn — lake/stream setups execute their side effects,
+  * deliverable (plans/rNN/<query>_before.txt / _after.txt). It runs every
+  * requested entry's fn: lake/stream setups execute their side effects,
   * so a full dump costs roughly one bench setup pass.
   *
   *   sbt "runMain graft.PlanDump plans/r16 _after dedup_ngram_jaccard ..."
@@ -18,24 +16,12 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, rest @ _*) = args: @unchecked
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
-    val names =
-      if (rest.nonEmpty) rest.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
+    SparkEntry.select(rest).foreach { case (n, fn) =>
+      GraftSession.isolate(spark)
       val body =
-        try SparkEntry.queries(n)(spark, sfDir).queryExecution
+        try fn(spark, sfDir).queryExecution
           .explainString(FormattedMode)
         catch { case e: Throwable =>
           s"ERROR building plan: ${e.getClass.getName}: ${e.getMessage}" }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scales the driver-generated test corpus by an integer factor for
@@ -47,15 +47,7 @@ object ScaleData {
     val Array(src, dst, kStr) = args
     val k = kStr.toInt
     require(k >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val shifts: Map[String, Long] = familyDomain.map { case (fam, (table, c)) =>
       fam -> (Tables(spark, src, table).agg(max(col(c))).head().getLong(0) + 1L)

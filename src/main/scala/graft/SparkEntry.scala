@@ -16,6 +16,15 @@ object SparkEntry {
       graft.queries.Pipeline.all ++ graft.queries.Curation.all ++
       graft.queries.BpeTokenizer.all ++ graft.streaming.Stream.all
 
+  /** The named entries, or every entry when `names` is empty, sorted by
+    * name. An unknown name is an error, not an empty run. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => names.isEmpty || names.contains(n) }.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

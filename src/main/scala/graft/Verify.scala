@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,33 +7,18 @@ object Verify {
     // args: <sfDir> <outDir> [queryName...] — trailing names restrict the
     // dump to those queries (local iteration aid; the driver passes two)
     val Array(sfDir, outDir, rest @ _*) = args: @unchecked
-    val selected =
-      if (rest.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => rest.contains(n) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Scratch.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // if events.parquet ships as TIMESTAMP(NANOS), read nanos as long
-      // (Tables.events branches on the loaded dtype); harmless when the
-      // driver generates timestamp[us] instead (r07 regeneration).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(rest)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // per-query ok/error, dumped as <outDir>/_status.json — a thrown query
     // must show up as an explicit crash, not a silent hole in the gate
     // (r07: 10 entries just vanished and read as "not run").
-    val status = selected.toSeq.map { case (name, fn) =>
+    val status = selected.map { case (name, fn) =>
       // Bench-style isolation (r05 What's-wrong #3): a query that leaks a
-      // persist() pin must not contaminate the 85 that run after it in
+      // persist() pin must not contaminate the ones that run after it in
       // this session — and a leak can't hide behind the gate either,
       // because the bench's isolated runs would expose the drift.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
+      GraftSession.isolate(spark)
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -44,28 +28,30 @@ object Verify {
         name -> Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val statusJson = status.sortBy(_._1).map {
-      case (k, None)      => s"${q(k)}: {\"ok\": true}"
-      case (k, Some(err)) => s"${q(k)}: {\"ok\": false, \"error\": ${q(err)}}"
+      case (k, None)      => s"${quote(k)}: {\"ok\": true}"
+      case (k, Some(err)) => s"${quote(k)}: {\"ok\": false, \"error\": ${quote(err)}}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_status.json"), statusJson)
     val nErr = status.count(_._2.isDefined)
     if (nErr > 0) System.err.println(s"[verify] $nErr quer(ies) FAILED — see _status.json")
     spark.stop()
   }
+
+  /** JSON string literal of `s`: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in an oracle SQL string would otherwise
+    * make a strict JSON reader reject the whole file and silently zero
+    * the gate. Bench's error map uses it too. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -183,7 +183,7 @@ case class ShingleIds(child: Expression, n: Int, polynomial: Boolean = false)
   * can't witness an n-gram match). Exists because the equivalent
   * `transform(sequence…, slice…)` higher-order pipeline evaluates
   * interpreted and cost ~6 s at sf0.1 under a Generate
-  * (DecontamPerfScratch receipts: HOF explode 5.8 s, this 0.4 s). */
+  * (r09 decontam stage receipts: HOF explode 5.8 s, this 0.4 s). */
 case class NGramStrings(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
   require(n >= 1, "n-gram width must be >= 1")

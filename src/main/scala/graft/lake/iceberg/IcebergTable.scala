@@ -1343,9 +1343,11 @@ object IcebergTable {
 
   /** The current metadata file under `metaDir`: the version
     * `version-hint.text` names, else the highest-versioned
-    * `vN[-nonce].metadata.json`. An empty or unparseable hint — a crash
+    * `vN[-nonce].metadata.json`. The hint is a cache written after the
+    * publish, so it may lag: from the hinted N the newest of `v(N+1)`,
+    * `v(N+2)`, … that exists wins. An empty or unparseable hint — a crash
     * during its in-place overwrite leaves one behind — falls back to the
-    * listing, as Iceberg's HadoopTableOperations does. */
+    * listing. Both follow Iceberg's HadoopTableOperations. */
   private[iceberg] def findMetadata(conf: Configuration, metaDir: Path): Path = {
     val fs = metaDir.getFileSystem(conf)
     val hint = new Path(metaDir, "version-hint.text")
@@ -1363,6 +1365,11 @@ object IcebergTable {
             .find(_.getName.matches(s"v?$v-[^.]*\\.metadata\\.json")))
           .getOrElse(throw new IllegalArgumentException(
             s"iceberg: version-hint says $v but no v$v*.metadata.json under $metaDir")))
+          .map { p =>
+            Iterator.iterate(v.toLong + 1)(_ + 1)
+              .map(n => new Path(metaDir, s"v$n.metadata.json"))
+              .takeWhile(fs.exists).toSeq.lastOption.getOrElse(p)
+          }
       }
     hinted.getOrElse {
       // highest-versioned vN[-uuid].metadata.json wins

@@ -984,7 +984,8 @@ final class IcebergWriter private (
     * metadata version and only then makes both this writer's state: a
     * lost race or failed write leaves the writer at what is on disk, so
     * a retry on a stale writer loses again instead of stacking on its
-    * own unpublished snapshot. */
+    * own unpublished snapshot. Once the publish returns the commit is
+    * made, so nothing after it may fail the op. */
   private def writeMetadata(next: IceMeta,
       nextList: Seq[(IcebergAvro.ManifestFileEntry, (Long, Long, Long))] = listState): Unit = {
     restCommit match {
@@ -995,6 +996,7 @@ final class IcebergWriter private (
         // normalize e.g. refs.main / snapshot-log) and rebase on it.
         currentMeta = fn(restBase, next)
         restBase = currentMeta
+        listState = nextList
       case None =>
         val v = metaVersion + 1
         // arbitrated commits stage to a UNIQUE vN-<nonce> name (accepted
@@ -1010,14 +1012,17 @@ final class IcebergWriter private (
           arbiter.map(CommitIo.Cas(_, v, rel)))
         metaVersion = v
         currentMeta = next
-        // the hint file stays as a CACHE for catalog-less readers; under
-        // an arbiter the pointer is authoritative (IcebergTable.load with
-        // the arbiter resolves through it, ignoring a stale hint)
-        val hint = fs.create(new Path(root, "metadata/version-hint.text"), true)
-        try hint.write(v.toString.getBytes("UTF-8"))
-        finally hint.close()
+        listState = nextList
+        // the hint file stays as a CACHE for catalog-less readers, written
+        // best-effort like HadoopTableOperations.writeVersionHint: readers
+        // probe forward past a stale hint (IcebergTable.findMetadata), and
+        // under an arbiter the pointer is authoritative
+        try {
+          val hint = fs.create(new Path(root, "metadata/version-hint.text"), true)
+          try hint.write(v.toString.getBytes("UTF-8"))
+          finally hint.close()
+        } catch { case scala.util.control.NonFatal(_) => () }
     }
-    listState = nextList
   }
 }
 

@@ -57,7 +57,7 @@ object Curation {
 
   // (8-gram strings come from the native NGramStrings expression — the
   // equivalent transform/slice HOF pipeline evaluated interpreted under
-  // the Generate and cost 6 s at sf0.1; DecontamPerfScratch receipts)
+  // the Generate and cost 6 s at sf0.1; r09 decontam stage receipts)
 
   /** Benchmark decontamination — the step every pretraining pipeline runs
     * before training: count, per corpus document, the distinct word

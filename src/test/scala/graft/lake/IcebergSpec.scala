@@ -85,6 +85,23 @@ class IcebergSpec extends AnyFunSuite {
     assert(IcebergTable.load(spark, w.location).scan().count() == n.count() + 1)
   }
 
+  test("a stale version-hint (crash before its overwrite) is probed past") {
+    val n = Tables.nation(spark, sf)
+    val w = IcebergWriter.create(spark, freshDir("stale-hint"), n.schema)
+    w.append(n.filter(col("n_nationkey") < 13))
+    w.append(n.filter(col("n_nationkey") >= 13))
+    val meta = new Path(w.location, "metadata")
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.exists(new Path(meta, "v3.metadata.json")))
+    val hint = fs.create(new Path(meta, "version-hint.text"), true)
+    try hint.write("2".getBytes("UTF-8")) finally hint.close()
+    assert(IcebergTable.load(spark, w.location).scan().count() == n.count())
+    // a fresh writer resolves the head the same way and publishes v4
+    IcebergWriter.open(spark, w.location).append(n.filter(col("n_nationkey") === 0))
+    assert(fs.exists(new Path(meta, "v4.metadata.json")))
+    assert(IcebergTable.load(spark, w.location).scan().count() == n.count() + 1)
+  }
+
   test("identity partition pruning: filtered plan keeps only matching files") {
     val n = Tables.nation(spark, sf)
     val w = IcebergWriter.create(spark, freshDir("prune"), n.schema,

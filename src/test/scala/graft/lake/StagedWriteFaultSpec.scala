@@ -107,6 +107,18 @@ class StagedWriteFaultSpec extends AnyFunSuite {
     assert(ids(DeltaTable.load(spark, loc).scan()) == (3L until 8L))
   }
 
+  test("iceberg: a failed version-hint write neither fails the commit nor drifts the writer") {
+    val loc = freshDir("iceberg-hint")
+    val w = IcebergWriter.create(spark, loc, rows(0 until 0).schema,
+      partition = Seq("p" -> "identity"))
+    w.append(rows(0 until 4))
+    FaultFs.failCreate(1)(_.getName == "version-hint.text")
+    try w.append(rows(4 until 8)) finally FaultFs.clear()
+    // a writer that kept its pre-commit manifest list would drop 4..7 here
+    w.append(rows(8 until 12))
+    assert(ids(IcebergTable.load(spark, loc).scan()) == (0L until 12L))
+  }
+
   /** (format, fresh empty table's write op, fresh reader's row ids). */
   private val formats: Seq[(String, String => (DataFrame => Unit), String => Seq[Long])] = Seq(
     ("graft", { loc =>

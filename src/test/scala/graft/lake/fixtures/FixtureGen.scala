@@ -36,6 +36,8 @@ object FixtureGen {
   private val Root = "/root/repo/src/test/resources/fixtures"
 
   def main(args: Array[String]): Unit = {
+    // its own session, not graft.GraftSession: the generator shares no
+    // code with graft (see above)
     val spark = SparkSession.builder()
       .master("local[2]")
       .appName("fixture-gen")
