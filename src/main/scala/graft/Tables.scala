@@ -24,14 +24,8 @@ object Tables {
     * on (nanosAsLong conf, qualified path, mtime, length) so a regenerated
     * file or a differently-configured session misses. Single FILES only
     * (the driver's testdata layout); directories keep full inference. */
-  private val schemaCacheMax = 256
   private val schemaCache =
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
-      32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.types.StructType])
-          : Boolean = size() > schemaCacheMax
-    }
+    new graft.lake.BlobCache[String, org.apache.spark.sql.types.StructType](256)
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -43,11 +37,7 @@ object Tables {
     val nanos = spark.sessionState.conf
       .getConfString("spark.sql.legacy.parquet.nanosAsLong", "false")
     val key = s"$nanos:${st.getPath}:${st.getModificationTime}:${st.getLen}"
-    val cached = schemaCache.synchronized(schemaCache.get(key))
-    if (cached != null) return spark.read.schema(cached).parquet(path)
-    val df = spark.read.parquet(path)
-    schemaCache.synchronized(schemaCache.put(key, df.schema))
-    df
+    spark.read.schema(schemaCache.get(key)(spark.read.parquet(path).schema)).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")

@@ -447,14 +447,10 @@ object FilePruner extends Serializable {
   /** litFor is pure in (literal, column, schema) but runs inside the
     * per-FILE pruning loop — on a 10^5-file estate one predicate would
     * re-parse the same date/decimal literal 10^5 times on the driver
-    * planning path. Small bounded memo; whole-cache eviction at the cap. */
-  private val litMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Literal, String, StructType), Option[V]]()
-  private def litFor(l: Literal, name: String, schema: StructType): Option[V] = {
-    if (litMemo.size > 1024) litMemo.clear()
-    litMemo.computeIfAbsent((l, name, schema),
-      _ => litForUncached(l, name, schema))
-  }
+    * planning path. Small bounded memo. */
+  private val litMemo = new BlobCache[(Literal, String, StructType), Option[V]](1024)
+  private def litFor(l: Literal, name: String, schema: StructType): Option[V] =
+    litMemo.get((l, name, schema))(litForUncached(l, name, schema))
 
   private def litForUncached(l: Literal, name: String, schema: StructType): Option[V] = {
     val colType = schema.find(_.name == name).map(_.dataType).getOrElse(return None)

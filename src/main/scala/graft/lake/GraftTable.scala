@@ -1555,17 +1555,14 @@ class GraftTable private (
   }
 
   /** Planner-side bloom consult (see buildBlooms): loads sidecars lazily
-    * through a bounded JVM-wide cache — only files that already survived
-    * partition/stats pruning are ever consulted, and repeated point
-    * lookups amortize the load. Any IO/parse failure keeps the file. */
+    * — only files that already survived partition/stats pruning are ever
+    * consulted. Any IO/parse failure keeps the file. */
   private def bloomOracle(): FilePruner.BloomOracle = (f, column, value) =>
     f.bloomsOr.get(column).flatMap { rel =>
       try {
-        val bf = GraftTable.bloomCache.get(s"$location/$rel") {
-          val in = fs.open(new Path(root, rel))
-          try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
+        val in = fs.open(new Path(root, rel))
+        val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
           finally in.close()
-        }
         Some(value match {
           case Left(l) => bf.mightContainLong(l)
           case Right(s) => bf.mightContainString(s)
@@ -2002,47 +1999,14 @@ object GraftTable {
     * pruning in planFiles means most queries load only a few of them. */
   val DefaultManifestTargetBytes: Long = 8L * 1024 * 1024
 
-  /** Bounded JVM-wide cache of bloom sidecars (location/relPath →
-    * deserialized filter). Sound: sidecars are create-only with
-    * deterministic per-file-nonce names. Capped LOW — blooms for 1M-row
-    * files run ~1 MB each; a miss just re-reads one small object. */
-  private[lake] val bloomCache =
-    new BlobCache[org.apache.spark.util.sketch.BloomFilter](maxEntries = 256)
+  /** Parsed metadata documents, keyed by (location, version file, mtime,
+    * length) — sound because committed versions are immutable. */
+  private val metaCache = new BlobCache[String, TableMetadata](256)
 
-  /** Bounded cache of parsed metadata documents, keyed by (location,
-    * version file) — sound because committed versions are immutable.
-    * Coarse whole-cache eviction at the cap: correctness never depends
-    * on a hit, and re-parsing after eviction is the pre-cache behavior. */
-  private object metaCache {
-    private val MaxEntries = 256
-    private val m =
-      new java.util.concurrent.ConcurrentHashMap[String, TableMetadata]()
-    def get(key: String)(load: => TableMetadata): TableMetadata = {
-      if (m.size > MaxEntries) m.clear()
-      m.computeIfAbsent(key, _ => load)
-    }
-  }
-
-  /** Bounded JVM-wide cache for immutable metadata blobs (manifests /
-    * manifest lists), keyed by absolute path. Soundness: blobs are
-    * create-only with nonce names, never rewritten. Coarse whole-cache
-    * eviction at the cap — a miss just re-reads a small JSON. */
-  private[lake] final class BlobCache[T](maxEntries: Int = 4096) {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, T]()
-    def get(key: String)(load: => T): T = {
-      if (m.size > maxEntries) m.clear()
-      m.computeIfAbsent(key, _ => load)
-    }
-    def put(key: String, v: T): Unit = {
-      if (m.size > maxEntries) m.clear()
-      m.put(key, v)
-    }
-    /** Test hook: force re-reads (e.g. after a destruction test deletes
-      * blobs from disk). Never needed in production — blobs are immutable. */
-    private[lake] def invalidateAll(): Unit = m.clear()
-  }
-  private[lake] val manifestCache = new BlobCache[Manifest]
-  private[lake] val mlistCache = new BlobCache[ManifestList]
+  /** Manifests and manifest lists, keyed by absolute path. Soundness:
+    * blobs are create-only with nonce names, never rewritten. */
+  private[lake] val manifestCache = new BlobCache[String, Manifest](4096)
+  private[lake] val mlistCache = new BlobCache[String, ManifestList](4096)
 
   /** Conflict policy when a commit loses the optimistic race. */
   sealed trait ConflictMode

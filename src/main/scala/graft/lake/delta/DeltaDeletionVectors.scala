@@ -28,7 +28,7 @@ import org.roaringbitmap.RoaringBitmap
   *
   * Scale note: a DV is per-FILE metadata sized by deleted-row count
   * (compressed); readers deserialize each file's DV once per executor
-  * (see DvCache in [[DeltaTable]]), never per row.
+  * (through `BlobCache.dvBitmaps`), never per row.
   */
 object Z85 {
   private val Alphabet =

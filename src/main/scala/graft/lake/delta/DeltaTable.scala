@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{ColStats, DataFileMeta, FilePruner, Meta, ParquetStats}
+import graft.lake.{BlobCache, ColStats, DataFileMeta, FilePruner, Meta, ParquetStats}
 
 /** Read-only Delta Lake table reader — the SECOND real-format interop
   * surface (the reference lists Delta under future support,
@@ -1341,24 +1341,6 @@ object DeltaTable {
       regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
       "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/")
 
-  /** Per-executor deletion-vector cache: one deserialize per (table,
-    * file, DV identity), shared across tasks. The DESCRIPTOR is part of
-    * the key — a data file's DV is replaced wholesale when extended
-    * (second delete, or another writer advancing the table), and a
-    * (table, file)-only key would keep serving the superseded bitmap,
-    * resurrecting newly deleted rows. DV files are UUID-named, so
-    * pathOrInlineDv is a stable unique identity. DVs are per-file and
-    * small (compressed by deleted-row count), so process-lifetime
-    * residency is fine. */
-  private[delta] object DvCache {
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, RoaringBitmapArray]()
-    def bitmap(location: String, key: String, d: DeletionVectors.Descriptor,
-        conf: Configuration): RoaringBitmapArray =
-      cache.computeIfAbsent(s"$location#$key#${d.pathOrInlineDv}",
-        _ => DeletionVectors.load(conf, location, d))
-  }
-
   /** Shared DV row mask (r11, replaces five per-row-UDF copies): a
     * native codegen [[graft.expressions.DvKeep]] over a broadcast
     * descriptor map + the executor bitmap cache — true iff the row's
@@ -1375,7 +1357,8 @@ object DeltaTable {
     graft.expressions.DvKeep.column(pathCol, idxCol, raw => {
       val key = pathKey(raw)
       bcDvs.value.get(key) match {
-        case Some(d) => DvCache.bitmap(loc, key, d, bcConf.value.value)
+        case Some(d) => BlobCache.dvBitmaps.get(s"delta:$loc#$key#${d.pathOrInlineDv}")(
+          DeletionVectors.load(bcConf.value.value, loc, d))
         case None => null
       }
     })

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.lake.{DataFileMeta, FilePruner, HivePartitionedRead, Meta}
+import graft.lake.{BlobCache, DataFileMeta, FilePruner, HivePartitionedRead, Meta}
 
 /** Read-only Apache Hudi table reader — COPY_ON_WRITE and (since r09)
   * MERGE_ON_READ — the third real-format interop surface (with Delta,
@@ -423,28 +423,16 @@ object HudiTable {
     * replays the timeline) — O(commits²) small-file reads per entry.
     * Completed instants are immutable by the timeline protocol, and the
     * key is (path, mtime, length) so any rewrite — including a rebuilt
-    * work dir at the same path — misses and re-reads. Bounded LRU of
-    * raw JSON strings (metadata-plane, never query results). */
-  private val InstantCacheMax = 1024
-  private val instantCache =
-    new java.util.LinkedHashMap[String, String](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, String]): Boolean =
-        size() > InstantCacheMax
-    }
+    * work dir at the same path — misses and re-reads. Raw JSON strings
+    * (metadata-plane, never query results). */
+  private val instantCache = new BlobCache[String, String](1024)
   private[hudi] def readInstantFile(fs: org.apache.hadoop.fs.FileSystem,
-      st: org.apache.hadoop.fs.FileStatus): String = {
-    val key = s"${st.getPath}:${st.getModificationTime}:${st.getLen}"
-    instantCache.synchronized {
-      val hit = instantCache.get(key)
-      if (hit != null) return hit
-    }
-    val in = fs.open(st.getPath)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      st: org.apache.hadoop.fs.FileStatus): String =
+    instantCache.get(s"${st.getPath}:${st.getModificationTime}:${st.getLen}") {
+      val in = fs.open(st.getPath)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    instantCache.synchronized { instantCache.put(key, json) }
-    json
-  }
+    }
 
   /** One log file bound to a base slice. `ord` orders deltas for the
     * merge (instant, then log version). */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{ColStats, DataFileMeta, FilePruner, ParquetStats}
+import graft.lake.{BlobCache, ColStats, DataFileMeta, FilePruner, ParquetStats}
 
 /** Read-only Apache Iceberg v1/v2 table reader — REAL-format interop, the
   * reference's headline capability ("Native Apache Iceberg support",
@@ -469,11 +469,6 @@ final class IcebergTable private (
     * delete manifest in the list (content != 0) without opening it:
     * conservative (a fully-retired delete manifest refuses too), but a
     * refusal only costs a real scan, never a wrong answer. */
-  /** Manifest-list contents by resolved path (immutable files; bounded
-    * by the table instance's lifetime and O(manifests) small entries). */
-  private val manifestListCache =
-    scala.collection.mutable.HashMap.empty[String, Seq[IcebergAvro.ManifestFileEntry]]
-
   private[lake] def foldAggEntries[B](snapshotId: Long = -1L)(zero: B)(
       seq: (B, (DataFileMeta, IcebergAvro.ManifestEntry, IceSchema)) => B,
       comb: (B, B) => B): Option[B] = {
@@ -485,10 +480,8 @@ final class IcebergTable private (
     // not one per planned aggregate (r15; r14 advice: k-filter planning
     // re-read the list k+1 times)
     val listPath = resolve(snap.manifestList)
-    val listEntries = manifestListCache.synchronized {
-      manifestListCache.getOrElseUpdate(listPath.toString,
-        IcebergAvro.readManifestList(conf, listPath))
-    }
+    val listEntries = IcebergTable.manifestListCache.get(listPath.toString)(
+      IcebergAvro.readManifestList(conf, listPath))
     val threshold = spark.conf.getOption(
       "spark.graft.iceberg.aggFoldThresholdBytes")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
@@ -727,7 +720,8 @@ final class IcebergTable private (
         col(PosFileCol), col(PosIdxCol), raw =>
           bcDvs.value.get(IcebergTable.pathKey(raw)) match {
             case Some((dvPath, off, len, _)) =>
-              IcebergTable.DvCache.bitmap(dvPath, off, len, bcConf.value.value)
+              BlobCache.dvBitmaps.get(s"iceberg:$dvPath#$off")(Puffin.readDv(
+                bcConf.value.value, new Path(dvPath), off, len))
             case None => null
           }))
     }
@@ -1139,9 +1133,13 @@ object IcebergTable {
     * sound because Iceberg manifests are create-only with unique names,
     * never rewritten; deleteWhereDv's three plans per statement (and any
     * repeated query) stop re-reading every manifest. */
-  private[lake] val manifestCache =
-    new graft.lake.GraftTable.BlobCache[
-      (IcebergAvro.ManifestHeader, Seq[IcebergAvro.ManifestEntry])]
+  private[lake] val manifestCache = new BlobCache[String,
+    (IcebergAvro.ManifestHeader, Seq[IcebergAvro.ManifestEntry])](4096)
+
+  /** Manifest-list contents by absolute path (create-only, like
+    * manifests). */
+  private val manifestListCache =
+    new BlobCache[String, Seq[IcebergAvro.ManifestFileEntry]](4096)
 
   /** One planned live file: the manifest entry, its resolved sequence
     * number, and the schema-id its columns were written under. */
@@ -1284,26 +1282,6 @@ object IcebergTable {
       case (other, t) => throw new IllegalArgumentException(
         s"iceberg: cannot inject identity partition value $other " +
           s"(${other.getClass.getSimpleName}) as $t for field $field")
-    }
-  }
-
-  /** Executor-side cache of loaded DV bitmaps, keyed by
-    * (puffin path, blob offset) — blob identity, so a rewritten DV for
-    * the same data file never serves a stale bitmap. */
-  private[iceberg] object DvCache {
-    // BOUNDED, like GraftTable.bloomCache: a streaming delete workload
-    // writes a NEW puffin blob (new path#offset key) every micro-batch
-    // and superseded bitmaps are never re-keyed, so an unbounded map
-    // accumulates every historical DV on long-lived executors until OOM.
-    // Coarse whole-cache eviction at the cap — a miss re-reads one blob.
-    private val MaxEntries = 256
-    private val cache = new java.util.concurrent.ConcurrentHashMap[
-      String, graft.lake.delta.RoaringBitmapArray]()
-    def bitmap(path: String, offset: Long, length: Long,
-        conf: Configuration): graft.lake.delta.RoaringBitmapArray = {
-      if (cache.size > MaxEntries) cache.clear()
-      cache.computeIfAbsent(s"$path#$offset",
-        _ => Puffin.readDv(conf, new Path(path), offset, length))
     }
   }
 

@@ -260,7 +260,7 @@ class DeltaSpec extends AnyFunSuite {
     val w = DeltaWriter.create(spark, freshDir("dv2"), n.schema)
     w.append(n)
     w.deleteWhereDv(col("n_nationkey") === 3)
-    // scan NOW so the executor DvCache holds the first descriptor's
+    // scan NOW so the executor DV cache holds the first descriptor's
     // bitmap — a cache keyed without DV identity would serve it stale
     // after the second delete below
     assert(DeltaTable.load(spark, freshDir2("dv2")).scan().count() == n.count() - 1)

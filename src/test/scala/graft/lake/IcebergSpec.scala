@@ -334,6 +334,10 @@ class IcebergSpec extends AnyFunSuite {
     val w = IcebergWriter.create(spark, freshDir("dv2"), n.schema)
     w.append(n)
     w.deleteWhereDv(col("n_nationkey") === 0)
+    // scan NOW so the executor DV cache holds the first blob's bitmap —
+    // a cache keyed without blob identity would serve it stale after the
+    // second delete below
+    assert(IcebergTable.load(spark, w.location).scan().count() == n.count() - 1)
     w.deleteWhereDv(col("n_nationkey") === 1)
     val t = IcebergTable.load(spark, w.location)
     val got = t.scan().select("n_nationkey").orderBy("n_nationkey")
