@@ -48,6 +48,12 @@ package graft.lake
   */
 case class ColStats(tag: String, min: String, max: String, nulls: Long)
 
+/** One live data file as the metadata-aggregate fold sees it, whatever
+  * its format: `file.stats` keyed by logical column name, `file.rowCount`
+  * exact, `nulls` = the null counts the format knows, by logical column
+  * name (absent = unknown, never zero). */
+final case class AggEntry(file: DataFileMeta, nulls: Map[String, Long])
+
 case class DataFileMeta(
     path: String,           // relative to table location, e.g. data/[p=v/]s1-f<nonce>-00000.parquet
     seq: Long,              // sequence number = id of the committing snapshot

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{BlobCache, ColStats, DataFileMeta, FilePruner, Meta, ParquetStats}
+import graft.lake.{AggEntry, BlobCache, ColStats, DataFileMeta, FilePruner, Meta, ParquetStats}
 
 /** Read-only Delta Lake table reader — the SECOND real-format interop
   * surface (the reference lists Delta under future support,
@@ -307,21 +307,14 @@ final class DeltaTable private (
     (live.map(_.size).sum, live.map(_.numRecords.getOrElse(0L)).sum)
   }
 
-  /** Aggregate-pushdown surface (r11; FOLD form since r13): the DSv2
-    * connector's metadata-only COUNT/MIN/MAX
-    * ([[graft.lake.sql.DeltaInteropAgg]]) runs as an associative fold
-    * over every live file's (pruner DataFileMeta, exact row count,
-    * LOGICAL-name nullCount entries). Returns None — refuse — when ANY
-    * deletion vector is live (log row counts become upper bounds) or
-    * any file lacks `numRecords` (stats are optional in the protocol;
-    * unknown is not zero). Eager mode folds on the driver; Lazy mode
-    * runs the fold INSIDE the distributed checkpoint replay
-    * (treeAggregate), so a whole-estate metadata aggregate never
-    * materializes the estate anywhere — the r13 refinement that removed
-    * the last O(files) driver collect from the lazy path. */
+  /** The metadata-aggregate fold over every live file as an [[AggEntry]]
+    * — None (refuse) when ANY deletion vector is live (log row counts
+    * become upper bounds) or any file lacks `numRecords` (stats are
+    * optional in the protocol; unknown is not zero). Eager mode folds on
+    * the driver; Lazy mode runs the fold INSIDE the distributed checkpoint
+    * replay (treeAggregate), never materializing the estate anywhere. */
   private[lake] def foldAggEntries[B](zero: B)(
-      seq: (B, (DataFileMeta, Long, Map[String, Long])) => B,
-      comb: (B, B) => B): Option[B] = {
+      seq: (B, AggEntry) => B, comb: (B, B) => B): Option[B] = {
     val m = meta
     val seqO: (Option[B], DeltaTable.AddFile) => Option[B] = (b, a) =>
       b.flatMap(bb => DeltaTable.aggEntryOf(a, m).map(e => seq(bb, e)))
@@ -667,23 +660,22 @@ object DeltaTable {
         * excluded from the distributed replay via broadcast. */
       excluded: Set[String]) extends State
 
-  /** Aggregate-fold entry for one live add — (pruner meta, exact rows,
-    * LOGICAL-name nullCounts) — or None when the file disqualifies the
-    * whole metadata aggregate (live DV: counts become upper bounds;
-    * missing numRecords: unknown is not zero). Companion-level so the
-    * distributed fold's task closures capture only the (serializable)
+  /** A live add as the shared metadata-aggregate entry — stats and
+    * nullCount entries under LOGICAL names — or None when the file
+    * disqualifies the whole aggregate (live DV: counts become upper
+    * bounds; missing numRecords: unknown is not zero). Companion-level so
+    * the distributed fold's task closures capture only the (serializable)
     * DMeta. */
-  private def aggEntryOf(a: AddFile, m: DMeta)
-      : Option[(DataFileMeta, Long, Map[String, Long])] =
-    if (a.deletionVector.isDefined) None
-    else a.numRecords.map { n =>
+  private def aggEntryOf(a: AddFile, m: DMeta): Option[AggEntry] =
+    if (a.deletionVector.isDefined || a.numRecords.isEmpty) None
+    else {
       val logicalNulls =
         if (m.columnMappingMode == "none") a.nullCounts
         else {
           val byPhys = m.logicalByPhysical
           a.nullCounts.flatMap { case (k, v) => byPhys.get(k).map(_ -> v) }
         }
-      (toDataFileMeta(a, m), n, logicalNulls)
+      Some(AggEntry(toDataFileMeta(a, m), logicalNulls))
     }
 
   /** Metadata-view row for one live add (see [[DeltaTable.addRowsDf]]);

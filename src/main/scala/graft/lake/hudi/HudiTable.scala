@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.lake.{BlobCache, DataFileMeta, FilePruner, HivePartitionedRead, Meta}
+import graft.lake.{AggEntry, BlobCache, DataFileMeta, FilePruner, HivePartitionedRead, Meta}
 
 /** Read-only Apache Hudi table reader — COPY_ON_WRITE and (since r09)
   * MERGE_ON_READ — the third real-format interop surface (with Delta,
@@ -187,25 +187,22 @@ final class HudiTable private (
     (bytes, live.filter(_.numWrites >= 0).map(_.numWrites).sum)
   }
 
-  /** Aggregate-pushdown fold surface (r14; the triangle's third leg —
-    * see DeltaTable.foldAggEntries / IcebergTable.foldAggEntries): every
-    * live BASE slice as (pruner DataFileMeta, exact base-row count from
-    * its commit's HoodieWriteStat) — or None (refuse) when the counts
-    * cannot be exact: any uncompacted log delta while `refuseOnLogs`
-    * (the snapshot view's per-key merge collapses upserts and drops
-    * soft-deleted rows, making base counts upper bounds; the
-    * read_optimized view serves base slices by contract and passes
-    * false), or a slice whose commit stats predate numWrites recording
-    * (unknown ≠ zero). Snapshot state is already O(file groups) driver
-    * metadata (timeline replay — the format's own granularity), so this
-    * fold is a driver loop; nothing data-sized ever moves. */
+  /** The metadata-aggregate fold over every live BASE slice as an
+    * [[AggEntry]] (row count from its commit's HoodieWriteStat; commit
+    * stats carry no column bounds or null counts) — or None (refuse) when
+    * the counts cannot be exact: any uncompacted log delta while
+    * `refuseOnLogs` (the snapshot view's per-key merge collapses upserts
+    * and drops soft-deleted rows; the read_optimized view serves base
+    * slices by contract and passes false), or a slice whose commit stats
+    * predate numWrites recording (unknown ≠ zero). Snapshot state is
+    * already O(file groups) driver metadata, so this is a driver loop. */
   private[lake] def foldAggSlices[B](zero: B, refuseOnLogs: Boolean)(
-      seq: (B, (DataFileMeta, Long)) => B): Option[B] = {
+      seq: (B, AggEntry) => B): Option[B] = {
     var acc = zero
     for (s <- slices) {
       if (refuseOnLogs && s.logs.nonEmpty) return None
       if (s.numWrites < 0) return None // unknown row count
-      acc = seq(acc, (toDataFileMeta(s), s.numWrites))
+      acc = seq(acc, AggEntry(toDataFileMeta(s), Map.empty))
     }
     Some(acc)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{BlobCache, ColStats, DataFileMeta, FilePruner, ParquetStats}
+import graft.lake.{AggEntry, BlobCache, ColStats, DataFileMeta, FilePruner, ParquetStats}
 
 /** Read-only Apache Iceberg v1/v2 table reader — REAL-format interop, the
   * reference's headline capability ("Native Apache Iceberg support",
@@ -409,42 +409,6 @@ final class IcebergTable private (
     (files.map(_.entry.fileSizeBytes).sum, files.map(_.entry.recordCount).sum)
   }
 
-  /** Aggregate-pushdown planning surface (r11): every live DATA file as
-    * (pruner DataFileMeta, raw manifest entry, writer field-id lookup),
-    * plus the schema and the identity partition column set — or None
-    * when ANY delete content (position / equality / DV) is live, which
-    * makes manifest row counts upper bounds instead of answers. Feeds
-    * the DSv2 connector's metadata-only COUNT/MIN/MAX (see
-    * [[graft.lake.sql.IcebergInteropAgg]]); Iceberg's own aggregate
-    * pushdown has the same delete-refusal rule. */
-  private[lake] def aggPlan(snapshotId: Long = -1L): Option[(IceSchema,
-      Seq[(DataFileMeta, IcebergAvro.ManifestEntry, IceSchema)], Set[String])] = {
-    val p = plan(None, snapshotId)
-    if (p.posDeletes.nonEmpty || p.eqDeletes.nonEmpty || p.dvDeletes.nonEmpty)
-      return None
-    val sch = p.schema
-    val defaultSpec = meta.spec(meta.defaultSpecId)
-    def specOf(pf: PlannedFile): IcePartSpec =
-      try meta.spec(pf.specId) catch { case _: Throwable => defaultSpec }
-    val files = p.dataFiles.map(pf =>
-      (toDataFileMeta(pf, sch, specOf(pf)), pf.entry, schemaOrCurrent(pf.schemaId)))
-    val idCols = meta.specs.flatMap(_.fields.filter(_.transform == "identity")
-      .flatMap(f => sch.byId.get(f.sourceId).map(_.name))).toSet
-    Some((sch, files, idCols))
-  }
-
-  /** Identity partition columns under the snapshot schema (static
-    * refusal input for the fold-form aggregate — no manifest IO). */
-  private[lake] def aggIdentityCols(snapshotId: Long = -1L): Set[String] = {
-    val snapId = if (snapshotId >= 0) snapshotId else currentSnapshotId
-    val sch =
-      if (snapId < 0 || snapId == currentSnapshotId) meta.currentSchema
-      else meta.snapshot(snapId).schemaId.map(meta.schema)
-        .getOrElse(meta.currentSchema)
-    meta.specs.flatMap(_.fields.filter(_.transform == "identity")
-      .flatMap(f => sch.byId.get(f.sourceId).map(_.name))).toSet
-  }
-
   /** Snapshot schema the aggregate fold evaluates under. */
   private[lake] def aggIceSchema(snapshotId: Long = -1L): IceSchema = {
     val snapId = if (snapshotId >= 0) snapshotId else currentSnapshotId
@@ -453,45 +417,52 @@ final class IcebergTable private (
       .getOrElse(meta.currentSchema)
   }
 
-  /** Aggregate-pushdown surface in FOLD form (r14; the Delta
-    * `foldAggEntries` discipline applied to manifests): an associative
-    * fold over every live DATA file's (pruner DataFileMeta, raw manifest
-    * entry, writer schema) — or None when any delete content is live
-    * (manifest row counts become upper bounds) or any entry cannot
-    * contribute. Below `spark.graft.iceberg.aggFoldThresholdBytes` of
-    * manifest bytes (default 32 MiB ≈ 150k files) the fold runs on the
-    * driver over the cached plan — plan-identical to the r11 walk. Above
-    * it, manifests are read INSIDE a distributed job (one task per
-    * manifest, treeAggregate), so a whole-estate metadata COUNT/MIN/MAX
-    * on a multi-million-file table never materializes the file list
-    * anywhere — matching Iceberg's own move of metadata work off the
-    * planner for large estates. The distributed path refuses on ANY
-    * delete manifest in the list (content != 0) without opening it:
-    * conservative (a fully-retired delete manifest refuses too), but a
-    * refusal only costs a real scan, never a wrong answer. */
+  /** Identity partition columns under the snapshot schema (static
+    * refusal input for the aggregate fold — no manifest IO). */
+  private[lake] def aggIdentityCols(snapshotId: Long = -1L): Set[String] = {
+    val sch = aggIceSchema(snapshotId)
+    meta.specs.flatMap(_.fields.filter(_.transform == "identity")
+      .flatMap(f => sch.byId.get(f.sourceId).map(_.name))).toSet
+  }
+
+  /** The metadata-aggregate fold over every live DATA file, as an
+    * [[AggEntry]] — or None when any delete content (position / equality
+    * / DV) is live, which makes manifest row counts upper bounds (Iceberg's
+    * own aggregate pushdown has the same rule). Below
+    * `spark.graft.iceberg.aggFoldThresholdBytes` of manifest bytes
+    * (default 32 MiB ≈ 150k files) it runs on the driver over the cached
+    * plan. Above it, manifests are read INSIDE a distributed job (one task
+    * per manifest, treeAggregate), which refuses on ANY delete manifest in
+    * the list without opening it: conservative (a fully-retired delete
+    * manifest refuses too), but a refusal only costs a real scan. */
   private[lake] def foldAggEntries[B](snapshotId: Long = -1L)(zero: B)(
-      seq: (B, (DataFileMeta, IcebergAvro.ManifestEntry, IceSchema)) => B,
-      comb: (B, B) => B): Option[B] = {
+      seq: (B, AggEntry) => B, comb: (B, B) => B): Option[B] = {
     val snapId = if (snapshotId >= 0) snapshotId else currentSnapshotId
     if (snapId < 0) return Some(zero) // empty table: fold of nothing
     val snap = meta.snapshot(snapId)
     // manifest lists are immutable once written — memoize per resolved
     // path so the threshold probe costs one driver read per snapshot,
-    // not one per planned aggregate (r15; r14 advice: k-filter planning
-    // re-read the list k+1 times)
+    // not one per planned aggregate
     val listPath = resolve(snap.manifestList)
     val listEntries = IcebergTable.manifestListCache.get(listPath.toString)(
       IcebergAvro.readManifestList(conf, listPath))
     val threshold = spark.conf.getOption(
       "spark.graft.iceberg.aggFoldThresholdBytes")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    if (listEntries.map(_.length).sum <= threshold)
-      return aggPlan(snapshotId).map(_._2.foldLeft(zero)(seq))
+    if (listEntries.map(_.length).sum <= threshold) {
+      val p = plan(None, snapshotId)
+      if (p.posDeletes.nonEmpty || p.eqDeletes.nonEmpty || p.dvDeletes.nonEmpty)
+        return None
+      val defaultSpec = meta.spec(meta.defaultSpecId)
+      return Some(p.dataFiles.foldLeft(zero) { (b, pf) =>
+        val spec = try meta.spec(pf.specId) catch { case _: Throwable => defaultSpec }
+        val writeSchema = schemaOrCurrent(pf.schemaId)
+        seq(b, IcebergTable.aggEntry(toDataFileMeta(pf, p.schema, spec), pf.entry,
+          p.schema, writeSchema))
+      })
+    }
     if (listEntries.exists(_.content != 0)) return None
-    val sch =
-      if (snapId == currentSnapshotId) meta.currentSchema
-      else snap.schemaId.map(meta.schema).getOrElse(meta.currentSchema)
-    val ctx = IcebergTable.FoldCtx(sch, meta.schemas, meta.specs,
+    val ctx = IcebergTable.FoldCtx(aggIceSchema(snapshotId), meta.schemas, meta.specs,
       meta.defaultSpecId)
     val bcConf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(conf))
@@ -513,8 +484,8 @@ final class IcebergTable private (
             else {
               val entrySeq = en.sequenceNumber.getOrElse(
                 if (en.status == 1) pe._2 else 0L)
-              acc = acc.map(a => seq(a, (IcebergTable.toDataFileMeta(
-                en, entrySeq, ctx.sch, spec, writeSchema), en, writeSchema)))
+              acc = acc.map(a => seq(a, IcebergTable.aggEntry(IcebergTable.toDataFileMeta(
+                en, entrySeq, ctx.sch, spec, writeSchema), en, ctx.sch, writeSchema)))
             }
           }
         }
@@ -1224,6 +1195,16 @@ object IcebergTable {
     }.toMap
     DataFileMeta(e.filePath, seq, e.recordCount, e.fileSizeBytes, pvals, stats)
   }
+
+  /** A live data file as the shared metadata-aggregate entry: null counts
+    * by snapshot-schema name, where a column the file's write schema lacks
+    * (added after the file was written) is all null. */
+  private[iceberg] def aggEntry(dfm: DataFileMeta, e: IcebergAvro.ManifestEntry,
+      sch: IceSchema, writeSchema: IceSchema): AggEntry =
+    AggEntry(dfm, sch.fields.flatMap { f =>
+      if (!writeSchema.byId.contains(f.id)) Some(f.name -> e.recordCount)
+      else e.nullCounts.get(f.id).map(f.name -> _)
+    }.toMap)
 
   /** Everything a fold task needs to turn a raw manifest entry into an
     * aggregate contribution — pure case-class state, shipped once per

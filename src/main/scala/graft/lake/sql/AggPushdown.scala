@@ -1,81 +1,383 @@
 package graft.lake.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression => CExpr, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Complete, Count => CCount, Max => CMax, Min => CMin}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
+import org.apache.spark.sql.connector.read.{Scan, SupportsPushDownAggregates, SupportsPushDownFilters}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 
-import graft.lake.{ColStats, DataFileMeta, GraftTable, ManifestSummary, Meta, PIdentity, PartitionTransforms, Snapshot, TableMetadata}
+import graft.lake.{AggEntry, ColStats, DataFileMeta, GraftTable, ManifestSummary, Meta, PIdentity, PartitionTransforms, Snapshot}
 
-/** Metadata-only aggregate evaluation for the DSv2 scan: answers
-  * `COUNT(*) / COUNT(col) / MIN(col) / MAX(col)` from manifest stats and
-  * partition values alone — zero data files opened (Iceberg's aggregate
-  * pushdown; the reference's planner keeps the same file-level metadata for
-  * its scans, pg_lakehouse_iceberg/src/operations/scan_ops.c:240-276). At
-  * 100 TB this turns a full-table `count(*)` from a thousand-executor scan
-  * into one driver-side manifest walk.
+/** Metadata-only aggregates for the four table formats: answers
+  * `COUNT(*) / COUNT(col) / MIN(col) / MAX(col)`, optionally `GROUP BY`
+  * identity partition columns, from file-level metadata alone — zero data
+  * files opened (Iceberg's aggregate pushdown; the reference's planner
+  * keeps the same file-level metadata for its scans,
+  * pg_lakehouse_iceberg/src/operations/scan_ops.c:240-276).
   *
-  * Everything here is EXACT-or-refuse — unlike `FilePruner`, which may keep
+  * One path serves graft, Iceberg, Delta and Hudi:
+  *  - [[Plan]] is the one plan: each column is answered either from the
+  *    file's partition value or from its file stats, as its
+  *    [[AggSource]] says. It is built once from a connector
+  *    `Aggregation` ([[pushed]]) or from Catalyst aggregate calls
+  *    ([[MetadataAggregate]]).
+  *  - [[contribution]] is the one per-file step over the normalised
+  *    [[AggEntry]], and [[groupedSeq]] / [[groupedComb]] the one fold, so
+  *    the same pure, serialisable step runs as a driver loop on small
+  *    tables and inside a `treeAggregate` over manifests (Iceberg, past
+  *    `spark.graft.iceberg.aggFoldThresholdBytes`) or checkpoint parquet
+  *    (Delta, past `spark.graft.delta.stateCollectThresholdBytes`) on
+  *    large ones. A whole-estate COUNT/MIN/MAX then never materialises the
+  *    file list anywhere.
+  *  - A format supplies only what is its own: which columns it answers
+  *    from partition values, its groupable (identity partition) columns,
+  *    its fold over live files, and the adapter from its entry to
+  *    [[AggEntry]]. graft adds its zero-IO shortcuts: the snapshot's
+  *    `totalRows`, the manifest-list column ranges and summary manifest
+  *    pruning.
+  *
+  * Everything is EXACT-or-refuse. Unlike `FilePruner`, which may keep
   * extra files because rows are re-filtered, an aggregate answered from
-  * metadata has no row-level second chance. The refusal rules:
-  *
-  *   - any delete file in the snapshot state → refuse (MoR rows not yet
-  *     applied would inflate counts; `compact()`/`maintain()` restores
-  *     pushdown)
-  *   - filters must be decidable per file from IDENTITY partition values:
-  *     every referenced column an identity partition column, every file
-  *     carrying a value for it (files from before a partition evolution
-  *     don't) — then a file's rows ALL match or NONE do
-  *   - MIN/MAX only on integral / date / timestamp / decimal columns:
-  *     parquet string stats may be truncated (ParquetStats.MaxStatLen) and
-  *     float/double stats ignore NaN, so neither is exact
-  *   - a file missing stats for the column → refuse (an all-null column
-  *     and an unsupported physical type are indistinguishable in ColStats)
-  *
-  * Columns renamed by schema evolution resolve their per-file PHYSICAL
-  * stats key through the table's field-id epoch log, same as pruning.
+  * metadata has no row-level second chance:
+  *  - any live delete, deletion vector or (Hudi snapshot view) log delta
+  *    refuses: row counts become upper bounds;
+  *  - every filter must reference identity partition columns only, and a
+  *    file where some filter cannot be decided from its partition values
+  *    refuses the whole fold — skipping it could drop rows it matches.
+  *    Decided per file, a file's rows ALL match or NONE do;
+  *  - a zero-row file contributes nothing: it holds no value to count or
+  *    bound, and keying it would make a group a real scan never yields;
+  *  - COUNT(col) from stats needs the file's null count (unknown is not
+  *    zero); MIN/MAX only on integral, date, timestamp and decimal
+  *    columns, whose stats are exact (string bounds may be truncated,
+  *    float/double bounds ignore NaN), and from a file's stats only when
+  *    they decode to the column's type.
   */
 object AggPushdown {
 
-  /** Is `f` EXACTLY decidable from identity partition values for every
-    * data file of the scan's snapshot? (Decidable filters are consumed by
-    * the scan builder — not returned as residual — which is what lets
-    * Spark hand the whole Aggregate to the source.) */
-  def exactPartitionFilter(table: GraftTable, asOf: Long, f: Filter): Boolean = {
-    val m = table.meta
-    val snap = if (asOf >= 0) Some(m.snapshot(asOf)) else m.currentSnapshot
-    snap match {
+  // ---- the plan ----------------------------------------------------------------
+
+  /** One metadata-answerable aggregate. `fromPartition`: the column is
+    * answered from each file's partition value, else from its stats. */
+  sealed trait Plan extends Serializable
+  case object PCountStar extends Plan
+  final case class PCount(col: String, fromPartition: Boolean) extends Plan
+  final case class PBound(col: String, fromPartition: Boolean, isMin: Boolean,
+      dt: DataType) extends Plan
+
+  /** Result type of a plan (counts are non-null longs). */
+  private[sql] def dataType(p: Plan): DataType = p match {
+    case b: PBound => b.dt
+    case _ => LongType
+  }
+
+  private def countOf(src: AggSource, col: String): Option[Plan] =
+    src.schema.find(_.name == col).map(_ => PCount(col, src.partitionCols(col)))
+
+  private def boundOf(src: AggSource, col: String, isMin: Boolean): Option[Plan] =
+    src.schema.find(_.name == col).map(_.dataType).filter(minMaxSafe)
+      .map(dt => PBound(col, src.partitionCols(col), isMin, dt))
+
+  /** Plan of one connector aggregate function; None = SUM/AVG/DISTINCT/
+    * UDAF or an unsupported column, not metadata-answerable. */
+  private[sql] def planOf(src: AggSource, fn: AggregateFunc): Option[Plan] = fn match {
+    case _: CountStar => Some(PCountStar)
+    case c: Count if !c.isDistinct => simpleName(c.column).flatMap(countOf(src, _))
+    case m: Min => simpleName(m.column).flatMap(boundOf(src, _, isMin = true))
+    case m: Max => simpleName(m.column).flatMap(boundOf(src, _, isMin = false))
+    case _ => None
+  }
+
+  /** Plan of one Catalyst aggregate call. */
+  private[sql] def planOf(src: AggSource, fn: AggregateFunction): Option[Plan] = fn match {
+    case CCount(Seq(Literal(v, _))) if v != null => Some(PCountStar)
+    case CCount(Seq(a: AttributeReference)) => countOf(src, a.name)
+    case CMin(a: AttributeReference) => boundOf(src, a.name, isMin = true)
+    case CMax(a: AttributeReference) => boundOf(src, a.name, isMin = false)
+    case _ => None
+  }
+
+  // ---- the fold ----------------------------------------------------------------
+
+  /** Fold accumulator per plan: counts add, bounds keep their min/max.
+    * `isMin` rides in the cell so merging needs no plan context. */
+  sealed trait Cell extends Serializable
+  final case class CCnt(n: Long) extends Cell
+  final case class CBnd(isMin: Boolean, v: Option[BigDecimal]) extends Cell
+
+  private def identity(p: Plan): Cell = p match {
+    case b: PBound => CBnd(b.isMin, None)
+    case _ => CCnt(0L)
+  }
+
+  private def merge(a: Seq[Cell], b: Seq[Cell]): Seq[Cell] =
+    a.lazyZip(b).map {
+      case (CCnt(u), CCnt(w)) => CCnt(u + w)
+      case (CBnd(m, u), CBnd(_, w)) =>
+        CBnd(m, (u, w) match {
+          case (None, v) => v
+          case (v, None) => v
+          case (Some(l), Some(r)) => Some(if (m) l.min(r) else l.max(r))
+        })
+      case _ => throw new IllegalStateException("cell shape mismatch")
+    }.toSeq
+
+  /** One non-empty file's cells for every planned aggregate; None = the
+    * file cannot answer exactly. */
+  private def contribution(plans: Seq[Plan], e: AggEntry): Option[Seq[Cell]] = {
+    val f = e.file
+    val rows = f.rowCount
+    val cells = plans.map {
+      case PCountStar => CCnt(rows)
+      case PCount(c, true) => f.partitionValues.get(c) match {
+        case Some(Meta.NullPartition) => CCnt(0L)
+        case Some(_) => CCnt(rows)
+        case None => return None // no partition value: no verdict
+      }
+      case PCount(c, false) => e.nulls.get(c) match {
+        case Some(n) => CCnt(rows - n)
+        case None => return None // unknown null count is not zero
+      }
+      case PBound(c, true, isMin, dt) => f.partitionValues.get(c) match {
+        case Some(Meta.NullPartition) => CBnd(isMin, None) // MIN/MAX skip nulls
+        case Some(raw) => CBnd(isMin, Some(partValue(raw, dt).getOrElse(return None)))
+        case None => return None
+      }
+      case PBound(c, false, isMin, dt) =>
+        if (e.nulls.get(c).contains(rows)) CBnd(isMin, None) // all null
+        else {
+          val st = f.stats.getOrElse(c, return None)
+          CBnd(isMin, Some(statValue(st, if (isMin) st.min else st.max, dt)
+            .getOrElse(return None)))
+        }
+    }
+    Some(cells)
+  }
+
+  /** Grouped-fold accumulator: one cell vector per live group key (raw
+    * hive-dir strings, null = the NULL dir; Nil when ungrouped). */
+  private[lake] type GroupAcc = Map[List[String], Seq[Cell]]
+
+  /** Sequence op of the fold: a file failing the filters or holding no
+    * row contributes nothing; otherwise its group key and cells must both
+    * resolve, or the whole fold refuses (None). A file where a filter is
+    * undecidable refuses too — never skipped. Pure and built from
+    * serialisable values only: the distributed folds ship it to tasks. */
+  private[lake] def groupedSeq(groupCols: Seq[String], plans: Seq[Plan], filters: Seq[Filter],
+      sch: StructType): (Option[GroupAcc], AggEntry) => Option[GroupAcc] = (acc, e) =>
+    acc.flatMap { m =>
+      passesAll(filters, e.file, sch) match {
+        case None => None
+        case Some(false) => Some(m)
+        case Some(true) if e.file.rowCount == 0L => Some(m)
+        case Some(true) =>
+          for { k <- rawKey(e.file.partitionValues, groupCols); c <- contribution(plans, e) }
+            yield m.updated(k, m.get(k).map(merge(_, c)).getOrElse(c))
+      }
+    }
+
+  /** Combine op: union of group maps, merging shared keys' cells. */
+  private val groupedComb: (Option[GroupAcc], Option[GroupAcc]) => Option[GroupAcc] =
+    (x, y) => for { a <- x; b <- y } yield
+      b.foldLeft(a) { case (m, (k, c)) =>
+        m.updated(k, m.get(k).map(merge(_, c)).getOrElse(c)) }
+
+  /** Decidability-aware filter evaluation of one file: None = some filter
+    * is not exactly decidable from its partition values; Some(b) = every
+    * filter decidable, b = all pass. */
+  private def passesAll(filters: Seq[Filter], dfm: DataFileMeta, sch: StructType): Option[Boolean] = {
+    var all = true
+    for (f <- filters) eval(f, dfm, sch) match {
+      case None => return None
+      case Some(b) => all &= b
+    }
+    Some(all)
+  }
+
+  /** Raw group key of one file from its partition values; None = the
+    * file carries no value for some group column (refuse). */
+  private def rawKey(pvals: Map[String, String], groupCols: Seq[String]): Option[List[String]] = {
+    val out = List.newBuilder[String]
+    for (c <- groupCols) pvals.get(c) match {
+      case Some(Meta.NullPartition) => out += null
+      case Some(v) => out += v
+      case None => return None
+    }
+    Some(out.result())
+  }
+
+  /** Deterministic group order: null first, per-column framing so no
+    * value bleeds into the next column's. */
+  private def sortedGroups(m: GroupAcc): Seq[(List[String], Seq[Cell])] =
+    m.toSeq.sortBy(_._1.map(k =>
+      if (k == null) "\u0000" else "\u0001" + k + "\u0000").mkString)
+
+  /** The metadata aggregate: one (group key, cells) row per live group in
+    * [[sortedGroups]] order — exactly one row, keyed Nil, when ungrouped.
+    * None = not exactly answerable; the caller scans. */
+  private[sql] def compute(src: AggSource, groupCols: Seq[String], plans: Seq[Plan],
+      filters: Seq[Filter]): Option[Seq[(List[String], Seq[Cell])]] = {
+    if (!groupCols.forall(src.groupableCols)) return None
+    if (!filters.forall(_.references.forall(r => !r.contains('.') && src.groupableCols(r))))
+      return None
+    if (groupCols.isEmpty)
+      src.shortcut(plans, filters).foreach(cells => return Some(Seq((Nil, cells))))
+    src.fold(filters, Option(Map.empty: GroupAcc))(
+      groupedSeq(groupCols, plans, filters, src.schema), groupedComb).flatten.map { m =>
+      if (groupCols.nonEmpty) sortedGroups(m)
+      else Seq((Nil, m.getOrElse(Nil, plans.map(identity))))
+    }
+  }
+
+  /** Catalyst internal value of one result cell. */
+  private[sql] def cellValue(p: Plan, c: Cell): Any = (p, c) match {
+    case (_, CCnt(n)) => n
+    case (b: PBound, CBnd(_, v)) => v.map(internal(_, b.dt)).orNull
+    case _ => throw new IllegalStateException("cell shape mismatch")
+  }
+
+  /** DSv2 entry of both scan builders: a connector `Aggregation` answered
+    * as the scan's schema (group columns first, then the aggregates — the
+    * layout Spark expects of a complete pushdown) and internal rows. */
+  private[sql] def pushed(src: AggSource, agg: Aggregation,
+      filters: Seq[Filter]): Option[(StructType, Seq[InternalRow])] = {
+    val keys = agg.groupByExpressions().toSeq.map { g =>
+      simpleName(g).flatMap(n => src.schema.find(_.name == n))
+        .filter(f => groupTypeSupported(f.dataType)).getOrElse(return None)
+    }
+    val funcs = agg.aggregateExpressions().toSeq
+    val plans = funcs.map(planOf(src, _).getOrElse(return None))
+    compute(src, keys.map(_.name), plans, filters).map { groups =>
+      val schema = StructType(keys ++ funcs.zip(plans).map { case (fn, p) =>
+        StructField(fn.toString, dataType(p), nullable = p.isInstanceOf[PBound]) })
+      val rows = groups.map { case (key, cells) =>
+        val keyVals = keys.zip(key).map { case (f, raw) =>
+          internalGroupValue(raw, f.dataType).getOrElse(return None) }
+        InternalRow.fromSeq(keyVals ++ plans.zip(cells).map { case (p, c) => cellValue(p, c) })
+      }
+      (schema, rows)
+    }
+  }
+
+  // ---- graft's own source ------------------------------------------------------
+
+  /** graft's native table at a snapshot (`asOf` < 0 = current). */
+  private[sql] def graft(table: GraftTable, asOf: Long): AggSource = new AggSource {
+    private val m = table.meta
+    private val snap = if (asOf >= 0) Some(m.snapshot(asOf)) else m.currentSnapshot
+    val schema: StructType = table.schema
+    val groupableCols: Set[String] = identityCols(m.partitionColumns)
+    val partitionCols: Set[String] = groupableCols
+
+    override def consumable(f: Filter): Boolean = snap match {
       case None => true // empty table: nothing to mis-decide
       case Some(s) =>
-        val idCols = identityCols(m.partitionColumns)
-        val sch = table.schema
-        if (!f.references.forall(r => !r.contains('.') && idCols.contains(r)))
-          return false
+        if (!f.references.forall(r => !r.contains('.') && groupableCols(r))) return false
         // SUMMARY fast path — decide from the manifest list alone: a
         // column enters a summary's pvals only when EVERY data file in
         // that manifest carries a (bounded-cardinality) value for it, so
         // presence in all summaries + convertibility of every recorded
-        // value proves per-file decidability with ZERO manifest IO.
-        // This runs in pushFilters on every filtered DSv2 query — the
-        // per-file walk below is O(all files) and stays only as the
-        // conservative fallback (no summaries / capped-out column).
-        val refs = f.references.toSeq
+        // value proves per-file decidability with ZERO manifest IO. This
+        // runs in pushFilters on every filtered DSv2 query — the per-file
+        // walk below is O(all files) and stays only as the conservative
+        // fallback (no summaries / capped-out column).
         val entries = s.manifestEntries
-        val bySummary = shapeDecidable(f, sch) &&
+        val bySummary = shapeDecidable(f, schema) &&
           entries.nonEmpty && entries.forall {
             case (_, Some(sum)) =>
-              refs.forall { c =>
-                val dt = sch.find(_.name == c).map(_.dataType)
+              f.references.forall { c =>
+                val dt = schema.find(_.name == c).map(_.dataType)
                 sum.pvals.get(c).exists(_.forall(raw =>
                   raw == Meta.NullPartition ||
                     dt.exists(d => partValue(raw, d).isDefined)))
               }
             case (_, None) => false
           }
-        bySummary || s.dataFiles.forall(df => eval(f, df, sch).isDefined)
+        bySummary || s.dataFiles.forall(df => eval(f, df, schema).isDefined)
+    }
+
+    // MANIFEST-level pruning first: a summary lists every file's value for
+    // its columns, and `eval` is exact on identity partition values — so a
+    // manifest where some single-column filter is false for ALL listed
+    // values of its column provably contributes nothing, and the walk
+    // skips it without IO. At a million files this keeps the
+    // partition-filtered COUNT a walk over the MATCHING partitions'
+    // manifests, not the table's whole inventory.
+    def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
+        comb: (B, B) => B): Option[B] = {
+      if (snap.exists(_.nDeleteFiles > 0)) return None
+      def summaryMayPass(s: ManifestSummary): Boolean =
+        s.pvals.forall { case (c, vs) =>
+          vs.isEmpty || vs.exists { v =>
+            val synth = DataFileMeta("", 0L, 1L, 0L, Map(c -> v), Map.empty)
+            filters.filter(_.references.forall(_ == c))
+              .forall(f => !eval(f, synth, schema).contains(false))
+          }
+        }
+      // stats are keyed by the file epoch's PHYSICAL names: re-key them by
+      // the current name through the field-id epoch log, as pruning does
+      val statName = table.statNameFor(m)
+      val names = schema.fieldNames.toSeq
+      Some(snap.map(_.dataFilesWhere(summaryMayPass)).getOrElse(Nil).foldLeft(zero) {
+        (b, df) =>
+          val stats = names.flatMap(c => df.stats.get(statName(df, c)).map(c -> _)).toMap
+          seq(b, AggEntry(df.copy(stats = stats),
+            stats.collect { case (c, st) if st.nulls >= 0 => c -> st.nulls }))
+      })
+    }
+
+    // O(1): an unfiltered COUNT(*) is the snapshot's running row count
+    // (exact: replace-list commits recompute it, append-style commits
+    // accumulate, MoR deletes refuse). Otherwise unfiltered MIN / MAX /
+    // COUNT(col) from the manifest-list column ranges — ZERO manifest IO.
+    override def shortcut(plans: Seq[Plan], filters: Seq[Filter]): Option[Seq[Cell]] =
+      if (filters.nonEmpty || plans.isEmpty || snap.exists(_.nDeleteFiles > 0)) None
+      else if (plans.forall(_ == PCountStar))
+        Some(plans.map(_ => CCnt(snap.map(_.totalRows).getOrElse(0L))))
+      else snap.flatMap(fromSummaries(_, plans))
+
+    /** Min over folded per-manifest mins IS the table min, and rows − folded
+      * null count IS COUNT(col). Exactness: every manifest must carry a
+      * summary; a column needs its folded range in every data-holding
+      * summary (the fold itself required every file to have a comparable
+      * stat; all-NULL files contributed no bound). Summaries written before
+      * rows were recorded read rows = 0 — unknown, not empty: refuse. */
+    private def fromSummaries(s: Snapshot, plans: Seq[Plan]): Option[Seq[Cell]] = {
+      val sums = s.manifestEntries.map(_._2.getOrElse(return None)).filter(_.nData > 0)
+      val idByName = table.rangeColsOf(m).toMap
+      def ranges(name: String): Option[Seq[ColStats]] =
+        idByName.get(name).flatMap { id =>
+          val rs = sums.flatMap(_.ranges.get(id.toString))
+          if (rs.length == sums.length) Some(rs) else None
+        }
+      val rows = if (sums.exists(_.rows <= 0)) None else Some(sums.map(_.rows).sum)
+      Some(plans.map {
+        case PCountStar => CCnt(rows.getOrElse(return None))
+        case PCount(c, _) =>
+          val rs = ranges(c).getOrElse(return None)
+          if (rs.exists(_.nulls < 0)) return None // unknown null count
+          CCnt(rows.getOrElse(return None) - rs.map(_.nulls).sum)
+        case PBound(c, _, isMin, dt) =>
+          CBnd(isMin, ranges(c).getOrElse(return None)
+            .map(st => statValue(st, if (isMin) st.min else st.max, dt).getOrElse(return None))
+            .reduceOption((x, y) => if (isMin == (x < y)) x else y))
+      })
     }
   }
+
+  // ---- exact per-file filter evaluation -------------------------------------
+
+  private def identityCols(specs: Seq[String]): Set[String] =
+    try PartitionTransforms.parseAll(specs)
+      .collect { case PIdentity(c) => c }.toSet
+    catch { case _: Throwable => Set.empty }
 
   /** Can [[eval]] decide `f` for ANY file whose referenced partition
     * values are present and convertible? Mirrors eval3's shape + literal
@@ -103,329 +405,13 @@ object AggPushdown {
     }
   }
 
-  /** One metadata-answerable aggregate function. */
-  sealed trait MetaAgg
-  case object MCountStar extends MetaAgg
-  final case class MCount(col: String) extends MetaAgg
-  final case class MMin(col: String) extends MetaAgg
-  final case class MMax(col: String) extends MetaAgg
-
-  /** Computed value of one MetaAgg: counts are Left(n); min/max are
-    * Right(columnType, domain value — None for the SQL NULL of an empty /
-    * all-null input). */
-  type MetaValue = Either[Long, (DataType, Option[BigDecimal])]
-
-  /** Global (ungrouped) compute: always exactly one result row. */
-  def computeAggs(
-      table: GraftTable,
-      asOf: Long,
-      aggs: Seq[MetaAgg],
-      filters: Seq[Filter]): Option[Seq[MetaValue]] =
-    computeGrouped(table, asOf, Nil, aggs, filters).map(_.head._2)
-
-  /** Shared compute core: exact file selection by `filters`, files
-    * bucketed by their `groupCols` identity-partition values (one global
-    * bucket when empty), then each aggregate from manifest stats /
-    * partition values per bucket. Returned group keys are the RAW
-    * hive-dir strings (null for the hive NULL dir), aligned with
-    * `groupCols`. None when ANY part is not exactly answerable. */
-  def computeGrouped(
-      table: GraftTable,
-      asOf: Long,
-      groupCols: Seq[String],
-      aggs: Seq[MetaAgg],
-      filters: Seq[Filter]): Option[Seq[(Seq[String], Seq[MetaValue])]] = {
-    val m = table.meta
-    val sch = table.schema
-    val snap = if (asOf >= 0) Some(m.snapshot(asOf)) else m.currentSnapshot
-    // delete files make manifest row counts upper bounds, not answers
-    if (snap.exists(_.nDeleteFiles > 0)) return None
-    // O(1) fast path: an unfiltered, ungrouped COUNT(*) is the snapshot's
-    // own running row count — zero manifest IO even on a million-file
-    // table (totalRows is exact: replace-list commits recompute it,
-    // append-style commits accumulate, MoR deletes refuse above)
-    if (filters.isEmpty && groupCols.isEmpty && aggs.nonEmpty &&
-        aggs.forall(_ == MCountStar))
-      return Some(Seq(
-        (Nil, aggs.map(_ => Left(snap.map(_.totalRows).getOrElse(0L))))))
-    // ZERO-manifest-IO fast path (r06): unfiltered, ungrouped MIN / MAX /
-    // COUNT(col) answered from the manifest-list column-range summaries
-    // alone — min over folded per-manifest mins IS the table min, and
-    // rows − folded null count IS COUNT(col). Falls through to the
-    // manifest walk when any summary or range is missing (old metadata,
-    // epoch mismatch, partition columns absent from data files).
-    if (filters.isEmpty && groupCols.isEmpty && aggs.nonEmpty)
-      snap.flatMap(s => aggsFromSummaries(table, m, s, aggs, sch)).foreach(
-        vs => return Some(Seq((Nil, vs))))
-    val idCols = identityCols(m.partitionColumns)
-    if (!groupCols.forall(idCols.contains)) return None
-    // filter references must be identity partition columns — a
-    // file-independent requirement, checked before any manifest loads
-    if (!filters.forall(_.references.forall(r =>
-      !r.contains('.') && idCols.contains(r)))) return None
-
-    // MANIFEST-level pruning first: a summary lists every file's value
-    // for its columns, and `eval` is exact on identity partition values —
-    // so a manifest where some single-column filter is false for ALL
-    // listed values of its column provably contributes nothing, and the
-    // metadata walk skips it without IO. At a million files this keeps
-    // the partition-filtered COUNT a walk over the MATCHING partitions'
-    // manifests, not the table's whole inventory.
-    def summaryMayPass(s: graft.lake.ManifestSummary): Boolean =
-      s.pvals.forall { case (c, vs) =>
-        vs.isEmpty || vs.exists { v =>
-          val synth = DataFileMeta("", 0L, 1L, 0L, Map(c -> v), Map.empty)
-          filters.filter(_.references.forall(_ == c))
-            .forall(f => !eval(f, synth, sch).contains(false))
-        }
-      }
-    val allFiles = snap.map(_.dataFilesWhere(summaryMayPass)).getOrElse(Nil)
-
-    // exact per-file filter evaluation: all-or-nothing per file
-    val surviving = new scala.collection.mutable.ArrayBuffer[DataFileMeta]()
-    for (df <- allFiles) {
-      if (!groupCols.forall(df.partitionValues.contains)) return None
-      var verdict: Option[Boolean] = Some(true)
-      for (f <- filters if verdict.isDefined) {
-        eval(f, df, sch) match {
-          case None => return None // undecidable → no pushdown at all
-          case Some(v) => verdict = verdict.map(_ && v)
-        }
-      }
-      if (verdict.contains(true)) surviving += df
-    }
-
-    val statName = table.statNameFor(m)
-    // SQL GROUP BY groups nulls together; the hive NULL dir is one value.
-    // ZERO-ROW files are identity BEFORE keying (r15, the interop rule's
-    // fix applied here too): a committed empty file cannot affect any
-    // COUNT/MIN/MAX, but keying it would fabricate a count(*)=0 group a
-    // real scan never yields — groupless aggregates keep every file (a
-    // one-row answer over empty input IS correct).
-    val buckets: Seq[(Seq[String], Seq[DataFileMeta])] =
-      if (groupCols.isEmpty) Seq((Nil, surviving.toSeq))
-      else surviving.toSeq.filter(_.rowCount > 0L)
-        .groupBy(df => groupCols.map(c => df.partitionValues(c) match {
-          case Meta.NullPartition => null
-          case v => v
-        })).toSeq // per-column framing: null sorts first, no cross-column bleed
-          .sortBy(_._1.map(k =>
-            if (k == null) "\u0000" else "\u0001" + k + "\u0000").mkString)
-
-    val out = buckets.map { case (key, files) =>
-      key -> aggsOf(files, aggs, idCols, statName, sch).getOrElse(return None)
-    }
-    Some(out)
-  }
-
-  /** Unfiltered, ungrouped aggregates from manifest-list summaries alone
-    * (zero manifest IO). None → caller falls back to the manifest walk.
-    * Exactness: every manifest must carry a summary; a column agg needs
-    * the column's folded range in every data-holding summary (the fold
-    * itself required every file to have a comparable stat). MIN/MAX read
-    * the folded bounds (all-NULL files contributed no bound — they have
-    * no values to win); COUNT(col) = Σ(rows − nulls), refusing rows ≤ 0
-    * (pre-r06 summaries deserialize rows = 0 — unknown, not empty). */
-  private def aggsFromSummaries(
-      table: GraftTable,
-      m: TableMetadata,
-      snap: Snapshot,
-      aggs: Seq[MetaAgg],
-      sch: StructType): Option[Seq[MetaValue]] = {
-    val sums = new scala.collection.mutable.ArrayBuffer[ManifestSummary]()
-    for ((_, so) <- snap.manifestEntries) so match {
-      case Some(s) => if (s.nData > 0) sums += s
-      case None => return None // pre-summary manifest list
-    }
-    val idByName = table.rangeColsOf(m).toMap
-    def ranges(name: String): Option[Seq[ColStats]] =
-      idByName.get(name).flatMap { id =>
-        val k = id.toString
-        val rs = sums.flatMap(s => s.ranges.get(k))
-        if (rs.length == sums.length) Some(rs.toSeq) else None
-      }
-    val values = new scala.collection.mutable.ArrayBuffer[MetaValue]()
-    for (a <- aggs) a match {
-      case MCountStar =>
-        if (sums.exists(_.rows <= 0)) return None
-        values += Left(sums.map(_.rows).sum)
-      case MCount(name) =>
-        if (sums.exists(_.rows <= 0)) return None
-        val rs = ranges(name).getOrElse(return None)
-        if (rs.exists(_.nulls < 0)) return None // unknown null count
-        values += Left(sums.map(_.rows).sum - rs.map(_.nulls).sum)
-      case mm @ (MMin(_) | MMax(_)) =>
-        val isMin = mm.isInstanceOf[MMin]
-        val name = mm match { case MMin(c) => c; case MMax(c) => c; case _ => "" }
-        val dt = sch.find(_.name == name).map(_.dataType).getOrElse(return None)
-        if (!minMaxSafe(dt)) return None
-        val rs = ranges(name).getOrElse(return None)
-        var acc: Option[BigDecimal] = None
-        for (st <- rs) {
-          val v = statValue(st, if (isMin) st.min else st.max, dt)
-            .getOrElse(return None)
-          acc = acc match {
-            case Some(x) => Some(if (isMin == (v < x)) v else x)
-            case None => Some(v)
-          }
-        }
-        values += Right((dt, acc))
-    }
-    Some(values.toSeq)
-  }
-
-  /** Aggregates over ONE file bucket. */
-  private def aggsOf(
-      files: Seq[DataFileMeta],
-      aggs: Seq[MetaAgg],
-      idCols: Set[String],
-      statName: graft.lake.FilePruner.StatName,
-      sch: StructType): Option[Seq[MetaValue]] = {
-    val values = new scala.collection.mutable.ArrayBuffer[MetaValue]()
-    for (a <- aggs) a match {
-      case MCountStar =>
-        values += Left(files.map(_.rowCount).sum)
-
-      case MCount(name) =>
-        values += Left(if (idCols.contains(name)) {
-          // identity partition column: the hive NULL dir holds the nulls
-          var n = 0L
-          for (df <- files) df.partitionValues.get(name) match {
-            case Some(Meta.NullPartition) => ()
-            case Some(_) => n += df.rowCount
-            case None => return None
-          }
-          n
-        } else {
-          var n = 0L
-          for (df <- files) df.stats.get(statName(df, name)) match {
-            case Some(st) if st.nulls >= 0 => n += df.rowCount - st.nulls
-            case _ => return None // absent or UNKNOWN (-1) null count
-          }
-          n
-        })
-
-      case mm @ (MMin(_) | MMax(_)) =>
-        val isMin = mm.isInstanceOf[MMin]
-        val name = mm match { case MMin(c) => c; case MMax(c) => c; case _ => "" }
-        val dt = sch.find(_.name == name).map(_.dataType).getOrElse(return None)
-        if (!minMaxSafe(dt)) return None
-        var acc: Option[BigDecimal] = None
-        def fold(v: BigDecimal): Unit = acc = acc match {
-          case Some(x) => Some(if (isMin == (v < x)) v else x)
-          case None => Some(v)
-        }
-        if (idCols.contains(name)) {
-          for (df <- files) df.partitionValues.get(name) match {
-            case Some(Meta.NullPartition) => () // MIN/MAX skip nulls
-            case Some(raw) => fold(partValue(raw, dt).getOrElse(return None))
-            case None => return None
-          }
-        } else {
-          for (df <- files) df.stats.get(statName(df, name)) match {
-            case Some(st) =>
-              fold(statValue(st, if (isMin) st.min else st.max, dt)
-                .getOrElse(return None))
-            case None => return None
-          }
-        }
-        values += Right((dt, acc))
-    }
-    Some(values.toSeq)
-  }
-
-  /** Types whose hive-dir rendering round-trips exactly (GROUP BY key
-    * columns must be one of these). */
-  def groupTypeSupported(dt: DataType): Boolean = dt match {
-    case StringType | ByteType | ShortType | IntegerType | LongType |
-         BooleanType | DateType => true
-    case _ => false
-  }
-
-  /** RAW group value (hive dir string, null = NULL dir) → Catalyst
-    * internal value of the column's type, for LocalRelation rows. Only
-    * types whose dir rendering round-trips exactly. */
-  def internalGroupValue(raw: String, dt: DataType): Option[Any] = {
-    if (raw == null) return Some(null)
-    dt match {
-      case StringType => Some(org.apache.spark.unsafe.types.UTF8String.fromString(raw))
-      case ByteType => raw.toByteOption
-      case ShortType => raw.toShortOption
-      case IntegerType => raw.toIntOption
-      case LongType => raw.toLongOption
-      case BooleanType => raw.toBooleanOption
-      case DateType =>
-        try Some(java.time.LocalDate.parse(raw).toEpochDay.toInt)
-        catch { case _: Throwable => None }
-      case _ => None // timestamps/decimals: dir rendering not trusted
-    }
-  }
-
-  /** RAW group value (hive dir string, null = NULL dir) → EXTERNAL row
-    * value for the V1 bridge (needConversion=true) — the grouped DSv2
-    * scan's key columns. Same supported set as [[internalGroupValue]]. */
-  def externalGroupValue(raw: String, dt: DataType): Option[Any] = {
-    if (raw == null) return Some(null)
-    dt match {
-      case StringType => Some(raw)
-      case ByteType => raw.toByteOption
-      case ShortType => raw.toShortOption
-      case IntegerType => raw.toIntOption
-      case LongType => raw.toLongOption
-      case BooleanType => raw.toBooleanOption
-      case DateType =>
-        try Some(java.sql.Date.valueOf(java.time.LocalDate.parse(raw)))
-        catch { case _: Throwable => None }
-      case _ => None
-    }
-  }
-
-  /** DSv2 entry (sessions WITHOUT GraftExtensions — with them,
-    * GraftNativeScanRule substitutes a LocalRelation first): answers a
-    * connector `Aggregation` as the scan's (readSchema, single result
-    * row in EXTERNAL types for the V1 bridge). */
-  def tryPush(
-      table: GraftTable,
-      asOf: Long,
-      agg: Aggregation,
-      filters: Array[Filter]): Option[(StructType, Seq[Any])] = {
-    if (agg.groupByExpressions.nonEmpty) return None
-    val funcs = agg.aggregateExpressions().toSeq
-    val metas = funcs.map {
-      case _: CountStar => MCountStar
-      case c: Count if !c.isDistinct =>
-        MCount(simpleName(c.column).getOrElse(return None))
-      case mn: Min => MMin(simpleName(mn.column).getOrElse(return None))
-      case mx: Max => MMax(simpleName(mx.column).getOrElse(return None))
-      case _ => return None // SUM/AVG/distinct/UDAF: not metadata-answerable
-    }
-    computeAggs(table, asOf, metas, filters.toSeq).map { vals =>
-      val fields = funcs.zip(vals).map {
-        case (f, Left(_)) => StructField(f.toString, LongType, nullable = false)
-        case (f, Right((dt, _))) => StructField(f.toString, dt, nullable = true)
-      }
-      val row = vals.map {
-        case Left(n) => n
-        case Right((dt, v)) => v.map(external(_, dt)).orNull
-      }
-      (StructType(fields), row)
-    }
-  }
-
-  // ---- exact per-file filter evaluation -------------------------------------
-
-  private def identityCols(specs: Seq[String]): Set[String] =
-    try PartitionTransforms.parseAll(specs)
-      .collect { case PIdentity(c) => c }.toSet
-    catch { case _: Throwable => Set.empty }
-
   /** SQL three-valued evaluation of `f` against one file's identity
     * partition value — sound because every row of the file shares that
     * value. None = cannot decide exactly (missing value, type we don't
     * model); Some(v) = every row of the file evaluates to v (UNKNOWN
     * behaves as false, which is exactly how a WHERE clause treats it —
     * including under NOT, handled via eval3). */
-  private[sql] def eval(f: Filter, df: DataFileMeta, sch: StructType): Option[Boolean] =
+  private def eval(f: Filter, df: DataFileMeta, sch: StructType): Option[Boolean] =
     eval3(f, df, sch).map(_.contains(true))
 
   /** Some(Some(b)) decided, Some(None) = SQL UNKNOWN, None = undecidable. */
@@ -505,7 +491,7 @@ object AggPushdown {
   // epoch days (date), epoch micros (timestamp) and decimals — the only
   // types admitted. Strings ride a stable order-preserving injection.
 
-  private[sql] def partValue(raw: String, dt: DataType): Option[BigDecimal] = dt match {
+  private def partValue(raw: String, dt: DataType): Option[BigDecimal] = dt match {
     case ByteType | ShortType | IntegerType | LongType =>
       raw.toLongOption.map(BigDecimal(_))
     case DateType =>
@@ -594,13 +580,15 @@ object AggPushdown {
   /** Types whose parquet footer min/max are EXACT: integrals and
     * date/timestamp (tag "l"), decimals (tag "c"). Strings can be
     * truncated, float/double stats ignore NaN — both refused. */
-  private[sql] def minMaxSafe(dt: DataType): Boolean = dt match {
+  private def minMaxSafe(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | DateType |
          TimestampType | TimestampNTZType | _: DecimalType => true
     case _ => false
   }
 
-  private[sql] def statValue(st: ColStats, s: String, dt: DataType): Option[BigDecimal] =
+  /** A stat bound in the column's domain. Delta's stats JSON lands
+    * decimals in the lossy double domain (tag "d"), so they refuse here. */
+  private def statValue(st: ColStats, s: String, dt: DataType): Option[BigDecimal] =
     (st.tag, dt) match {
       case ("l", ByteType | ShortType | IntegerType | LongType | DateType |
                  TimestampType | TimestampNTZType) =>
@@ -610,10 +598,9 @@ object AggPushdown {
       case _ => None // tag/type mismatch (e.g. pre-widening epoch): refuse
     }
 
-  /** Domain value → Catalyst INTERNAL value (for a LocalRelation row):
-    * dates are epoch days (Int), timestamps epoch micros (Long), decimals
-    * `types.Decimal`. */
-  def internal(v: BigDecimal, dt: DataType): Any = dt match {
+  /** Domain value → Catalyst INTERNAL value: dates are epoch days (Int),
+    * timestamps epoch micros (Long), decimals `types.Decimal`. */
+  private def internal(v: BigDecimal, dt: DataType): Any = dt match {
     case ByteType => v.toLong.toByte
     case ShortType => v.toLong.toShort
     case IntegerType | DateType => v.toLong.toInt
@@ -623,25 +610,202 @@ object AggPushdown {
     case _ => throw new IllegalStateException(s"unreachable: $dt passed minMaxSafe")
   }
 
-  /** Domain value → external row value for the V1 bridge
-    * (needConversion=true: java.sql / java.math types). */
-  private[sql] def external(v: BigDecimal, dt: DataType): Any = dt match {
-    case ByteType => v.toLong.toByte
-    case ShortType => v.toLong.toShort
-    case IntegerType => v.toLong.toInt
-    case LongType => v.toLong
-    case DateType =>
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaDate(v.toInt)
-    case TimestampType =>
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(v.toLong)
-    case TimestampNTZType =>
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToLocalDateTime(v.toLong)
-    case d: DecimalType => v.underlying().setScale(d.scale)
-    case _ => throw new IllegalStateException(s"unreachable: $dt passed minMaxSafe")
+  /** Types whose hive-dir rendering round-trips exactly (GROUP BY key
+    * columns must be one of these). */
+  private[sql] def groupTypeSupported(dt: DataType): Boolean = dt match {
+    case StringType | ByteType | ShortType | IntegerType | LongType |
+         BooleanType | DateType => true
+    case _ => false
   }
 
-  private[sql] def simpleName(e: Expression): Option[String] = e match {
+  /** RAW group value (hive dir string, null = NULL dir) → Catalyst
+    * internal value of the column's type. Only types whose dir rendering
+    * round-trips exactly. */
+  private[sql] def internalGroupValue(raw: String, dt: DataType): Option[Any] = {
+    if (raw == null) return Some(null)
+    dt match {
+      case StringType => Some(org.apache.spark.unsafe.types.UTF8String.fromString(raw))
+      case ByteType => raw.toByteOption
+      case ShortType => raw.toShortOption
+      case IntegerType => raw.toIntOption
+      case LongType => raw.toLongOption
+      case BooleanType => raw.toBooleanOption
+      case DateType =>
+        try Some(java.time.LocalDate.parse(raw).toEpochDay.toInt)
+        catch { case _: Throwable => None }
+      case _ => None // timestamps/decimals: dir rendering not trusted
+    }
+  }
+
+  private def simpleName(e: Expression): Option[String] = e match {
     case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames()(0))
     case _ => None
   }
+}
+
+/** What one table resolution hands the metadata-aggregate path: the
+  * format's own part of [[AggPushdown]]. */
+trait AggSource {
+  /** Columns the plan resolves against (types of MIN/MAX results). */
+  def schema: StructType
+  /** Columns answered from each file's partition value; every other
+    * column is answered from file stats. */
+  def partitionCols: Set[String]
+  /** Identity partition columns: the only GROUP BY keys and filter
+    * references the fold can decide per file. */
+  def groupableCols: Set[String]
+  /** Folds every live data file of the resolution as an [[AggEntry]];
+    * None = refuse (live deletes, unknown row counts). `filters` are the
+    * pushed ones — a format may skip files they provably exclude without
+    * reading them; the step re-evaluates them per file regardless. */
+  def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
+      comb: (B, B) => B): Option[B]
+  /** A zero-IO answer for an ungrouped aggregate, when the format keeps
+    * one; None = fold. */
+  def shortcut(plans: Seq[AggPushdown.Plan], filters: Seq[Filter])
+      : Option[Seq[AggPushdown.Cell]] = None
+  /** Is `f` exactly decidable per live file, so consuming it from the
+    * residual keeps the aggregate's file selection exact? The bridged scan
+    * still re-applies consumed filters row-level. */
+  def consumable(f: Filter): Boolean =
+    AggPushdown.compute(this, Nil, Nil, Seq(f)).isDefined
+}
+
+/** The filter and aggregate half of the graft and interop scan builders.
+  * Filters stay residual (pruning is IO-only, so partial translation is
+  * sound) EXCEPT filters exactly decidable per file, which are CONSUMED —
+  * that is what lets Spark offer the whole Aggregate to the source. A
+  * consumed filter must ALSO translate exactly (`toColumnExact`), so the
+  * bridged scan's row-level re-application is EQUIVALENT, never weaker: a
+  * merely `toColumn`-translatable filter can lose conjuncts inside an Or
+  * via the one-sided And, and the conservative pruner keeps files the
+  * exact filter excludes — consuming such a filter leaks rows.
+  * `supportCompletePushDown` only ever returns true alongside a computed
+  * answer, so the built scan is the [[GraftAggScan]] and the Aggregate
+  * node disappears from the plan. */
+private[sql] trait MetaAggScanBuilder extends SupportsPushDownFilters
+    with SupportsPushDownAggregates {
+  protected def aggSource: Option[AggSource]
+
+  protected var pushed: Array[Filter] = Array.empty
+  private var consumed: Array[Filter] = Array.empty
+  private var aggResult: Option[(StructType, Seq[InternalRow])] = None
+  private var aggFor: Aggregation = _
+
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    pushed = filters.filter(f => GraftFilters.toColumn(f).isDefined)
+    consumed = aggSource match {
+      case Some(src) => pushed.filter(f =>
+        try GraftFilters.toColumnExact(f).isDefined && src.consumable(f)
+        catch { case _: Throwable => false })
+      case None => Array.empty
+    }
+    filters.filterNot(consumed.contains)
+  }
+  override def pushedFilters(): Array[Filter] = pushed
+
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    pushAggregation(aggregation)
+
+  // Spark only offers an Aggregation when no residual Filter remains above
+  // the relation, i.e. every filter in play was consumed — refuse anyway if
+  // one escaped. Spark calls supportCompletePushDown then pushAggregation
+  // with the same Aggregation: compute once.
+  override def pushAggregation(aggregation: Aggregation): Boolean =
+    aggSource.exists { src =>
+      pushed.forall(consumed.contains) && {
+        if (aggFor ne aggregation) {
+          aggFor = aggregation
+          aggResult = try AggPushdown.pushed(src, aggregation, consumed.toSeq)
+            catch { case _: Throwable => None }
+        }
+        aggResult.isDefined
+      }
+    }
+
+  /** The metadata scan, when the offered aggregate was answered. */
+  protected def aggScan: Option[Scan] =
+    aggResult.map { case (schema, rows) => new GraftAggScan(schema, rows) }
+}
+
+/** The one Catalyst extractor of both native-scan rules: an `Aggregate`
+  * (COUNT / MIN / MAX, optionally GROUP BY identity partition columns)
+  * over a relation whose table has an [[AggSource]], with every WHERE
+  * conjunct exactly file-decidable, becomes a `LocalRelation` of the
+  * driver-computed rows — zero data files opened. The rules replace the
+  * DSv2 relation before `V2ScanRelationPushDown` could offer the
+  * aggregate to the scan builder, so the collapse happens here instead.
+  * Planning one aggregate is ONE metadata fold whatever the number of
+  * filters: the fold itself refuses a file where a filter is undecidable,
+  * so no per-filter [[AggSource.consumable]] pass runs first. */
+private[sql] final class MetadataAggregate(sourceOf: Table => Option[AggSource])
+    extends PredicateHelper {
+  import AggPushdown._
+  import MetadataAggregate._
+
+  def unapply(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+    case agg @ Aggregate(groupExprs, aggExprs, child, _)
+        if groupExprs.forall(_.isInstanceOf[AttributeReference]) =>
+      // strip alias / filter / pass-through projection wrappers
+      var conds: Seq[CExpr] = Nil
+      var cur = child
+      var continue = true
+      while (continue) cur match {
+        case SubqueryAlias(_, c) => cur = c
+        case LFilter(cond, c) => conds = conds ++ splitConjunctivePredicates(cond); cur = c
+        case Project(exprs, c) if exprs.forall(_.isInstanceOf[AttributeReference]) => cur = c
+        case _ => continue = false
+      }
+      cur match {
+        case r: DataSourceV2Relation =>
+          try sourceOf(r.table).flatMap(src => build(src, agg,
+            groupExprs.map(_.asInstanceOf[AttributeReference]), conds))
+          catch { case _: Throwable => None }
+        case _ => None
+      }
+    case _ => None
+  }
+
+  private def build(src: AggSource, agg: Aggregate,
+      groupAttrs: Seq[AttributeReference], conds: Seq[CExpr]): Option[LogicalPlan] = {
+    // group values must round-trip exactly from the hive dir rendering
+    if (!groupAttrs.forall(a => groupTypeSupported(a.dataType) && src.groupableCols(a.name)))
+      return None
+    val filters = conds.map(c =>
+      org.apache.spark.sql.graftshim.ColumnExpr.toV1Filter(c).getOrElse(return None))
+    // every result expression: a group column, a constant riding along
+    // (`'tag' AS src`) or an Alias over one plain aggregate call
+    def group(a: AttributeReference): Option[Part] =
+      Some(groupAttrs.indexWhere(_.exprId == a.exprId)).filter(_ >= 0).map(KGroup)
+    val parts: Seq[Part] = agg.aggregateExpressions.map {
+      case a: AttributeReference => group(a).getOrElse(return None)
+      case Alias(a: AttributeReference, _) => group(a).getOrElse(return None)
+      case Alias(l: Literal, _) => KConst(l.value)
+      case al @ Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
+        val p = planOf(src, fn).getOrElse(return None)
+        if (al.dataType != AggPushdown.dataType(p)) return None
+        KAgg(p)
+      case _ => return None
+    }
+    val plans = parts.collect { case KAgg(p) => p }
+    compute(src, groupAttrs.map(_.name), plans, filters).map { groups =>
+      LocalRelation(agg.output, groups.map { case (key, cells) =>
+        val vals = plans.iterator.zip(cells.iterator)
+        InternalRow.fromSeq(parts.map {
+          case KGroup(i) =>
+            internalGroupValue(key(i), groupAttrs(i).dataType).getOrElse(return None)
+          case KConst(v) => v
+          case KAgg(_) => val (p, c) = vals.next(); cellValue(p, c)
+        })
+      })
+    }
+  }
+}
+
+private object MetadataAggregate {
+  /** One output column of the collapsed aggregate. */
+  private sealed trait Part
+  private final case class KGroup(i: Int) extends Part
+  private final case class KConst(v: Any) extends Part
+  private final case class KAgg(p: AggPushdown.Plan) extends Part
 }

@@ -1,12 +1,9 @@
 package graft.lake.sql
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression, PredicateHelper}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.LongType
 
 /** Vectorized fast path for SQL reads of graft tables: once a plan is
   * fully resolved, every `DataSourceV2Relation` over a [[GraftSqlTable]]
@@ -47,7 +44,7 @@ class GraftNativeScanRule extends Rule[LogicalPlan] {
       // side still works through the V1 path
       case c: org.apache.spark.sql.catalyst.plans.logical.Command => c
       case _ => plan.transformDown {
-        case MetadataAggregate(replaced) => replaced
+        case MetadataAggregates(replaced) => replaced
         case Filter(cond, sa @ SubqueryAlias(_,
             rel @ DataSourceV2Relation(t: GraftSqlTable, _, _, _, _, _))) =>
           Filter(cond, sa.copy(child = substitute(rel, t, Some(cond))))
@@ -58,108 +55,12 @@ class GraftNativeScanRule extends Rule[LogicalPlan] {
       }
     }
 
-  /** Metadata-only aggregates: `Aggregate` (COUNT / MIN / MAX, optionally
-    * GROUP BY identity partition columns) over a graft relation, with
-    * every WHERE conjunct EXACTLY decidable from identity partition
-    * values, collapses into a `LocalRelation` holding the driver-computed
-    * rows — zero data files opened (see [[AggPushdown]] for the refusal
-    * rules; Iceberg's aggregate pushdown, here at analysis time because
-    * this rule replaces the DSv2 relation before `V2ScanRelationPushDown`
-    * could run). A grouped aggregate yields one row per live partition —
-    * `SELECT status, count(*) … GROUP BY status` over 100 TB becomes a
-    * manifest walk. */
-  private object MetadataAggregate extends PredicateHelper {
-    def unapply(plan: LogicalPlan): Option[LogicalPlan] = plan match {
-      case agg @ Aggregate(groupExprs, aggExprs, child, _)
-          if groupExprs.forall(_.isInstanceOf[AttributeReference]) =>
-        // strip alias/filter wrappers down to the graft relation
-        var filters: Seq[Expression] = Nil
-        var cur = child
-        var continue = true
-        while (continue) cur match {
-          case SubqueryAlias(_, c) => cur = c
-          case Filter(cond, c) => filters = filters ++ splitConjunctivePredicates(cond); cur = c
-          case Project(exprs, c) if exprs.forall(_.isInstanceOf[AttributeReference]) => cur = c
-          case _ => continue = false
-        }
-        cur match {
-          case DataSourceV2Relation(t: GraftSqlTable, _, _, _, _, _) =>
-            try buildLocal(t, agg,
-              groupExprs.map(_.asInstanceOf[AttributeReference]), aggExprs, filters)
-            catch { case _: Throwable => None }
-          case _ => None
-        }
-      case _ => None
-    }
-
-    private def buildLocal(
-        t: GraftSqlTable,
-        agg: Aggregate,
-        groupAttrs: Seq[AttributeReference],
-        aggExprs: Seq[NamedExpression],
-        filters: Seq[Expression]): Option[LogicalPlan] = {
-      // group values must round-trip exactly from the hive dir rendering
-      if (!groupAttrs.forall(a => AggPushdown.groupTypeSupported(a.dataType)))
-        return None
-      // every result expression: a group-column reference or an Alias
-      // over one plain aggregate call. `Left(i)` = i-th group column.
-      val parts: Seq[Either[Int, AggPushdown.MetaAgg]] = aggExprs.map {
-        case a: AttributeReference =>
-          val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-          if (i < 0) return None
-          scala.Left(i)
-        case Alias(a: AttributeReference, _) =>
-          val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-          if (i < 0) return None
-          scala.Left(i)
-        case Alias(AggregateExpression(fn, Complete, false, None, _), _) => fn match {
-          case Count(Seq(Literal(v, _))) =>
-            if (v == null) return None // count(NULL) ≡ 0 — rare; keep simple
-            scala.Right(AggPushdown.MCountStar)
-          case Count(Seq(a: AttributeReference)) => scala.Right(AggPushdown.MCount(a.name))
-          case Min(a: AttributeReference) => scala.Right(AggPushdown.MMin(a.name))
-          case Max(a: AttributeReference) => scala.Right(AggPushdown.MMax(a.name))
-          case _ => return None
-        }
-        case _ => return None
-      }
-      val metas = parts.collect { case scala.Right(m) => m }
-      val v1Filters = filters.map(f =>
-        org.apache.spark.sql.graftshim.ColumnExpr.toV1Filter(f)
-          .getOrElse(return None))
-      AggPushdown.computeGrouped(t.table, t.asOf, groupAttrs.map(_.name),
-          metas, v1Filters).map { groups =>
-        val rows = groups.map { case (key, vals) =>
-          var vi = 0
-          val cells = parts.map {
-            case scala.Left(gi) =>
-              AggPushdown.internalGroupValue(key(gi), groupAttrs(gi).dataType)
-                .getOrElse(return None)
-            case scala.Right(_) =>
-              val v = vals(vi); vi += 1
-              v match {
-                case scala.Left(n) => n
-                case scala.Right((dt, x)) => x.map(AggPushdown.internal(_, dt)).orNull
-              }
-          }
-          InternalRow.fromSeq(cells)
-        }
-        // type sanity across the row layout
-        aggExprs.zip(parts).foreach {
-          case (e, scala.Right(_)) => ()
-          case (e, scala.Left(gi)) =>
-            require(e.dataType == groupAttrs(gi).dataType, s"group type ${e.dataType}")
-        }
-        val aggVals = parts.zipWithIndex.collect { case (scala.Right(_), i) => aggExprs(i) }
-        val sample = groups.headOption.map(_._2).getOrElse(Nil)
-        aggVals.zip(sample).foreach {
-          case (e, scala.Left(_)) => require(e.dataType == LongType, s"count type ${e.dataType}")
-          case (e, scala.Right((dt, _))) => require(e.dataType == dt, s"${e.dataType} != $dt")
-        }
-        LocalRelation(agg.output, rows)
-      }
-    }
-  }
+  /** Metadata-only aggregates over a graft relation collapse into a
+    * `LocalRelation` at analysis time (see [[MetadataAggregate]]). */
+  private val MetadataAggregates = new MetadataAggregate({
+    case t: GraftSqlTable => Some(AggPushdown.graft(t.table, t.asOf))
+    case _ => None
+  })
 
   /** Native scan plan with the relation's output attribute ids. Any
     * failure leaves the relation in place — the V1Scan path still

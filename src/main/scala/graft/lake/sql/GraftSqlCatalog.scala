@@ -5,11 +5,11 @@ import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
@@ -312,78 +312,30 @@ class GraftSqlTable(val table: GraftTable, ident: String, val asOf: Long = -1L)
 
 /** Scan builder: pushed filters feed `FilePruner` (manifest min/max +
   * partition-value file skipping BEFORE any task is scheduled — the scan
-  * planner the reference runs in scan_ops.c). Filters EXACTLY decidable
-  * from identity partition values are CONSUMED (not returned as residual;
-  * the bridged `GraftTable.scan` still re-applies them row-level, so
-  * results are unchanged) — consuming them is what lets Spark offer the
-  * whole Aggregate to the source. All other filters stay residual, keeping
-  * pruning strictly an IO optimization. Column pruning narrows the bridged
-  * plan, which Catalyst then pushes into the parquet reader.
-  *
-  * Aggregate pushdown (`SupportsPushDownAggregates`): COUNT/MIN/MAX
-  * answered from manifest stats alone when exact — see [[AggPushdown]].
-  * `supportCompletePushDown` only ever returns true alongside a computed
-  * result, so the produced scan is ONE metadata row and the Aggregate
-  * node disappears from the plan. */
+  * planner the reference runs in scan_ops.c); filters exactly decidable
+  * from identity partition values are consumed and COUNT/MIN/MAX answered
+  * from metadata ([[MetaAggScanBuilder]], see [[AggPushdown]]). Column
+  * pruning narrows the bridged plan, which Catalyst then pushes into the
+  * parquet reader. */
 class GraftScanBuilder(table: GraftTable, asOf: Long = -1L) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
+    with SupportsPushDownRequiredColumns with MetaAggScanBuilder {
 
-  private var pushed: Array[Filter] = Array.empty
-  private var consumed: Array[Filter] = Array.empty
   private var required: StructType = table.schema
-  private var aggResult: Option[(StructType, Seq[Any])] = None
-  private var aggFor: Aggregation = _
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftFilters.toColumn(f).isDefined)
-    // CONSUMED (removed from Spark's residual) requires BOTH properties:
-    //  - toColumnExact translates it — so the bridged scan's row-level
-    //    re-application is EQUIVALENT to the original, never weaker (a
-    //    merely toColumn-translatable filter can lose conjuncts inside an
-    //    Or via the one-sided And, and the conservative pruner keeps files
-    //    the exact filter excludes — consuming such a filter leaks rows)
-    //  - it is exactly decidable from identity partition values on every
-    //    file, which is what makes the aggregate file-selection exact
-    consumed = pushed.filter(f =>
-      try GraftFilters.toColumnExact(f).isDefined &&
-        AggPushdown.exactPartitionFilter(table, asOf, f)
-      catch { case _: Throwable => false })
-    filters.filterNot(consumed.contains)
-  }
-  override def pushedFilters(): Array[Filter] = pushed
+  protected lazy val aggSource: Option[AggSource] = Some(AggPushdown.graft(table, asOf))
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    pushAggregation(aggregation)
-
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    // Spark only offers an Aggregation when no residual Filter remains
-    // above the relation, i.e. every filter in play was consumed — but be
-    // defensive: refuse if any pushed filter escaped the consumed set.
-    if (!pushed.forall(consumed.contains)) return false
-    // Spark calls supportCompletePushDown then pushAggregation with the
-    // same Aggregation — compute once (the file walk is O(files))
-    if (aggFor ne aggregation) {
-      aggFor = aggregation
-      aggResult =
-        try AggPushdown.tryPush(table, asOf, aggregation, consumed)
-        catch { case _: Throwable => None }
-    }
-    aggResult.isDefined
-  }
-
-  override def build(): Scan = aggResult match {
-    case Some((aggSchema, row)) => new GraftAggScan(aggSchema, row)
-    case None => new GraftV1Scan(table, pushed, required, asOf)
-  }
+  override def build(): Scan =
+    aggScan.getOrElse(new GraftV1Scan(table, pushed, required, asOf))
 }
 
-/** The scan produced by a complete aggregate pushdown: ONE driver-computed
-  * row, zero data files opened. */
-class GraftAggScan(aggSchema: StructType, values: Seq[Any]) extends V1Scan {
+/** The scan of a complete metadata-aggregate pushdown, for graft and the
+  * interop formats alike: driver-computed rows — group columns first, one
+  * row per live group, or one row when ungrouped — zero data files
+  * opened. */
+class GraftAggScan(aggSchema: StructType, rows: Seq[InternalRow]) extends V1Scan {
   override def readSchema(): StructType = aggSchema
   override def description(): String =
     s"GraftAggScan(metadata-only: ${aggSchema.fieldNames.mkString(", ")})"
@@ -391,9 +343,11 @@ class GraftAggScan(aggSchema: StructType, values: Seq[Any]) extends V1Scan {
     new BaseRelation with TableScan {
       override def sqlContext: SQLContext = context
       override def schema: StructType = aggSchema
-      override def needConversion: Boolean = true
+      // the rows already hold Catalyst internal values
+      override def needConversion: Boolean = false
       override def buildScan(): RDD[Row] =
-        context.sparkContext.parallelize(Seq(Row.fromSeq(values)), 1)
+        context.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 4)))
+          .asInstanceOf[RDD[Row]]
     }.asInstanceOf[T]
 }
 

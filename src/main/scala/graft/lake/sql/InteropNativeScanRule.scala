@@ -1,13 +1,8 @@
 package graft.lake.sql
 
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression, PredicateHelper}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression, PredicateHelper}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.connector.expressions.Expressions
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Count => VCount, Max => VMax, Min => VMin}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Whole-stage-codegen fast path for the interop connectors: every
@@ -34,12 +29,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * plan's unions/joins into the parquet scans.
   *
   * Because the substitution happens before `V2ScanRelationPushDown`, the
-  * connector's metadata-only aggregate path ([[InteropAggSupport]]) would
-  * be bypassed — so this rule re-implements it at the logical level:
-  * a groupless COUNT/MIN/MAX whose WHERE conjuncts are all exactly
-  * file-decidable collapses into a [[LocalRelation]] holding the
-  * driver-computed row, zero data files opened (same exact-or-refuse
-  * rules, same `tryPush` code path the DSv2 builder calls).
+  * connector's metadata-only aggregate path would be bypassed — so a
+  * COUNT/MIN/MAX (optionally GROUP BY identity partition columns) whose
+  * WHERE conjuncts are all exactly file-decidable collapses here into a
+  * `LocalRelation` of the driver-computed rows, zero data files opened,
+  * through the [[MetadataAggregate]] extractor graft's own rule uses.
   *
   * Commands are left intact: row-level SQL (DELETE/UPDATE/MERGE) and the
   * write TARGET of an INSERT need the DSv2 table node; only a write's
@@ -52,6 +46,11 @@ class InteropNativeScanRule extends Rule[LogicalPlan] with PredicateHelper {
   private def enabled: Boolean =
     conf.getConfString("spark.graft.nativeScan.enabled", "true") == "true"
 
+  private val MetadataAggregates = new MetadataAggregate({
+    case t: InteropReadTable => t.read.aggSupport
+    case _ => None
+  })
+
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan
     else plan match {
@@ -61,7 +60,7 @@ class InteropNativeScanRule extends Rule[LogicalPlan] with PredicateHelper {
       // commands resolve against the DSv2 table node itself
       case c: org.apache.spark.sql.catalyst.plans.logical.Command => c
       case _ => plan.transformDown {
-        case InteropMetadataAggregate(replaced) => replaced
+        case MetadataAggregates(replaced) => replaced
         case Filter(cond, sa @ SubqueryAlias(_,
             rel @ DataSourceV2Relation(t: InteropReadTable, _, _, _, _, _))) =>
           Filter(cond, sa.copy(child =
@@ -108,146 +107,4 @@ class InteropNativeScanRule extends Rule[LogicalPlan] with PredicateHelper {
       }
       Project(remapped, native)
     } catch { case _: Throwable => rel }
-
-  /** COUNT/MIN/MAX over an interop relation — optionally GROUP BY
-    * identity partition columns (r14; graft-native parity: `SELECT
-    * status, count(*) … GROUP BY status` over 100 TB becomes a metadata
-    * fold) — with every WHERE conjunct exactly file-decidable →
-    * driver-computed rows, zero data files opened. Delegates the
-    * refusal rules to the format's own [[InteropAggSupport]] (live
-    * deletes/DVs, missing stats, unsafe bound types, non-partition
-    * group keys all refuse → the relation falls through to the
-    * native-scan substitution). */
-  private object InteropMetadataAggregate extends PredicateHelper {
-    def unapply(plan: LogicalPlan): Option[LogicalPlan] = plan match {
-      case agg @ Aggregate(groupExprs, aggExprs, child, _)
-          if groupExprs.forall(_.isInstanceOf[AttributeReference]) =>
-        var filters: Seq[Expression] = Nil
-        var cur = child
-        var continue = true
-        while (continue) cur match {
-          case SubqueryAlias(_, c) => cur = c
-          case Filter(cond, c) =>
-            filters = filters ++ splitConjunctivePredicates(cond); cur = c
-          case Project(exprs, c) if exprs.forall(_.isInstanceOf[AttributeReference]) =>
-            cur = c
-          case _ => continue = false
-        }
-        cur match {
-          case DataSourceV2Relation(t: InteropReadTable, _, _, _, _, _)
-              if t.read.aggSupport.isDefined =>
-            try build(t.read.aggSupport.get, agg,
-              groupExprs.map(_.asInstanceOf[AttributeReference]), aggExprs, filters)
-            catch { case _: Throwable => None }
-          case _ => None
-        }
-      case _ => None
-    }
-
-    private def build(
-        support: InteropAggSupport,
-        agg: Aggregate,
-        groupAttrs: Seq[AttributeReference],
-        aggExprs: Seq[NamedExpression],
-        filters: Seq[Expression]): Option[LogicalPlan] = {
-      // group values must round-trip exactly from the hive dir rendering,
-      // and the keys must be partition columns — both CHEAP static
-      // checks, ahead of the consumable fold (a GROUP BY on an ordinary
-      // column must not pay a metadata walk just to refuse)
-      if (!groupAttrs.forall(a => AggPushdown.groupTypeSupported(a.dataType)))
-        return None
-      if (groupAttrs.nonEmpty &&
-          !groupAttrs.forall(a => support.groupableCols.contains(a.name)))
-        return None
-      // every conjunct must translate AND be exactly file-decidable —
-      // file-level filtering is then equivalent to row-level, so no
-      // residual re-application is needed (no rows flow at all).
-      // Formats whose folds refuse on undecidable entries themselves
-      // (decidesInFold) skip the per-filter consumable pass: planning a
-      // k-filter aggregate is then ONE metadata fold, not k+1 (r15 —
-      // past the distributed-fold threshold each pass was a cluster job)
-      val v1 = filters.map(f =>
-        org.apache.spark.sql.graftshim.ColumnExpr.toV1Filter(f)
-          .getOrElse(return None))
-      if (!support.decidesInFold && !v1.forall(support.consumable)) return None
-      // every result expression: a group-column reference, a CONSTANT
-      // (`'tag' AS src` riding along an aggregate select), or an Alias
-      // over one plain aggregate call
-      sealed trait Part
-      case class KGroup(i: Int) extends Part
-      case class KConst(lit: Literal) extends Part
-      case class KAgg(fn: AggregateFunc) extends Part
-      val parts: Seq[Part] = aggExprs.map {
-        case a: AttributeReference =>
-          val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-          if (i < 0) return None
-          KGroup(i)
-        case Alias(a: AttributeReference, _) =>
-          val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-          if (i < 0) return None
-          KGroup(i)
-        case Alias(l: Literal, _) => KConst(l)
-        case Alias(AggregateExpression(fn, Complete, false, None, _), _) => fn match {
-          case Count(Seq(Literal(v, _))) =>
-            if (v == null) return None // count(NULL) ≡ 0 — rare; keep simple
-            KAgg(new CountStar())
-          case Count(Seq(a: AttributeReference)) =>
-            KAgg(new VCount(Expressions.column(a.name), false))
-          case Min(a: AttributeReference) =>
-            KAgg(new VMin(Expressions.column(a.name)))
-          case Max(a: AttributeReference) =>
-            KAgg(new VMax(Expressions.column(a.name)))
-          case _ => return None
-        }
-        case _ => return None
-      }
-      val funcs = parts.collect { case KAgg(f) => f }
-      val aggregation = new Aggregation(funcs.toArray, Array.empty)
-
-      // agg-only schema must line up with the KAgg parts' types
-      val aggIdx = parts.zipWithIndex.collect { case (KAgg(_), i) => i }
-      def aligned(schema: org.apache.spark.sql.types.StructType): Boolean =
-        schema.fields.length == aggIdx.length &&
-          schema.fields.zip(aggIdx).forall {
-            case (f, i) => f.dataType == aggExprs(i).dataType }
-      if (groupAttrs.isEmpty) {
-        support.tryPush(aggregation, v1).flatMap { case (schema, values) =>
-          if (!aligned(schema)) None
-          else {
-            // tryPush returns EXTERNAL row values (it feeds a V1 scan on
-            // the DSv2 path); a LocalRelation holds internal ones
-            val convs = schema.fields.map(f =>
-              CatalystTypeConverters.createToCatalystConverter(f.dataType))
-            var vi = 0
-            val cells = parts.map {
-              case KConst(l) => l.value // already internal
-              case KAgg(_) => val v = convs(vi)(values(vi)); vi += 1; v
-              case KGroup(_) => return None // unreachable: no group attrs
-            }
-            Some(LocalRelation(agg.output,
-              Seq(InternalRow.fromSeq(cells.toIndexedSeq))))
-          }
-        }
-      } else {
-        support.tryPushGrouped(groupAttrs.map(_.name), aggregation, v1)
-          .flatMap { case (schema, groups) =>
-            if (!aligned(schema)) return None
-            val convs = schema.fields.map(f =>
-              CatalystTypeConverters.createToCatalystConverter(f.dataType))
-            val rows = groups.map { case (key, vals) =>
-              var vi = 0
-              val cells = parts.map {
-                case KGroup(gi) =>
-                  AggPushdown.internalGroupValue(key(gi),
-                    groupAttrs(gi).dataType).getOrElse(return None)
-                case KConst(l) => l.value // already internal
-                case KAgg(_) => val v = convs(vi)(vals(vi)); vi += 1; v
-              }
-              InternalRow.fromSeq(cells.toIndexedSeq)
-            }
-            Some(LocalRelation(agg.output, rows))
-          }
-      }
-    }
-  }
 }

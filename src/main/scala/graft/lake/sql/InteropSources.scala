@@ -6,16 +6,16 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, TableScan}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.lake.AggEntry
 import graft.lake.delta.DeltaTable
 import graft.lake.hudi.HudiTable
-import graft.lake.iceberg.{IceSchema, IcebergAvro, IcebergTable}
+import graft.lake.iceberg.IcebergTable
 
 /** DataSourceV2 batch READ connectors for the three interop formats — the
   * reference's headline usage is plain SQL over an Iceberg table
@@ -73,9 +73,10 @@ final case class InteropRead(
     scan: Option[Column] => DataFrame,
     /** (bytes, rows) post-pruning, from metadata only; bytes < 0 = unknown. */
     stats: Option[Column] => (Long, Long),
-    /** Metadata-only aggregate answering (formats whose manifests carry
-      * exact stats — Iceberg); None = no aggregate pushdown. */
-    aggSupport: Option[InteropAggSupport] = None,
+    /** Metadata-only COUNT/MIN/MAX (see [[AggPushdown]]): the format's
+      * side of the shared path, for Iceberg, Delta and Hudi resolutions of
+      * live or time-travelled table state; None = no aggregate pushdown. */
+    aggSupport: Option[AggSource] = None,
     /** Append a DataFrame (already resolved to the table schema) as one
       * native commit of the format. None = read-only resolution (e.g. a
       * time-travel read — you can't insert into the past). */
@@ -92,43 +93,6 @@ final case class InteropRead(
     /** SQL MERGE's WHEN MATCHED DELETE (key frame, key columns) as one
       * native commit; None = read-only resolution. */
     mergeDeleteMatched: Option[(DataFrame, Seq[String]) => Unit] = None)
-
-/** Aggregate pushdown hooks a format hands the shared scan builder. */
-trait InteropAggSupport {
-  /** Is `f` EXACTLY decidable per data file (so consuming it from the
-    * residual keeps the aggregate's file selection exact)? The bridged
-    * scan still re-applies consumed filters row-level, so this must
-    * only be true for filters whose re-application is equivalent. */
-  def consumable(f: Filter): Boolean
-  /** Compute the aggregation from metadata; `filters` = consumed set.
-    * None = not exactly answerable → ordinary scan. */
-  def tryPush(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[Any])]
-  /** GROUPED metadata aggregate (r14): group keys must be identity
-    * partition columns whose values every surviving file carries —
-    * yields one row per live group as (RAW hive-dir key strings, null =
-    * the NULL dir) × (agg external values), with the agg-only schema.
-    * `SELECT status, count(*) … GROUP BY status` over 100 TB becomes a
-    * metadata fold (graft-native has had this since r11; this closes
-    * the interop gap). None = not exactly answerable → ordinary scan. */
-  def tryPushGrouped(groupCols: Seq[String],
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[(Seq[String], Seq[Any])])] =
-    None
-  /** Columns a grouped pushdown could key on (identity partition
-    * columns) — a CHEAP static pre-check so the rule skips the
-    * consumable fold entirely for unanswerable group keys. */
-  def groupableCols: Set[String] = Set.empty
-  /** True when tryPush/tryPushGrouped themselves REFUSE (None) on any
-    * entry where a pushed filter is not exactly decidable — callers may
-    * then skip the per-filter [[consumable]] pre-pass. On the
-    * distributed-fold formats that turns planning one aggregate with k
-    * filters from k+1 cluster jobs over the same manifests into ONE
-    * (r15; r14 advice). The DSv2 builder path still uses
-    * [[consumable]] per filter — it must decide the consumed set before
-    * Spark offers the aggregate. */
-  def decidesInFold: Boolean = false
-}
 
 /** Receipt helper: planned data-file count of a frame's OPTIMIZED plan.
   * File-pruning assertions (gate entries + specs) count real planned
@@ -434,7 +398,15 @@ class GraftIcebergSource extends InteropReadProvider {
     }
     InteropRead(s"graft-iceberg `$loc`", t.schema,
       f => t.scan(f, snap), f => t.scanStats(f, snap),
-      aggSupport = Some(new IcebergInteropAgg(t, snap)),
+      aggSupport = Some(new AggSource {
+        val schema: StructType = t.aggIceSchema(snap).struct
+        // data files hold every column, identity partition ones too, so
+        // every column is answered from its file stats
+        val partitionCols: Set[String] = Set.empty
+        val groupableCols: Set[String] = t.aggIdentityCols(snap)
+        def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
+            comb: (B, B) => B): Option[B] = t.foldAggEntries(snap)(zero)(seq, comb)
+      }),
       append =
         if (snap >= 0) None // time-travel resolution: read-only
         else Some(df => retried(_.append(df))),
@@ -456,330 +428,6 @@ class GraftIcebergSource extends InteropReadProvider {
         if (snap >= 0) None
         else Some((keys, keyCols) => retried(
           _.equalityDelete(keys.select(keyCols.map(col): _*).distinct()))))
-  }
-}
-
-/** Metadata-only COUNT/MIN/MAX for the `graft-iceberg` connector —
-  * manifest stats make a full-table `count(*)` over 100 TB one driver
-  * walk with ZERO data files opened (Iceberg's own aggregate pushdown;
-  * the reference keeps the same per-file metadata for its scans,
-  * scan_ops.c:240-276). Exact-or-refuse, mirroring [[AggPushdown]]:
-  *
-  *  - any live delete content (position / equality / DV) → refuse
-  *    (manifest row counts become upper bounds)
-  *  - consumed filters must be exactly decidable per file from IDENTITY
-  *    partition values (all-or-nothing per file) AND exactly
-  *    re-applicable by the bridged scan
-  *  - MIN/MAX only on int/long/date/timestamp/decimal (string bounds
-  *    may be writer-truncated; float/double bounds exclude NaN) — and
-  *    every contributing file must carry the bound; files where the
-  *    column is absent (added later) or all-null contribute nothing
-  *  - COUNT(col) = Σ(record_count − null_value_count), refused when any
-  *    file with the column lacks a null count (unknown ≠ zero) */
-/** Shared cell algebra of the three formats' metadata-aggregate folds:
-  * a fold accumulator is one [[MetaAggFold.Cell]] per requested
-  * aggregate function — counts add, bounds keep their min/max — and the
-  * merge is associative + commutative, which is what lets the same
-  * contribution logic run as a driver loop on small tables and inside a
-  * `treeAggregate` on large ones. Plain case classes: accumulators
-  * cross task boundaries in the distributed folds. */
-private[lake] object MetaAggFold {
-  sealed trait Cell extends Serializable
-  final case class CCnt(n: Long) extends Cell
-  /** `isMin` rides in the cell so merging needs no plan context. */
-  final case class CBnd(isMin: Boolean, v: Option[BigDecimal]) extends Cell
-
-  def merge(a: Seq[Cell], b: Seq[Cell]): Seq[Cell] =
-    a.lazyZip(b).map {
-      case (CCnt(u), CCnt(w)) => CCnt(u + w)
-      case (CBnd(m, u), CBnd(_, w)) =>
-        CBnd(m, (u, w) match {
-          case (None, v) => v
-          case (v, None) => v
-          case (Some(l), Some(r)) => Some(if (m) l.min(r) else l.max(r))
-        })
-      case _ => throw new IllegalStateException("cell shape mismatch")
-    }.toSeq
-
-  /** Grouped-fold accumulator: one cell vector per live group key (raw
-    * hive-dir strings; null = the NULL dir). */
-  type GroupAcc = Map[List[String], Seq[Cell]]
-
-  /** Sequence op of a grouped fold over entries of type E: a filtered-out
-    * entry contributes nothing; otherwise its key and cells must both
-    * resolve or the whole fold refuses (None). Shared by all three
-    * formats' tryPushGrouped — each passes its own extractors.
-    *
-    * A ZERO-ROW entry is identity too, BEFORE keying: committed empty
-    * data files (other engines legitimately write them) cannot affect
-    * any COUNT/MIN/MAX, but keying them would emit a `count(*)=0` /
-    * NULL-bounds row for a group a real GROUP BY scan never yields —
-    * an aggregate over zero rows produces zero groups, not one. The
-    * groupless path is unaffected (a single-row aggregate over empty
-    * input IS correct) and needs no such skip. */
-  def groupedSeq[E](
-      passes: E => Option[Boolean],
-      keyOf: E => Option[List[String]],
-      cellsOf: E => Option[Seq[Cell]],
-      rowsOf: E => Long)
-      : (Option[GroupAcc], E) => Option[GroupAcc] = (acc, e) =>
-    acc.flatMap { m =>
-      passes(e) match {
-        // a pushed filter UNDECIDABLE for this entry refuses the whole
-        // fold — skipping would silently drop rows the filter may match
-        // (this poison is what lets callers skip a per-filter
-        // consumable() pre-pass; see InteropAggSupport.decidesInFold)
-        case None => None
-        case Some(false) => Some(m)
-        case Some(true) if rowsOf(e) == 0L => Some(m)
-        case Some(true) =>
-          for { k <- keyOf(e); c <- cellsOf(e) } yield
-            m.updated(k, m.get(k).map(merge(_, c)).getOrElse(c))
-      }
-    }
-
-  /** Decidability-aware filter evaluation of one entry: None = some
-    * filter is not exactly decidable from this entry's metadata (refuse
-    * the fold); Some(b) = every filter decidable, b = all pass. */
-  def passesAll(filters: Seq[Filter], dfm: graft.lake.DataFileMeta,
-      sch: StructType): Option[Boolean] = {
-    var all = true
-    for (f <- filters) AggPushdown.eval(f, dfm, sch) match {
-      case None => return None
-      case Some(b) => all &= b
-    }
-    Some(all)
-  }
-
-  /** Combine op: union of group maps, merging shared keys' cells. */
-  def groupedComb: (Option[GroupAcc], Option[GroupAcc]) => Option[GroupAcc] =
-    (x, y) => for { a <- x; b <- y } yield
-      b.foldLeft(a) { case (m, (k, c)) =>
-        m.updated(k, m.get(k).map(merge(_, c)).getOrElse(c)) }
-
-  /** Raw group key of one file from its partition values; None = the
-    * file carries no value for some group column (refuse). */
-  def rawKey(pvals: Map[String, String], groupCols: Seq[String]): Option[List[String]] = {
-    val out = List.newBuilder[String]
-    for (c <- groupCols) pvals.get(c) match {
-      case Some(graft.lake.Meta.NullPartition) => out += null
-      case Some(v) => out += v
-      case None => return None
-    }
-    Some(out.result())
-  }
-
-  /** Deterministic group ordering (null first, per-column framing —
-    * the same sort AggPushdown.computeGrouped uses). */
-  def sortedGroups(m: GroupAcc): Seq[(List[String], Seq[Cell])] =
-    m.toSeq.sortBy(_._1.map(k =>
-      if (k == null) "\u0000" else "\u0001" + k + "\u0000").mkString)
-
-  /** Assemble a grouped fold's result: one row per group in
-    * deterministic order, agg cells externalized by their plan kind
-    * (Left = count -> Long; Right(dt) = bound -> external domain value). */
-  def toGroupedResult(
-      kinds: Seq[Either[Unit, DataType]],
-      funcs: Seq[org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc],
-      groups: GroupAcc): Option[(StructType, Seq[(Seq[String], Seq[Any])])] = {
-    val fields = funcs.zip(kinds).map {
-      case (fn, scala.Left(_)) => StructField(fn.toString, LongType, nullable = false)
-      case (fn, scala.Right(dt)) => StructField(fn.toString, dt, nullable = true)
-    }
-    val rows = sortedGroups(groups).map { case (k, cells) =>
-      val vals: Seq[Any] = kinds.zip(cells).map {
-        case (scala.Left(_), CCnt(n)) => Long.box(n): Any
-        case (scala.Right(dt), CBnd(_, best)) =>
-          best.map(v => AggPushdown.external(v, dt)).orNull: Any
-        case _ => return None // cell/kind shape mismatch: refuse
-      }
-      (k: Seq[String], vals)
-    }
-    Some((StructType(fields), rows))
-  }
-}
-
-final class IcebergInteropAgg(t: IcebergTable, snap: Long) extends InteropAggSupport {
-  import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
-  import MetaAggFold._
-
-  // r14: both surfaces run as ASSOCIATIVE FOLDS through
-  // IcebergTable.foldAggEntries — the Delta r13 discipline applied to
-  // manifests. Small tables fold on the driver over the cached plan
-  // (plan-identical to the r11 walk); past the manifest-byte threshold
-  // the fold runs INSIDE a distributed manifest read (treeAggregate),
-  // so a whole-estate metadata COUNT/MIN/MAX never materializes the
-  // file list anywhere. Refusal semantics are unchanged: any
-  // disqualifying entry poisons the fold to None and the aggregate
-  // falls back to a real scan.
-
-  /** typeStrs whose bounds decode exactly (ColStats "l"/"c" domains). */
-  private def minMaxSafe(typeStr: String): Boolean = typeStr match {
-    case "int" | "long" | "date" | "timestamp" | "timestamptz" => true
-    case s if s.startsWith("decimal(") => true
-    case _ => false
-  }
-
-  override def groupableCols: Set[String] = t.aggIdentityCols(snap)
-
-  // the folds below refuse on any undecidable (filter, entry) pair, so
-  // the optimizer rule skips the per-filter consumable() fold — ONE
-  // manifest pass per planned aggregate instead of k+1 (r15)
-  override def decidesInFold: Boolean = true
-
-  override def consumable(f: Filter): Boolean = {
-    val idCols = t.aggIdentityCols(snap)
-    if (!f.references.forall(r => !r.contains('.') && idCols.contains(r)))
-      return false
-    val struct = t.aggIceSchema(snap).struct
-    t.foldAggEntries(snap)(true)(
-      (ok, e) => ok && AggPushdown.eval(f, e._1, struct).isDefined,
-      _ && _).getOrElse(false)
-  }
-
-  override def tryPush(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[Any])] = {
-    import IcebergInteropAgg._
-    if (agg.groupByExpressions.nonEmpty) return None
-    val sch = t.aggIceSchema(snap)
-    val struct = sch.struct
-    def fieldOf(name: String) = sch.fields.find(_.name == name)
-    val funcs = agg.aggregateExpressions().toSeq
-    // driver-side planning: per-func shape + the static refusals
-    // (unresolvable column, unsafe bound type, unsupported function)
-    val plans: Seq[IPlan] = funcs.map {
-      case _: CountStar => ICountStar
-      case c: Count if !c.isDistinct =>
-        val name = AggPushdown.simpleName(c.column).getOrElse(return None)
-        val f = fieldOf(name).getOrElse(return None)
-        ICountCol(name, f.id)
-      case m @ (_: Min | _: Max) =>
-        val (colExpr, isMin) = m match {
-          case mn: Min => (mn.column, true)
-          case mx: Max => (mx.column, false)
-        }
-        val name = AggPushdown.simpleName(colExpr).getOrElse(return None)
-        val f = fieldOf(name).getOrElse(return None)
-        if (!minMaxSafe(f.typeStr)) return None
-        IBound(name, f.id, isMin, f.dataType)
-      case _ => return None // SUM/AVG/distinct/UDAF: not metadata-answerable
-    }
-    val zero: Option[Seq[Cell]] = Some(plans.map(identityCell))
-    val folded = t.foldAggEntries(snap)(zero)(
-      (acc, e) => for { a <- acc; c <- contribution(plans, filters, struct, e) }
-        yield merge(a, c),
-      (x, y) => for { a <- x; b <- y } yield merge(a, b))
-    val cells = folded.flatten.getOrElse(return None)
-    val out: Seq[(DataType, Boolean, Any)] = plans.zip(cells).map {
-      case (ICountStar, CCnt(n)) => (LongType: DataType, false, Long.box(n): Any)
-      case (_: ICountCol, CCnt(n)) => (LongType: DataType, false, Long.box(n): Any)
-      case (p: IBound, CBnd(_, best)) =>
-        (p.dt, true, best.map(v => AggPushdown.external(v, p.dt)).orNull: Any)
-      case _ => return None // unreachable: cells mirror plans by construction
-    }
-    val fields = funcs.zip(out).map { case (fn, (dt, nullable, _)) =>
-      StructField(fn.toString, dt, nullable) }
-    Some((StructType(fields), out.map(_._3)))
-  }
-
-  /** Grouped form: one row per live (identity-partition) group, through
-    * the same fold — driver or distributed by manifest bytes. */
-  override def tryPushGrouped(groupCols: Seq[String],
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[(Seq[String], Seq[Any])])] = {
-    import IcebergInteropAgg._
-    if (groupCols.isEmpty) return None
-    val idCols = t.aggIdentityCols(snap)
-    if (!groupCols.forall(idCols.contains)) return None
-    val sch = t.aggIceSchema(snap)
-    val struct = sch.struct
-    def fieldOf(name: String) = sch.fields.find(_.name == name)
-    val funcs = agg.aggregateExpressions().toSeq
-    val plans: Seq[IPlan] = funcs.map {
-      case _: CountStar => ICountStar
-      case c: Count if !c.isDistinct =>
-        val name = AggPushdown.simpleName(c.column).getOrElse(return None)
-        val f = fieldOf(name).getOrElse(return None)
-        ICountCol(name, f.id)
-      case m @ (_: Min | _: Max) =>
-        val (colExpr, isMin) = m match {
-          case mn: Min => (mn.column, true)
-          case mx: Max => (mx.column, false)
-        }
-        val name = AggPushdown.simpleName(colExpr).getOrElse(return None)
-        val f = fieldOf(name).getOrElse(return None)
-        if (!minMaxSafe(f.typeStr)) return None
-        IBound(name, f.id, isMin, f.dataType)
-      case _ => return None
-    }
-    val gCols = groupCols
-    val seqF = groupedSeq[(graft.lake.DataFileMeta, IcebergAvro.ManifestEntry, IceSchema)](
-      e => passesAll(filters, e._1, struct),
-      e => rawKey(e._1.partitionValues, gCols),
-      e => contribution(plans, Nil, struct, e),
-      e => e._2.recordCount)
-    val folded = t.foldAggEntries(snap)(
-      Option(Map.empty: GroupAcc))(seqF, groupedComb)
-    val groups = folded.flatten.getOrElse(return None)
-    toGroupedResult(plans.map {
-      case ICountStar | _: ICountCol => scala.Left(())
-      case b: IBound => scala.Right(b.dt)
-    }, funcs, groups)
-  }
-}
-
-object IcebergInteropAgg {
-  import MetaAggFold._
-
-  /** Per-function fold plan, resolved on the driver from the snapshot
-    * schema; shipped into the distributed fold's tasks (pure case-class
-    * state — top-level so no outer SparkSession rides along). */
-  private[sql] sealed trait IPlan extends Serializable
-  private[sql] case object ICountStar extends IPlan
-  private[sql] final case class ICountCol(name: String, fieldId: Int) extends IPlan
-  private[sql] final case class IBound(name: String, fieldId: Int,
-      isMin: Boolean, dt: DataType) extends IPlan
-
-  private[sql] def identityCell(p: IPlan): Cell = p match {
-    case IBound(_, _, isMin, _) => CBnd(isMin, None)
-    case _ => CCnt(0L)
-  }
-
-  /** One file's contribution to every requested aggregate — None when
-    * the file cannot answer exactly, INCLUDING any pushed filter not
-    * exactly decidable from its metadata (the decidesInFold contract);
-    * a file decidably failing the filters contributes the identity (it
-    * is not read, so it cannot refuse). */
-  private[sql] def contribution(plans: Seq[IPlan], filters: Seq[Filter],
-      struct: StructType,
-      e: (graft.lake.DataFileMeta, IcebergAvro.ManifestEntry, IceSchema))
-      : Option[Seq[Cell]] = {
-    val (dfm, en, writeSchema) = e
-    MetaAggFold.passesAll(filters, dfm, struct) match {
-      case None => return None // undecidable: refuse, never skip
-      case Some(false) => return Some(plans.map(identityCell))
-      case Some(true) => ()
-    }
-    val cells = plans.map {
-      case ICountStar => CCnt(en.recordCount)
-      case ICountCol(_, fieldId) =>
-        if (writeSchema.byId.contains(fieldId) && en.recordCount > 0)
-          en.nullCounts.get(fieldId) match {
-            case Some(nc) => CCnt(en.recordCount - nc)
-            case None => return None // unknown ≠ zero nulls
-          }
-        // column absent from the file (added later): all rows null → +0
-        else CCnt(0L)
-      case IBound(name, fieldId, isMin, _) =>
-        val present = writeSchema.byId.contains(fieldId)
-        val allNull = en.nullCounts.get(fieldId).contains(en.recordCount)
-        if (present && en.recordCount > 0 && !allNull) {
-          val cs = dfm.stats.getOrElse(name, return None)
-          CBnd(isMin, Some(BigDecimal(if (isMin) cs.min else cs.max)))
-        } else CBnd(isMin, None) // all-null or empty file: no bound
-    }
-    Some(cells)
   }
 }
 
@@ -894,7 +542,13 @@ class GraftDeltaSource extends InteropReadProvider {
         f => t.scanWithRowTracking(f), t.scanStats(_))
     }
     InteropRead(s"graft-delta `$loc`", t.schema, t.scan(_), t.scanStats(_),
-      aggSupport = Some(new DeltaInteropAgg(t)),
+      aggSupport = Some(new AggSource {
+        val schema: StructType = t.schema
+        val partitionCols: Set[String] = t.partitionColumnSet
+        val groupableCols: Set[String] = partitionCols
+        def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
+            comb: (B, B) => B): Option[B] = t.foldAggEntries(zero)(seq, comb)
+      }),
       append =
         if (timeTravel) None // time-travel resolution: read-only
         else Some(df => graft.lake.delta.DeltaWriter.open(spark, loc).append(df)),
@@ -913,378 +567,6 @@ class GraftDeltaSource extends InteropReadProvider {
         if (timeTravel) None
         else Some((keys, keyCols) => graft.lake.delta.DeltaWriter.open(spark, loc)
           .deleteMatchingDv(keys, keyCols)))
-  }
-}
-
-/** Metadata-only COUNT/MIN/MAX for the `graft-delta` connector — the
-  * Delta counterpart of [[IcebergInteropAgg]], answered from log-action
-  * stats JSON alone. Same exact-or-refuse discipline, with Delta's own
-  * hazards refused:
-  *
-  *  - any live DELETION VECTOR → refuse (numRecords counts masked rows)
-  *  - any file missing `numRecords` → refuse (stats optional in the
-  *    protocol; unknown ≠ zero)
-  *  - COUNT(col) needs an explicit nullCount entry in every file that
-  *    has the column ([[graft.lake.delta.DeltaTable.AddFile.nullCounts]]
-  *    — ColStats' defaulted 0 is for pruning, not exact answers);
-  *    partition columns count via their hive partition value instead
-  *  - MIN/MAX go through [[AggPushdown.statValue]]'s tag⊗type check, so
-  *    Delta DECIMAL stats auto-refuse (the stats JSON parse lands them
-  *    in the lossy double domain) along with strings (writer-truncated
-  *    bounds) and float/double (NaN-blind bounds) */
-final class DeltaInteropAgg(t: DeltaTable) extends InteropAggSupport {
-  import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
-  import DeltaInteropAgg._
-  import MetaAggFold._
-
-  // r13: both surfaces run as ASSOCIATIVE FOLDS through
-  // DeltaTable.foldAggEntries — on the driver for small (Eager) tables,
-  // INSIDE the distributed checkpoint replay (treeAggregate) for
-  // big (Lazy) ones — so a whole-estate metadata COUNT/MIN/MAX never
-  // materializes the file list anywhere. Refusal semantics are
-  // unchanged from the r11 loop: any disqualifying file poisons the
-  // fold to None and the aggregate falls back to a real scan.
-
-  override def groupableCols: Set[String] = t.partitionColumnSet
-
-  // folds refuse on undecidable (filter, entry) pairs — see
-  // InteropAggSupport.decidesInFold (one log/checkpoint fold, not k+1)
-  override def decidesInFold: Boolean = true
-
-  override def consumable(f: Filter): Boolean = {
-    val sch = t.schema
-    val partCols = t.partitionColumnSet
-    if (!f.references.forall(r => !r.contains('.') && partCols.contains(r)))
-      return false
-    t.foldAggEntries(true)(
-      (ok, e) => ok && AggPushdown.eval(f, e._1, sch).isDefined,
-      _ && _).getOrElse(false)
-  }
-
-  override def tryPush(agg: Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[Any])] = {
-    if (agg.groupByExpressions.nonEmpty) return None
-    val sch = t.schema
-    val partCols = t.partitionColumnSet
-    val funcs = agg.aggregateExpressions().toSeq
-    // driver-side planning: per-func shape + the static refusals
-    // (unresolvable column, unsafe bound type, unsupported function)
-    val plans: Seq[FPlan] = funcs.map {
-      case _: CountStar => PCountStar
-      case c: Count if !c.isDistinct =>
-        val name = AggPushdown.simpleName(c.column).getOrElse(return None)
-        if (!sch.fieldNames.contains(name)) return None
-        PCountCol(name, partCols.contains(name))
-      case m @ (_: Min | _: Max) =>
-        val (colExpr, isMin) = m match {
-          case mn: Min => (mn.column, true)
-          case mx: Max => (mx.column, false)
-        }
-        val name = AggPushdown.simpleName(colExpr).getOrElse(return None)
-        val f = sch.fields.find(_.name == name).getOrElse(return None)
-        if (!AggPushdown.minMaxSafe(f.dataType)) return None
-        PBound(name, partCols.contains(name), isMin, f.dataType)
-      case _ => return None // SUM/AVG/distinct/UDAF: not metadata-answerable
-    }
-    val zero: Option[Seq[Cell]] = Some(plans.map(identityCell))
-    val folded = t.foldAggEntries(zero)(
-      (acc, e) => for { a <- acc; c <- contribution(plans, filters, sch, e) }
-        yield merge(a, c),
-      (x, y) => for { a <- x; b <- y } yield merge(a, b))
-    val cells = folded.flatten.getOrElse(return None)
-    val out: Seq[(DataType, Boolean, Any)] = plans.zip(cells).map {
-      case (PCountStar, CCnt(n)) => (LongType: DataType, false, Long.box(n): Any)
-      case (_: PCountCol, CCnt(n)) => (LongType: DataType, false, Long.box(n): Any)
-      case (p: PBound, CBnd(_, best)) =>
-        (p.dt, true, best.map(v => AggPushdown.external(v, p.dt)).orNull: Any)
-      case _ => return None // unreachable: cells mirror plans by construction
-    }
-    val fields = funcs.zip(out).map { case (fn, (dt, nullable, _)) =>
-      StructField(fn.toString, dt, nullable) }
-    Some((StructType(fields), out.map(_._3)))
-  }
-
-  /** Grouped form: one row per live (partition-column) group, through
-    * the same fold — driver (Eager) or distributed checkpoint replay
-    * (Lazy). */
-  override def tryPushGrouped(groupCols: Seq[String],
-      agg: Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[(Seq[String], Seq[Any])])] = {
-    if (groupCols.isEmpty) return None
-    val partCols = t.partitionColumnSet
-    if (!groupCols.forall(partCols.contains)) return None
-    val sch = t.schema
-    val funcs = agg.aggregateExpressions().toSeq
-    val plans: Seq[FPlan] = funcs.map {
-      case _: CountStar => PCountStar
-      case c: Count if !c.isDistinct =>
-        val name = AggPushdown.simpleName(c.column).getOrElse(return None)
-        if (!sch.fieldNames.contains(name)) return None
-        PCountCol(name, partCols.contains(name))
-      case m @ (_: Min | _: Max) =>
-        val (colExpr, isMin) = m match {
-          case mn: Min => (mn.column, true)
-          case mx: Max => (mx.column, false)
-        }
-        val name = AggPushdown.simpleName(colExpr).getOrElse(return None)
-        val f = sch.fields.find(_.name == name).getOrElse(return None)
-        if (!AggPushdown.minMaxSafe(f.dataType)) return None
-        PBound(name, partCols.contains(name), isMin, f.dataType)
-      case _ => return None
-    }
-    val gCols = groupCols
-    val seqF = groupedSeq[(graft.lake.DataFileMeta, Long, Map[String, Long])](
-      e => passesAll(filters, e._1, sch),
-      e => rawKey(e._1.partitionValues, gCols),
-      e => contribution(plans, Nil, sch, e),
-      e => e._2)
-    val folded = t.foldAggEntries(Option(Map.empty: GroupAcc))(seqF, groupedComb)
-    val groups = folded.flatten.getOrElse(return None)
-    toGroupedResult(plans.map {
-      case PCountStar | _: PCountCol => scala.Left(())
-      case b: PBound => scala.Right(b.dt)
-    }, funcs, groups)
-  }
-}
-
-object DeltaInteropAgg {
-  import MetaAggFold._
-
-  /** Per-function fold plan, resolved on the driver; shipped into the
-    * distributed fold's tasks (pure case-class state). */
-  private sealed trait FPlan extends Serializable
-  private case object PCountStar extends FPlan
-  private final case class PCountCol(name: String, isPart: Boolean) extends FPlan
-  private final case class PBound(name: String, isPart: Boolean, isMin: Boolean,
-      dt: DataType) extends FPlan
-
-  private def identityCell(p: FPlan): Cell = p match {
-    case b: PBound => CBnd(b.isMin, None)
-    case _ => CCnt(0L)
-  }
-
-  /** One file's contribution to every requested aggregate — None when
-    * the file cannot answer exactly (the r11 refusal rules, now applied
-    * inside the fold); a file failing the pushed filters contributes the
-    * identity (it is not read, so it cannot refuse). */
-  private def contribution(plans: Seq[FPlan], filters: Seq[Filter],
-      sch: StructType,
-      e: (graft.lake.DataFileMeta, Long, Map[String, Long])): Option[Seq[Cell]] = {
-    val (dfm, rows, nulls) = e
-    MetaAggFold.passesAll(filters, dfm, sch) match {
-      case None => return None // undecidable: refuse, never skip
-      case Some(false) => return Some(plans.map(identityCell))
-      case Some(true) => ()
-    }
-    val cells = plans.map {
-      case PCountStar => CCnt(rows)
-      case PCountCol(name, isPart) =>
-        if (isPart) dfm.partitionValues.get(name) match {
-          case Some(graft.lake.Meta.NullPartition) => CCnt(0L)
-          case Some(_) => CCnt(rows)
-          case None => return None
-        }
-        else nulls.get(name) match {
-          case Some(nc) => CCnt(rows - nc)
-          case None => return None // unknown != zero nulls
-        }
-      case PBound(name, isPart, isMin, dt) =>
-        if (isPart) dfm.partitionValues.get(name) match {
-          case Some(graft.lake.Meta.NullPartition) => CBnd(isMin, None) // MIN/MAX skip nulls
-          case Some(raw) =>
-            CBnd(isMin, Some(AggPushdown.partValue(raw, dt).getOrElse(return None)))
-          case None => return None
-        }
-        else if (rows > 0 && !nulls.get(name).contains(rows)) {
-          val cs = dfm.stats.getOrElse(name, return None)
-          CBnd(isMin, Some(AggPushdown.statValue(cs,
-            if (isMin) cs.min else cs.max, dt).getOrElse(return None)))
-        } else CBnd(isMin, None) // all-null or empty file: contributes no bound
-    }
-    Some(cells)
-  }
-}
-/** Metadata-only COUNT/MIN/MAX for the `graft-hudi` connector (r14 —
-  * completes the triangle with [[IcebergInteropAgg]] and
-  * [[DeltaInteropAgg]]): answered from timeline commit stats
-  * (HoodieWriteStat's `numWrites` per base slice) and hive
-  * partition-path values alone — a full-table `count(*)` on a
-  * graft-hudi path is now one timeline fold with ZERO data files
-  * opened, like its two siblings. Hudi's commit stats carry no
-  * per-column bounds or null counts, so the exact surface is narrower
-  * and everything else refuses (exact-or-refuse, [[AggPushdown]]'s
-  * doctrine):
-  *
-  *  - any uncompacted LOG DELTA in a snapshot-view resolution → refuse
-  *    (the per-key merge collapses upserts and drops soft-deleted rows;
-  *    base-row counts become upper bounds). A READ_OPTIMIZED resolution
-  *    serves base slices only BY CONTRACT, so it keeps pushdown with
-  *    logs live — `refuseOnLogs = false`.
-  *  - a slice whose commit stats predate `numWrites` recording → refuse
-  *    (unknown ≠ zero)
-  *  - COUNT(col) / MIN / MAX(col) only on PARTITION columns, decided
-  *    per slice from its hive partition-path value (the NULL dir counts
-  *    as SQL null); every other column has no stats to answer from →
-  *    refuse. MIN/MAX additionally go through the shared
-  *    [[AggPushdown.minMaxSafe]] type gate (same rule as Delta's
-  *    partition-value bounds).
-  *
-  * Scale shape: Hudi snapshot state is already O(file groups) driver
-  * metadata (timeline replay — the format's own granularity), so the
-  * fold is a driver loop over that state; nothing data-sized moves. */
-final class HudiInteropAgg(t: HudiTable, refuseOnLogs: Boolean)
-    extends InteropAggSupport {
-  import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
-  import HudiInteropAgg._
-  import MetaAggFold._
-
-  override def groupableCols: Set[String] = t.partitionColumns.toSet
-
-  // folds refuse on undecidable (filter, slice) pairs — see
-  // InteropAggSupport.decidesInFold (one timeline fold, not k+1)
-  override def decidesInFold: Boolean = true
-
-  override def consumable(f: Filter): Boolean = {
-    val partCols = t.partitionColumns.toSet
-    if (!f.references.forall(r => !r.contains('.') && partCols.contains(r)))
-      return false
-    val sch = t.schema
-    t.foldAggSlices(true, refuseOnLogs)(
-      (ok, e) => ok && AggPushdown.eval(f, e._1, sch).isDefined)
-      .getOrElse(false)
-  }
-
-  override def tryPush(agg: Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[Any])] = {
-    if (agg.groupByExpressions.nonEmpty) return None
-    val sch = t.schema
-    val partCols = t.partitionColumns.toSet
-    val funcs = agg.aggregateExpressions().toSeq
-    val plans: Seq[HPlan] = funcs.map {
-      case _: CountStar => HCountStar
-      case c: Count if !c.isDistinct =>
-        val name = AggPushdown.simpleName(c.column).getOrElse(return None)
-        // only partition columns carry a per-slice null verdict (the
-        // hive dir value); commit stats have no null counts
-        if (!partCols.contains(name) || !sch.fieldNames.contains(name))
-          return None
-        HCountCol(name)
-      case m @ (_: Min | _: Max) =>
-        val (colExpr, isMin) = m match {
-          case mn: Min => (mn.column, true)
-          case mx: Max => (mx.column, false)
-        }
-        val name = AggPushdown.simpleName(colExpr).getOrElse(return None)
-        val f = sch.fields.find(_.name == name).getOrElse(return None)
-        if (!partCols.contains(name)) return None // no column bounds in stats
-        if (!AggPushdown.minMaxSafe(f.dataType)) return None
-        HBound(name, isMin, f.dataType)
-      case _ => return None // SUM/AVG/distinct/UDAF: not metadata-answerable
-    }
-    val zero: Seq[Cell] = plans.map(identityCell)
-    val cells = t.foldAggSlices(zero, refuseOnLogs) { (acc, e) =>
-      contribution(plans, filters, sch, e) match {
-        case Some(c) => merge(acc, c)
-        case None => return None
-      }
-    }.getOrElse(return None)
-    val out: Seq[(DataType, Boolean, Any)] = plans.zip(cells).map {
-      case (HCountStar, CCnt(n)) => (LongType: DataType, false, Long.box(n): Any)
-      case (_: HCountCol, CCnt(n)) => (LongType: DataType, false, Long.box(n): Any)
-      case (p: HBound, CBnd(_, best)) =>
-        (p.dt, true, best.map(v => AggPushdown.external(v, p.dt)).orNull: Any)
-      case _ => return None // unreachable: cells mirror plans by construction
-    }
-    val fields = funcs.zip(out).map { case (fn, (dt, nullable, _)) =>
-      StructField(fn.toString, dt, nullable) }
-    Some((StructType(fields), out.map(_._3)))
-  }
-
-  /** Grouped form: one row per live (partition-column) group from the
-    * same driver fold over timeline state. */
-  override def tryPushGrouped(groupCols: Seq[String],
-      agg: Aggregation,
-      filters: Seq[Filter]): Option[(StructType, Seq[(Seq[String], Seq[Any])])] = {
-    if (groupCols.isEmpty) return None
-    val partCols = t.partitionColumns.toSet
-    if (!groupCols.forall(partCols.contains)) return None
-    val sch = t.schema
-    val funcs = agg.aggregateExpressions().toSeq
-    val plans: Seq[HPlan] = funcs.map {
-      case _: CountStar => HCountStar
-      case c: Count if !c.isDistinct =>
-        val name = AggPushdown.simpleName(c.column).getOrElse(return None)
-        if (!partCols.contains(name) || !sch.fieldNames.contains(name))
-          return None
-        HCountCol(name)
-      case m @ (_: Min | _: Max) =>
-        val (colExpr, isMin) = m match {
-          case mn: Min => (mn.column, true)
-          case mx: Max => (mx.column, false)
-        }
-        val name = AggPushdown.simpleName(colExpr).getOrElse(return None)
-        val f = sch.fields.find(_.name == name).getOrElse(return None)
-        if (!partCols.contains(name)) return None
-        if (!AggPushdown.minMaxSafe(f.dataType)) return None
-        HBound(name, isMin, f.dataType)
-      case _ => return None
-    }
-    val gCols = groupCols
-    val seqF = groupedSeq[(graft.lake.DataFileMeta, Long)](
-      e => passesAll(filters, e._1, sch),
-      e => rawKey(e._1.partitionValues, gCols),
-      e => contribution(plans, Nil, sch, e),
-      e => e._2)
-    val groups = t.foldAggSlices(Option(Map.empty: GroupAcc), refuseOnLogs)(
-      (acc, e) => seqF(acc, e)).flatten.getOrElse(return None)
-    toGroupedResult(plans.map {
-      case HCountStar | _: HCountCol => scala.Left(())
-      case b: HBound => scala.Right(b.dt)
-    }, funcs, groups)
-  }
-}
-
-object HudiInteropAgg {
-  import MetaAggFold._
-
-  private sealed trait HPlan
-  private case object HCountStar extends HPlan
-  private final case class HCountCol(name: String) extends HPlan
-  private final case class HBound(name: String, isMin: Boolean,
-      dt: DataType) extends HPlan
-
-  private def identityCell(p: HPlan): Cell = p match {
-    case b: HBound => CBnd(b.isMin, None)
-    case _ => CCnt(0L)
-  }
-
-  /** One base slice's contribution — None when it cannot answer exactly
-    * (missing partition value / unconvertible dir value); slices failing
-    * the pushed filters contribute the identity. */
-  private def contribution(plans: Seq[HPlan], filters: Seq[Filter],
-      sch: StructType,
-      e: (graft.lake.DataFileMeta, Long)): Option[Seq[Cell]] = {
-    val (dfm, rows) = e
-    MetaAggFold.passesAll(filters, dfm, sch) match {
-      case None => return None // undecidable: refuse, never skip
-      case Some(false) => return Some(plans.map(identityCell))
-      case Some(true) => ()
-    }
-    val cells = plans.map {
-      case HCountStar => CCnt(rows)
-      case HCountCol(name) => dfm.partitionValues.get(name) match {
-        case Some(graft.lake.Meta.NullPartition) => CCnt(0L) // NULL dir: all null
-        case Some(_) => CCnt(rows)
-        case None => return None // non-hive layout: no verdict
-      }
-      case HBound(name, isMin, dt) => dfm.partitionValues.get(name) match {
-        case Some(graft.lake.Meta.NullPartition) => CBnd(isMin, None) // MIN/MAX skip nulls
-        case Some(raw) =>
-          CBnd(isMin, Some(AggPushdown.partValue(raw, dt).getOrElse(return None)))
-        case None => return None
-      }
-    }
-    Some(cells)
   }
 }
 
@@ -1401,12 +683,18 @@ class GraftHudiSource extends InteropReadProvider {
             s"incremental, got '$other'")
       }
     InteropRead(s"graft-hudi `$loc`", t.schema, scan, t.scanStats(_),
-      // metadata-only COUNT/MIN/MAX from commit stats: the snapshot view
-      // must refuse with uncompacted log deltas (the merge changes
-      // counts); read_optimized serves base slices only by contract, so
-      // its counts stay exact with logs live
-      aggSupport = Some(new HudiInteropAgg(t,
-        refuseOnLogs = queryType == "snapshot")),
+      // metadata-only COUNT/MIN/MAX from commit stats and partition
+      // values: the snapshot view must refuse with uncompacted log deltas
+      // (the merge changes counts); read_optimized serves base slices only
+      // by contract, so its counts stay exact with logs live
+      aggSupport = Some(new AggSource {
+        val schema: StructType = t.schema
+        val partitionCols: Set[String] = t.partitionColumns.toSet
+        val groupableCols: Set[String] = partitionCols
+        def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
+            comb: (B, B) => B): Option[B] =
+          t.foldAggSlices(zero, refuseOnLogs = queryType == "snapshot")(seq)
+      }),
       append =
         if (options.get("as.of.instant") != null) None // read-only
         // Hudi's own INSERT operation: fresh file groups, no key dedup
@@ -1633,116 +921,21 @@ class InteropReadTable(val read: InteropRead) extends Table
 }
 
 /** Pushed filters drive metadata file-skipping inside the bridged scan;
-  * filters stay residual (sound under partial translation) EXCEPT, on
-  * formats with [[InteropAggSupport]], filters exactly decidable per
-  * file — those are CONSUMED (the bridged scan still re-applies them
-  * row-level via the exact translation, so results are unchanged), which
-  * is what lets Spark offer the whole Aggregate to the source
-  * ([[GraftScanBuilder]]'s rule). Column pruning narrows the bridged
-  * plan so the projection reaches parquet. */
+  * filters exactly decidable per file are consumed and a COUNT/MIN/MAX
+  * answered from metadata ([[MetaAggScanBuilder]], shared with
+  * [[GraftScanBuilder]]). Column pruning narrows the bridged plan so the
+  * projection reaches parquet. */
 class InteropScanBuilder(read: InteropRead) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
+    with SupportsPushDownRequiredColumns with MetaAggScanBuilder {
 
-  private var pushed: Array[Filter] = Array.empty
-  private var consumed: Array[Filter] = Array.empty
   private var required: StructType = read.schema
-  private var aggResult: Option[(StructType, Seq[Seq[Any]])] = None
-  private var aggFor: Aggregation = _
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftFilters.toColumn(f).isDefined)
-    consumed = read.aggSupport match {
-      case Some(a) => pushed.filter(f =>
-        try GraftFilters.toColumnExact(f).isDefined && a.consumable(f)
-        catch { case _: Throwable => false })
-      case None => Array.empty
-    }
-    filters.filterNot(consumed.contains)
-  }
-  override def pushedFilters(): Array[Filter] = pushed
+  protected def aggSource: Option[AggSource] = read.aggSupport
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    pushAggregation(aggregation)
-
-  override def pushAggregation(aggregation: Aggregation): Boolean =
-    read.aggSupport match {
-      case None => false
-      case Some(a) =>
-        // every in-play filter must be in the consumed (exact) set —
-        // a residual filter above the relation means Spark won't offer
-        // the aggregate anyway; be defensive about escapees
-        if (!pushed.forall(consumed.contains)) false
-        else {
-          if (aggFor ne aggregation) {
-            aggFor = aggregation
-            aggResult = try compute(a, aggregation)
-            catch { case _: Throwable => None }
-          }
-          aggResult.isDefined
-        }
-    }
-
-  /** Grouped or groupless metadata answer in the DSv2 contract's row
-    * layout: group-by columns FIRST (the order Spark expects of a
-    * complete group-by pushdown), then the aggregate columns. */
-  private def compute(a: InteropAggSupport,
-      aggregation: Aggregation): Option[(StructType, Seq[Seq[Any]])] = {
-    val groups = aggregation.groupByExpressions().toSeq
-    if (groups.isEmpty)
-      return a.tryPush(aggregation, consumed.toSeq)
-        .map { case (sch, row) => (sch, Seq(row)) }
-    // grouped (r14): plain partition-column keys only, rendered as the
-    // leading key columns of the scan output
-    val names = groups.map(g =>
-      AggPushdown.simpleName(g).getOrElse(return None))
-    val keyFields = names.map(n =>
-      read.schema.fields.find(_.name == n).getOrElse(return None))
-    if (!keyFields.forall(f => AggPushdown.groupTypeSupported(f.dataType)))
-      return None
-    a.tryPushGrouped(names, aggregation, consumed.toSeq).map {
-      case (aggSchema, rows) =>
-        val schema = StructType(keyFields ++ aggSchema.fields)
-        val full = rows.map { case (key, vals) =>
-          val keyVals = keyFields.zipWithIndex.map { case (f, i) =>
-            AggPushdown.externalGroupValue(key(i), f.dataType)
-              .getOrElse(return None)
-          }
-          keyVals ++ vals
-        }
-        (schema, full)
-    }
-  }
-
-  override def build(): Scan = aggResult match {
-    case Some((aggSchema, Seq(row)))
-        if aggFor != null && aggFor.groupByExpressions().isEmpty =>
-      new GraftAggScan(aggSchema, row)
-    case Some((aggSchema, rows)) => new GraftAggRowsScan(aggSchema, rows)
-    case None => new InteropV1Scan(read, pushed, required)
-  }
-}
-
-/** Multi-row metadata-aggregate scan: the grouped counterpart of
-  * [[GraftAggScan]] — one driver-computed row per live group, zero data
-  * files opened. */
-class GraftAggRowsScan(aggSchema: StructType, rows: Seq[Seq[Any]]) extends V1Scan {
-  override def readSchema(): StructType = aggSchema
-  override def description(): String =
-    s"GraftAggRowsScan(metadata-only grouped: ${aggSchema.fieldNames.mkString(", ")})"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = aggSchema
-      override def needConversion: Boolean = true
-      override def buildScan(): RDD[Row] =
-        context.sparkContext.parallelize(
-          rows.map(Row.fromSeq), math.max(1, math.min(rows.size, 4)))
-    }.asInstanceOf[T]
+  override def build(): Scan = aggScan.getOrElse(new InteropV1Scan(read, pushed, required))
 }
 
 class InteropV1Scan(read: InteropRead, pushed: Array[Filter],

@@ -1304,8 +1304,8 @@ object Lake {
       .agg(count(lit(1)).as("n_orders"),
         Money.sum2(col("o_totalprice")).as("total"))
       .withColumn("src", lit("pre1996"))
-    // r14 RECEIPT — metadata-aggregate pushdown (IcebergInteropAgg, now a
-    // FOLD over manifests like Delta's), proven the AggPushdownSpec way:
+    // RECEIPT — metadata-aggregate pushdown (AggPushdown's fold over
+    // manifests), proven the AggPushdownSpec way:
     // a side table's COUNT answers from manifest stats with ZERO data IO
     // — deleting every data file must not change it.
     val aggLoc = work(s, "iceberg_sql_agg", d)
@@ -1437,8 +1437,8 @@ object Lake {
       .agg(count(lit(1)).as("n_orders"),
         Money.sum2(col("o_totalprice")).as("total"))
       .withColumn("src", lit("pre_upsert"))
-    // r14 RECEIPT — metadata-aggregate pushdown (HudiInteropAgg), proven
-    // the AggPushdownSpec way: a side table's COUNT answers from timeline
+    // RECEIPT — metadata-aggregate pushdown (AggPushdown's fold over
+    // timeline slices), proven the AggPushdownSpec way: a side table's COUNT answers from timeline
     // commit stats with ZERO data IO — deleting every base file must not
     // change it. At 100 TB this is the difference between one timeline
     // fold and a thousand-executor scan.

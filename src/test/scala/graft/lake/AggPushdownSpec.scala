@@ -243,6 +243,23 @@ class AggPushdownSpec extends AnyFunSuite {
     assert(all.head().getLong(0) == o.count())
   }
 
+  test("partition evolution: a group column missing only from filtered-out files still pushes") {
+    val o = Tables.orders(spark, sf)
+      .withColumn("region", when(col("o_orderkey") % 3 === 0, lit("EU")).otherwise(lit("US")))
+    val t = freshTable("evolvedgrp", o.filter(col("o_orderstatus") === "F"),
+      partitionBy = Seq("o_orderstatus"))
+    t.setPartitioning(Seq("o_orderstatus", "region"))
+    t.append(o.filter(col("o_orderstatus") =!= "F"))
+    // the pre-evolution files lack `region`, but every one of them is 'F'
+    val got = spark.sql(
+      s"""SELECT region, count(*) AS n FROM $cat.evolvedgrp
+          WHERE o_orderstatus <> 'F' GROUP BY region""")
+    assert(!hasAggregate(got), "files the filter excludes need no group value")
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      o.filter(col("o_orderstatus") =!= "F").groupBy("region").count()
+        .collect().map(_.toString).sorted.toSeq)
+  }
+
   test("schema rename keeps min/max pushdown via field-id stats mapping") {
     val o = Tables.orders(spark, sf)
     val t = freshTable("renamed", o.filter(col("o_orderkey") % 2 === 0))
@@ -348,5 +365,35 @@ class AggPushdownSpec extends AnyFunSuite {
     val got = spark.sql(s"SELECT count(*) AS n FROM $cat.ttagg VERSION AS OF 1")
     assert(!hasAggregate(got))
     assert(got.head().getLong(0) == o.filter(col("o_orderkey") % 2 === 0).count())
+  }
+
+  test("without the native-scan rule, the DSv2 scan answers grouped aggregates too") {
+    val o = Tables.orders(spark, sf)
+    freshTable("groupedv1", o, partitionBy = Seq("o_orderstatus"))
+    spark.conf.set("spark.graft.nativeScan.enabled", "false")
+    try {
+      val got = spark.sql(
+        s"""SELECT o_orderstatus, count(*) AS n, min(o_orderkey) AS mn, max(o_orderdate) AS md
+            FROM $cat.groupedv1 WHERE o_orderstatus <> 'P' GROUP BY o_orderstatus""")
+      assert(!hasAggregate(got), "the grouped aggregate should be pushed to the scan")
+      assert(got.queryExecution.executedPlan.toString.contains("GraftAggScan"))
+      val exp = o.filter(col("o_orderstatus") =!= "P").groupBy("o_orderstatus")
+        .agg(count(lit(1)), min("o_orderkey"), max("o_orderdate"))
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        exp.collect().map(_.toString).sorted.toSeq)
+    } finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
+  }
+
+  test("a constant riding along an aggregate select still pushes") {
+    val o = Tables.orders(spark, sf)
+    freshTable("constcol", o, partitionBy = Seq("o_orderstatus"))
+    val got = spark.sql(
+      s"""SELECT 'tag' AS src, o_orderstatus, count(*) AS n
+          FROM $cat.constcol GROUP BY o_orderstatus""")
+    assert(!hasAggregate(got), "aggregate should be answered from metadata")
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      o.groupBy("o_orderstatus").count()
+        .select(lit("tag"), col("o_orderstatus"), col("count"))
+        .collect().map(_.toString).sorted.toSeq)
   }
 }

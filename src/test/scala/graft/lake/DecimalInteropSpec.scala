@@ -19,11 +19,11 @@ import graft.lake.iceberg.{IcebergTable, IcebergWriter}
   *    PRUNING on decimal manifest bounds (the spec's exact
   *    unscaled-bytes serialization → ParquetStats "c" domain →
   *    FilePruner exact BigDecimal compare), and metadata-only MIN/MAX
-  *    answered with zero data IO (IcebergInteropAgg minMaxSafe lists
+  *    answered with zero data IO (AggPushdown.minMaxSafe lists
   *    decimal).
   *  - Delta: round trip + exact sum; decimal MIN/MAX pushdown REFUSES
   *    (the stats-JSON parse lands decimal in the lossy double domain —
-  *    exact-or-refuse, documented in DeltaInteropAgg).
+  *    exact-or-refuse, documented at AggPushdown.statValue).
   *  - Hudi: COW round trip AND an MOR keyed upsert whose delta-log
   *    records carry the decimal through the Avro codec (bytes +
   *    logicalType decimal, unscaled big-endian — r12).

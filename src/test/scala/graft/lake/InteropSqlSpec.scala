@@ -895,15 +895,16 @@ class InteropSqlSpec extends AnyFunSuite {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     // the V1 DSv2 path (sessions WITHOUT the native-scan rule) answers
     // grouped aggregates too, through Spark's own complete group-by
-    // pushdown → GraftAggRowsScan (key columns first, then aggs)
+    // pushdown → GraftAggScan (key columns first, then aggs)
     spark.conf.set("spark.graft.nativeScan.enabled", "false")
     try {
       val v1 = spark.sql(
         s"""SELECT o_orderstatus, count(*) AS n, min(o_orderkey) AS mn
             FROM `graft-delta`.`$dLoc` GROUP BY o_orderstatus""")
       val plan = v1.queryExecution.executedPlan.toString
-      assert(plan.contains("GraftAggRowsScan"),
-        s"V1 grouped pushdown must produce the grouped agg scan:\n$plan")
+      assert(plan.contains("GraftAggScan") &&
+        plan.contains("ReadSchema: struct<o_orderstatus:string,"),
+        s"V1 grouped pushdown must produce the agg scan, key columns first:\n$plan")
       assert(v1.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == truth)
     } finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
 
@@ -1001,12 +1002,12 @@ class InteropSqlSpec extends AnyFunSuite {
     assert(zq.head().getLong(0) == 0L)
     // and the shared algebra skips zero-row entries for ALL formats:
     // a unit probe through groupedSeq directly
-    import graft.lake.sql.MetaAggFold
-    val seqF = MetaAggFold.groupedSeq[(String, Long)](
-      _ => Some(true), e => Some(List(e._1)),
-      _ => Some(Seq(MetaAggFold.CCnt(1L))), _._2)
+    import graft.lake.sql.AggPushdown
+    val seqF = AggPushdown.groupedSeq(Seq("p"), Seq(AggPushdown.PCountStar), Nil,
+      org.apache.spark.sql.types.StructType(Nil))
     val acc = Seq(("a", 5L), ("b", 0L), ("a", 3L))
-      .foldLeft(Option(Map.empty: MetaAggFold.GroupAcc))(seqF)
+      .map { case (p, n) => AggEntry(DataFileMeta("", 0L, n, 0L, Map("p" -> p), Map.empty), Map.empty) }
+      .foldLeft(Option(Map.empty: AggPushdown.GroupAcc))(seqF)
     assert(acc.get.keySet == Set(List("a")),
       "zero-row entries must be identity in the grouped fold")
   }
@@ -1063,5 +1064,164 @@ class InteropSqlSpec extends AnyFunSuite {
     assert(dUpdVer.size == 1 &&
       !dVers.filter(_._1 % 5 != 0).values.exists(_ == dUpdVer.head),
       "exactly the SQL-updated rows must carry the update commit version")
+  }
+
+  /** Spark jobs started while `body` runs (the listener bus is drained
+    * before and after, so earlier and late-delivered events are not
+    * miscounted). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val counter = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftshim.ListenerBusHook.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftshim.ListenerBusHook.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    counter.get()
+  }
+
+  private def collapsed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }.isEmpty
+
+  test("iceberg: a column added after the data files answers count/min from metadata") {
+    import graft.lake.iceberg.{IceField, IceSchema, IcebergMeta, IcebergTable}
+    val o = orders.select("o_orderkey", "o_orderstatus")
+    val loc = freshDir("ice-added-col")
+    IcebergWriter.create(spark, loc, o.schema,
+      partition = Seq("o_orderstatus" -> "identity")).append(o)
+    // a foreign engine's ADD COLUMN: a new metadata version whose current
+    // schema carries one more optional field; no data file has it
+    val m = IcebergTable.load(spark, loc).meta
+    val added = IceField(m.lastColumnId + 1, "new_col", required = false,
+      org.apache.spark.sql.types.LongType, "long")
+    val evolved = IceSchema(m.schemas.map(_.schemaId).max + 1,
+      m.currentSchema.fields :+ added)
+    val m2 = m.copy(lastColumnId = added.id, currentSchemaId = evolved.schemaId,
+      schemas = m.schemas :+ evolved)
+    val metaDir = new Path(loc, "metadata")
+    val fs = metaDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val Versioned = """v?(\d+)(?:-[^.]*)?\.metadata\.json""".r
+    val next = fs.listStatus(metaDir).map(_.getPath.getName).collect {
+      case Versioned(v) => v.toLong }.max + 1
+    def put(name: String, text: String): Unit = {
+      val out = fs.create(new Path(metaDir, name), true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    put(s"v$next.metadata.json", IcebergMeta.render(m2))
+    put("version-hint.text", next.toString)
+
+    val t = IcebergTable.load(spark, loc)
+    assert(t.schema.fieldNames.contains("new_col"))
+    val real = t.scan()
+    val flat = spark.sql(
+      s"""SELECT count(*) AS n, count(new_col) AS c, min(new_col) AS mn,
+                 max(o_orderkey) AS mx
+          FROM `graft-iceberg`.`$loc` WHERE o_orderstatus = 'F'""")
+    assert(collapsed(flat), "the absent column must be answered from metadata")
+    val want = real.filter(col("o_orderstatus") === "F")
+      .agg(count(lit(1)), count("new_col"), min("new_col"), max("o_orderkey")).head()
+    assert(flat.head() == want)
+    assert(want.getLong(1) == 0L && want.isNullAt(2))
+    val grouped = spark.sql(
+      s"""SELECT o_orderstatus, count(new_col) AS c, min(new_col) AS mn
+          FROM `graft-iceberg`.`$loc` GROUP BY o_orderstatus""")
+    assert(collapsed(grouped), "the grouped form must be answered from metadata too")
+    assert(grouped.collect().map(_.toString).sorted.toSeq ==
+      real.groupBy("o_orderstatus").agg(count("new_col"), min("new_col"))
+        .collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("iceberg: one metadata fold per planned aggregate past the fold threshold") {
+    val o = orders
+    val loc = freshDir("ice-one-fold")
+    val w = IcebergWriter.create(spark, loc, o.schema,
+      partition = Seq("o_orderstatus" -> "identity"))
+    w.append(o.filter(col("o_orderkey") % 2 === 0))
+    w.append(o.filter(col("o_orderkey") % 2 === 1))
+    val where = "o_orderstatus IN ('F', 'O') AND o_orderstatus <> 'P' AND o_orderstatus >= 'F'"
+    spark.conf.set("spark.graft.iceberg.aggFoldThresholdBytes", "0")
+    try {
+      val q = spark.sql(
+        s"SELECT count(*) AS n, min(o_orderkey) AS mn FROM `graft-iceberg`.`$loc` WHERE $where")
+      val jobs = jobsDuring(q.queryExecution.optimizedPlan)
+      assert(collapsed(q), "the 3-filter aggregate must collapse to metadata")
+      assert(jobs == 1, s"planning a 3-filter aggregate ran $jobs jobs, not one fold")
+      val want = o.filter(col("o_orderstatus").isin("F", "O"))
+        .agg(count(lit(1)), min("o_orderkey")).head()
+      assert(q.head() == want)
+    } finally spark.conf.unset("spark.graft.iceberg.aggFoldThresholdBytes")
+  }
+
+  test("delta: one metadata fold per planned aggregate past the state-collect threshold") {
+    val o = orders
+    val loc = freshDir("delta-one-fold")
+    val w = DeltaWriter.create(spark, loc, o.schema,
+      partitionColumns = Seq("o_orderstatus"))
+    w.append(o.filter(col("o_orderkey") % 2 === 0))
+    w.append(o.filter(col("o_orderkey") % 2 === 1))
+    w.checkpoint()
+    val where = "o_orderstatus IN ('F', 'O') AND o_orderstatus <> 'P' AND o_orderstatus >= 'F'"
+    spark.conf.set("spark.graft.delta.stateCollectThresholdBytes", "0")
+    try {
+      def planJobs(sql: String): (org.apache.spark.sql.DataFrame, Int) = {
+        val q = spark.sql(sql) // analysis loads the (lazy) table state
+        (q, jobsDuring(q.queryExecution.optimizedPlan))
+      }
+      val (q, jobs) = planJobs(
+        s"SELECT count(*) AS n, min(o_orderkey) AS mn FROM `graft-delta`.`$loc` WHERE $where")
+      val (u, unfiltered) = planJobs(
+        s"SELECT count(*) AS n, min(o_orderkey) AS mn FROM `graft-delta`.`$loc`")
+      assert(collapsed(q) && collapsed(u), "both aggregates must collapse to metadata")
+      assert(unfiltered >= 1, "past the threshold the fold is a distributed replay")
+      assert(jobs == unfiltered,
+        s"planning a 3-filter aggregate ran $jobs jobs, the unfiltered one $unfiltered")
+      val want = o.filter(col("o_orderstatus").isin("F", "O"))
+        .agg(count(lit(1)), min("o_orderkey")).head()
+      assert(q.head() == want)
+    } finally spark.conf.unset("spark.graft.delta.stateCollectThresholdBytes")
+  }
+
+  test("zero-row data files contribute no partition bound to ungrouped MIN/MAX") {
+    // a committed empty file in partition bucket=9 holds no row, so a real
+    // scan's max(bucket) never sees 9; the metadata answer must not either
+    val o = orders.select(col("o_orderkey"), (col("o_orderkey") % 5).cast("int").as("bucket"))
+    val loc = freshDir("zero-row-bound")
+    DeltaWriter.create(spark, loc, o.schema, partitionColumns = Seq("bucket")).append(o)
+    val fs = new Path(loc).getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = freshDir("zero-row-bound-tmp")
+    o.filter(lit(false)).drop("bucket").coalesce(1).write.parquet(tmp)
+    val part = fs.listStatus(new Path(tmp))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    val rel = s"bucket=9/${part.getName}"
+    fs.mkdirs(new Path(loc, "bucket=9"))
+    fs.rename(part, new Path(loc, rel))
+    val size = fs.getFileStatus(new Path(loc, rel)).getLen
+    val logDir = new Path(loc, "_delta_log")
+    val nextV = fs.listStatus(logDir).map(_.getPath.getName)
+      .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong).max + 1
+    val add = s"""{"add":{"path":"$rel","partitionValues":{"bucket":"9"},""" +
+      s""""size":$size,"modificationTime":0,"dataChange":true,""" +
+      s""""stats":"{\\"numRecords\\":0,\\"minValues\\":{},\\"maxValues\\":{},\\"nullCount\\":{}}"}}"""
+    val out = fs.create(new Path(logDir, f"$nextV%020d.json"))
+    out.write((add + "\n").getBytes("UTF-8")); out.close()
+
+    val q = spark.sql(
+      s"SELECT count(*) AS n, min(bucket) AS mn, max(bucket) AS mx FROM `graft-delta`.`$loc`")
+    assert(collapsed(q), "the aggregate must be answered from metadata")
+    assert(q.head() == org.apache.spark.sql.Row(o.count(), 0, 4),
+      s"an empty file's partition value leaked into the bounds: ${q.head()}")
+    // nor does the empty file's missing nullCount refuse a COUNT(col)
+    val c = spark.sql(s"SELECT count(o_orderkey) AS n FROM `graft-delta`.`$loc`")
+    assert(collapsed(c), "a zero-row file holds no value to count")
+    assert(c.head().getLong(0) == o.count())
   }
 }
