@@ -23,14 +23,16 @@ import graft.expressions._
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
-    // vectorized substitution of DSv2 graft-table reads (see the rule doc)
-    ext.injectResolutionRule(_ => new graft.lake.sql.GraftNativeScanRule)
-    // SQL UPDATE / MERGE INTO lowered onto the MoR commit path
+    // metadata-only COUNT/MIN/MAX over a lake table (all four formats)
+    // collapse to a local relation — at resolution, where the predicates
+    // are still as written (see the rule doc)
+    ext.injectResolutionRule(_ => new graft.lake.sql.MetadataAggregateRule)
+    // SQL UPDATE / MERGE INTO lowered onto each format's native commit
     ext.injectResolutionRule(_ => new graft.lake.sql.GraftRowLevelSqlRule)
-    // interop (graft-iceberg/delta/hudi) reads substituted with the format
-    // readers' native plans — optimizer-time so DataFrame-chain filters
-    // are already collapsed onto the relation (see the rule doc)
-    ext.injectOptimizerRule(_ => new graft.lake.sql.InteropNativeScanRule)
+    // lake-table reads (all four formats) substituted with the format
+    // reader's native plan — optimizer-time so DataFrame-chain filters are
+    // already on the relation and reach file pruning (see the rule doc)
+    ext.injectOptimizerRule(_ => new graft.lake.sql.NativeScanRule)
     // runtime bucket-dir pruning over bucket[N] interop estates — maps
     // dim join values through IcebergBucket into the verified bucket
     // partition column (see the rule doc); operator-optimization batch,

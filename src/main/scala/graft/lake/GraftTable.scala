@@ -297,22 +297,6 @@ class GraftTable private (
     filter.map(out.filter).getOrElse(out)
   }
 
-  /** Scan with files pruned by an already-RESOLVED Catalyst predicate and
-    * WITHOUT re-applying it to rows — for the extensions substitution
-    * rule (GraftNativeScanRule), which keeps Spark's own Filter node
-    * above the result, so row-level re-application would be redundant. */
-  private[graft] def scanPrunedOnly(
-      pruneWith: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-      asOf: Long = -1L): DataFrame = {
-    val m = meta
-    val sch = schema
-    (if (asOf >= 0) Some(m.snapshot(asOf)) else headSnapshot(m)) match {
-      case None => emptyDf(sch)
-      case Some(snap) =>
-        buildScan(m, sch, snap, pruneFiles(m, sch, snap, pruneWith))
-    }
-  }
-
   /** Builds the merged DataFrame over `surviving` files of `snap` (delete
     * application + partition-layout grouping); no row filter applied.
     * `withMeta` additionally carries `__gfile`/`__gpos` (full file URI +

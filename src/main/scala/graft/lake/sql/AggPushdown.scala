@@ -3,11 +3,9 @@ package graft.lake.sql
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression => CExpr, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Complete, Count => CCount, Max => CMax, Min => CMin}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
-import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project, SubqueryAlias, View}
 import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
-import org.apache.spark.sql.connector.read.{Scan, SupportsPushDownAggregates, SupportsPushDownFilters}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
@@ -243,7 +241,7 @@ object AggPushdown {
     case _ => throw new IllegalStateException("cell shape mismatch")
   }
 
-  /** DSv2 entry of both scan builders: a connector `Aggregation` answered
+  /** DSv2 entry of [[LakeScanBuilder]]: a connector `Aggregation` answered
     * as the scan's schema (group columns first, then the aggregates — the
     * layout Spark expects of a complete pushdown) and internal rows. */
   private[sql] def pushed(src: AggSource, agg: Aggregation,
@@ -671,94 +669,42 @@ trait AggSource {
     AggPushdown.compute(this, Nil, Nil, Seq(f)).isDefined
 }
 
-/** The filter and aggregate half of the graft and interop scan builders.
-  * Filters stay residual (pruning is IO-only, so partial translation is
-  * sound) EXCEPT filters exactly decidable per file, which are CONSUMED —
-  * that is what lets Spark offer the whole Aggregate to the source. A
-  * consumed filter must ALSO translate exactly (`toColumnExact`), so the
-  * bridged scan's row-level re-application is EQUIVALENT, never weaker: a
-  * merely `toColumn`-translatable filter can lose conjuncts inside an Or
-  * via the one-sided And, and the conservative pruner keeps files the
-  * exact filter excludes — consuming such a filter leaks rows.
-  * `supportCompletePushDown` only ever returns true alongside a computed
-  * answer, so the built scan is the [[GraftAggScan]] and the Aggregate
-  * node disappears from the plan. */
-private[sql] trait MetaAggScanBuilder extends SupportsPushDownFilters
-    with SupportsPushDownAggregates {
-  protected def aggSource: Option[AggSource]
-
-  protected var pushed: Array[Filter] = Array.empty
-  private var consumed: Array[Filter] = Array.empty
-  private var aggResult: Option[(StructType, Seq[InternalRow])] = None
-  private var aggFor: Aggregation = _
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftFilters.toColumn(f).isDefined)
-    consumed = aggSource match {
-      case Some(src) => pushed.filter(f =>
-        try GraftFilters.toColumnExact(f).isDefined && src.consumable(f)
-        catch { case _: Throwable => false })
-      case None => Array.empty
-    }
-    filters.filterNot(consumed.contains)
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    pushAggregation(aggregation)
-
-  // Spark only offers an Aggregation when no residual Filter remains above
-  // the relation, i.e. every filter in play was consumed — refuse anyway if
-  // one escaped. Spark calls supportCompletePushDown then pushAggregation
-  // with the same Aggregation: compute once.
-  override def pushAggregation(aggregation: Aggregation): Boolean =
-    aggSource.exists { src =>
-      pushed.forall(consumed.contains) && {
-        if (aggFor ne aggregation) {
-          aggFor = aggregation
-          aggResult = try AggPushdown.pushed(src, aggregation, consumed.toSeq)
-            catch { case _: Throwable => None }
-        }
-        aggResult.isDefined
-      }
-    }
-
-  /** The metadata scan, when the offered aggregate was answered. */
-  protected def aggScan: Option[Scan] =
-    aggResult.map { case (schema, rows) => new GraftAggScan(schema, rows) }
-}
-
-/** The one Catalyst extractor of both native-scan rules: an `Aggregate`
+/** The Catalyst extractor of [[MetadataAggregateRule]]: an `Aggregate`
   * (COUNT / MIN / MAX, optionally GROUP BY identity partition columns)
-  * over a relation whose table has an [[AggSource]], with every WHERE
+  * over a [[LakeTable]] whose read has an [[AggSource]], with every WHERE
   * conjunct exactly file-decidable, becomes a `LocalRelation` of the
-  * driver-computed rows — zero data files opened. The rules replace the
-  * DSv2 relation before `V2ScanRelationPushDown` could offer the
-  * aggregate to the scan builder, so the collapse happens here instead.
-  * Planning one aggregate is ONE metadata fold whatever the number of
-  * filters: the fold itself refuses a file where a filter is undecidable,
-  * so no per-filter [[AggSource.consumable]] pass runs first. */
-private[sql] final class MetadataAggregate(sourceOf: Table => Option[AggSource])
-    extends PredicateHelper {
+  * driver-computed rows — zero data files opened. The native-scan
+  * substitution replaces the DSv2 relation before `V2ScanRelationPushDown`
+  * could offer the aggregate to the scan builder, so the collapse happens
+  * here instead. Planning one aggregate is ONE metadata fold whatever the
+  * number of filters: the fold itself refuses a file where a filter is
+  * undecidable, so no per-filter [[AggSource.consumable]] pass runs first. */
+private[sql] object MetadataAggregate extends PredicateHelper {
   import AggPushdown._
-  import MetadataAggregate._
+
+  /** One output column of the collapsed aggregate. */
+  private sealed trait Part
+  private final case class KGroup(i: Int) extends Part
+  private final case class KConst(v: Any) extends Part
+  private final case class KAgg(p: AggPushdown.Plan) extends Part
 
   def unapply(plan: LogicalPlan): Option[LogicalPlan] = plan match {
     case agg @ Aggregate(groupExprs, aggExprs, child, _)
         if groupExprs.forall(_.isInstanceOf[AttributeReference]) =>
-      // strip alias / filter / pass-through projection wrappers
+      // strip alias / view / filter / pass-through projection wrappers
       var conds: Seq[CExpr] = Nil
       var cur = child
       var continue = true
       while (continue) cur match {
         case SubqueryAlias(_, c) => cur = c
+        case v: View => cur = v.child
         case LFilter(cond, c) => conds = conds ++ splitConjunctivePredicates(cond); cur = c
         case Project(exprs, c) if exprs.forall(_.isInstanceOf[AttributeReference]) => cur = c
         case _ => continue = false
       }
       cur match {
-        case r: DataSourceV2Relation =>
-          try sourceOf(r.table).flatMap(src => build(src, agg,
+        case DataSourceV2Relation(t: LakeTable, _, _, _, _, _) =>
+          try t.read.aggSupport.flatMap(src => build(src, agg,
             groupExprs.map(_.asInstanceOf[AttributeReference]), conds))
           catch { case _: Throwable => None }
         case _ => None
@@ -771,8 +717,12 @@ private[sql] final class MetadataAggregate(sourceOf: Table => Option[AggSource])
     // group values must round-trip exactly from the hive dir rendering
     if (!groupAttrs.forall(a => groupTypeSupported(a.dataType) && src.groupableCols(a.name)))
       return None
-    val filters = conds.map(c =>
-      org.apache.spark.sql.graftshim.ColumnExpr.toV1Filter(c).getOrElse(return None))
+    // at resolution a literal may still sit under a cast (`long_col = 5`
+    // is `long_col = CAST(5 AS BIGINT)`): fold constants as the optimizer
+    // would, or the v1 translation refuses the conjunct
+    val filters = conds.map(c => org.apache.spark.sql.graftshim.ColumnExpr.toV1Filter(
+      c.transformUp { case e if e.foldable && !e.isInstanceOf[Literal] =>
+        Literal(e.eval(), e.dataType) }).getOrElse(return None))
     // every result expression: a group column, a constant riding along
     // (`'tag' AS src`) or an Alias over one plain aggregate call
     def group(a: AttributeReference): Option[Part] =
@@ -802,10 +752,3 @@ private[sql] final class MetadataAggregate(sourceOf: Table => Option[AggSource])
   }
 }
 
-private object MetadataAggregate {
-  /** One output column of the collapsed aggregate. */
-  private sealed trait Part
-  private final case class KGroup(i: Int) extends Part
-  private final case class KConst(v: Any) extends Part
-  private final case class KAgg(p: AggPushdown.Plan) extends Part
-}

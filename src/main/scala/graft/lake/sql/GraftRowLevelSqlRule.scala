@@ -10,56 +10,53 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.{ColumnExpr, PlanDf}
 
-import graft.lake.GraftTable
-
-/** SQL `UPDATE cat.t SET … WHERE …` and `MERGE INTO cat.t USING …` for
-  * graft tables — the remaining DML of the reference's "use it like a
-  * regular PG table" UX (pg_lakehouse_iceberg/README.md:37-39; UPDATE
-  * merge-on-read is its own roadmap line, README.md:14).
+/** SQL `UPDATE t SET … WHERE …` and `MERGE INTO t USING …` over a
+  * [[LakeTable]] of any of the four formats — the remaining DML of the
+  * reference's "use it like a regular PG table" UX
+  * (pg_lakehouse_iceberg/README.md:37-39; UPDATE merge-on-read is its own
+  * roadmap line, README.md:14).
   *
   * Spark's built-in rewrite for these commands requires the connector to
   * implement the DSv2 row-level-operation machinery, whose group-based
-  * plans rewrite whole files copy-on-write. Graft's MoR commits
-  * (equality-delete + append in one snapshot) are strictly cheaper — write
-  * amplification O(matched rows), not O(touched files) — so this rule
-  * intercepts the RESOLVED logical command during analysis and lowers it
-  * onto the existing programmatic path:
+  * plans rewrite whole files copy-on-write. The formats' own row-level
+  * commits (graft MoR equality-delete + append, Iceberg deletion vectors,
+  * Delta DVs, Hudi log records) are cheaper — write amplification
+  * O(matched rows), not O(touched files) — so this rule intercepts the
+  * RESOLVED logical command during analysis and lowers it onto the read's
+  * hooks, each statement ONE native commit:
   *
-  *  - `UpdateTable`      → [[GraftUpdateCommand]]  → `GraftTable.update`
-  *  - `MergeIntoTable`   → [[GraftMergeCommand]]:
-  *      MATCHED UPDATE SET * + NOT MATCHED INSERT *  → `upsert(source)`
-  *      MATCHED UPDATE SET * only                    → `upsert(source ⋉ target)`
+  *  - `UpdateTable`      → [[LakeUpdateCommand]] → `updateWhere`
+  *  - `MergeIntoTable`   → [[LakeMergeCommand]]:
+  *      MATCHED UPDATE SET * + NOT MATCHED INSERT *  → `mergeUpsert(source)`
+  *      MATCHED UPDATE SET * only                    → `mergeUpsert(source ⋉ target)`
   *      NOT MATCHED INSERT * only                    → `append(source ▷ target)`
-  *      MATCHED DELETE only                          → `deleteKeys(source keys)`
+  *      MATCHED DELETE only                          → `mergeDeleteMatched(source keys)`
   *
-  * The MERGE condition must be the conjunction of equality predicates
-  * over exactly the table's `key.columns` (the equality-delete key — the
-  * only join the MoR read path can honor); anything else fails with a
-  * clear error instead of silently wrong rows. Action conditions and
-  * partial assignment lists are rejected the same way. Resolved
-  * attributes are detached to name references before re-resolving against
-  * the table's own scan, so the commands run on a FRESH snapshot at
-  * execution time with the optimistic-retry commit semantics of the
-  * programmatic API.
+  * The MERGE condition must be a conjunction of `target.k = source.k`
+  * equalities; those columns are the statement's merge key, which the
+  * keyed hooks check against what their format can honour (graft: exactly
+  * `key.columns`; Hudi: the record key; Iceberg and Delta take the
+  * statement's key as the join identity, as their own engines do).
+  * Anything else fails with a clear error instead of silently wrong rows.
+  * Action conditions and partial assignment lists are rejected the same
+  * way. Resolved attributes are detached to name references before
+  * re-resolving against the table's own scan, so the commands run on a
+  * FRESH snapshot at execution time.
   */
 class GraftRowLevelSqlRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case u: UpdateTable if u.resolved =>
-      graftTarget(u.table).map { t =>
-        GraftUpdateCommand(t.table, updateAssignments(u),
+      target(u.table).map { t =>
+        LakeUpdateCommand(t.read, updateAssignments(u),
           u.condition.map(detach)): LogicalPlan
-      }.orElse(interopTarget(u.table).map { t =>
-        InteropUpdateCommand(t.read, updateAssignments(u),
-          u.condition.map(detach)): LogicalPlan
-      }).getOrElse(u)
+      }.getOrElse(u)
 
     case m: MergeIntoTable if m.resolved =>
-      graftTarget(m.targetTable).map { t =>
-        lowerMerge(m, t): LogicalPlan
-      }.orElse(interopTarget(m.targetTable).map { t =>
-        lowerInteropMerge(m, t): LogicalPlan
-      }).getOrElse(m)
+      target(m.targetTable).map { t =>
+        LakeMergeCommand(t.read, m.sourceTable,
+          mergeShape(m, t.read.schema.fieldNames.toSeq), mergeEqKeys(m)): LogicalPlan
+      }.getOrElse(m)
 
     case _ => plan
   }
@@ -73,28 +70,6 @@ class GraftRowLevelSqlRule extends Rule[LogicalPlan] with PredicateHelper {
       }
       name -> detach(a.value)
     }
-
-  private def lowerMerge(m: MergeIntoTable, t: GraftSqlTable): GraftMergeCommand = {
-    val keyCols = t.table.meta.keyColumns
-    if (keyCols.isEmpty) throw new UnsupportedOperationException(
-      s"MERGE INTO a graft table needs key.columns (equality-delete key) on ${t.name()}")
-    val eqNames = mergeEqKeys(m)
-    if (eqNames.toSet != keyCols.toSet) throw new UnsupportedOperationException(
-      s"graft MERGE condition must cover exactly key.columns ${keyCols.mkString(",")}, " +
-        s"got ${eqNames.mkString(",")}")
-    GraftMergeCommand(t.table, m.sourceTable,
-      mergeShape(m, t.table.schema.fieldNames.toSeq))
-  }
-
-  /** MERGE over an interop connector table: the statement's key-equality
-    * columns ARE the merge key — Iceberg/Delta carry no table-declared
-    * key (the condition defines the join identity, as in their own
-    * engines), and the Hudi hook validates them against the table's
-    * record key. */
-  private def lowerInteropMerge(m: MergeIntoTable,
-      t: InteropReadTable): InteropMergeCommand =
-    InteropMergeCommand(t.read, m.sourceTable,
-      mergeShape(m, t.read.schema.fieldNames.toSeq), mergeEqKeys(m))
 
   /** The merge condition's key columns — must be a conjunction of
     * `target.k = source.k` equalities (the only join the keyed commit
@@ -119,13 +94,13 @@ class GraftRowLevelSqlRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def mergeShape(m: MergeIntoTable,
-      tableCols: Seq[String]): GraftMergeCommand.Shape =
+      tableCols: Seq[String]): LakeMergeCommand.Shape =
     (m.matchedActions, m.notMatchedActions) match {
       case (Seq(u) , Seq(i)) if starUpdate(u, tableCols) && starInsert(i, tableCols) =>
-        GraftMergeCommand.Upsert
-      case (Seq(u), Seq()) if starUpdate(u, tableCols) => GraftMergeCommand.UpdateOnly
-      case (Seq(), Seq(i)) if starInsert(i, tableCols) => GraftMergeCommand.InsertOnly
-      case (Seq(DeleteAction(None)), Seq()) => GraftMergeCommand.DeleteMatched
+        LakeMergeCommand.Upsert
+      case (Seq(u), Seq()) if starUpdate(u, tableCols) => LakeMergeCommand.UpdateOnly
+      case (Seq(), Seq(i)) if starInsert(i, tableCols) => LakeMergeCommand.InsertOnly
+      case (Seq(DeleteAction(None)), Seq()) => LakeMergeCommand.DeleteMatched
       case _ => throw new UnsupportedOperationException(
         "graft MERGE supports: [WHEN MATCHED THEN UPDATE SET *] " +
           "[WHEN NOT MATCHED THEN INSERT *] | WHEN MATCHED THEN DELETE " +
@@ -168,22 +143,14 @@ class GraftRowLevelSqlRule extends Rule[LogicalPlan] with PredicateHelper {
     pairs.length == assigns.length && pairs.toSet == tableCols.toSet
   }
 
-  /** The graft DSv2 table under the (possibly aliased) target relation —
-    * None leaves the plan for Spark's own (failing) path, so non-graft
-    * tables keep their stock error messages. */
-  private def graftTarget(plan: LogicalPlan): Option[GraftSqlTable] = plan match {
-    case SubqueryAlias(_, child) => graftTarget(child)
-    case DataSourceV2Relation(t: GraftSqlTable, _, _, _, _, _) => Some(t)
-    case _ => None
-  }
-
-  /** The interop connector table (`graft-iceberg`/`-delta`/`-hudi`)
-    * under the target relation — resolved by [[GraftInteropPathRule]]
-    * for path statements, or by the session catalog for `CREATE TABLE …
-    * USING graft-*` names. */
-  private def interopTarget(plan: LogicalPlan): Option[InteropReadTable] = plan match {
-    case SubqueryAlias(_, child) => interopTarget(child)
-    case DataSourceV2Relation(t: InteropReadTable, _, _, _, _, _) => Some(t)
+  /** The [[LakeTable]] under the (possibly aliased) target relation —
+    * resolved by [[GraftSqlCatalog]], by [[GraftInteropPathRule]] for
+    * interop path statements, or by the session catalog for `CREATE
+    * TABLE … USING graft-*` names. None leaves the plan for Spark's own
+    * (failing) path, so other tables keep their stock error messages. */
+  private def target(plan: LogicalPlan): Option[LakeTable] = plan match {
+    case SubqueryAlias(_, child) => target(child)
+    case DataSourceV2Relation(t: LakeTable, _, _, _, _, _) => Some(t)
     case _ => None
   }
 
@@ -202,120 +169,39 @@ class GraftRowLevelSqlRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** `UPDATE` lowered to one MoR update commit (equality-delete of matched
-  * keys + append of rewritten rows — GraftTable.update). Holds Columns,
-  * not Expressions, so the analyzer does not traverse into the detached
-  * (unresolved-by-design) trees. */
-case class GraftUpdateCommand(
-    table: GraftTable,
+/** `UPDATE` lowered to the read's single-commit row-level update (graft:
+  * equality-delete of matched keys + append of rewritten rows; Delta:
+  * protocol COW update; Iceberg: DV masks + rewritten rows in one
+  * row-delta snapshot; Hudi: keyed upsert of the rewritten rows). Holds
+  * Columns, not Expressions, so the analyzer does not traverse into the
+  * detached (unresolved-by-design) trees. */
+case class LakeUpdateCommand(
+    read: LakeRead,
     assignments: Seq[(String, Column)],
     condition: Option[Column]) extends LeafRunnableCommand {
   override def run(sparkSession: SparkSession): Seq[Row] = {
-    // the handle carries the catalog commit arbiter (if any); update()
-    // refreshes metadata at entry, so this still runs on a fresh snapshot
-    table.update(assignments.toMap, condition.getOrElse(lit(true)))
+    read.updateWhere.getOrElse(throw read.refuse("UPDATE"))(
+      condition.getOrElse(lit(true)), assignments.toMap)
     Nil
   }
 }
 
-/** `MERGE INTO` lowered to one MoR commit on the analyzed source plan. */
-case class GraftMergeCommand(
-    table: GraftTable,
+/** `MERGE INTO` lowered to ONE native commit through the read's keyed
+  * hooks. The source is PINNED (localCheckpoint) before any probe: the
+  * cardinality check, the shape restriction joins and the commit itself
+  * all consume the same evaluated frame, so a nondeterministic or
+  * concurrently-moving source cannot pass the probe and then commit
+  * different rows. */
+case class LakeMergeCommand(
+    read: LakeRead,
     source: LogicalPlan,
-    shape: GraftMergeCommand.Shape) extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    import GraftMergeCommand._
-    val t = table
-    val keys = t.meta.keyColumns
-    val raw = PlanDf.ofRows(sparkSession, source)
-    // SET * / INSERT * are well-defined when the source carries EXTRA
-    // columns — project onto the table's columns before any commit (a
-    // wider source used to pass the rule and then fail in align();
-    // ADVICE r04). DeleteMatched needs only the key columns.
-    // PIN the source (same reason InteropMergeCommand localCheckpoints):
-    // the cardinality probe and the commit each re-evaluate the source
-    // plan; a nondeterministic or concurrently-moving source could pass
-    // the probe and then commit DIFFERENT rows — duplicate live rows per
-    // key, the exact corruption the check exists to prevent.
-    val src =
-      (if (shape == DeleteMatched) raw
-       else raw.select(t.schema.fieldNames.toIndexedSeq.map(col): _*))
-        .localCheckpoint()
-    // SQL MERGE cardinality rule: a TARGET row matched by more than one
-    // source row is an error (Spark's MERGE_CARDINALITY_VIOLATION) — the
-    // upsert commit would otherwise keep duplicate live rows per key.
-    // Duplicate NOT MATCHED source rows are legal (both insert), so the
-    // check applies only to update-shaped merges and only to source keys
-    // that actually match a target row (ADVICE r04).
-    if (shape == Upsert || shape == UpdateOnly) {
-      val dup = src.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1)
-        .join(t.scan().select(keys.map(col): _*), keys, "left_semi")
-        .limit(1).collect()
-      if (dup.nonEmpty) throw new IllegalStateException(
-        s"MERGE matches a target row more than once for key (${keys.mkString(",")}) = " +
-          s"${dup.head.toSeq.init.mkString(",")} — cardinality violation")
-    }
-    shape match {
-      case Upsert => t.upsert(src)
-      case UpdateOnly =>
-        // restrict the upsert to keys already present → pure update
-        val existing = t.scan().select(keys.map(col): _*)
-        t.upsert(src.join(existing, keys, "left_semi"))
-      case InsertOnly =>
-        val existing = t.scan().select(keys.map(col): _*)
-        t.append(src.join(existing, keys, "left_anti"))
-      case DeleteMatched =>
-        t.deleteKeys(src.select(keys.map(col): _*))
-    }
-    Nil
-  }
-}
-
-object GraftMergeCommand {
-  sealed trait Shape
-  case object Upsert extends Shape
-  case object UpdateOnly extends Shape
-  case object InsertOnly extends Shape
-  case object DeleteMatched extends Shape
-}
-
-/** SQL `UPDATE` over an interop connector table, lowered onto the
-  * format's single-commit row-level update (Delta: protocol COW update;
-  * Iceberg: DV masks + rewritten rows in one row-delta snapshot; Hudi:
-  * keyed upsert of the rewritten rows). Read-only resolutions (time
-  * travel) reject loudly. */
-case class InteropUpdateCommand(
-    read: InteropRead,
-    assignments: Seq[(String, Column)],
-    condition: Option[Column]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    val hook = read.updateWhere.getOrElse(throw new UnsupportedOperationException(
-      s"${read.name}: UPDATE not supported on this resolution " +
-        "(time-travel reads are read-only)"))
-    hook(condition.getOrElse(lit(true)), assignments.toMap)
-    Nil
-  }
-}
-
-/** SQL `MERGE INTO` over an interop connector table — each shape lands
-  * as ONE native commit through the format's keyed primitives. The
-  * source is PINNED (localCheckpoint) before any probe: the cardinality
-  * check, the shape restriction joins and the commit itself all consume
-  * the same evaluated frame, so nondeterministic sources cannot split. */
-case class InteropMergeCommand(
-    read: InteropRead,
-    source: LogicalPlan,
-    shape: GraftMergeCommand.Shape,
+    shape: LakeMergeCommand.Shape,
     keys: Seq[String]) extends LeafRunnableCommand {
 
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   override def run(sparkSession: SparkSession): Seq[Row] = {
-    import GraftMergeCommand._
+    import LakeMergeCommand._
     val raw = PlanDf.ofRows(sparkSession, source)
     // SET * / INSERT * are well-defined when the source carries extra
     // columns — project onto the table's columns first (DeleteMatched
@@ -326,8 +212,9 @@ case class InteropMergeCommand(
     ).localCheckpoint()
     def targetKeys = read.scan(None).select(keys.map(col): _*)
     // SQL MERGE cardinality rule: a target row matched by >1 source row
-    // is an error (the keyed upsert would otherwise keep duplicate live
-    // rows per key). Duplicate NOT MATCHED rows are legal inserts.
+    // is an error (Spark's MERGE_CARDINALITY_VIOLATION; the keyed upsert
+    // would otherwise keep duplicate live rows per key). Duplicate NOT
+    // MATCHED rows are legal inserts.
     if (shape == Upsert || shape == UpdateOnly) {
       val dup = src.groupBy(keys.map(col): _*).count()
         .filter(col("count") > 1)
@@ -337,21 +224,26 @@ case class InteropMergeCommand(
         s"MERGE matches a target row more than once for key (${keys.mkString(",")}) = " +
           s"${dup.head.toSeq.init.mkString(",")} — cardinality violation")
     }
-    def noHook(what: String) = new UnsupportedOperationException(
-      s"${read.name}: MERGE $what not supported on this resolution " +
-        "(time-travel reads are read-only)")
     shape match {
       case Upsert =>
-        read.mergeUpsert.getOrElse(throw noHook("upsert"))(src, keys)
+        read.mergeUpsert.getOrElse(throw read.refuse("MERGE"))(src, keys)
       case UpdateOnly =>
-        read.mergeUpsert.getOrElse(throw noHook("update"))(
+        read.mergeUpsert.getOrElse(throw read.refuse("MERGE"))(
           src.join(targetKeys, keys, "left_semi"), keys)
       case InsertOnly =>
-        read.append.getOrElse(throw noHook("insert"))(
+        read.append.getOrElse(throw read.refuse("MERGE"))(
           src.join(targetKeys, keys, "left_anti"))
       case DeleteMatched =>
-        read.mergeDeleteMatched.getOrElse(throw noHook("delete"))(src, keys)
+        read.mergeDeleteMatched.getOrElse(throw read.refuse("MERGE"))(src, keys)
     }
     Nil
   }
+}
+
+object LakeMergeCommand {
+  sealed trait Shape
+  case object Upsert extends Shape
+  case object UpdateOnly extends Shape
+  case object InsertOnly extends Shape
+  case object DeleteMatched extends Shape
 }

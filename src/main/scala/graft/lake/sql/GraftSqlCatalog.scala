@@ -3,21 +3,15 @@ package graft.lake.sql
 import java.util
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{FilePruner, GraftTable}
+import graft.lake.GraftTable
 
 /** DataSourceV2 `TableCatalog` for graft lake tables — the plain-SQL
   * surface the reference exposes through its PG table AM (every query in
@@ -34,21 +28,15 @@ import graft.lake.{FilePruner, GraftTable}
   *
   * Reads resolve the CURRENT snapshot at query time (each `loadTable`
   * re-reads metadata — commits are immediately visible, unlike the r02
-  * registerViews snapshot-at-registration views), push down filters
-  * through `FilePruner` for manifest-level file skipping, push down
-  * column pruning, and re-use the whole `GraftTable.scan` machinery (MoR
-  * delete application, schema evolution, partition-layout grouping) via
-  * the `V1Scan` bridge. Writes ride `V1Write → InsertableRelation`, so
-  * `INSERT INTO` is a `GraftTable.append` commit and
-  * `INSERT OVERWRITE` an atomic whole-table `replace` — both with the
-  * optimistic-retry concurrency the programmatic API has.
+  * registerViews snapshot-at-registration views). Each table is served as
+  * a [[LakeRead]] ([[GraftSqlCatalog.read]]) through the SQL surface the
+  * four formats share: [[LakeTable]] for reads and writes, the native-scan
+  * rules for vectorized reads, metadata-only aggregates and file pruning,
+  * and [[GraftRowLevelSqlRule]] for UPDATE / MERGE.
   *
   * Scale notes: catalog ops are O(1) metadata IO; a scan's data path is
   * exactly `GraftTable.scan` (vectorized parquet + Catalyst pushdown
-  * inside the produced plan). The only cost this bridge adds is one
-  * Row-materialization boundary at the scan root (`V1Scan` hands Spark an
-  * `RDD[Row]`); filters/projections are already applied INSIDE the
-  * bridged plan, so the boundary carries only surviving rows/columns.
+  * inside the produced plan).
   */
 class GraftSqlCatalog extends TableCatalog {
 
@@ -109,7 +97,7 @@ class GraftSqlCatalog extends TableCatalog {
 
   override def loadTable(ident: Identifier): Table = {
     if (!exists(ident)) throw new NoSuchTableException(ident)
-    new GraftSqlTable(loadGraft(ident), ident.toString)
+    new LakeTable(GraftSqlCatalog.read(loadGraft(ident), ident.toString))
   }
 
   /** SQL time travel — `SELECT … FROM cat.t VERSION AS OF <snapshotId>`,
@@ -127,7 +115,7 @@ class GraftSqlCatalog extends TableCatalog {
       else if (version.nonEmpty && version.forall(_.isDigit)) version.toLong
       else t.tagged(version) // named ref (tag) — error lists known tags
     t.meta.snapshot(id) // validate eagerly → clean error for unknown ids
-    new GraftSqlTable(t, ident.toString, asOf = id)
+    new LakeTable(GraftSqlCatalog.read(t, ident.toString, asOf = id))
   }
 
   /** `… TIMESTAMP AS OF <ts>` — Spark hands micros since epoch; resolve
@@ -137,7 +125,7 @@ class GraftSqlCatalog extends TableCatalog {
     val t = loadGraft(ident)
     val id = t.snapshotAsOfTime(timestampMicros / 1000L)
     require(id >= 0, s"no snapshot of $ident existed at $timestampMicros")
-    new GraftSqlTable(t, ident.toString, asOf = id)
+    new LakeTable(GraftSqlCatalog.read(t, ident.toString, asOf = id))
   }
 
   override def createTable(
@@ -175,7 +163,7 @@ class GraftSqlCatalog extends TableCatalog {
             try rest.drop(flatName(ident)) catch { case _: Throwable => () }
           throw e
       }
-    new GraftSqlTable(t, ident.toString)
+    new LakeTable(GraftSqlCatalog.read(t, ident.toString))
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
@@ -217,7 +205,7 @@ class GraftSqlCatalog extends TableCatalog {
         t.setProperty(set.property(), set.value())
       case c => throw new UnsupportedOperationException(s"unsupported table change $c")
     }
-    new GraftSqlTable(t, ident.toString)
+    new LakeTable(GraftSqlCatalog.read(t, ident.toString))
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -250,190 +238,46 @@ object GraftSqlCatalog {
   private val ReservedProps: Set[String] =
     Set("key.columns", "provider", "location", "owner", "external", "comment",
       "option.path", "path")
-}
 
-/** One catalog table: reads bridge to `GraftTable.scan` (fresh snapshot
-  * per query — or the pinned `asOf` snapshot for time travel), writes to
-  * append/overwrite commits. */
-class GraftSqlTable(val table: GraftTable, ident: String, val asOf: Long = -1L)
-    extends Table with SupportsRead with SupportsWrite with SupportsDelete {
-
-  override def name(): String = ident
-  override def schema(): StructType = table.schema
-
-  /** `DELETE FROM cat.t WHERE p` → one MoR delete commit (the
-    * reference's own MoR-DELETE roadmap item, executed from SQL):
-    * equality delete on keyed tables, positional delete on keyless ones
-    * (GraftTable.delete picks). Only accepted when every conjunct
-    * translates — a partial predicate would delete the wrong rows. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftFilters.toColumnExact(f).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val cond = filters.flatMap(GraftFilters.toColumnExact)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    table.delete(cond)
-  }
-
-  override def partitioning(): Array[Transform] =
-    table.meta.partitionColumns.map(Expressions.identity).toArray
-
-  override def properties(): util.Map[String, String] = {
-    val m = new util.HashMap[String, String]()
-    table.meta.props.foreach { case (k, v) => m.put(k, v) }
-    if (table.meta.keyColumns.nonEmpty)
-      m.put("key.columns", table.meta.keyColumns.mkString(","))
-    m
-  }
-
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(
-      TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(table, asOf)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      private var replace = false
-      override def truncate(): WriteBuilder = { replace = true; this }
-      override def build(): Write = new V1Write {
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: DataFrame, overwrite: Boolean): Unit =
-              if (replace || overwrite) table.overwrite(data)
-              else table.append(data)
-          }
-      }
+  /** A graft table as the one SQL surface's [[LakeRead]]: reads bridge to
+    * `GraftTable.scan` (fresh snapshot per query, or the pinned `asOf`
+    * snapshot for time travel, which is read-only), writes to its MoR
+    * commits with the optimistic-retry concurrency of the programmatic
+    * API: INSERT is an append, INSERT OVERWRITE an atomic whole-table
+    * replace, DELETE an equality delete on keyed tables and a positional
+    * one on keyless ones, UPDATE and MERGE equality-delete + append in one
+    * snapshot. */
+  def read(table: GraftTable, name: String, asOf: Long = -1L): LakeRead = {
+    val m = table.meta
+    // MERGE lowers onto the equality-delete key, the only join the MoR
+    // read path can honour: the statement's key columns must be exactly
+    // key.columns, or the commit would be silently wrong
+    def mergeKeys(stmt: Seq[String]): Unit = {
+      val keyCols = m.keyColumns
+      if (keyCols.isEmpty) throw new UnsupportedOperationException(
+        s"MERGE INTO a graft table needs key.columns (equality-delete key) on $name")
+      if (stmt.toSet != keyCols.toSet) throw new UnsupportedOperationException(
+        s"graft MERGE condition must cover exactly key.columns ${keyCols.mkString(",")}, " +
+          s"got ${stmt.mkString(",")}")
     }
-}
-
-/** Scan builder: pushed filters feed `FilePruner` (manifest min/max +
-  * partition-value file skipping BEFORE any task is scheduled — the scan
-  * planner the reference runs in scan_ops.c); filters exactly decidable
-  * from identity partition values are consumed and COUNT/MIN/MAX answered
-  * from metadata ([[MetaAggScanBuilder]], see [[AggPushdown]]). Column
-  * pruning narrows the bridged plan, which Catalyst then pushes into the
-  * parquet reader. */
-class GraftScanBuilder(table: GraftTable, asOf: Long = -1L) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with MetaAggScanBuilder {
-
-  private var required: StructType = table.schema
-
-  protected lazy val aggSource: Option[AggSource] = Some(AggPushdown.graft(table, asOf))
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    aggScan.getOrElse(new GraftV1Scan(table, pushed, required, asOf))
-}
-
-/** The scan of a complete metadata-aggregate pushdown, for graft and the
-  * interop formats alike: driver-computed rows — group columns first, one
-  * row per live group, or one row when ungrouped — zero data files
-  * opened. */
-class GraftAggScan(aggSchema: StructType, rows: Seq[InternalRow]) extends V1Scan {
-  override def readSchema(): StructType = aggSchema
-  override def description(): String =
-    s"GraftAggScan(metadata-only: ${aggSchema.fieldNames.mkString(", ")})"
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = aggSchema
-      // the rows already hold Catalyst internal values
-      override def needConversion: Boolean = false
-      override def buildScan(): RDD[Row] =
-        context.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 4)))
-          .asInstanceOf[RDD[Row]]
-    }.asInstanceOf[T]
-}
-
-class GraftV1Scan(table: GraftTable, pushed: Array[Filter], required: StructType,
-    asOf: Long = -1L) extends V1Scan with SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  /** Manifest-derived size/row statistics (post file-pruning by the
-    * pushed filters): without this, the V1 bridge reports Spark's default
-    * size estimate (= "huge"), so a small graft dim table would never be
-    * broadcast in non-extension sessions. Cost: one driver-side manifest
-    * walk, no file IO. */
-  override def estimateStatistics(): Statistics = {
-    val files =
-      try table.planFiles(
-        pushed.flatMap(GraftFilters.toColumn).reduceOption(_ && _), asOf)
-      catch { case _: Throwable => return UnknownStats }
-    val bytes = files.map(_.sizeBytes).sum
-    val rows = files.map(_.rowCount).sum
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
-    }
+    val live = LakeRead(name, table.schema,
+      scan = f => table.scan(f, asOf),
+      stats = { f =>
+        val files = table.planFiles(f, asOf)
+        (files.map(_.sizeBytes).sum, files.map(_.rowCount).sum)
+      },
+      aggSupport = Some(AggPushdown.graft(table, asOf)),
+      append = Some(df => table.append(df)),
+      overwrite = Some(df => table.overwrite(df)),
+      deleteWhere = Some(c => table.delete(c)),
+      updateWhere = Some((c, set) => table.update(set, c)),
+      mergeUpsert = Some { (src, keys) => mergeKeys(keys); table.upsert(src) },
+      mergeDeleteMatched = Some { (keys, keyCols) =>
+        mergeKeys(keyCols); table.deleteKeys(keys.select(keyCols.map(col): _*))
+      },
+      partitioning = m.partitionColumns.map(Expressions.identity),
+      properties = m.props ++
+        (if (m.keyColumns.nonEmpty) Map("key.columns" -> m.keyColumns.mkString(",")) else Map.empty))
+    if (asOf >= 0) live.readOnly else live
   }
-  private object UnknownStats extends Statistics {
-    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-      override def needConversion: Boolean = true
-      override def buildScan(): RDD[Row] = {
-        val filter = pushed.flatMap(GraftFilters.toColumn).reduceOption(_ && _)
-        val df = table.scan(filter, asOf)
-        val projected =
-          if (required.isEmpty) df.select() // e.g. SELECT count(*)
-          else df.select(required.fieldNames.toIndexedSeq.map(col): _*)
-        projected.rdd
-      }
-    }.asInstanceOf[T]
-}
-
-/** v1 `sources.Filter` → `Column` translation for the file pruner.
-  * Partial on purpose: an untranslatable conjunct is simply not used for
-  * pruning (And keeps the translatable side — sound, since pruning with a
-  * weaker predicate only keeps extra files). */
-object GraftFilters {
-  def toColumn(f: Filter): Option[Column] = f match {
-    case sources.EqualTo(a, v) => attr(a).map(_ === lit(v))
-    case sources.GreaterThan(a, v) => attr(a).map(_ > lit(v))
-    case sources.GreaterThanOrEqual(a, v) => attr(a).map(_ >= lit(v))
-    case sources.LessThan(a, v) => attr(a).map(_ < lit(v))
-    case sources.LessThanOrEqual(a, v) => attr(a).map(_ <= lit(v))
-    case sources.In(a, vs) => attr(a).map(_.isin(vs.toIndexedSeq.map(lit): _*))
-    case sources.IsNull(a) => attr(a).map(_.isNull)
-    case sources.IsNotNull(a) => attr(a).map(_.isNotNull)
-    case sources.And(l, r) => // one-sided translation stays sound for pruning
-      (toColumn(l), toColumn(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (one, other) => one.orElse(other)
-      }
-    case sources.Or(l, r) => // Or must translate BOTH sides to stay sound
-      for { a <- toColumn(l); b <- toColumn(r) } yield a || b
-    case sources.Not(sources.EqualTo(a, v)) => attr(a).map(_ =!= lit(v))
-    case _: sources.AlwaysTrue => Some(lit(true))
-    case _: sources.AlwaysFalse => Some(lit(false))
-    case _ => None
-  }
-
-  /** EXACT translation: every conjunct must translate (And is two-sided
-    * here, unlike the pruning-oriented `toColumn`, whose one-sided And is
-    * sound only because pruning with a WEAKER predicate keeps extra
-    * files — a delete with a weaker predicate would remove extra ROWS). */
-  def toColumnExact(f: Filter): Option[Column] = f match {
-    case sources.And(l, r) =>
-      for { a <- toColumnExact(l); b <- toColumnExact(r) } yield a && b
-    case sources.Or(l, r) =>
-      for { a <- toColumnExact(l); b <- toColumnExact(r) } yield a || b
-    case leaf => toColumn(leaf) // every non-And case in toColumn is exact
-  }
-
-  /** dotted names would misparse through functions.col — skip them. */
-  private def attr(name: String): Option[Column] =
-    if (name.contains('.') || name.contains('`')) None else Some(col(name))
 }

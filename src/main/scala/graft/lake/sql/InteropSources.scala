@@ -2,13 +2,11 @@ package graft.lake.sql
 
 import java.util
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, TableScan}
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -50,16 +48,11 @@ import graft.lake.iceberg.IcebergTable
   *    changed keys, `commit_instant` (the long `hoodie.datasource.*`
   *    option names are accepted as aliases)
   *
-  * Architecture: each provider resolves its options to an [[InteropRead]]
-  * — schema + scan/stats closures over the existing table readers — and
-  * the shared [[InteropReadTable]] bridge does the DSv2 work once:
-  * pushed filters feed the format's `FilePruner` planning (manifest /
-  * log-action / timeline metadata file skipping BEFORE any task is
-  * scheduled), column pruning narrows the bridged plan (Catalyst then
-  * pushes it into the parquet reader), and `estimateStatistics` reports
-  * metadata-derived sizes so small interop dims broadcast. Filters stay
-  * RESIDUAL (Spark re-applies them) — pruning is strictly an IO
-  * optimization, so partial translation is always sound.
+  * Architecture: each provider resolves its options to a [[LakeRead]] —
+  * schema + scan/stats closures over the existing table readers, and the
+  * format writer's commit per SQL write — and the SQL surface graft's own
+  * catalog tables use ([[LakeTable]], [[LakeScanBuilder]], the native-scan
+  * rules, [[GraftRowLevelSqlRule]]) does the rest once.
   *
   * At 100 TB: planning cost is each format's own O(metadata) driver walk
   * (no directory listing), the data path is the same distributed
@@ -67,53 +60,10 @@ import graft.lake.iceberg.IcebergTable
   * V1 bridge adds is one Row boundary at the scan root carrying
   * already-filtered, already-projected rows.
   */
-final case class InteropRead(
-    name: String,
-    schema: StructType,
-    scan: Option[Column] => DataFrame,
-    /** (bytes, rows) post-pruning, from metadata only; bytes < 0 = unknown. */
-    stats: Option[Column] => (Long, Long),
-    /** Metadata-only COUNT/MIN/MAX (see [[AggPushdown]]): the format's
-      * side of the shared path, for Iceberg, Delta and Hudi resolutions of
-      * live or time-travelled table state; None = no aggregate pushdown. */
-    aggSupport: Option[AggSource] = None,
-    /** Append a DataFrame (already resolved to the table schema) as one
-      * native commit of the format. None = read-only resolution (e.g. a
-      * time-travel read — you can't insert into the past). */
-    append: Option[DataFrame => Unit] = None,
-    /** Row-level DELETE as one native commit; the Column is the exact
-      * WHERE translation. None = read-only resolution. */
-    deleteWhere: Option[Column => Unit] = None,
-    /** SQL UPDATE (cond, SET map) as ONE native commit; None =
-      * read-only resolution. */
-    updateWhere: Option[(Column, Map[String, Column]) => Unit] = None,
-    /** SQL MERGE's keyed upsert (pinned source frame, statement key
-      * columns) as ONE native commit; None = read-only resolution. */
-    mergeUpsert: Option[(DataFrame, Seq[String]) => Unit] = None,
-    /** SQL MERGE's WHEN MATCHED DELETE (key frame, key columns) as one
-      * native commit; None = read-only resolution. */
-    mergeDeleteMatched: Option[(DataFrame, Seq[String]) => Unit] = None)
-
-/** Receipt helper: planned data-file count of a frame's OPTIMIZED plan.
-  * File-pruning assertions (gate entries + specs) count real planned
-  * inputs instead of matching plan text, so they survive plan-shape
-  * changes (the native-scan substitution consumed one such receipt). */
-object PlanFiles {
-  def planned(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.inputFiles.length
-          case _ => 0
-        }
-    }.sum
-}
-
 abstract class InteropReadProvider extends TableProvider with DataSourceRegister {
 
   /** Resolve options (path + format-specific time travel) to a read. */
-  protected def open(spark: SparkSession, options: CaseInsensitiveStringMap): InteropRead
+  protected def open(spark: SparkSession, options: CaseInsensitiveStringMap): LakeRead
 
   /** Does a physical table already live at `loc`? Gates CREATE-on-write. */
   protected def exists(spark: SparkSession, loc: String): Boolean
@@ -149,9 +99,9 @@ abstract class InteropReadProvider extends TableProvider with DataSourceRegister
     * provider instance across reads, a read after a write can never be
     * served a stale table snapshot — the memo spans exactly the
     * inferSchema→getTable pair of a single resolution. */
-  @volatile private var lastOpen: (util.Map[String, String], InteropRead) = _
+  @volatile private var lastOpen: (util.Map[String, String], LakeRead) = _
   private def openCached(spark: SparkSession,
-      options: CaseInsensitiveStringMap, consume: Boolean): InteropRead = {
+      options: CaseInsensitiveStringMap, consume: Boolean): LakeRead = {
     // key on the case-INSENSITIVE view (lowercased keys): the SQL path
     // rule hands getTable a map whose copy lowercases keys, while the
     // DataFrameReader path preserves the caller's casing — an
@@ -176,7 +126,7 @@ abstract class InteropReadProvider extends TableProvider with DataSourceRegister
     val opts = new CaseInsensitiveStringMap(properties)
     val spark = SparkSession.active
     val loc = path(opts)
-    if (exists(spark, loc)) new InteropReadTable(openCached(spark, opts, consume = true))
+    if (exists(spark, loc)) new LakeTable(openCached(spark, opts, consume = true))
     else {
       // CREATE-on-first-write: a declared schema + a fresh location is
       // a table that exists in the catalog but not yet on disk — SELECT
@@ -191,7 +141,7 @@ abstract class InteropReadProvider extends TableProvider with DataSourceRegister
       validateCreateOptions(opts) // reject bad options AT CREATE time,
       // not at the first deferred INSERT (where the failing statement
       // wouldn't even name the option)
-      new InteropReadTable(
+      new LakeTable(
         uncreatedRead(spark, loc, schema,
           partitionColumnsOf(partitioning, opts, schema), opts))
     }
@@ -220,8 +170,8 @@ abstract class InteropReadProvider extends TableProvider with DataSourceRegister
 
   private def uncreatedRead(spark: SparkSession, loc: String,
       schema: StructType, partCols: Seq[String],
-      opts: CaseInsensitiveStringMap): InteropRead =
-    InteropRead(s"${shortName()} `$loc` (uncreated)", schema,
+      opts: CaseInsensitiveStringMap): LakeRead =
+    LakeRead(s"${shortName()} `$loc` (uncreated)", schema,
       scan = _ => spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema),
       stats = _ => (0L, 0L),
@@ -297,7 +247,7 @@ class GraftIcebergSource extends InteropReadProvider {
       partition = partCols.map(_ -> "identity")).append(df)
 
   override protected def open(
-      spark: SparkSession, options: CaseInsensitiveStringMap): InteropRead = {
+      spark: SparkSession, options: CaseInsensitiveStringMap): LakeRead = {
     val rest = restOf(options)
     // REST: read from the catalog's authoritative metadata-location (one
     // load serves both), write through catalog CAS; otherwise direct.
@@ -340,7 +290,7 @@ class GraftIcebergSource extends InteropReadProvider {
           s"graft-iceberg: unknown metadata table '$other' " +
             "(snapshots|files|partitions|history)")
       }
-      return InteropRead(s"graft-iceberg `$loc#$which`", df.schema,
+      return LakeRead(s"graft-iceberg `$loc#$which`", df.schema,
         _ => df, _ => (-1L, -1L))
     }
     // INCREMENTAL APPEND READ — Iceberg's own batch reader options
@@ -359,7 +309,7 @@ class GraftIcebergSource extends InteropReadProvider {
       val to = Option(options.get("end-snapshot-id")).map(_.toLong).getOrElse(-1L)
       val schema = StructType(
         t.schema.fields :+ StructField("_snapshot_id", LongType))
-      return InteropRead(
+      return LakeRead(
         s"graft-iceberg `$loc` incremental ($from, ${if (to >= 0L) to else "current"}]",
         schema, f => t.incrementalAppends(from, to, f), _ => (-1L, -1L))
     }
@@ -374,7 +324,7 @@ class GraftIcebergSource extends InteropReadProvider {
       val schema = StructType(t.schema.fields ++ Seq(
         StructField("_row_id", LongType),
         StructField("_last_updated_sequence_number", LongType)))
-      return InteropRead(s"graft-iceberg `$loc` +lineage", schema,
+      return LakeRead(s"graft-iceberg `$loc` +lineage", schema,
         f => t.scanWithLineage(f, snap), f => t.scanStats(f, snap))
     }
     // the standard optimistic-commit loop (what Iceberg's own clients
@@ -396,7 +346,7 @@ class GraftIcebergSource extends InteropReadProvider {
       }
       sys.error("unreachable")
     }
-    InteropRead(s"graft-iceberg `$loc`", t.schema,
+    val live = LakeRead(s"graft-iceberg `$loc`", t.schema,
       f => t.scan(f, snap), f => t.scanStats(f, snap),
       aggSupport = Some(new AggSource {
         val schema: StructType = t.aggIceSchema(snap).struct
@@ -407,27 +357,18 @@ class GraftIcebergSource extends InteropReadProvider {
         def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
             comb: (B, B) => B): Option[B] = t.foldAggEntries(snap)(zero)(seq, comb)
       }),
-      append =
-        if (snap >= 0) None // time-travel resolution: read-only
-        else Some(df => retried(_.append(df))),
+      append = Some(df => retried(_.append(df))),
       // v3 deletion-vector delete — Iceberg's preferred MoR delete
       // encoding: O(matched) puffin bitmaps, no data-file rewrite
       // (bumps format-version to 3, as any v3 DV writer does)
-      deleteWhere =
-        if (snap >= 0) None
-        else Some(c => retried(_.deleteWhereDv(c, requireMatch = false))),
+      deleteWhere = Some(c => retried(_.deleteWhereDv(c, requireMatch = false))),
       // SQL UPDATE / MERGE: single-snapshot row-delta commits (DV or
       // equality-delete manifests + data manifests under one snapshot)
-      updateWhere =
-        if (snap >= 0) None
-        else Some((c, set) => retried(_.updateWhere(c, set))),
-      mergeUpsert =
-        if (snap >= 0) None
-        else Some((src, keys) => retried(_.upsertKeys(src, keys))),
-      mergeDeleteMatched =
-        if (snap >= 0) None
-        else Some((keys, keyCols) => retried(
-          _.equalityDelete(keys.select(keyCols.map(col): _*).distinct()))))
+      updateWhere = Some((c, set) => retried(_.updateWhere(c, set))),
+      mergeUpsert = Some((src, keys) => retried(_.upsertKeys(src, keys))),
+      mergeDeleteMatched = Some((keys, keyCols) => retried(
+        _.equalityDelete(keys.select(keyCols.map(col): _*).distinct()))))
+    if (snap >= 0) live.readOnly else live // time travel: read-only
   }
 }
 
@@ -478,7 +419,7 @@ class GraftDeltaSource extends InteropReadProvider {
     else java.sql.Timestamp.valueOf(s).getTime
 
   override protected def open(
-      spark: SparkSession, options: CaseInsensitiveStringMap): InteropRead = {
+      spark: SparkSession, options: CaseInsensitiveStringMap): LakeRead = {
     val loc = path(options)
     // `` `graft-delta`.`path#history` `` (DESCRIBE HISTORY shape, from
     // the log listing alone) and `` #files `` (live add actions —
@@ -492,7 +433,7 @@ class GraftDeltaSource extends InteropReadProvider {
           s"graft-delta: unknown metadata table '$other' " +
             "(history|files|partitions)")
       }
-      return InteropRead(s"graft-delta `$loc#$which`", df.schema,
+      return LakeRead(s"graft-delta `$loc#$which`", df.schema,
         _ => df, _ => (-1L, -1L))
     }
     // CHANGE DATA FEED READ — Delta's own batch reader options
@@ -514,7 +455,7 @@ class GraftDeltaSource extends InteropReadProvider {
       val to = Option(options.get("endingVersion")).map(_.toLong)
         .getOrElse(DeltaTable.latestVersion(spark, loc)) // listing-only
       val df = DeltaTable.changes(spark, loc, from, to)
-      return InteropRead(s"graft-delta `$loc` changes [$from, $to]",
+      return LakeRead(s"graft-delta `$loc` changes [$from, $to]",
         df.schema, _ => df, _ => (-1L, -1L))
     }
     require(!options.containsKey("startingVersion") &&
@@ -538,10 +479,10 @@ class GraftDeltaSource extends InteropReadProvider {
       val schema = StructType(t.schema.fields ++ Seq(
         StructField("_row_id", LongType),
         StructField("_row_commit_version", LongType)))
-      return InteropRead(s"graft-delta `$loc` +row-tracking", schema,
+      return LakeRead(s"graft-delta `$loc` +row-tracking", schema,
         f => t.scanWithRowTracking(f), t.scanStats(_))
     }
-    InteropRead(s"graft-delta `$loc`", t.schema, t.scan(_), t.scanStats(_),
+    val live = LakeRead(s"graft-delta `$loc`", t.schema, t.scan(_), t.scanStats(_),
       aggSupport = Some(new AggSource {
         val schema: StructType = t.schema
         val partitionCols: Set[String] = t.partitionColumnSet
@@ -549,24 +490,19 @@ class GraftDeltaSource extends InteropReadProvider {
         def fold[B](filters: Seq[Filter], zero: B)(seq: (B, AggEntry) => B,
             comb: (B, B) => B): Option[B] = t.foldAggEntries(zero)(seq, comb)
       }),
-      append =
-        if (timeTravel) None // time-travel resolution: read-only
-        else Some(df => graft.lake.delta.DeltaWriter.open(spark, loc).append(df)),
+      append = Some(df => graft.lake.delta.DeltaWriter.open(spark, loc).append(df)),
       deleteWhere = // protocol-standard COW delete (remove + rewrite)
-        if (timeTravel) None
-        else Some(c => graft.lake.delta.DeltaWriter.open(spark, loc).deleteWhere(c)),
+        Some(c => graft.lake.delta.DeltaWriter.open(spark, loc).deleteWhere(c)),
       updateWhere = // protocol-standard COW update (CDC-aware)
-        if (timeTravel) None
-        else Some((c, set) => graft.lake.delta.DeltaWriter.open(spark, loc)
+        Some((c, set) => graft.lake.delta.DeltaWriter.open(spark, loc)
           .updateWhere(c, set)),
       mergeUpsert = // one commit: DV-delete of matched keys + adds
-        if (timeTravel) None
-        else Some((src, keys) => graft.lake.delta.DeltaWriter.open(spark, loc)
+        Some((src, keys) => graft.lake.delta.DeltaWriter.open(spark, loc)
           .upsertKeys(src, keys)),
       mergeDeleteMatched =
-        if (timeTravel) None
-        else Some((keys, keyCols) => graft.lake.delta.DeltaWriter.open(spark, loc)
+        Some((keys, keyCols) => graft.lake.delta.DeltaWriter.open(spark, loc)
           .deleteMatchingDv(keys, keyCols)))
+    if (timeTravel) live.readOnly else live // time travel: read-only
   }
 }
 
@@ -621,7 +557,7 @@ class GraftHudiSource extends InteropReadProvider {
   }
 
   override protected def open(
-      spark: SparkSession, options: CaseInsensitiveStringMap): InteropRead = {
+      spark: SparkSession, options: CaseInsensitiveStringMap): LakeRead = {
     val loc = path(options)
     // `` `graft-hudi`.`path#timeline` `` — the completed-instant
     // timeline as a queryable view
@@ -633,7 +569,7 @@ class GraftHudiSource extends InteropReadProvider {
           s"graft-hudi: unknown metadata table '$other' " +
             "(timeline|partitions)")
       }
-      return InteropRead(s"graft-hudi `$loc#$which`", df.schema,
+      return LakeRead(s"graft-hudi `$loc#$which`", df.schema,
         _ => df, _ => (-1L, -1L))
     }
     def opt(names: String*): Option[String] =
@@ -664,7 +600,7 @@ class GraftHudiSource extends InteropReadProvider {
       val ti = HudiTable.loadAsOf(spark, loc, end) // null = latest
       val schema = StructType(
         StructField("commit_instant", StringType) +: ti.schema.fields)
-      return InteropRead(
+      return LakeRead(
         s"graft-hudi `$loc` incremental ($begin, ${Option(end).getOrElse("latest")}]",
         schema, f => ti.incrementalFrom(begin, f), _ => (-1L, -1L))
     }
@@ -682,7 +618,7 @@ class GraftHudiSource extends InteropReadProvider {
           s"graft-hudi query.type must be snapshot|read_optimized|" +
             s"incremental, got '$other'")
       }
-    InteropRead(s"graft-hudi `$loc`", t.schema, scan, t.scanStats(_),
+    val live = LakeRead(s"graft-hudi `$loc`", t.schema, scan, t.scanStats(_),
       // metadata-only COUNT/MIN/MAX from commit stats and partition
       // values: the snapshot view must refuse with uncompacted log deltas
       // (the merge changes counts); read_optimized serves base slices only
@@ -695,33 +631,28 @@ class GraftHudiSource extends InteropReadProvider {
             comb: (B, B) => B): Option[B] =
           t.foldAggSlices(zero, refuseOnLogs = queryType == "snapshot")(seq)
       }),
-      append =
-        if (options.get("as.of.instant") != null) None // read-only
-        // Hudi's own INSERT operation: fresh file groups, no key dedup
-        // (an upsert is a different operation with merge semantics —
-        // served by HudiWriter.upsert, not a SQL INSERT)
-        else Some(df => graft.lake.hudi.HudiWriter.open(spark, loc).insert(df)),
+      // Hudi's own INSERT operation: fresh file groups, no key dedup
+      // (an upsert is a different operation with merge semantics —
+      // served by HudiWriter.upsert, not a SQL INSERT)
+      append = Some(df => graft.lake.hudi.HudiWriter.open(spark, loc).insert(df)),
       deleteWhere = // MOR log delete (_hoodie_is_deleted records,
         // O(matched)); the writer loud-rejects COW tables — rewriting
         // every touched group for a SQL DELETE is an operator decision,
         // not a default
-        if (options.get("as.of.instant") != null) None
-        else Some(c => graft.lake.hudi.HudiWriter.open(spark, loc)
+        Some(c => graft.lake.hudi.HudiWriter.open(spark, loc)
           .deleteLogWhere(c, requireMatch = false)),
       updateWhere = // keyed upsert of the rewritten rows: MOR log
         // records / COW slice rewrite — Hudi's own update shapes
-        if (options.get("as.of.instant") != null) None
-        else Some((c, set) => graft.lake.hudi.HudiWriter.open(spark, loc)
+        Some((c, set) => graft.lake.hudi.HudiWriter.open(spark, loc)
           .updateWhere(c, set)),
       mergeUpsert = // MERGE keys must equal the table's record key —
         // the only join identity Hudi's upsert honors
-        if (options.get("as.of.instant") != null) None
-        else Some((src, keys) => graft.lake.hudi.HudiWriter.open(spark, loc)
+        Some((src, keys) => graft.lake.hudi.HudiWriter.open(spark, loc)
           .upsertKeys(src, keys)),
       mergeDeleteMatched =
-        if (options.get("as.of.instant") != null) None
-        else Some((keys, keyCols) => graft.lake.hudi.HudiWriter.open(spark, loc)
+        Some((keys, keyCols) => graft.lake.hudi.HudiWriter.open(spark, loc)
           .deleteMatchingKeys(keys, keyCols)))
+    if (options.get("as.of.instant") != null) live.readOnly else live // read-only
   }
 }
 
@@ -842,144 +773,4 @@ class GraftInteropPathRule extends org.apache.spark.sql.catalyst.rules.Rule[
       rewrite(u, timeTravelOptions(fmt, tt.version, tt.timestamp))
     case u: UnresolvedRelation if isOurs(u) => rewrite(u)
   }
-}
-
-/** The shared DSv2 table over a resolved [[InteropRead]]: batch read
-  * always; batch APPEND when the format resolution supplied a writer
-  * hook — which serves the reference's other headline statement,
-  * `INSERT INTO orders VALUES (…)` over an iceberg_am table
-  * (pg_lakehouse_iceberg/README.md:36-40), through both
-  * `spark.sql("INSERT INTO \`graft-iceberg\`.\`loc\` …")` and
-  * `df.write.format("graft-iceberg").mode("append").save(loc)`.
-  * Each INSERT is one native commit of the format (snapshot / Delta
-  * commit / Hudi instant), produced by the existing interop writers —
-  * so the table stays readable by the format's own engines and the
-  * distribution/file-sizing rules those writers already enforce apply
-  * (e.g. the r11 Hudi ceil(bytes/target) group minting). Overwrite
-  * modes are refused loudly (no TRUNCATE capability): graft's
-  * insertOverwrite/deleteWhere surfaces carry replace semantics with
-  * per-format contracts a blanket SQL overwrite would blur. */
-class InteropReadTable(val read: InteropRead) extends Table
-    with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
-  import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
-  import org.apache.spark.sql.sources.InsertableRelation
-
-  override def name(): String = read.name
-  override def schema(): StructType = read.schema
-  override def capabilities(): util.Set[TableCapability] =
-    if (read.append.isDefined)
-      util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE)
-    else util.EnumSet.of(TableCapability.BATCH_READ)
-
-  /** SQL `DELETE FROM \`graft-*\`.\`path\` WHERE …` — one native
-    * row-level delete commit per statement, produced by the format's
-    * writer (Delta: protocol COW delete; Iceberg: v3 deletion vectors;
-    * Hudi: MOR soft-delete log records, COW loud-rejects). Spark only
-    * offers the delete when the WHOLE condition reaches canDeleteWhere,
-    * and graft only accepts the EXACT filter translations — a partial
-    * or inexact WHERE fails the statement instead of deleting the
-    * wrong rows. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    read.deleteWhere.isDefined &&
-      filters.forall(f =>
-        try GraftFilters.toColumnExact(f).isDefined
-        catch { case _: Throwable => false })
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val hook = read.deleteWhere.getOrElse(throw new UnsupportedOperationException(
-      s"${read.name}: read-only resolution (time travel) cannot be deleted from"))
-    val cond = filters.flatMap(GraftFilters.toColumnExact)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true)) // unconditional DELETE
-    hook(cond)
-  }
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new InteropScanBuilder(read)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val doAppend = read.append.getOrElse(throw new UnsupportedOperationException(
-      s"${read.name}: read-only resolution (time-travel reads cannot be written)"))
-    // INSERT resolves by position against schema() with casts, so the
-    // incoming frame already carries the table schema; writers re-check.
-    new WriteBuilder {
-      override def build(): V1Write = new V1Write {
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-              if (overwrite) throw new UnsupportedOperationException(
-                s"${read.name}: only APPEND writes are supported through the " +
-                  "connector; use the format writer's insertOverwrite/deleteWhere")
-              doAppend(data)
-            }
-          }
-      }
-    }
-  }
-}
-
-/** Pushed filters drive metadata file-skipping inside the bridged scan;
-  * filters exactly decidable per file are consumed and a COUNT/MIN/MAX
-  * answered from metadata ([[MetaAggScanBuilder]], shared with
-  * [[GraftScanBuilder]]). Column pruning narrows the bridged plan so the
-  * projection reaches parquet. */
-class InteropScanBuilder(read: InteropRead) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with MetaAggScanBuilder {
-
-  private var required: StructType = read.schema
-
-  protected def aggSource: Option[AggSource] = read.aggSupport
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = aggScan.getOrElse(new InteropV1Scan(read, pushed, required))
-}
-
-class InteropV1Scan(read: InteropRead, pushed: Array[Filter],
-    required: StructType) extends V1Scan with SupportsReportStatistics {
-
-  private def pushedColumn: Option[Column] =
-    pushed.flatMap(GraftFilters.toColumn).reduceOption(_ && _)
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"${read.name} PushedFilters: [${pushed.mkString(", ")}]"
-
-  /** Metadata-derived stats post-pruning: without this the V1 bridge
-    * reports "huge" and a small interop dim would never broadcast. */
-  override def estimateStatistics(): Statistics = {
-    val (bytes, rows) =
-      try read.stats(pushedColumn) catch { case _: Throwable => (-1L, -1L) }
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        if (bytes >= 0) java.util.OptionalLong.of(bytes)
-        else java.util.OptionalLong.empty()
-      override def numRows(): java.util.OptionalLong =
-        if (rows >= 0) java.util.OptionalLong.of(rows)
-        else java.util.OptionalLong.empty()
-    }
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-      override def needConversion: Boolean = true
-      override def buildScan(): RDD[Row] = {
-        // expiring vended credentials refresh BEFORE the scan's IO plans
-        // (r16) — no-op unless a short-TTL vend is registered
-        graft.lake.iceberg.rest.IcebergRestCatalog.refreshExpiredVends(
-          SparkSession.active)
-        val df = read.scan(pushedColumn)
-        val projected =
-          if (required.isEmpty) df.select() // e.g. SELECT count(*)
-          else df.select(required.fieldNames.toIndexedSeq.map(col): _*)
-        projected.rdd
-      }
-    }.asInstanceOf[T]
 }

@@ -569,7 +569,7 @@ object Lake {
   }
 
   /** METADATA-ONLY aggregates: COUNT/MIN/MAX with an identity-partition
-    * filter answered entirely from manifest stats — GraftNativeScanRule
+    * filter answered entirely from manifest stats — MetadataAggregateRule
     * collapses the Aggregate into a one-row LocalRelation, zero data
     * files opened (AggPushdownSpec proves it by deleting them). At 100 TB
     * this is the difference between a manifest walk on the driver and a

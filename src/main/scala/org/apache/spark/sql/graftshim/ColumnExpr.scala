@@ -24,8 +24,9 @@ object ColumnExpr {
 
   /** Catalyst predicate → v1 `sources.Filter` — Spark's own translation
     * (`protected[sql]`), re-exported for graft's metadata-only aggregate
-    * pushdown (GraftNativeScanRule needs the exact translation Spark
-    * would apply, never a re-implementation that could drift). */
+    * collapse and native-scan file pruning (MetadataAggregateRule and
+    * NativeScanRule need the exact translation Spark would apply, never a
+    * re-implementation that could drift). */
   def toV1Filter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = true)

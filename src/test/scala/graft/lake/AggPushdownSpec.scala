@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
 
-/** Metadata-only aggregate pushdown (AggPushdown + GraftScanBuilder).
+/** Metadata-only aggregate pushdown (AggPushdown + LakeScanBuilder).
   *
   * The load-bearing assertions are (a) plan shape — a pushed aggregate has
   * NO Aggregate node left in the optimized plan (complete pushdown turns it
@@ -343,14 +343,14 @@ class AggPushdownSpec extends AnyFunSuite {
   test("V1 scan reports manifest-derived statistics (broadcast sizing)") {
     val o = Tables.orders(spark, sf)
     val t = freshTable("stats", o, partitionBy = Seq("o_orderstatus"))
-    val scan = new graft.lake.sql.GraftScanBuilder(t).build()
+    val scan = new graft.lake.sql.LakeScanBuilder(graft.lake.sql.GraftSqlCatalog.read(t, "stats")).build()
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
     val st = scan.estimateStatistics()
     val files = t.meta.currentSnapshot.get.dataFiles
     assert(st.numRows().getAsLong == files.map(_.rowCount).sum)
     assert(st.sizeInBytes().getAsLong == files.map(_.sizeBytes).sum)
     // with a pushed partition filter, the estimate shrinks to the pruned set
-    val sb = new graft.lake.sql.GraftScanBuilder(t)
+    val sb = new graft.lake.sql.LakeScanBuilder(graft.lake.sql.GraftSqlCatalog.read(t, "stats"))
     sb.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("o_orderstatus", "F")))
     val pruned = sb.build()
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]

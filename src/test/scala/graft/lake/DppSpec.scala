@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
 
-/** DYNAMIC PARTITION PRUNING on lake tables: because GraftNativeScanRule
-  * substitutes a genuine hive-partitioned parquet relation, Spark's own
-  * PartitionPruning rule applies unmodified — a selective dim filter on a
+/** DYNAMIC PARTITION PRUNING on lake tables: because NativeScanRule
+  * substitutes a genuine hive-partitioned parquet relation, in the
+  * operator-optimization batch that runs before Spark's own PartitionPruning
+  * batch, that rule applies unmodified — a selective dim filter on a
   * fact⋈dim join prunes fact partitions AT RUNTIME via the reused
   * broadcast. At 100 TB this is the difference between scanning every
   * partition of the fact table and only the ones the dim rows name.

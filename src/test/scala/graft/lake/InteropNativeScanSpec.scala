@@ -11,16 +11,16 @@ import graft.lake.delta.DeltaWriter
 import graft.lake.hudi.HudiWriter
 import graft.lake.iceberg.IcebergWriter
 
-/** Native-scan substitution for the interop connectors
-  * ([[graft.lake.sql.InteropNativeScanRule]]): reads through
-  * `graft-iceberg` / `graft-delta` / `graft-hudi` must execute the format
-  * reader's own vectorized plan — no `RowDataSourceScanExec` V1 bridge
-  * node (its per-row InternalRow→Row→InternalRow boundary is the cost
-  * the rule removes) — while returning exactly the rows the V1 fallback
-  * returns (`spark.graft.nativeScan.enabled=false` pins the fallback).
-  * DataFrame-chain filters (added AFTER `.load()` analyzed the relation)
-  * must still reach manifest-level file pruning, which is why the rule
-  * runs at optimizer time. */
+/** Native-scan substitution for lake tables of all four formats
+  * ([[graft.lake.sql.NativeScanRule]]): reads through `graft-iceberg` /
+  * `graft-delta` / `graft-hudi` and graft catalog tables must execute the
+  * format reader's own vectorized plan — no `RowDataSourceScanExec` V1
+  * bridge node (its per-row InternalRow→Row→InternalRow boundary is the
+  * cost the rule removes) — while returning exactly the rows the V1
+  * fallback returns (`spark.graft.nativeScan.enabled=false` pins the
+  * fallback). DataFrame-chain filters (added AFTER `.load()` or
+  * `spark.table` analyzed the relation) must still reach file pruning,
+  * which is why the rule runs at optimizer time. */
 class InteropNativeScanSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -244,5 +244,26 @@ class InteropNativeScanSpec extends AnyFunSuite {
       s"DELETE FROM `graft-iceberg`.`$loc` WHERE o_orderpriority = '1-URGENT'")
     assert(spark.read.format("graft-iceberg").load(loc).count() == before - gone,
       "DELETE must still land through the connector under the optimizer rule")
+  }
+
+  test("graft catalog table: DataFrame-chain filter still file-prunes") {
+    val cat = "graft_native_chain"
+    val wh = freshDir("graft-chain-wh")
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.lake.sql.GraftSqlCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    // two commits over disjoint key ranges: file min/max stats decide a
+    // key range without any partition column
+    val cut = orders.agg(expr("percentile_approx(o_orderkey, 0.5)")).head().getLong(0)
+    val t = GraftTable.create(spark, s"$wh/t", orders.filter(col("o_orderkey") < cut))
+    t.append(orders.filter(col("o_orderkey") >= cut))
+    val total = t.planFiles().size
+
+    // the relation is analyzed by spark.table; the filter arrives after
+    val q = spark.table(s"$cat.t").filter(col("o_orderkey") < cut)
+    val planned = graft.lake.sql.PlanFiles.planned(q)
+    assert(planned > 0 && planned < total,
+      s"stats pruning must skip the upper range's files ($planned of $total planned)")
+    assert(q.count() == orders.filter(col("o_orderkey") < cut).count())
   }
 }

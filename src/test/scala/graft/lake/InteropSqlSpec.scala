@@ -1150,9 +1150,12 @@ class InteropSqlSpec extends AnyFunSuite {
     val where = "o_orderstatus IN ('F', 'O') AND o_orderstatus <> 'P' AND o_orderstatus >= 'F'"
     spark.conf.set("spark.graft.iceberg.aggFoldThresholdBytes", "0")
     try {
-      val q = spark.sql(
-        s"SELECT count(*) AS n, min(o_orderkey) AS mn FROM `graft-iceberg`.`$loc` WHERE $where")
-      val jobs = jobsDuring(q.queryExecution.optimizedPlan)
+      var q: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring { // analysis and optimization: where the fold runs
+        q = spark.sql(
+          s"SELECT count(*) AS n, min(o_orderkey) AS mn FROM `graft-iceberg`.`$loc` WHERE $where")
+        q.queryExecution.optimizedPlan
+      }
       assert(collapsed(q), "the 3-filter aggregate must collapse to metadata")
       assert(jobs == 1, s"planning a 3-filter aggregate ran $jobs jobs, not one fold")
       val want = o.filter(col("o_orderstatus").isin("F", "O"))
@@ -1173,8 +1176,10 @@ class InteropSqlSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.delta.stateCollectThresholdBytes", "0")
     try {
       def planJobs(sql: String): (org.apache.spark.sql.DataFrame, Int) = {
-        val q = spark.sql(sql) // analysis loads the (lazy) table state
-        (q, jobsDuring(q.queryExecution.optimizedPlan))
+        var q: org.apache.spark.sql.DataFrame = null
+        // analysis (table state load + the fold) and optimization
+        val jobs = jobsDuring { q = spark.sql(sql); q.queryExecution.optimizedPlan }
+        (q, jobs)
       }
       val (q, jobs) = planJobs(
         s"SELECT count(*) AS n, min(o_orderkey) AS mn FROM `graft-delta`.`$loc` WHERE $where")
@@ -1223,5 +1228,44 @@ class InteropSqlSpec extends AnyFunSuite {
     val c = spark.sql(s"SELECT count(o_orderkey) AS n FROM `graft-delta`.`$loc`")
     assert(collapsed(c), "a zero-row file holds no value to count")
     assert(c.head().getLong(0) == o.count())
+  }
+
+  test("iceberg and delta: predicates the optimizer half-simplifies still collapse to metadata") {
+    // the optimizer rewrites `p < 'O' OR p >= 'O'` into
+    // `NOT isnull(p < 'O') OR false`, which no v1 filter expresses; the
+    // collapse sees the predicates at resolution, as written
+    val src = orders.withColumn("p",
+      when(col("o_orderkey") % 11 === 0, lit(null: String)).otherwise(col("o_orderstatus")))
+    src.createOrReplaceTempView("half_simplified_src")
+    val iLoc = freshDir("half-simplified-ice")
+    IcebergWriter.create(spark, iLoc, src.schema,
+      partition = Seq("p" -> "identity")).append(src)
+    val dLoc = freshDir("half-simplified-delta")
+    DeltaWriter.create(spark, dLoc, src.schema, partitionColumns = Seq("p")).append(src)
+    for {
+      from <- Seq(s"`graft-iceberg`.`$iLoc`", s"`graft-delta`.`$dLoc`")
+      where <- Seq("p < 'O' OR p >= 'O'", "NOT p <=> 'F' OR (p < 'F' AND p >= 'F')")
+    } {
+      val sql = s"SELECT count(*) AS n FROM %s WHERE $where"
+      val q = spark.sql(sql.format(from))
+      assert(collapsed(q) && graft.lake.sql.PlanFiles.planned(q) == 0,
+        s"$from WHERE $where must be answered from metadata:\n${q.queryExecution.optimizedPlan}")
+      assert(q.collect().toSeq == spark.sql(sql.format("half_simplified_src")).collect().toSeq,
+        s"$from WHERE $where")
+    }
+  }
+
+  test("delta: a cast literal and a temp view still collapse to metadata") {
+    // the collapse runs at resolution, ahead of ConstantFolding and
+    // EliminateView: `pl = 2` on a BIGINT column is still
+    // `pl = CAST(2 AS BIGINT)`, and a temp view still wraps its plan
+    val src = orders.select(col("o_orderkey"), (col("o_orderkey") % 3).as("pl"))
+    val loc = freshDir("cast-view-delta")
+    DeltaWriter.create(spark, loc, src.schema, partitionColumns = Seq("pl")).append(src)
+    spark.read.format("graft-delta").load(loc).createOrReplaceTempView("cast_view_delta")
+    val q = spark.sql("SELECT count(*) AS n, max(o_orderkey) AS mx FROM cast_view_delta WHERE pl = 2")
+    assert(collapsed(q) && graft.lake.sql.PlanFiles.planned(q) == 0,
+      s"must be answered from metadata:\n${q.queryExecution.optimizedPlan}")
+    assert(q.head() == src.filter(col("pl") === 2).agg(count(lit(1)), max("o_orderkey")).head())
   }
 }
