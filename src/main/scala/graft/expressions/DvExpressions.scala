@@ -8,17 +8,17 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.lake.delta.RoaringBitmapArray
 
-/** Deletion-vector row mask as a native codegen expression — replaces
-  * the per-row Scala UDF the Delta/Iceberg DV'd scans carried at six
-  * sites (r10 verdict What's-wrong #4; [[IcebergBucket]] is the
-  * precedent): `dv_keep(file_path, row_index)` is true iff the row's
-  * file has no DV or its bitmap does not hold the row index.
+/** Deletion-vector row mask as a native codegen expression (no per-row
+  * Scala UDF; [[IcebergBucket]] is the precedent):
+  * `dv_keep(file_path, row_index)` is true iff the row's file has no DV
+  * or its bitmap does not hold the row index. Built only by
+  * `graft.lake.RowDeletes.keep`, for Iceberg and Delta.
   *
   * `lookup` maps a RAW file path to its bitmap (null = no DV for that
-  * file); callers capture their broadcast descriptor map + executor
-  * bitmap cache in the closure, exactly as the old UDFs did — but the
-  * expression stays inside whole-stage codegen (no ScalaUDF
-  * external-conversion boundary) and MEMOIZES the last file's bitmap:
+  * file); the caller captures its broadcast DV map + executor
+  * bitmap cache in the closure. The expression stays inside whole-stage
+  * codegen (no ScalaUDF external-conversion boundary) and MEMOIZES the
+  * last file's bitmap:
   * parquet rows arrive file-contiguous, so the per-row cost collapses to
   * one UTF8String equality + one Roaring `contains`, with `lookup` (path
   * decode + map probe + cache hit) paid once per file per task. */
@@ -61,7 +61,7 @@ case class DvKeep(left: Expression, right: Expression,
 }
 
 object DvKeep {
-  /** Column-API wrapper: `DvKeep.column(pathCol, idxCol, lookup)`. */
+  /** Column-API wrapper over the expression. */
   def column(path: org.apache.spark.sql.Column,
       rowIndex: org.apache.spark.sql.Column,
       lookup: String => RoaringBitmapArray): org.apache.spark.sql.Column =

@@ -35,16 +35,3 @@ private[graft] final class BlobCache[K, V](maxEntries: Int) {
     * blobs from disk). Never needed in production — values are immutable. */
   private[graft] def invalidateAll(): Unit = m.clear()
 }
-
-private[graft] object BlobCache {
-  /** Executor-side deletion-vector bitmaps of Delta and Iceberg, keyed by
-    * the blob's identity: `delta:<location>#<file>#<pathOrInlineDv>` (the
-    * descriptor is part of the key — an extended DV replaces the file's
-    * descriptor wholesale, and a file-only key would keep serving the
-    * superseded bitmap, resurrecting newly deleted rows) and
-    * `iceberg:<puffin path>#<blob offset>`. BOUNDED: a streaming delete
-    * workload writes a new blob (a new key) every micro-batch and
-    * superseded keys are never evicted, so an unbounded map accumulates
-    * every historical DV on long-lived executors until OOM. */
-  private[lake] val dvBitmaps = new BlobCache[String, delta.RoaringBitmapArray](256)
-}

@@ -24,11 +24,12 @@ import scala.collection.mutable.ArrayBuffer
   * Scale notes (100 TB): all metadata ops are O(files) on the driver — no
   * data moves through it. Scans are plain vectorized parquet reads, so
   * Catalyst still pushes filters/projections into the surviving files, AQE
-  * still re-plans, and whole-stage codegen is unaffected. Delete files are
-  * applied as an anti-join whose build side is the (small) delete key set —
-  * Catalyst auto-broadcasts it under the threshold, and falls back to a
-  * shuffle join when a table has accumulated huge delete sets (at which
-  * point `compact()` is the real answer).
+  * still re-plans, and whole-stage codegen is unaffected. Delete files
+  * apply through [[RowDeletes]] as null-safe anti-joins on (file, row
+  * index) or on the key columns, whose build side is the (small) delete
+  * set — Catalyst auto-broadcasts it under the threshold, and
+  * falls back to a shuffle join when a table has accumulated huge delete
+  * sets (at which point `compact()` is the real answer).
   *
   * Layout under `location`:
   * {{{
@@ -36,7 +37,7 @@ import scala.collection.mutable.ArrayBuffer
   *   metadata/ml-<nonce>.json — per-snapshot manifest list (manifest paths)
   *   metadata/mf-<nonce>.json — immutable manifest: file entries + stats
   *   data/[p=v/...]s<seq>-f<nonce>-00000.parquet
-  *   deletes/s<seq>-f<nonce>-00000.parquet   — equality-delete keys
+  *   deletes/s<seq>-f<nonce>-00000.parquet   — equality-delete keys or positions
   * }}}
   * A commit writes metadata O(its own new files): one manifest, one
   * manifest list of pointers, one pointer-log version. Parent manifests are
@@ -310,60 +311,63 @@ class GraftTable private (
       withMeta: Boolean = false): DataFrame = {
     if (surviving.isEmpty) emptyDf(sch)
     else {
-          // Equality deletes follow Iceberg v2 sequence rules: a delete file
-          // at seq t applies to data files with seq < t — so rows rewritten
-          // by the same commit that wrote the delete are not re-deleted.
-          //
-          // Files are grouped by their APPLICABLE DELETE SET (plus the
-          // partition-dir layout, so hive discovery stays consistent per
-          // read, and the SCHEMA EPOCH, so rename/drop evolution resolves
-          // old physical names by field id), NOT by sequence number: with
-          // no deletes — the common case, and always right after compact()
-          // — every surviving file reads through ONE scan node. Plan size
-          // is O(delete boundaries × partition specs × schema epochs),
-          // never O(snapshots); the r02 per-seq grouping made a
-          // streaming-ingested table's plan grow one union branch per
-          // micro-batch commit (r02 verdict scale-killer #2).
-          val delSeqs = snap.deleteFiles.map(_.seq).distinct.sorted
-          // group key: index into delSeqs of the first delete applying to
-          // the file — the applicable set {d | d.seq > f.seq} is a suffix
-          // of delSeqs, so equal indices share the exact delete set
-          def delFrom(fileSeq: Long): Int = {
-            var i = delSeqs.length
-            while (i > 0 && delSeqs(i - 1) > fileSeq) i -= 1
-            i
-          }
-          val groups = surviving
-            .groupBy(f => (delFrom(f.seq), m.epochIndexFor(f.seq), partitionLayout(f)))
-            .toSeq.sortBy { case ((di, ei, lay), _) => (di, ei, lay.mkString(",")) }
-          groups.map { case ((di, ei, _), files) =>
-            val dels = snap.deleteFiles.filter(d => delSeqs.drop(di).contains(d.seq))
-            val (posDels, eqDels) = dels.partition(_.kindOr == "pos")
-            val needMeta = withMeta || posDels.nonEmpty
-            var df = readEpochFiles(m, sch, ei, files, needMeta)
-            if (posDels.nonEmpty) {
-              // positional anti-join on (file URI, row ordinal) — Iceberg
-              // v2 position deletes; coordinates written by this table's
-              // own scan, so the URI normalization matches by construction
-              val pd = spark.read
-                .parquet(posDels.map(d => s"$location/${d.path}"): _*)
-                .select(col("file_path").as(GraftTable.PosFileCol),
-                  col("pos").as(GraftTable.PosIdxCol))
-              df = df.join(pd, Seq(GraftTable.PosFileCol, GraftTable.PosIdxCol), "left_anti")
-            }
-            if (eqDels.nonEmpty && m.keyColumns.nonEmpty) {
-              // key columns cannot be renamed/dropped (DDL rejects it), so
-              // delete-file names always match the current schema
-              val keys = spark.read
-                .parquet(eqDels.map(d => s"$location/${d.path}"): _*)
-                .select(m.keyColumns.map(col): _*)
-              df = df.join(keys, m.keyColumns, "left_anti")
-            }
-            if (!withMeta && posDels.nonEmpty)
-              df = df.drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
-            df
-          }.reduce(_ unionByName _)
+      // Deletes follow Iceberg v2 sequence rules: a delete file at seq t
+      // applies to data files with seq < t — so rows rewritten by the
+      // same commit that wrote the delete are not re-deleted.
+      //
+      // Files are grouped by their APPLICABLE DELETE SET (plus the
+      // partition-dir layout, so hive discovery stays consistent per
+      // read, and the SCHEMA EPOCH, so rename/drop evolution resolves old
+      // physical names by field id), NOT by sequence number: with no
+      // deletes — the common case, and always right after compact() —
+      // every surviving file reads through ONE scan node. Plan size is
+      // O(delete boundaries × partition specs × schema epochs), never
+      // O(snapshots).
+      val delSeqs = snap.deleteFiles.map(_.seq).distinct.sorted.toIndexedSeq
+      val groups = surviving
+        .groupBy(f => (RowDeletes.applicable(delSeqs, f.seq, inclusive = false),
+          m.epochIndexFor(f.seq), partitionLayout(f)))
+        .toSeq.sortBy { case ((di, ei, lay), _) => (di, ei, lay.mkString(",")) }
+      groups.map { case ((di, ei, _), files) =>
+        val dels = snap.deleteFiles.filter(d => delSeqs.drop(di).contains(d.seq))
+        val (posDels, eqDels) = dels.partition(_.kindOr == "pos")
+        var df = readEpochFiles(m, sch, ei, files, withMeta || posDels.nonEmpty)
+        if (posDels.nonEmpty) df = RowDeletes.antiJoin(df, posCoords, positionDeletes(posDels))
+        if (eqDels.nonEmpty && m.keyColumns.nonEmpty)
+          df = RowDeletes.antiJoin(df, m.keyColumns.map(quotedCol),
+            eqDeleteKeys(m, sch, eqDels))
+        if (!withMeta && posDels.nonEmpty)
+          df = df.drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
+        df
+      }.reduce(_ unionByName _)
     }
+  }
+
+  /** (file, row index) of a `withMeta` scan row, matched against
+    * [[positionDeletes]]. The coordinates were written from this table's
+    * own scan, so a file's key is its `_metadata.file_path` as is. */
+  private def posCoords: Seq[Column] =
+    Seq(col(GraftTable.PosFileCol), col(GraftTable.PosIdxCol))
+
+  private def positionDeletes(posDels: Seq[DeleteFileMeta]): DataFrame =
+    RowDeletes.positions(spark, posDels.map(d => s"$location/${d.path}"), identity)
+
+  /** Key rows of equality-delete files, matched null-safe. A `nullSafe`
+    * file is read at the key columns' schema fields: key columns cannot
+    * be renamed, dropped or widened (DDL rejects it), so it holds them as
+    * `sch` does. Files written before that marker were matched with `=`
+    * and may hold the writer's source key types: they are read as
+    * written, cast to the key types, and lose their rows with a NULL key,
+    * which `=` never matched. */
+  private def eqDeleteKeys(m: TableMetadata, sch: StructType,
+      eqDels: Seq[DeleteFileMeta]): DataFrame = {
+    val keySch = StructType(m.keyColumns.map(sch(_)))
+    def paths(ds: Seq[DeleteFileMeta]) = ds.map(d => s"$location/${d.path}")
+    val (marked, legacy) = eqDels.partition(_.nullSafe)
+    val keys = Option.when(marked.nonEmpty)(spark.read.schema(keySch).parquet(paths(marked): _*))
+    val old = Option.when(legacy.nonEmpty)(spark.read.parquet(paths(legacy): _*)
+      .select(keySch.fields.map(f => quotedCol(f.name).cast(f.dataType)): _*).na.drop())
+    (keys ++ old).reduce(_ union _)
   }
 
   /** Reads one epoch-consistent file group with its PHYSICAL schema and
@@ -456,13 +460,17 @@ class GraftTable private (
 
   /** MoR delete of an EXPLICIT key set (the `MERGE … WHEN MATCHED THEN
     * DELETE` shape): one equality-delete commit of the given keys, no
-    * scan of the table at all — write amplification O(|keys|). */
+    * scan of the table at all — write amplification O(|keys|). Reads
+    * match keys null-safe, but MERGE's `=` never matches a NULL, so the
+    * upsert-shaped writers (this one, [[upsert]], [[upsertStreamBatch]])
+    * leave NULL keys out of the key file they write. */
   def deleteKeys(keys: DataFrame): Long = {
     val m = refresh()
     require(m.keyColumns.nonEmpty, "MoR delete needs keyColumns")
     val seq = nextId(m)
-    val delFile = writeDeleteFile(
-      keys.select(m.keyColumns.map(col): _*).distinct(), seq)
+    // at the table's key types, the types reads take key files at
+    val delFile = writeDeleteFile(align(keys.select(m.keyColumns.map(col): _*),
+      StructType(m.keyColumns.map(schema(_)))).na.drop().distinct(), seq)
     commitRetrying(m, "delete", seq, Nil, delFile, MergeUnlessNewData)
   }
 
@@ -502,7 +510,8 @@ class GraftTable private (
 
   /** MoR MERGE/upsert: source rows replace target rows with matching keys
     * and insert otherwise, in ONE commit — an equality-delete of the
-    * source's key set plus an append of the full source. The new data
+    * source's key set (NULL keys left out: a NULL-key source row only
+    * inserts) plus an append of the full source. The new data
     * files carry the commit's own seq, and the delete applies only to
     * seq < its own, so the incoming rows are never swallowed. Write
     * amplification is O(|source|), never O(table) — the point of
@@ -514,7 +523,7 @@ class GraftTable private (
     val aligned = align(source, schema)
     val newFiles = writeDataFiles(aligned, seq)
     val delFile = writeDeleteFile(
-      aligned.select(m.keyColumns.map(col): _*).distinct(), seq)
+      aligned.select(m.keyColumns.map(col): _*).na.drop().distinct(), seq)
     commitRetrying(m, "upsert", seq, newFiles, delFile, MergeAny)
   }
 
@@ -598,7 +607,8 @@ class GraftTable private (
     *
     *  - append            → its new rows as `insert`
     *  - delete            → the removed rows (parent-snapshot state
-    *                        semi-joined with the commit's delete keys) as
+    *                        semi-joined with the commit's delete keys, or
+    *                        with its position deletes on (file, row)) as
     *                        `delete`
     *  - update / upsert   → `delete` rows for the PRIOR versions of
     *                        matched keys + `insert` rows for the rewrites
@@ -663,25 +673,18 @@ class GraftTable private (
       val parentSnap = m.snapshot(base.parentId)
       val dels = run.flatMap(s => s.deleteFilesAt(s.id)).toSeq
       val (posDels, eqDels) = dels.partition(_.kindOr == "pos")
-      if (eqDels.nonEmpty && m.keyColumns.nonEmpty) {
-        val keys = spark.read
-          .parquet(eqDels.map(d => s"$location/${d.path}"): _*)
-          .select(m.keyColumns.map(col): _*)
-        frames += buildScan(m, sch, parentSnap, parentSnap.dataFiles)
-          .join(keys, m.keyColumns, "left_semi")
+      if (eqDels.nonEmpty && m.keyColumns.nonEmpty)
+        frames += RowDeletes.semiJoin(buildScan(m, sch, parentSnap, parentSnap.dataFiles),
+          m.keyColumns.map(quotedCol), eqDeleteKeys(m, sch, eqDels))
           .withColumn(ct, lit("delete"))
-      }
       if (posDels.nonEmpty) {
         // positional: the removed rows are the base-state rows at the
         // recorded (file URI, ordinal) coordinates — the file set is
         // constant across a pure-delete run, so every run coordinate
         // resolves against the base
-        val pd = spark.read
-          .parquet(posDels.map(d => s"$location/${d.path}"): _*)
-          .select(col("file_path").as(GraftTable.PosFileCol),
-            col("pos").as(GraftTable.PosIdxCol))
-        frames += buildScan(m, sch, parentSnap, parentSnap.dataFiles, withMeta = true)
-          .join(pd, Seq(GraftTable.PosFileCol, GraftTable.PosIdxCol), "left_semi")
+        frames += RowDeletes.semiJoin(
+            buildScan(m, sch, parentSnap, parentSnap.dataFiles, withMeta = true),
+            posCoords, positionDeletes(posDels))
           .drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
           .withColumn(ct, lit("delete"))
       }
@@ -792,7 +795,7 @@ class GraftTable private (
     val aligned = align(df, schema)
     val newFiles = writeDataFiles(aligned, seq)
     val delFile = writeDeleteFile(
-      aligned.select(m.keyColumns.map(col): _*).distinct(), seq)
+      aligned.select(m.keyColumns.map(col): _*).na.drop().distinct(), seq)
     val snap = commitRetrying(m, "upsert", seq, newFiles, delFile, MergeAny,
       propUpdates = Map(key -> batchId.toString))
     inlineMaintain(batchId)
@@ -1603,7 +1606,7 @@ class GraftTable private (
       }
     } { (_, i) => new Path(destDir, f"s$seq-f$nonce-$i%05d.parquet")
     }.map { case (dest, _, footer) =>
-      DeleteFileMeta(s"deletes/${dest.getName}", seq, footer.rows, kind)
+      DeleteFileMeta(s"deletes/${dest.getName}", seq, footer.rows, kind, nullSafe = kind == "eq")
     }
   }
 

@@ -70,17 +70,21 @@ case class DataFileMeta(
   def bloomsOr: Map[String, String] = if (blooms == null) Map.empty else blooms
 }
 
-/** `kind`: "eq" = equality delete (key-column rows; applies by anti-join
-  * on the table's key columns) or "pos" = positional delete (Iceberg
-  * v2's second delete type: full data-file URI + row ordinal, applies by
-  * anti-join on `_metadata.file_path`/`row_index`) — the delete path for
-  * tables WITHOUT key columns. Metadata written before the field existed
-  * deserializes kind=null → treated as "eq". */
+/** `kind`: "eq" = equality delete (key-column rows; applies by null-safe
+  * anti-join on the table's key columns) or "pos" = positional delete
+  * (Iceberg v2's second delete type: full data-file URI + row ordinal,
+  * applies by anti-join on `_metadata.file_path`/`row_index`) — the
+  * delete path for tables WITHOUT key columns. Metadata written before the
+  * field existed deserializes kind=null → treated as "eq". `nullSafe`
+  * marks equality files written at the table's key types whose NULL keys
+  * match NULL; older files (false) were matched with `=`, so their NULL
+  * keys match nothing. */
 case class DeleteFileMeta(
     path: String,
     seq: Long,
     rowCount: Long,
-    kind: String = "eq") {
+    kind: String = "eq",
+    nullSafe: Boolean = false) {
   def kindOr: String = if (kind == null) "eq" else kind
 }
 

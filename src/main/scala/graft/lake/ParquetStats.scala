@@ -128,10 +128,11 @@ object ParquetStats {
   }
 
   /** One file's adoption payload: everything a metadata-only convert /
-    * adopt / commit needs — footer row count + column stats, plus the
-    * FileStatus fields — gathered in the same pass. */
+    * adopt / commit needs — footer row count, column stats and null
+    * counts (kept apart: an all-NULL column has no min/max, so no `stats`
+    * entry, but an exact null count), plus the FileStatus fields. */
   final case class FileFooter(rows: Long, stats: Map[String, ColStats],
-      size: Long, mtime: Long)
+      nulls: Map[String, Long], size: Long, mtime: Long)
 
   /** Footer payloads for MANY files, keyed by `_.toString` of the input
     * paths. Above `threshold` files the reads run as a SPARK JOB
@@ -163,15 +164,15 @@ object ParquetStats {
     * size/mtime fields and the footer reader. */
   def footer(conf: Configuration, file: Path): FileFooter = {
     val st = file.getFileSystem(conf).getFileStatus(file)
-    val (rows, stats) = read(HadoopInputFile.fromStatus(st, conf))
-    FileFooter(rows, stats, st.getLen, st.getModificationTime)
+    val (rows, stats, nulls) = read(HadoopInputFile.fromStatus(st, conf))
+    FileFooter(rows, stats, nulls, st.getLen, st.getModificationTime)
   }
 
-  /** @return (rowCount, per-column stats) */
-  def read(conf: Configuration, file: Path): (Long, Map[String, ColStats]) =
+  /** @return (rowCount, per-column stats, per-column null counts) */
+  def read(conf: Configuration, file: Path): (Long, Map[String, ColStats], Map[String, Long]) =
     read(HadoopInputFile.fromPath(file, conf))
 
-  private def read(in: HadoopInputFile): (Long, Map[String, ColStats]) = {
+  private def read(in: HadoopInputFile): (Long, Map[String, ColStats], Map[String, Long]) = {
     val reader = ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
@@ -196,7 +197,11 @@ object ParquetStats {
       val stats = acc.collect { case (name, (tag, mn, mx, nulls, true)) =>
         name -> ColStats(tag, mn, mx, nulls)
       }.toMap
-      (rowCount, stats)
+      val nulls = blocks.flatMap(_.getColumns.asScala).groupBy(_.getPath.toDotString)
+        .collect { case (name, ccs) if ccs.forall(c =>
+            c.getStatistics != null && c.getStatistics.isNumNullsSet) =>
+          name -> ccs.map(_.getStatistics.getNumNulls).sum }
+      (rowCount, stats, nulls)
     } finally reader.close()
   }
 

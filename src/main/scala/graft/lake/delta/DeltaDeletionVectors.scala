@@ -28,7 +28,7 @@ import org.roaringbitmap.RoaringBitmap
   *
   * Scale note: a DV is per-FILE metadata sized by deleted-row count
   * (compressed); readers deserialize each file's DV once per executor
-  * (through `BlobCache.dvBitmaps`), never per row.
+  * (through the DV cache of `graft.lake.RowDeletes`), never per row.
   */
 object Z85 {
   private val Alphabet =

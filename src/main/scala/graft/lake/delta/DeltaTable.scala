@@ -1,13 +1,12 @@
 package graft.lake.delta
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{AggEntry, BlobCache, ColStats, DataFileMeta, FilePruner, Meta, ParquetStats}
+import graft.lake.{AggEntry, ColStats, DataFileMeta, FilePruner, Meta, ParquetStats, RowDeletes}
 
 /** Read-only Delta Lake table reader — the SECOND real-format interop
   * surface (the reference lists Delta under future support,
@@ -351,6 +350,17 @@ final class DeltaTable private (
 
   // ---- scan ----------------------------------------------------------------
 
+  /** Position mask over the deletion vectors of `live` files (None when
+    * no file carries one). */
+  private def dvMask(live: Seq[DeltaTable.AddFile]): Option[Column] = {
+    val dvs: Map[String, RowDeletes.Dv] = live.flatMap(a => a.deletionVector.map(d =>
+      DeltaTable.pathKey(DeltaTable.resolve(location, a.path).toString) ->
+        RowDeletes.DeltaDv(location, d))).toMap
+    if (dvs.isEmpty) None
+    else Some(RowDeletes.keep(spark, ParquetStats.scanFilePath,
+      col("_metadata.row_index"), DeltaTable.pathKey, dvs))
+  }
+
   def scan(filter: Option[Column] = None): DataFrame = {
     val live = prunedAdds(filter)
     if (live.isEmpty)
@@ -359,19 +369,7 @@ final class DeltaTable private (
     if (meta.columnMappingMode == "id")
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
-    // deletion vectors: executors lazily load + cache each file's bitmap
-    // (never the driver — O(DV'd files) stays off the driver at scale)
-    // and drop rows whose _metadata.row_index the bitmap holds
-    val dvDescs: Map[String, DeletionVectors.Descriptor] = live.flatMap { a =>
-      a.deletionVector.map { d =>
-        DeltaTable.pathKey(
-          DeltaTable.resolve(location, a.path).toString) -> d
-      }
-    }.toMap
-    val keepRow: Option[Column] = if (dvDescs.isEmpty) None else
-      Some(DeltaTable.dvKeepColumn(spark, location,
-        spark.sessionState.newHadoopConf(), dvDescs,
-        ParquetStats.scanFilePath, col("_metadata.row_index")))
+    val keepRow = dvMask(live)
 
     // ONE scan node for every live file (plan width must not grow with
     // partition count — a 10k-partition table cannot plan 10k scan
@@ -486,16 +484,7 @@ final class DeltaTable private (
         "before row tracking was enabled? its ids cannot be " +
         "reconstructed, refusing"))
 
-    val dvDescs: Map[String, DeletionVectors.Descriptor] = live.flatMap { a =>
-      a.deletionVector.map { d =>
-        DeltaTable.pathKey(
-          DeltaTable.resolve(location, a.path).toString) -> d
-      }
-    }.toMap
-    val keepRow: Option[Column] = if (dvDescs.isEmpty) None else
-      Some(DeltaTable.dvKeepColumn(spark, location,
-        spark.sessionState.newHadoopConf(), dvDescs,
-        ParquetStats.scanFilePath, col("_metadata.row_index")))
+    val keepRow = dvMask(live)
 
     val logicalDataCols = meta.schema.fieldNames
       .filterNot(meta.partitionColumns.contains)
@@ -999,9 +988,9 @@ object DeltaTable {
       // subtract already-masked rows (same executor-side lazy bitmap
       // shape as scan()): a DV'd row was deleted in an EARLIER version,
       // so the remove-only commit must not re-emit it
-      df = df.filter(dvKeepColumn(spark, location,
-        spark.sessionState.newHadoopConf(), dvByFile,
-        ParquetStats.scanFilePath, col("_metadata.row_index")))
+      df = df.filter(RowDeletes.keep(spark, ParquetStats.scanFilePath,
+        col("_metadata.row_index"), pathKey,
+        dvByFile.map { case (k, d) => k -> RowDeletes.DeltaDv(location, d) }))
     }
     val pvSchema = StructType(
       StructField("__fp", StringType) +:
@@ -1332,29 +1321,6 @@ object DeltaTable {
     regexp_replace(
       regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
       "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/")
-
-  /** Shared DV row mask (r11, replaces five per-row-UDF copies): a
-    * native codegen [[graft.expressions.DvKeep]] over a broadcast
-    * descriptor map + the executor bitmap cache — true iff the row's
-    * file has no DV or the bitmap excludes its row index. Per-row cost
-    * inside whole-stage codegen: one UTF8String compare + Roaring
-    * `contains` (bitmap resolution memoized per file per task). */
-  private[delta] def dvKeepColumn(spark: SparkSession, location: String,
-      conf: Configuration, dvs: Map[String, DeletionVectors.Descriptor],
-      pathCol: Column, idxCol: Column): Column = {
-    val bcConf = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(conf))
-    val bcDvs = spark.sparkContext.broadcast(dvs)
-    val loc = location
-    graft.expressions.DvKeep.column(pathCol, idxCol, raw => {
-      val key = pathKey(raw)
-      bcDvs.value.get(key) match {
-        case Some(d) => BlobCache.dvBitmaps.get(s"delta:$loc#$key#${d.pathOrInlineDv}")(
-          DeletionVectors.load(bcConf.value.value, loc, d))
-        case None => null
-      }
-    })
-  }
 
   /** ISO-8601 timestamp (Z / offset / bare local form) → epoch micros
     * at UTC, matching graft's session timezone. */

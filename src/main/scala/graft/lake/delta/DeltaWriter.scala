@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{CommitIo, HivePartitionedRead, ParquetStats}
+import graft.lake.{CommitIo, HivePartitionedRead, ParquetStats, RowDeletes}
 
 /** Minimal Delta Lake WRITER conforming to the published transaction
   * protocol (delta-io/delta PROTOCOL.md): parquet data files under
@@ -430,8 +430,8 @@ final class DeltaWriter private (
     // already are — the files were written physically)
     dataSchema.fields.foreach { f =>
       val pn = phys(f.name)
+      footer.nulls.get(pn).foreach(nullN.put(pn, _))
       stats.get(pn).foreach { cs =>
-        nullN.put(pn, cs.nulls)
         (cs.tag, f.dataType) match {
           case ("l", DateType) => // epoch days → ISO, the spec's form
             minN.put(pn, java.time.LocalDate.ofEpochDay(cs.min.toLong).toString)
@@ -560,6 +560,15 @@ final class DeltaWriter private (
         d.get("sizeInBytes").asInt, d.get("cardinality").asLong))
     } else None
 
+  /** Position mask over the DVs of the live `adds` (None when none
+    * carries one). */
+  private def dvMask(adds: Seq[ObjectNode], path: Column, rowIndex: Column): Option[Column] = {
+    val dvs: Map[String, RowDeletes.Dv] = adds.flatMap(n => dvDescOf(n.get("add")).map(d =>
+      DeltaTable.pathKey(DeltaTable.resolve(location, relOf(n.get("add"))).toString) ->
+        RowDeletes.DeltaDv(location, d))).toMap
+    if (dvs.isEmpty) None else Some(RowDeletes.keep(spark, path, rowIndex, DeltaTable.pathKey, dvs))
+  }
+
   /** One distributed read over any affected-file set — the shared front
     * end of the one-pass COW rewrite ops: logical data columns, DV masks
     * applied, partition columns injected through a broadcast
@@ -580,16 +589,8 @@ final class DeltaWriter private (
         StructField(DeltaWriter.MatRowIdCol, LongType),
         StructField(DeltaWriter.MatRowVerCol, LongType)))
     var df = spark.read.schema(physData).parquet(paths: _*)
-    val dvs: Map[String, DeletionVectors.Descriptor] = adds.flatMap { n =>
-      dvDescOf(n.get("add")).map { d =>
-        DeltaTable.pathKey(DeltaTable.resolve(location,
-          relOf(n.get("add"))).toString) -> d
-      }
-    }.toMap
-    if (dvs.nonEmpty) {
-      df = df.filter(DeltaTable.dvKeepColumn(spark, location, conf, dvs,
-        ParquetStats.scanFilePath, col("_metadata.row_index")))
-    }
+    dvMask(adds, ParquetStats.scanFilePath, col("_metadata.row_index"))
+      .foreach(k => df = df.filter(k))
     val lineageCols: Seq[Column] =
       if (!enableRowTracking) Nil
       else {
@@ -996,11 +997,8 @@ final class DeltaWriter private (
     * O(affected files) rewrite. Commit shape per the protocol: the
     * protocol-upgrade action (first DV only), then remove(old file
     * state) BEFORE add(same path + new DV) so replay by (path, dv)
-    * identity reconciles. Bitmaps are built EXECUTOR-SIDE: each task
-    * folds the matching row indexes it saw into per-file partial
-    * bitmaps and ships only the serialized blobs; the driver unions
-    * partials per file — O(tasks × compressed bitmap) through the
-    * driver, never O(deleted rows). */
+    * identity reconciles. Bitmaps are built executor-side
+    * ([[graft.lake.RowDeletes.fold]]). */
   def deleteWhereDv(cond: Column): Long = {
     val t = DeltaTable.load(spark, location)
     dvDeleteCore(t.planFiles(Some(cond)).toSet,
@@ -1016,11 +1014,15 @@ final class DeltaWriter private (
   def deleteMatchingDv(keys: DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "delta: deleteMatchingDv needs key columns")
     val t = DeltaTable.load(spark, location)
-    val k = keys.select(keyCols.zipWithIndex.map { case (c, i) =>
-      col(c).cast("string").as(s"__dk$i") }.toIndexedSeq: _*).distinct()
-    dvDeleteCore(t.planFiles(None).toSet, df =>
-      df.join(k, keyCols.zipWithIndex.map { case (c, i) =>
-        df(c).cast("string") === k(s"__dk$i") }.reduce(_ && _), "left_semi"))
+    dvDeleteCore(t.planFiles(None).toSet, keyMatcher(keys, keyCols))
+  }
+
+  /** Row matcher of a keyed DV delete: the rows whose `keyCols` equal a
+    * row of `keys`, compared as strings. `=` never matches a NULL (SQL
+    * MERGE), so keys holding one are dropped before the null-safe join. */
+  private def keyMatcher(keys: DataFrame, keyCols: Seq[String]): DataFrame => DataFrame = {
+    val k = keys.select(keyCols.map(c => col(c).cast("string")): _*).na.drop().distinct()
+    df => RowDeletes.semiJoin(df, keyCols.map(c => df(c).cast("string")), k)
   }
 
   private def dvDeleteCore(affected: Set[String],
@@ -1053,21 +1055,14 @@ final class DeltaWriter private (
     val keyToRel: Map[String, String] = affectedNodes.map { case (rel, _) =>
       DeltaTable.pathKey(DeltaTable.resolve(location, rel).toString) -> rel
     }.toMap
-    val deletedByFile = scala.collection.mutable.Map[String, RoaringBitmapArray]()
     // files that already carry a DV: their masked rows are ALREADY
     // deleted — they must not re-enter the new delta's row set (the
     // mask-union keeps the bitmap correct either way, but a CDF table
     // would re-emit a delete for an already-deleted row)
-    val oldDvs: Map[String, DeletionVectors.Descriptor] = affectedNodes.flatMap {
-      case (rel, n) => dvDescOf(n.get("add")).map(d =>
-        DeltaTable.pathKey(DeltaTable.resolve(location, rel).toString) -> d)
-    }.toMap
-    val notAlreadyDeleted: Column = if (oldDvs.isEmpty) lit(true) else
-      DeltaTable.dvKeepColumn(spark, location, conf, oldDvs,
-        col("__fp"), col("__ri"))
+    val notAlreadyDeleted =
+      dvMask(affectedNodes.map(_._2), col("__fp"), col("__ri")).getOrElse(lit(true))
     val cdcFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    import spark.implicits._
-    locally {
+    val deletedByFile = locally {
       val paths = affectedNodes.map { case (rel, _) =>
         DeltaTable.resolve(location, rel).toString }
       val physData = StructType(dataSchema.fields.map(f => f.copy(name = phys(f.name))))
@@ -1100,26 +1095,11 @@ final class DeltaWriter private (
         df = df.drop("__fpk" +: partitionColumns.map(c => s"__pv_$c"): _*)
       }
       val newlyDeleted = rowMatcher(df).filter(notAlreadyDeleted)
-      val partials: Array[(String, Array[Byte])] = newlyDeleted
-        .select(col("__fp"), col("__ri")).as[(String, Long)]
-        .mapPartitions { it =>
-          val m = scala.collection.mutable.LinkedHashMap[String, RoaringBitmapArray]()
-          it.foreach { case (fp, ri) =>
-            m.getOrElseUpdate(fp, RoaringBitmapArray()).add(ri) }
-          m.iterator.map { case (fp, bm) => (fp, bm.serialize()) }
-        }.collect()
       if (enableCdf)
         cdcFrames += newlyDeleted
           .select(schema.fieldNames.map(col).toIndexedSeq: _*)
           .withColumn("_change_type", lit("delete"))
-      partials.foreach { case (fp, blob) =>
-        val key = DeltaTable.pathKey(fp)
-        val bm = RoaringBitmapArray.deserialize(blob)
-        deletedByFile.get(key) match {
-          case Some(acc) => acc.union(bm)
-          case None      => deletedByFile(key) = bm
-        }
-      }
+      RowDeletes.fold(newlyDeleted.select(col("__fp"), col("__ri")), DeltaTable.pathKey)
     }
 
     // zero-match (e.g. a pure-append mirror sync range where every
@@ -1182,8 +1162,6 @@ final class DeltaWriter private (
     require(keyCols.nonEmpty, "delta: upsertKeys needs key columns")
     val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val t = DeltaTable.load(spark, location)
-    val k = src.select(keyCols.zipWithIndex.map { case (c, i) =>
-      col(c).cast("string").as(s"__dk$i") }.toIndexedSeq: _*).distinct()
     // ROW TRACKING (r16b): a keyed MERGE's matched rows are UPDATES —
     // they must keep the retired target row's row id (materialized,
     // with a null commit version → the new add's default serves this
@@ -1212,9 +1190,7 @@ final class DeltaWriter private (
           lit(null).cast(LongType).as(DeltaWriter.MatRowVerCol)): _*)
       }
     val (dvActs, dvCdc) =
-      dvDeleteActions(t.planFiles(None).toSet, df =>
-        df.join(k, keyCols.zipWithIndex.map { case (c, i) =>
-          df(c).cast("string") === k(s"__dk$i") }.reduce(_ && _), "left_semi"))
+      dvDeleteActions(t.planFiles(None).toSet, keyMatcher(src, keyCols))
         .getOrElse((Nil, Nil))
     val addsN = writeFiles(writeSrc)
     // a pure-insert merge (no matched keys) is a blind append — CDF

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{AggEntry, BlobCache, ColStats, DataFileMeta, FilePruner, ParquetStats}
+import graft.lake.{AggEntry, BlobCache, ColStats, DataFileMeta, FilePruner, ParquetStats,
+  RowDeletes}
 
 /** Read-only Apache Iceberg v1/v2 table reader — REAL-format interop, the
   * reference's headline capability ("Native Apache Iceberg support",
@@ -25,9 +26,10 @@ import graft.lake.{AggEntry, BlobCache, ColStats, DataFileMeta, FilePruner, Parq
   *  - manifest-list field summaries prune whole manifests before any
   *    manifest IO (FilePruner.manifestMayMatch over decoded bounds).
   *  - deletes follow Iceberg v2 sequence rules: equality deletes at seq t
-  *    apply to data files with seq < t, position deletes to seq <= t;
-  *    both apply as anti-joins (broadcast-sized under AQE), exactly like
-  *    GraftTable's MoR path.
+  *    apply to data files with seq < t, position deletes to seq <= t.
+  *    Through [[graft.lake.RowDeletes]], as in GraftTable's MoR path:
+  *    DVs as a row mask, position and equality deletes as null-safe
+  *    anti-joins (broadcast-sized under AQE).
   *  - column resolution is by FIELD ID through the manifest's `schema-id`
   *    header: files written before a rename resolve their old physical
   *    names without per-file footer reads (O(manifests) planning).
@@ -321,8 +323,8 @@ final class IcebergTable private (
     // manifest fan-out on a bounded IO pool, results cached JVM-wide
     // (manifests are create-only with unique names — immutable): a
     // 1000-manifest table otherwise pays ~1000 SERIAL object-store GETs
-    // per plan, and deleteWhereDv plans three times per statement
-    // (planFiles + dvIndex + posDeletePaths) re-reading every manifest
+    // per plan, and deleteWhereDv plans twice per statement
+    // (planFiles + positionDeletes) re-reading every manifest
     val readManifests: Seq[(IcebergAvro.ManifestFileEntry,
         (IcebergAvro.ManifestHeader, Seq[IcebergAvro.ManifestEntry]))] = {
       val hConf = conf
@@ -509,15 +511,13 @@ final class IcebergTable private (
           d.entry.contentSizeInBytes.get, d.seq)
       }
 
-  /** pathKey(data file) → (puffin path, offset, size, seq) of its live
-    * DV at the current snapshot — the writer's replace-must-union hook. */
-  private[iceberg] def dvIndex(snapshotId: Long = -1L): Map[String, (String, Long, Long, Long)] =
-    dvIndexOf(plan(None, snapshotId))
-
-  /** Live parquet position-delete file paths — the writer's
-    * DV-absorbs-position-deletes hook. */
-  private[iceberg] def posDeletePaths(snapshotId: Long = -1L): Seq[String] =
-    plan(None, snapshotId).posDeletes.map(_.entry.filePath)
+  /** The live DVs (pathKey(data file) → (puffin path, offset, size, seq))
+    * and parquet position-delete file paths of the current snapshot — the
+    * writer's replace-must-union and DV-absorbs-position-deletes hooks. */
+  private[iceberg] def positionDeletes: (Map[String, (String, Long, Long, Long)], Seq[String]) = {
+    val p = plan(None, -1L)
+    (dvIndexOf(p), p.posDeletes.map(_.entry.filePath))
+  }
 
   /** (manifests loaded, manifests in list) for a filtered plan. */
   def planManifestCounts(filter: Option[Column] = None, snapshotId: Long = -1L): (Int, Int) = {
@@ -622,12 +622,8 @@ final class IcebergTable private (
   def scanRef(name: String, filter: Option[Column] = None): DataFrame =
     scan(filter, refSnapshot(name))
 
-  /** Strip the URI scheme so position-delete coordinates written as
-    * `file:/…`, `file:///…` or bare `/…` all join (the spec stores the
-    * manifest's file_path verbatim; Spark's `_metadata.file_path` is a
-    * normalized URI — forms differ between writers). */
-  private def normPath(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+  /** Column reference by EXACT name (dots and backticks escaped). */
+  private def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   private val PosFileCol = "__ice_file"
   private val PosIdxCol = "__ice_pos"
@@ -674,40 +670,15 @@ final class IcebergTable private (
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
 
     // v3 deletion vectors: one DV per referenced data file (writers must
-    // replace, so on a malformed double entry the max-seq one wins);
-    // executors lazily load + cache each blob's bitmap — nothing
-    // data-sized touches the driver. Where a DV exists, the spec says
-    // position-delete files for that data file MUST be ignored.
+    // replace, so on a malformed double entry the max-seq one wins)
     val dvByFile = dvIndexOf(p)
-    val dvKeep: Option[Column] = if (dvByFile.isEmpty) None else {
-      val bcConf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
-      val bcDvs = spark.sparkContext.broadcast(dvByFile)
-      // native codegen DvKeep (r11 — shared with Delta's five sites):
-      // path arrives already normPath'd (PosFileCol); pathKey is
-      // idempotent on normalized paths
-      Some(graft.expressions.DvKeep.column(
-        col(PosFileCol), col(PosIdxCol), raw =>
-          bcDvs.value.get(IcebergTable.pathKey(raw)) match {
-            case Some((dvPath, off, len, _)) =>
-              BlobCache.dvBitmaps.get(s"iceberg:$dvPath#$off")(Puffin.readDv(
-                bcConf.value.value, new Path(dvPath), off, len))
-            case None => null
-          }))
-    }
 
     // group data files by (write schema, applicable delete sets): the
     // applicable deletes are a seq-ordered suffix, so the index of the
     // first applying delete identifies the set (same shape as
     // GraftTable.buildScan — plan size is O(delete boundaries × schemas))
-    val eqSeqs = p.eqDeletes.map(_.seq).distinct.sorted
-    val posSeqs = p.posDeletes.map(_.seq).distinct.sorted
-    def suffixFrom(seqs: Seq[Long], fileSeq: Long, inclusive: Boolean): Int = {
-      var i = seqs.length
-      while (i > 0 && (seqs(i - 1) > fileSeq || (inclusive && seqs(i - 1) == fileSeq))) i -= 1
-      i
-    }
+    val eqSeqs = p.eqDeletes.map(_.seq).distinct.sorted.toIndexedSeq
+    val posSeqs = p.posDeletes.map(_.seq).distinct.sorted.toIndexedSeq
     // delete files are read as parquet below — reject other formats
     // loudly (real engines write parquet deletes; a v3 DV is a puffin
     // blob handled separately and never reaches these reads)
@@ -724,8 +695,8 @@ final class IcebergTable private (
     // per-spec (partition evolution can leave files without it)
     val groups = p.dataFiles
       .groupBy(f => (f.schemaId, f.specId, f.entry.fileFormat.toUpperCase,
-        suffixFrom(eqSeqs, f.seq, inclusive = false),
-        suffixFrom(posSeqs, f.seq, inclusive = true),
+        RowDeletes.applicable(eqSeqs, f.seq, inclusive = false),
+        RowDeletes.applicable(posSeqs, f.seq, inclusive = true),
         // lineage delivery is part of the group key (r16): inherited
         // (first_row_id set) and MATERIALIZED (first_row_id null —
         // compaction wrote _row_id columns into the files per the v3
@@ -789,13 +760,11 @@ final class IcebergTable private (
       val posApplying = p.posDeletes.filter(d => posSeqs.drop(posIdx).contains(d.seq))
       // DVs applicable to this group's files: per-file, pos-delete seq
       // rule (dv seq >= file seq, inclusive)
-      val groupDvFiles: Set[String] = files.flatMap { f =>
+      val groupDvs: Map[String, RowDeletes.Dv] = files.flatMap { f =>
         val k = IcebergTable.pathKey(f.entry.filePath)
-        dvByFile.get(k) match {
-          case Some((_, _, _, dvSeq)) if dvSeq >= f.seq => Some(k)
-          case _ => None
-        }
-      }.toSet
+        dvByFile.get(k).collect { case (dvPath, off, len, dvSeq) if dvSeq >= f.seq =>
+          k -> RowDeletes.PuffinDv(dvPath, off, len) }
+      }.toMap
       if (lineage) {
         require(fileFmt == "PARQUET",
           s"iceberg: row-lineage scan needs parquet files; " +
@@ -824,7 +793,7 @@ final class IcebergTable private (
           }
         }
       }
-      val needMeta = posApplying.nonEmpty || groupDvFiles.nonEmpty ||
+      val needMeta = posApplying.nonEmpty || groupDvs.nonEmpty ||
         (lineage && !materialized)
 
       val spec = meta.spec(specId)
@@ -933,14 +902,11 @@ final class IcebergTable private (
             s"(${files.head.entry.filePath}, ...) is not readable here — " +
             "supported data file formats: PARQUET, ORC, AVRO")
       }
-      if (needMeta) df =
-        if (fileFmt == "AVRO" || fileFmt == "ORC")
-          // the custom decoders emitted the planned path raw; normalize
-          // it the same way the delete/DV side is before joining
-          df.withColumn(PosFileCol, normPath(col(PosFileCol)))
-        else df
-          .withColumn(PosFileCol, normPath(ParquetStats.scanFilePath))
-          .withColumn(PosIdxCol, col("_metadata.row_index"))
+      // the AVRO/ORC decoders emit the planned path and position
+      // themselves; every per-file lookup below keys the path by pathKey
+      if (needMeta && fileFmt != "AVRO" && fileFmt != "ORC") df = df
+        .withColumn(PosFileCol, ParquetStats.scanFilePath)
+        .withColumn(PosIdxCol, col("_metadata.row_index"))
       // hive-layout read: discovered partition columns carry the
       // writer's dir names — rename to the source columns (an alias
       // projection; partition-pruning lineage traces through it)
@@ -967,7 +933,7 @@ final class IcebergTable private (
         val bcVals = spark.sparkContext.broadcast(internal)
         val pathC =
           if (needMeta) col(PosFileCol)
-          else normPath(ParquetStats.scanFilePath)
+          else ParquetStats.scanFilePath
         idFields.zipWithIndex.foreach { case ((_, sf), i) =>
           df = df.withColumn(sf.name,
             graft.expressions.FileConstant.column(pathC, sf.dataType, raw =>
@@ -980,44 +946,39 @@ final class IcebergTable private (
         }
       }
 
-      if (groupDvFiles.nonEmpty) df = df.filter(dvKeep.get)
+      // a file with a DV takes its DV (v3: the writer that replaced the
+      // file's position deletes folded them into it); every other file
+      // takes the applicable position-delete files
+      if (groupDvs.nonEmpty)
+        df = df.filter(RowDeletes.keep(spark, col(PosFileCol), col(PosIdxCol),
+          IcebergTable.pathKey, groupDvs))
+      if (posApplying.nonEmpty)
+        df = RowDeletes.antiJoin(df,
+          Seq(IcebergTable.pathKeyCol(col(PosFileCol)), col(PosIdxCol)),
+          RowDeletes.positions(spark, posApplying.map(_.entry.filePath),
+            IcebergTable.pathKeyCol, skip = groupDvs.keySet))
 
-      if (posApplying.nonEmpty) {
-        var pd = spark.read
-          .parquet(posApplying.map(_.entry.filePath): _*)
-          .select(normPath(col("file_path")).as(PosFileCol), col("pos").as(PosIdxCol))
-        // v3: a data file with a DV must IGNORE parquet position deletes
-        // (its DV superseded them when the writer replaced them)
-        if (groupDvFiles.nonEmpty)
-          pd = pd.filter(!col(PosFileCol).isin(groupDvFiles.toSeq: _*))
-        df = df.join(pd, Seq(PosFileCol, PosIdxCol), "left_anti")
-      }
-
-      // equality deletes: group by (write schema, equality id set) so each
-      // delete file's columns resolve under ITS schema; match in the DATA
-      // file's physical column space (null-safe, per spec)
+      // equality deletes: group by (delete schema, equality id set) so
+      // each delete file's columns resolve under ITS schema, read at the
+      // types that schema records; match in the DATA file's physical
+      // column space (null-safe, per spec)
       eqApplying.groupBy(d => (d.schemaId, d.entry.equalityIds)).foreach {
         case ((delSchemaId, eqIds), dels) =>
           require(eqIds.nonEmpty,
             s"iceberg: equality delete without equality_ids: ${dels.head.entry.filePath}")
           val delSchema = schemaOrCurrent(delSchemaId)
-          val delNames = eqIds.map(id => delSchema.byId.getOrElse(id,
+          val delFields = eqIds.map(id => delSchema.byId.getOrElse(id,
             throw new IllegalArgumentException(
-              s"iceberg: equality id $id not in schema ${delSchema.schemaId}")).name)
-          val dataNames = eqIds.map { id =>
-            writeSchema.byId.getOrElse(id, throw new IllegalArgumentException(
-              s"iceberg: equality id $id absent from data schema $schemaId")).name
-          }
+              s"iceberg: equality id $id not in schema ${delSchema.schemaId}")))
+          val dataFields = eqIds.map(id => writeSchema.byId.getOrElse(id,
+            throw new IllegalArgumentException(
+              s"iceberg: equality id $id absent from data schema $schemaId")))
           val keys = spark.read
+            .schema(StructType(delFields.map(f => StructField(f.name, f.dataType))))
             .parquet(dels.map(_.entry.filePath): _*)
-            .select(delNames.zip(dataNames).zip(eqIds).map { case ((dn, an), id) =>
-              col("`" + dn.replace("`", "``") + "`")
-                .cast(writeSchema.byId(id).dataType).as(s"__k$id")
-            }: _*)
-          val cond = eqIds.zip(dataNames).map { case (id, an) =>
-            df(an) <=> keys(s"__k$id")
-          }.reduce(_ && _)
-          df = df.join(keys, cond, "left_anti")
+            .select(delFields.zip(dataFields).map { case (kf, af) =>
+              quoted(kf.name).cast(af.dataType) }: _*)
+          df = RowDeletes.antiJoin(df, dataFields.map(f => quoted(f.name)), keys)
       }
 
       // v3 row-lineage columns (after the delete joins — surviving rows
@@ -1040,7 +1001,7 @@ final class IcebergTable private (
           val bc = spark.sparkContext.broadcast(byPath)
           val pathC =
             if (needMeta) col(PosFileCol)
-            else normPath(ParquetStats.scanFilePath)
+            else ParquetStats.scanFilePath
           val seqC = graft.expressions.FileConstant.column(pathC, LongType,
             raw => bc.value.get(IcebergTable.pathKey(raw)) match {
               case Some(s) => Long.box(s)
@@ -1073,7 +1034,7 @@ final class IcebergTable private (
       val physByName = writeSchema.byId
       val cols = sch.fields.map { f =>
         physByName.get(f.id) match {
-          case Some(wf) => col("`" + wf.name.replace("`", "``") + "`")
+          case Some(wf) => quoted(wf.name)
             .cast(f.dataType).as(f.name)
           case None => f.initialDefault
             .map(v => lit(v).cast(f.dataType))
@@ -1233,11 +1194,16 @@ object IcebergTable {
       manifestsTotal: Int,
       filesTotal: Long)
 
-  /** Scheme-insensitive path key (Scala-side mirror of the scan's
-    * `normPath` column function) for matching `referenced_data_file`
-    * against `_metadata.file_path`. */
-  private[iceberg] def pathKey(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+  private val SchemePrefix = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+
+  /** Scheme-insensitive path key: manifest paths, position-delete
+    * `file_path`s and `referenced_data_file`s match `_metadata.file_path`
+    * under it (`file:/…`, `file:///…` and bare `/…` forms differ between
+    * writers). */
+  private[iceberg] def pathKey(p: String): String = p.replaceFirst(SchemePrefix, "/")
+
+  /** [[pathKey]] as a column, for joining position-delete `file_path`s. */
+  private[iceberg] def pathKeyCol(c: Column): Column = regexp_replace(c, SchemePrefix, "/")
 
   /** Manifest identity-partition value → Spark EXTERNAL row value of the
     * source column's type (feeds the per-file injection frame). The raw

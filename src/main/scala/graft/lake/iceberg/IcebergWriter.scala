@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{CommitIo, HivePartitionedRead, ParquetStats}
+import graft.lake.{CommitIo, HivePartitionedRead, ParquetStats, RowDeletes}
 
 /** Minimal Apache Iceberg v2 WRITER conforming to the published table
   * spec: parquet data files (with parquet field ids), Avro manifests and
@@ -131,10 +131,8 @@ final class IcebergWriter private (
   /** V3 deletion-vector delete (format-version 3): rows matching `cond`
     * are masked by per-file roaring bitmaps stored as
     * `deletion-vector-v1` blobs in ONE puffin file — no data file is
-    * rewritten. Bitmaps are built EXECUTOR-side (tasks fold matching
-    * `_metadata.row_index` values per file in mapPartitions and ship
-    * serialized blobs; the driver unions O(affected files) partials —
-    * same shape as the Delta writer's DV path). A data file that
+    * rewritten. Bitmaps are built executor-side
+    * ([[graft.lake.RowDeletes.fold]]). A data file that
     * already carries a DV gets the union (the new DV REPLACES the old
     * one, per the one-DV-per-file rule), and the table's
     * format-version is bumped to 3 on first use. */
@@ -152,37 +150,20 @@ final class IcebergWriter private (
     * format-version 3. */
   private def dvDeleteEntries(cond: Column,
       requireMatch: Boolean): Seq[IcebergAvro.ManifestEntry] = {
-    import graft.lake.delta.RoaringBitmapArray
     val t = IcebergTable.load(spark, location)
     val affected = t.planFiles(Some(cond))
     // requireMatch=false → SQL DELETE semantics (zero matches = no-op)
     if (affected.isEmpty && !requireMatch) return Nil
     require(affected.nonEmpty, "iceberg: deleteWhereDv matched no files")
-    val existingDvs = t.dvIndex()
+    val (existingDvs, posPaths) = t.positionDeletes
 
-    import spark.implicits._
-    val partials: Array[(String, Array[Byte])] =
+    val byFile = RowDeletes.fold(
       spark.read.parquet(affected: _*)
         .withColumn("__fp", ParquetStats.scanFilePath)
         .withColumn("__ri", col("_metadata.row_index"))
         .filter(coalesce(cond, lit(false)))
-        .select(col("__fp"), col("__ri")).as[(String, Long)]
-        .mapPartitions { it =>
-          val m = scala.collection.mutable.LinkedHashMap[String, RoaringBitmapArray]()
-          it.foreach { case (fp, ri) =>
-            m.getOrElseUpdate(fp, RoaringBitmapArray()).add(ri) }
-          m.iterator.map { case (fp, bm) => (fp, bm.serialize()) }
-        }.collect()
-
-    val byFile = scala.collection.mutable.LinkedHashMap[String, RoaringBitmapArray]()
-    partials.foreach { case (fp, blob) =>
-      val k = IcebergTable.pathKey(fp)
-      val bm = RoaringBitmapArray.deserialize(blob)
-      byFile.get(k) match {
-        case Some(acc) => acc.union(bm)
-        case None => byFile(k) = bm
-      }
-    }
+        .select(col("__fp"), col("__ri")),
+      IcebergTable.pathKey)
     // stats pruning is conservative: admitted files may hold zero
     // matching rows — still a SQL no-op, not an error
     if (byFile.isEmpty && !requireMatch) return Nil
@@ -195,26 +176,12 @@ final class IcebergWriter private (
     }
     // …and ABSORB the file's parquet position deletes (v3: one DV per
     // file replaces them all — the reader ignores pos-delete files once
-    // a DV exists, so rows they named must ride in the DV). Folded
-    // executor-side into partial bitmaps, same as the main pass.
-    val posPaths = t.posDeletePaths()
+    // a DV exists, so rows they named must ride in the DV)
     if (posPaths.nonEmpty) {
-      val bcKeys = spark.sparkContext.broadcast(byFile.keySet.toSet)
-      val posPartials: Array[(String, Array[Byte])] =
-        spark.read.parquet(posPaths: _*)
-          .select(col("file_path"), col("pos")).as[(String, Long)]
-          .mapPartitions { it =>
-            val m = scala.collection.mutable.LinkedHashMap[String, RoaringBitmapArray]()
-            it.foreach { case (fp, pos) =>
-              val k = IcebergTable.pathKey(fp)
-              if (bcKeys.value.contains(k))
-                m.getOrElseUpdate(k, RoaringBitmapArray()).add(pos)
-            }
-            m.iterator.map { case (k, bm) => (k, bm.serialize()) }
-          }.collect()
-      posPartials.foreach { case (k, blob) =>
-        byFile(k).union(RoaringBitmapArray.deserialize(blob))
-      }
+      RowDeletes.fold(
+        spark.read.schema("file_path STRING, pos BIGINT").parquet(posPaths: _*),
+        IcebergTable.pathKey, byFile.keySet)
+        .foreach { case (k, bm) => byFile(k).union(bm) }
     }
     // the manifest references data files by their manifest file_path
     val keyToManifestPath = affected.map(p => IcebergTable.pathKey(p) -> p).toMap
@@ -732,8 +699,8 @@ final class IcebergWriter private (
     val upper = scala.collection.mutable.Map[Int, Array[Byte]]()
     val nulls = scala.collection.mutable.Map[Int, Long]()
     sch.fields.foreach { f =>
+      footer.nulls.get(f.name).foreach(nulls(f.id) = _)
       footer.stats.get(f.name).foreach { st =>
-        nulls(f.id) = st.nulls
         for {
           lo <- IcebergMeta.encodeBound(f.typeStr, st.min)
           hi <- IcebergMeta.encodeBound(f.typeStr, st.max)

@@ -1255,6 +1255,25 @@ class InteropSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("iceberg: count(p) over a NULL identity partition is answered from metadata") {
+    // every file of the NULL partition holds p all-NULL: its footer has no
+    // min/max for p but an exact null count, which the manifest must carry
+    val src = orders.withColumn("p",
+      when(col("o_orderkey") % 11 === 0, lit(null: String)).otherwise(col("o_orderstatus")))
+    src.createOrReplaceTempView("null_partition_src")
+    val loc = freshDir("null-partition-ice")
+    IcebergWriter.create(spark, loc, src.schema,
+      partition = Seq("p" -> "identity")).append(src)
+    for (where <- Seq("true", "NOT p <=> 'F' OR (p < 'F' AND p >= 'F')")) {
+      val sql = s"SELECT count(*) AS n, count(p) AS np FROM %s WHERE $where"
+      val q = spark.sql(sql.format(s"`graft-iceberg`.`$loc`"))
+      assert(collapsed(q) && graft.lake.sql.PlanFiles.planned(q) == 0,
+        s"WHERE $where must be answered from metadata:\n${q.queryExecution.optimizedPlan}")
+      assert(q.collect().toSeq == spark.sql(sql.format("null_partition_src")).collect().toSeq,
+        s"WHERE $where")
+    }
+  }
+
   test("delta: a cast literal and a temp view still collapse to metadata") {
     // the collapse runs at resolution, ahead of ConstantFolding and
     // EliminateView: `pl = 2` on a BIGINT column is still

@@ -298,4 +298,51 @@ class ManifestSpec extends AnyFunSuite {
     assert(dels.size == 1, s"small delete should bin-pack to 1 shard, got ${dels.size}")
     assert(t.scan().count() == o.filter(col("o_orderkey") > 40).count())
   }
+
+  test("equality-delete files written before the null-safe marker keep = matching") {
+    val sp = spark; import sp.implicits._
+    val loc = freshDir("eq-legacy")
+    val t = GraftTable.createEmpty(spark, loc, StructType.fromDDL("id BIGINT, v BIGINT"),
+      keyColumns = Seq("id"))
+    t.append(Seq[(Option[Long], Long)]((None, 1L), (None, 2L), (Some(1L), 3L), (Some(2L), 4L))
+      .toDF("id", "v"))
+    t.delete(col("v") === 1) // key file holds a NULL key
+    t.delete(col("v") === 3) // key file holds key 1
+    assert(t.scan().as[(Option[Long], Long)].collect().toSet == Set((Some(2L), 4L)))
+    val keyFiles = t.meta.currentSnapshot.get.deleteFiles.map(_.path)
+    assert(keyFiles.size == 2)
+
+    // The same table as a writer without the marker left it: no
+    // `nullSafe` field in its metadata, and key files at the source's key
+    // types (here STRING).
+    val fs = hfs(loc)
+    val old = freshDir("eq-legacy-old")
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(loc), fs, new Path(old), false,
+      spark.sessionState.newHadoopConf())
+    fs.listStatus(new Path(old, "metadata")).map(_.getPath)
+      .filter(_.getName.endsWith(".json")).foreach { p =>
+        val in = fs.open(p)
+        val doc = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        val out = fs.create(p, true)
+        try out.write(doc.replace(""","nullSafe":true""", "").getBytes("UTF-8"))
+        finally out.close()
+      }
+    keyFiles.zipWithIndex.foreach { case (f, i) =>
+      val tmp = s"$old-strkeys-$i"
+      spark.read.parquet(s"$loc/$f").select(col("id").cast("string").as("id"))
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = fs.listStatus(new Path(tmp)).map(_.getPath)
+        .find(_.getName.endsWith(".parquet")).get
+      fs.delete(new Path(old, f), false)
+      assert(fs.rename(part, new Path(old, f)))
+    }
+
+    val legacy = GraftTable.load(spark, old)
+    assert(legacy.meta.currentSnapshot.get.deleteFiles.forall(!_.nullSafe))
+    assert(legacy.scan().as[(Option[Long], Long)].collect().toSet ==
+      Set((None, 1L), (None, 2L), (Some(2L), 4L)))
+    // a later null-safe delete of the NULL key applies next to them
+    legacy.delete(col("v") === 2)
+    assert(legacy.scan().as[(Option[Long], Long)].collect().toSet == Set((Some(2L), 4L)))
+  }
 }
